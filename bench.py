@@ -55,7 +55,8 @@ def _cpu_jiffies() -> tuple[int, int]:
     """
     try:
         with open("/proc/stat") as f:
-            vals = [int(v) for v in f.readline().split()[1:]]
+            # user..steal; guest/guest_nice are already inside user/nice
+            vals = [int(v) for v in f.readline().split()[1:9]]
         return vals[7], sum(vals)
     except Exception:
         return 0, 0

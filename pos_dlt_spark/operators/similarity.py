@@ -45,9 +45,10 @@ def _sql_json_arr(data, dtype: str) -> str:
     # the payload is spliced into a single-quoted SQL string with no
     # escaping — sound only while every value is numeric. Fail loudly if
     # a future model artifact smuggles in a quote (VERDICT r12 #8).
-    assert "'" not in payload and "\\" not in payload, (
-        "_sql_json_arr payload must be quote-free (numeric-only model data)"
-    )
+    if "'" in payload or "\\" in payload:
+        raise ValueError(
+            "_sql_json_arr payload must be quote-free (numeric-only model data)"
+        )
     return f"from_json('{payload}', '{dtype}')"
 
 

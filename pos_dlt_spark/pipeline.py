@@ -1820,8 +1820,6 @@ class PipelineRunner:
             def scd2_sink(batch_df: DataFrame, batch_id: int) -> None:
                 from pyspark.sql import functions as F
 
-                if not batch_df.take(1):
-                    return
                 incoming = batch_df
                 if flow.apply_as_deletes:
                     incoming = incoming.withColumn(
@@ -1928,8 +1926,6 @@ class PipelineRunner:
             def sink(batch_df: DataFrame, batch_id: int) -> None:
                 from pyspark.sql import functions as F
 
-                if not batch_df.take(1):
-                    return
                 if not os.path.isdir(os.path.join(path, "_delta_log")):
                     seed = latest_per_key(
                         batch_df, flow.keys, flow.sequence_by,
@@ -1973,12 +1969,11 @@ class PipelineRunner:
         # Event-log counters (DLT flow_progress): per micro-batch, the
         # batch's WINNING rows after the intra-batch latest-per-key reduce
         # (SCD2 keeps every version, so there the raw deduped rows) split
-        # into upserts and tombstones. One window + one 1-row aggregate
-        # per batch, O(batch) — target-exact counts would need a
-        # target-side join per batch, so the logged contract is
-        # source-side: a tombstone for an absent key still counts as
-        # deleted, an upsert the target already supersedes still counts
-        # as upserted.
+        # into upserts and tombstones. One aggregate per batch, O(batch) —
+        # target-exact counts would need a target-side join per batch, so
+        # the logged contract is source-side: a tombstone for an absent
+        # key still counts as deleted, an upsert the target already
+        # supersedes still counts as upserted.
         stats = {
             "num_source_rows": 0, "num_upserted_rows": 0,
             "num_deleted_rows": 0, "num_batches": 0,
@@ -1986,10 +1981,6 @@ class PipelineRunner:
         inner_fn = batch_fn
 
         def counted(batch_df: DataFrame, batch_id: int) -> None:
-            from pyspark.sql import functions as F
-
-            from pos_dlt_spark.operators.cdc import latest_per_key
-
             # One source scan per micro-batch: the sink AND the counters
             # both consume batch_df, so without the cache the counters
             # would re-execute the source read/parse (and re-evaluate
@@ -2012,32 +2003,39 @@ class PipelineRunner:
         return stats
 
     def _count_batch(self, batch_df, batch_id, flow, inner_fn, stats) -> None:
+        """Count the batch in one action, then run the sink on it unless
+        it is empty (the count is the sinks' emptiness probe)."""
+        from pyspark.sql import Window
         from pyspark.sql import functions as F
 
-        from pos_dlt_spark.operators.cdc import latest_per_key
-
-        inner_fn(batch_df, batch_id)
-        n_src = batch_df.count()
+        if flow.stored_as_scd_type == 2:
+            # every distinct row is a version: dropDuplicates, with counts
+            rows = batch_df.groupBy(*batch_df.columns).agg(
+                F.count(F.lit(1)).alias("__n")
+            )
+            n_src, won = F.sum("__n"), F.lit(True)
+        else:
+            order = [F.col(flow.sequence_by).desc()] + [
+                F.col(c).desc() for c in flow.tiebreakers
+            ]
+            rows = batch_df.withColumn(
+                "__rn",
+                F.row_number().over(Window.partitionBy(*flow.keys).orderBy(*order)),
+            )
+            n_src, won = F.count(F.lit(1)), F.col("__rn") == 1
+        deleted = F.lit(False)
+        if flow.apply_as_deletes:
+            deleted = won & F.coalesce(F.expr(flow.apply_as_deletes), F.lit(False))
+        row = rows.agg(
+            n_src.alias("n"),
+            F.count(F.when(won, 1)).alias("w"),
+            F.count(F.when(deleted, 1)).alias("d"),
+        ).first()
+        n_src = int(row["n"] or 0)
         if n_src == 0:
             return
-        if flow.stored_as_scd_type == 2:
-            winners = batch_df.dropDuplicates()
-        else:
-            winners = latest_per_key(
-                batch_df, flow.keys, flow.sequence_by, flow.tiebreakers
-            )
-        if flow.apply_as_deletes:
-            row = winners.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(
-                    F.coalesce(
-                        F.expr(flow.apply_as_deletes), F.lit(False)
-                    ).cast("int")
-                ).alias("d"),
-            ).first()
-            n_win, n_del = int(row["n"]), int(row["d"] or 0)
-        else:
-            n_win, n_del = winners.count(), 0
+        inner_fn(batch_df, batch_id)
+        n_win, n_del = int(row["w"]), int(row["d"])
         stats["num_source_rows"] += n_src
         stats["num_upserted_rows"] += n_win - n_del
         stats["num_deleted_rows"] += n_del

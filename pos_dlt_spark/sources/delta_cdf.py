@@ -8,7 +8,11 @@ delta-io CDF docs (`table_changes` semantics):
   (``insert`` / ``update_preimage`` / ``update_postimage`` /
   ``delete``), referenced by ``cdc`` actions in the commit
   (``dataChange: false`` — they are derived data, invisible to normal
-  reads and streaming replay).
+  reads and streaming replay). :func:`stage_change_files` writes them.
+  ``delta_merge`` classifies its change rows on its own latest-per-key
+  window (did the key have an old row; did a live update or a tombstone
+  win it) and stages data and change files from the one frozen ranked
+  frame, so a merge never re-runs its scan for the change set.
 - Reading changes for a commit: if the commit carries cdc actions, its
   change files ARE the change set; otherwise changes derive from the
   data actions — ``add`` (dataChange=true) files are inserts, ``remove``
@@ -116,54 +120,6 @@ def stage_change_files(
 
     shutil.rmtree(staging, ignore_errors=True)
     return actions
-
-
-def merge_change_rows(old: DataFrame, merged_tagged: DataFrame, keys: list[str]) -> DataFrame:
-    """Change set of a latest-per-key MERGE, from the two frames the merge
-    already has in hand: ``old`` (the touched files' live rows) and
-    ``merged_tagged`` (the winners, still carrying ``__upd`` = 1 when the
-    winner came from the update batch). Winners with ``__upd`` = 0 are
-    rewritten-but-unchanged rows — not changes. Update-batch winners
-    whose key exists in ``old`` are updates (postimage = winner,
-    preimage = the old row); the rest are inserts. When the merge ran
-    with a ``delete_predicate`` the winners carry ``__del``: a tombstone
-    winner whose key exists emits a ``delete`` change (the OLD row — the
-    content being removed); a tombstone for an absent key is a no-op.
-    One shuffle on the merge keys, the same key partitioning the merge
-    window just used."""
-    data_cols = [c for c in old.columns]
-    has_del = "__del" in merged_tagged.columns
-    winners = merged_tagged.filter(F.col("__upd") == 1).drop("__upd")
-    del_keys = None
-    if has_del:
-        del_keys = winners.filter(F.col("__del")).select(*keys).distinct()
-        winners = winners.filter(~F.col("__del")).drop("__del")
-    old_keys = old.select(*keys).distinct()
-    post = (
-        winners.join(old_keys, on=keys, how="left_semi")
-        .select(*data_cols)
-        .withColumn(CHANGE_TYPE, F.lit("update_postimage"))
-    )
-    ins = (
-        winners.join(old_keys, on=keys, how="left_anti")
-        .select(*data_cols)
-        .withColumn(CHANGE_TYPE, F.lit("insert"))
-    )
-    # preimage: the old row of every key an update-batch winner displaced
-    pre = (
-        old.join(winners.select(*keys).distinct(), on=keys, how="left_semi")
-        .select(*data_cols)
-        .withColumn(CHANGE_TYPE, F.lit("update_preimage"))
-    )
-    out = pre.unionByName(post).unionByName(ins)
-    if del_keys is not None:
-        deleted = (
-            old.join(del_keys, on=keys, how="left_semi")
-            .select(*data_cols)
-            .withColumn(CHANGE_TYPE, F.lit("delete"))
-        )
-        out = out.unionByName(deleted)
-    return out
 
 
 def _changes_by_commit(
@@ -624,7 +580,6 @@ __all__ = [
     "CHANGE_TYPE",
     "COMMIT_VERSION",
     "cdf_enabled",
-    "merge_change_rows",
     "read_change_feed",
     "replay_changes",
     "stage_change_files",

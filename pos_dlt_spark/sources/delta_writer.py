@@ -2096,6 +2096,9 @@ def delta_merge(
     retained across calls, so deletes assume per-key monotone
     sequences. With CDF enabled, removed keys emit ``delete`` change
     rows (their preimage) alongside the usual update/insert changes.
+    The change rows are classified on the merge's own key window and
+    staged from the same frozen ranked frame as the data files; a null
+    key groups with the table's null-key row, as in the merge itself.
 
     Returns the committed version."""
     from pyspark.sql import Window
@@ -2134,9 +2137,9 @@ def delta_merge(
     # (the SQL MERGE INSERT-without-column path)
     updates = _apply_column_defaults(updates, snap.schema)
 
-    if updates.limit(1).count() == 0:
-        return snap.version  # empty update batch: nothing to commit
-
+    # An empty batch commits nothing. The touched-file query below answers
+    # that too (``empty``), so only the branches without one probe.
+    empty: bool | None = None
     # EXACT per-file pruning, not the update batch's min/max hull: a
     # single insert at the top of the keyspace would widen the hull over
     # every file (measured: 95/100 files touched where 3 suffice). Build
@@ -2180,6 +2183,7 @@ def delta_merge(
                         F.col(keys[0]).cast("string").alias("__p")
                     ).distinct().collect()
                 }
+                empty = not vals  # a null key collects as None
                 touched = [rel for rel, pv in snap.files if pv.get(keys[0]) in vals]
         else:
             touched = [rel for rel, _pv in snap.files]  # conservative: all
@@ -2227,43 +2231,42 @@ def delta_merge(
                         rows.append((rel, lo, hi, b))
                 rng = local_df(
                     spark, rows,
-                    f"__rel string, __lo {key_type}, __hi {key_type}, __b bigint",
+                    f"__rel string, __lo {key_type}, __hi {key_type}, __rb bigint",
                 )
-                hit = (
-                    kt.withColumn(
-                        "__b",
-                        F.expr(
-                            f"CAST((CAST(__k AS BIGINT) - {base}) DIV {width} AS BIGINT)"
-                        ),
-                    )
-                    .join(rng, "__b")
-                    .filter(
-                        (F.col("__k") >= F.col("__lo")) & (F.col("__k") <= F.col("__hi"))
-                    )
-                    .select("__rel")
-                    .distinct()
-                    .collect()
+                kt = kt.withColumn(
+                    "__b",
+                    F.expr(f"CAST((CAST(__k AS BIGINT) - {base}) DIV {width} AS BIGINT)"),
+                )
+                in_file = (F.col("__b") == F.col("__rb")) & F.col("__k").between(
+                    F.col("__lo"), F.col("__hi")
                 )
             else:
-                rng = local_df(
+                rng = F.broadcast(local_df(
                     spark, ranges, f"__rel string, __lo {key_type}, __hi {key_type}"
-                )
-                hit = (
-                    kt.join(
-                        F.broadcast(rng),
-                        (F.col("__k") >= F.col("__lo")) & (F.col("__k") <= F.col("__hi")),
-                    )
-                    .select("__rel")
-                    .distinct()
-                    .collect()
-                )
-            touched += [r["__rel"] for r in hit]
+                ))
+                in_file = F.col("__k").between(F.col("__lo"), F.col("__hi"))
+            # LEFT join: a key outside every file still yields a (null)
+            # row, so no rows at all means an empty batch
+            hit = kt.join(rng, in_file, "left").select("__rel").distinct().collect()
+            empty = not hit
+            touched += [r["__rel"] for r in hit if r["__rel"] is not None]
         except Exception:
             # pruning is an optimization, never a correctness dependency:
             # a key type whose JSON stats rendering does not round-trip
             # into the column type (exotic timestamps, decimals beyond
             # pandas) falls back to touching every stat-ful file
             touched += [rel for rel, _lo, _hi in ranges]
+    if empty is None:
+        empty = updates.limit(1).count() == 0
+    if empty:
+        return snap.version  # empty update batch: nothing to commit
+    if touched and _append_only(snap.configuration):
+        from pos_dlt_spark.sources.delta import DeltaProtocolError
+
+        raise DeltaProtocolError(
+            "table is delta.appendOnly: merge would rewrite existing rows "
+            "(a pure-insert batch on disjoint keys is allowed)"
+        )
 
     cols = [f.name for f in snap.schema.fields]
     if mode == "dv":
@@ -2306,7 +2309,11 @@ def delta_merge(
     rt_on = rtm.row_tracking_enabled(snap.configuration)
     if rt_on:
         rtm.require_materialized_columns(snap)
-    rt_cols = [rtm.ROW_ID_COL, rtm.ROW_VER_COL] if rt_on else []
+    elif not write_change_files:
+        raise ValueError(
+            "write_change_files=False needs row tracking: without stable "
+            "row ids the change feed cannot derive update pairs"
+        )
     rt_nulls = (
         [
             F.lit(None).cast("bigint").alias(rtm.ROW_ID_COL),
@@ -2375,17 +2382,48 @@ def delta_merge(
         + [F.col("__upd").desc()]
     )
     w = Window.partitionBy(*keys).orderBy(*order)
+    # the whole key group, computed in the same window operator as __rn
+    key_all = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     ranked = merged_in.withColumn("__rn", F.row_number().over(w))
+    if rt_on:
+        # an UPDATE that wins an existing key keeps the OLD row's id
+        ranked = ranked.withColumn(
+            "__oldrid",
+            F.max(F.when(F.col("__upd") == 0, F.col(rtm.ROW_ID_COL))).over(key_all),
+        )
+    from pos_dlt_spark.sources.delta_cdf import (
+        CHANGE_TYPE,
+        cdf_enabled,
+        stage_change_files,
+    )
+
+    want_changes = cdf_enabled(snap) and write_change_files
+    if want_changes:
+        # the change class of every row, from the same key window: did
+        # the key have an old row, and did a live update (__wupd) or a
+        # tombstone (__wdel) win it
+        live_upd = F.col("__upd") == 1
+        if delete_predicate is not None:
+            ranked = ranked.withColumn(
+                "__wdel", F.first(live_upd & F.col("__del")).over(key_all)
+            )
+            live_upd = live_upd & ~F.col("__del")
+        ranked = ranked.withColumn(
+            "__had_old", F.max(F.col("__upd") == 0).over(key_all)
+        ).withColumn("__wupd", F.first(live_upd).over(key_all))
+    # the data files, the change files and (dv mode) the deletion vectors
+    # all read the ranked frame; freeze it once so they see one ranking
+    # (equal-order ties or a non-deterministic source could otherwise
+    # rank differently per read), and release it on every exit
+    frozen = None
     dv_losers = None
     if mode == "dv" and touched:
-        # dv mode consumes the ranked frame TWICE (stage the __rn==1
-        # winners; DV the __rn>1 losers). Freeze it once: with a
-        # non-deterministic updates source or non-deterministic
-        # expressions the two lineages could otherwise disagree —
-        # staging a winner whose displaced old row never gets DV'd
-        # (duplicate keys) or vice versa (ADVICE r08). Scope: matched
-        # files + batch, not the table.
+        # dv mode freezes eagerly (ADVICE r08): a localCheckpoint cannot
+        # be recomputed from lineage, so a lost block fails the merge
+        # instead of re-ranking. Scope: matched files + batch, not the
+        # table. Its release handle is the checkpointed RDD.
         ranked = ranked.localCheckpoint(eager=True)
+        frozen = ranked._jdf.queryExecution().logical().rdd()
         # every OLD row that did not win its key's window is replaced
         # (by an update winner) or deleted (by a tombstone winner): those
         # are the rows to deletion-vector in place. Old winners (stale
@@ -2394,95 +2432,89 @@ def delta_merge(
             (F.col("__rn") > 1) & F.col("__fp").isNotNull()
         ).select("__fp", "__ri")
         ranked = ranked.drop("__fp", "__ri")
-    merged_tagged = ranked.filter(F.col("__rn") == 1).drop("__rn")
-    merged = merged_tagged.drop("__upd")
-    if delete_predicate is not None:
-        # a tombstone that won the ordering removes its key from the table
-        merged = merged.filter(~F.col("__del")).drop("__del")
-    if touched and _append_only(snap.configuration):
-        from pos_dlt_spark.sources.delta import DeltaProtocolError
-
-        raise DeltaProtocolError(
-            "table is delta.appendOnly: merge would rewrite existing rows "
-            "(a pure-insert batch on disjoint keys is allowed)"
+    elif want_changes:
+        # filled by the data stage's own job: no action of its own
+        ranked = frozen = ranked.persist()
+    try:
+        merged_tagged = ranked.filter(F.col("__rn") == 1).drop(
+            "__rn", "__had_old", "__wupd", "__wdel"
         )
-    if mode == "dv":
-        # only BATCH winners land in new files; carried old rows stay in
-        # their original files (behind a DV when they lost)
-        stage_base = merged_tagged.filter(F.col("__upd") == 1).drop("__upd")
+        merged = merged_tagged.drop("__upd")
         if delete_predicate is not None:
-            stage_base = stage_base.filter(~F.col("__del")).drop("__del")
-    else:
-        stage_base = merged
-    stage_base, check_constraints = _constrained(stage_base, snap.configuration)
-    stage_df = stage_base
-    if rt_on:
-        # id resolution: carried rows already hold theirs; an UPDATE that
-        # won an existing key keeps the OLD row's id (stable identity)
-        # with THIS commit's version; brand-new keys stay null and take
-        # fresh ids from the new files' baseRowId at read time
-        version_next = snap.version + 1
-        if old is not None:
-            oldids = old.groupBy(*keys).agg(
-                F.max(rtm.ROW_ID_COL).alias("__oldrid")
-            )
-            stage_df = stage_base.join(oldids, keys, "left")
+            # a tombstone that won the ordering removes its key from the table
+            merged = merged.filter(~F.col("__del")).drop("__del")
+        if mode == "dv":
+            # only BATCH winners land in new files; carried old rows stay in
+            # their original files (behind a DV when they lost)
+            stage_base = merged_tagged.filter(F.col("__upd") == 1).drop("__upd")
+            if delete_predicate is not None:
+                stage_base = stage_base.filter(~F.col("__del")).drop("__del")
         else:
-            stage_df = stage_base.withColumn(
-                "__oldrid", F.lit(None).cast("bigint")
-            )
-        stage_df = stage_df.select(
-            *cols,
-            F.coalesce(F.col(rtm.ROW_ID_COL), F.col("__oldrid")).alias(
-                snap.configuration[rtm.MAT_ROW_ID_PROP]
-            ),
-            F.coalesce(
-                F.col(rtm.ROW_VER_COL),
-                F.lit(version_next).cast("bigint"),
-            ).alias(snap.configuration[rtm.MAT_ROW_VER_PROP]),
-        )
-    adds = _stage_and_move(
-        _to_physical(stage_df, snap), path, _physical_partition_by(snap)
-    )
-    for chk in (check_generated, check_constraints):
-        if chk is None:
-            continue
-        try:
-            chk()
-        except BaseException:
-            for a in adds:
-                try:
-                    os.remove(os.path.join(path, a["add"]["path"]))
-                except OSError:
-                    pass
-            raise
-
-    cdc_actions: list[dict] = []
-    from pos_dlt_spark.sources.delta_cdf import (
-        cdf_enabled,
-        merge_change_rows,
-        stage_change_files,
-    )
-
-    if not write_change_files and not rt_on:
-        raise ValueError(
-            "write_change_files=False needs row tracking: without stable "
-            "row ids the change feed cannot derive update pairs"
-        )
-    if cdf_enabled(snap) and write_change_files:
-        old_df = old if old is not None else spark.createDataFrame([], snap.schema)
-        if mode == "dv" and touched:
-            old_df = old_df.drop("__fp", "__ri")
+            stage_base = merged
+        stage_base, check_constraints = _constrained(stage_base, snap.configuration)
+        stage_df = stage_base
         if rt_on:
-            # change rows carry the TABLE schema only
-            old_df = old_df.drop(*rt_cols)
-        changes = merge_change_rows(old_df, merged_tagged.drop(*rt_cols), keys)
-        # change files carry PHYSICAL column names under column mapping,
-        # exactly like data files; _change_type is unmapped and passes
-        # through _to_physical untouched
-        cdc_actions = stage_change_files(
-            _to_physical(changes, snap), path, _physical_partition_by(snap)
+            # id resolution: carried rows already hold theirs; an update
+            # that won an existing key takes the old id (__oldrid) with
+            # THIS commit's version; brand-new keys stay null and take
+            # fresh ids from the new files' baseRowId at read time
+            stage_df = stage_base.select(
+                *cols,
+                F.coalesce(F.col(rtm.ROW_ID_COL), F.col("__oldrid")).alias(
+                    snap.configuration[rtm.MAT_ROW_ID_PROP]
+                ),
+                F.coalesce(
+                    F.col(rtm.ROW_VER_COL),
+                    F.lit(snap.version + 1).cast("bigint"),
+                ).alias(snap.configuration[rtm.MAT_ROW_VER_PROP]),
+            )
+        adds = _stage_and_move(
+            _to_physical(stage_df, snap), path, _physical_partition_by(snap)
         )
+        for chk in (check_generated, check_constraints):
+            if chk is None:
+                continue
+            try:
+                chk()
+            except BaseException:
+                for a in adds:
+                    try:
+                        os.remove(os.path.join(path, a["add"]["path"]))
+                    except OSError:
+                        pass
+                raise
+
+        cdc_actions: list[dict] = []
+        if want_changes:
+            # a key won by a live update emits its winner (update_postimage
+            # when the key had an old row, else insert) and its old rows
+            # (update_preimage); a key won by a tombstone emits its old
+            # rows as delete. Stale updates, batch losers and tombstones
+            # for absent keys emit nothing.
+            upd_won = F.col("__wupd")
+            kind = F.when(
+                upd_won & (F.col("__rn") == 1),
+                F.when(F.col("__had_old"), "update_postimage").otherwise("insert"),
+            ).when(upd_won & (F.col("__upd") == 0), "update_preimage")
+            if delete_predicate is not None:
+                kind = kind.when(F.col("__wdel") & (F.col("__upd") == 0), "delete")
+            changes = ranked.select(*cols, kind.alias(CHANGE_TYPE)).filter(
+                F.col(CHANGE_TYPE).isNotNull()
+            )
+            # change files carry PHYSICAL column names under column mapping,
+            # exactly like data files; _change_type is unmapped and passes
+            # through _to_physical untouched
+            cdc_actions = stage_change_files(
+                _to_physical(changes, snap), path, _physical_partition_by(snap)
+            )
+        dv_rows = (
+            _encode_dv_groups(spark, snap, path, dv_losers)
+            if dv_losers is not None
+            else []
+        )
+    finally:
+        if frozen is not None:
+            frozen.unpersist(False)
 
     # BY DEFAULT identity columns: advance the watermark past every
     # staged value (footer stats — the column is primitive) in the same
@@ -2508,11 +2540,6 @@ def delta_merge(
                 )
             ]
     if mode == "dv":
-        dv_rows = (
-            _encode_dv_groups(spark, snap, path, dv_losers)
-            if dv_losers is not None
-            else []
-        )
         dv_actions = (
             [
                 _merged_protocol(

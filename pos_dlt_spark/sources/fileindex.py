@@ -95,7 +95,10 @@ def pruned_parquet(
         base_dir = parents.pop()
     elif not _SAFE_PATH.match(base_dir):
         return reader.parquet(*fpaths)
-    live = [_qualify(p) for p in fpaths]
+    # one SQL IN list, parsed in one JVM call (``Column.isin`` makes a
+    # py4j round trip per path); every path passed _SAFE_PATH, so none
+    # holds a quote or backslash
+    live = ", ".join(f"'{_qualify(p)}'" for p in fpaths)
     return reader.parquet(base_dir).where(
-        F.col("_metadata.file_path").isin(live)
+        F.expr(f"_metadata.file_path IN ({live})")
     )
