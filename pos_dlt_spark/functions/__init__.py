@@ -5,8 +5,11 @@ first 8 hex digits of md5. Unlike Spark's murmur3 ``hash()`` or DuckDB's
 ``hash()``, md5 is bit-identical in every engine, so hash-derived results
 (minhash signatures, simhash bits, hash-partitioned dedup keys) can be
 verified against an external SQL oracle. md5 is ~3x slower than murmur3 per
-call but still JVM-side and codegen'd; swap ``phash`` for ``F.hash`` when
-oracle parity is not needed.
+call; swap ``phash`` for ``F.hash`` when oracle parity is not needed. As a
+column expression it is codegen'd JVM-side, but inside a ``transform``
+lambda it runs interpreted per element, so per-shingle hashing goes through
+:func:`pos_dlt_spark.operators.dedup.shingle_hashes` (the same hash in C
+md5 over Arrow batches).
 """
 
 from __future__ import annotations

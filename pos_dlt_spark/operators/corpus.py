@@ -425,12 +425,9 @@ def contamination_pairs(
     by the benchmark doc's shingle count (the side you must protect).
     """
     # explode_OUTER, deliberately: plain explode lets Catalyst infer a
-    # `size(hsh) > 0` constraint and push the whole md5-shingle expression
-    # DOWN below the spread repartition as a scan filter — the unsplittable
-    # single-file scan then computes every hash in one task (and the spread
-    # stage recomputes them). Outer generate infers no constraint, so the
-    # heavy projection stays above the exchange. Null h rows (shingle-less
-    # docs) can't match an inner equi-join and cost nothing.
+    # `size(hsh) > 0` constraint and push it toward the scan; outer
+    # generate infers none. Null h rows (shingle-less docs) can't match an
+    # inner equi-join and cost nothing.
     t = hashed_shingle_table(train, text_col, id_col, shingle_n).select(
         F.col(id_col).alias("train_id"), F.explode_outer("hsh").alias("h")
     )

@@ -2,10 +2,12 @@
 SimHash, and n-gram Jaccard.
 
 Design for 100 TB:
-- **Signatures are per-row array expressions** (``transform`` /
-  ``array_min`` / ``aggregate`` over the token array) — computed inside
-  whole-stage codegen with NO explode and NO shuffle. A 100 TB corpus
-  streams through map tasks once.
+- **Signatures are per-row maps** with NO explode and NO shuffle: the JVM
+  tokenizes and shingles each row (``split`` / ``transform`` over the token
+  array), then ONE Arrow-batched ``mapInPandas`` stage
+  (:func:`shingle_hashes`) hashes each shingle set once with CPython's C
+  md5 and emits the distinct-hash set and every minhash value. A 100 TB
+  corpus streams through map tasks once.
 - **The only shuffles are the LSH band self-joins**, which hash-partition
   on (band_index, band_value) — exactly the key that buckets near-dups
   together. Bucket sizes are bounded by collision probability, not corpus
@@ -22,9 +24,11 @@ so every signature is verifiable against the DuckDB oracle.
 from __future__ import annotations
 
 import weakref
+from typing import Iterator
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
 from pos_dlt_spark.functions import phash
 from pos_dlt_spark.operators.text import tokens
@@ -95,27 +99,85 @@ def exact_dedup_groups(df: DataFrame, text_col: str = "text", id_col: str = "doc
 # -- MinHash + LSH ----------------------------------------------------------
 
 
-def minhash_signature(sh: Column, n_hashes: int = 8) -> list[Column]:
-    """k minhash values from a shingle-array column: min over shingles of
-    the salted portable hash. Each is an array_min(transform(...)) —
-    per-row, no shuffle, no explode. ``sh`` must be an attribute (see
-    :func:`word_shingles` performance note)."""
-    out = []
-    for i in range(n_hashes):
-        # NB: single-arg lambda — a two-arg lambda would make F.transform
-        # pass the element INDEX as the second arg. The closure over `salt`
-        # is safe because F.transform builds the expression eagerly here.
-        salt = f"{i}:"
-        out.append(F.array_min(F.transform(sh, lambda s: phash(s, salt=salt))).alias(f"mh{i}"))
-    return out
+def shingle_hashes(df: DataFrame, n_hashes: int, sh_col: str = "sh") -> DataFrame:
+    """Hash every row's shingle array ONCE, in one Arrow-batched
+    ``mapInPandas`` stage: ``df``'s columns minus ``sh_col``, then ``hsh``
+    (the distinct :func:`~pos_dlt_spark.functions.phash` values in
+    first-occurrence order, as ``array_distinct(transform(sh, phash))``)
+    and ``mh0..mh{n-1}`` (the min over shingles of the phash salted with
+    ``"{i}:"``, as ``array_min``).
+
+    Bit-identical to the SQL form: phash is the first 4 bytes of
+    ``md5(salt || utf8(s))`` read big-endian, which equals
+    ``conv(substring(md5(..), 1, 8), 16, 10)``. A null array gives null
+    ``hsh`` and null ``mh*``; an empty one gives ``[]`` and null ``mh*``;
+    a null element stays in ``hsh`` once and is skipped by the mins.
+    One seeded md5 per salt is ``copy()``-ed per shingle, so the salt is
+    hashed once per batch, and no element runs through interpreted
+    ``transform`` / ``conv`` / hex strings (a JVM ``transform`` lambda is
+    a codegen fallback: its projection runs element by element)."""
+    schema = StructType(
+        [f for f in df.schema.fields if f.name != sh_col]
+        + [StructField("hsh", ArrayType(LongType()))]
+        + [StructField(f"mh{i}", LongType()) for i in range(n_hashes)]
+    )
+    salts = [f"{i}:".encode() for i in range(n_hashes)]
+
+    def run(batches: Iterator) -> Iterator:
+        import sys
+        import zipimport
+        from hashlib import md5
+
+        import pandas as pd
+
+        # The Python worker calls importlib.invalidate_caches() at the start
+        # of every task, and on CPython 3.11 each cached zipimporter then
+        # re-reads its whole archive directory (pyspark.zip, py4j and the
+        # spark-core jar, once per imported package): ~0.25 CPU-s per task
+        # on a 4-vCPU host, more than hashing a partition. Dropping the
+        # entries is free: an import miss rebuilds one from zipimport's
+        # directory cache. It takes effect from the worker's next task.
+        for path, finder in list(sys.path_importer_cache.items()):
+            if isinstance(finder, zipimport.zipimporter):
+                del sys.path_importer_cache[path]
+
+        def digest32(seed, b: bytes) -> int:
+            h = seed.copy()
+            h.update(b)
+            return int.from_bytes(h.digest()[:4], "big")
+
+        unsalted = md5(usedforsecurity=False)
+        seeds = [md5(salt, usedforsecurity=False) for salt in salts]
+        for pdf in batches:
+            hsh: list = []
+            mins: list[list] = [[] for _ in seeds]
+            for sh in pdf.pop(sh_col):
+                if sh is None:
+                    hsh.append(None)
+                    for col in mins:
+                        col.append(None)
+                    continue
+                enc = [None if s is None else s.encode("utf-8") for s in sh]
+                hsh.append(list(dict.fromkeys(
+                    None if b is None else digest32(unsalted, b) for b in enc
+                )))
+                enc = [b for b in enc if b is not None]
+                for seed, col in zip(seeds, mins):
+                    col.append(min(digest32(seed, b) for b in enc) if enc else None)
+            pdf["hsh"] = pd.Series(hsh, index=pdf.index, dtype=object)
+            for i, col in enumerate(mins):
+                pdf[f"mh{i}"] = pd.Series(col, index=pdf.index, dtype=object)
+            yield pdf
+
+    return df.mapInPandas(run, schema)
 
 
 def minhash_signatures(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     n_hashes: int = 8, shingle_n: int = 3,
 ) -> DataFrame:
-    sh_df = shingle_table(df, text_col, id_col, shingle_n)
-    return sh_df.select(F.col(id_col), *minhash_signature(F.col("sh"), n_hashes))
+    sig = shingle_hashes(shingle_table(df, text_col, id_col, shingle_n), n_hashes)
+    return sig.select(id_col, *[f"mh{i}" for i in range(n_hashes)])
 
 
 def _banded(sig: DataFrame, id_col: str, n_hashes: int, bands: int) -> DataFrame:
@@ -199,30 +261,9 @@ def hashed_shingle_table(
     bigints are far cheaper than over shingle strings; Jaccard over the
     hash sets equals Jaccard over the string sets (the oracle applies the
     identical md5-derived hash, so even a collision cannot desynchronize
-    the two engines)."""
-    sh_df = shingle_table(df, text_col, id_col, n)
-    return sh_df.select(
-        F.col(id_col),
-        F.array_distinct(F.transform(F.col("sh"), lambda s: phash(s))).alias(out_col),
-    )
-
-
-def jaccard_for_pairs(
-    pairs: DataFrame, docs: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-    shingle_n: int = 3,
-) -> DataFrame:
-    """Exact shingle-set Jaccard for candidate pairs: two broadcast-or-hash
-    joins against the per-doc HASHED shingle sets, then pure integer array
-    math (|A∩B| / (|A|+|B|-|A∩B|) — the SQL oracle hashes identically)."""
-    sets = hashed_shingle_table(docs, text_col, id_col, shingle_n)
-    a = sets.select(F.col(id_col).alias("id_a"), F.col("hsh").alias("sh_a"))
-    b = sets.select(F.col(id_col).alias("id_b"), F.col("hsh").alias("sh_b"))
-    inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b"))).cast("double")
-    union = (F.size("sh_a") + F.size("sh_b")).cast("double") - inter
-    return (
-        pairs.join(a, "id_a").join(b, "id_b")
-        .select("id_a", "id_b", (inter / union).alias("jaccard"))
-    )
+    the two engines). Hashed by :func:`shingle_hashes`."""
+    sets = shingle_hashes(shingle_table(df, text_col, id_col, n), 0)
+    return sets.withColumnRenamed("hsh", out_col)
 
 
 # Frames pinned by pin_frame, oldest first. Spark's ContextCleaner only
@@ -283,19 +324,15 @@ def minhash_doc_profiles(
     once to band signatures and twice (a/b sides) to verify Jaccard on
     candidate pairs — and Catalyst does not share common subtrees across
     self-joins, so without pinning, the regexp tokenization and the
-    9x-md5-per-shingle work execute once PER CONSUMER (4 parquet scans +
+    9 md5 hashes per shingle execute once PER CONSUMER (4 parquet scans +
     4 Generate pipelines in the measured sf0.1 plan). This is the guide
     §8.4 "fingerprints only" step: one full read of the texts, then every
     later decision runs on the small hash frame. The frame is
     O(docs x shingles) bigints — the 100 TB shape writes it to a table;
-    locally the block cache holds it."""
-    sh_df = shingle_table(df, text_col, id_col, shingle_n)
+    locally the block cache holds it. The hashes come from ONE
+    :func:`shingle_hashes` stage."""
     return pin_frame(
-        sh_df.select(
-            F.col(id_col),
-            F.array_distinct(F.transform(F.col("sh"), lambda s: phash(s))).alias("hsh"),
-            *minhash_signature(F.col("sh"), n_hashes),
-        )
+        shingle_hashes(shingle_table(df, text_col, id_col, shingle_n), n_hashes)
     )
 
 

@@ -1538,22 +1538,6 @@ def synth_jpeg_media(df: DataFrame, id_col: str = "media_id") -> DataFrame:
     )
 
 
-def resize_stub(df: DataFrame, width: int, height: int) -> DataFrame:
-    """Image resize operator shape: passthrough metadata update (the pixel
-    transform is part of the stubbed codec layer). Keeps the operator
-    surface so pipelines can declare resize steps today and swap in a real
-    decoder later."""
-    return df.withColumn(
-        "meta",
-        F.struct(
-            F.lit(width).cast(IntegerType()).alias("width"),
-            F.lit(height).cast(IntegerType()).alias("height"),
-            F.col("meta.duration_ms").alias("duration_ms"),
-            F.col("meta.sample_rate").alias("sample_rate"),
-        ),
-    )
-
-
 def frame_sample_stub(df: DataFrame, every_ms: int = 1000) -> DataFrame:
     """Video frame-sampling operator shape: emits (media_id, frame_ts_ms)
     rows from duration metadata — the real frame extraction plugs into the

@@ -16,27 +16,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pos_dlt_spark.functions import phash, phash_sql
+from pos_dlt_spark.functions import phash_sql
 from pos_dlt_spark.operators import corpus as C
 from pos_dlt_spark.queries import query
 from pos_dlt_spark.queries_ml import _HSH_CTE, _SH_CTE, _TOKS_CTE
 from pos_dlt_spark.tables import load_table
 
-
-def _checkpoint_parallel(*dfs: DataFrame) -> list[DataFrame]:
-    """Eagerly localCheckpoint several INDEPENDENT DataFrames from a small
-    thread pool so their jobs overlap on the cluster (guide §2.6): a
-    sequential chain of eager checkpoints serializes the critical path —
-    each materialization waits for the previous one even though none
-    depends on it — while concurrent submission lets the scheduler
-    back-fill each job's straggler tail with the next job's tasks.
-    Actions are thread-safe on a shared SparkSession."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    if len(dfs) == 1:
-        return [dfs[0].localCheckpoint(eager=True)]
-    with ThreadPoolExecutor(max_workers=len(dfs)) as pool:
-        return list(pool.map(lambda d: d.localCheckpoint(eager=True), dfs))
 
 def stage_profiles(
     docs: DataFrame, n_hashes: int, shingle_n: int
@@ -49,12 +34,14 @@ def stage_profiles(
     signature. The quality / exact-dedup / LSH / decontamination stages
     previously each re-read and re-tokenized the corpus (guide §8.4:
     decide on small pinned rows — the text is read once, every stage
-    decision derives from this frame); the expressions are byte-for-byte
-    the standalone operators', so each stage's output is unchanged."""
+    decision derives from this frame). Tokens and shingles are the
+    standalone operators' JVM expressions and ``hsh`` / ``mh*`` come from
+    the same :func:`~pos_dlt_spark.operators.dedup.shingle_hashes` stage,
+    so each stage's output is unchanged."""
     from pos_dlt_spark.operators.dedup import (
         _shingles_from_tokens,
-        minhash_signature,
         pin_frame,
+        shingle_hashes,
     )
     from pos_dlt_spark.operators.text import quality_score, tokens
 
@@ -71,15 +58,7 @@ def stage_profiles(
         "content_hash",
         _shingles_from_tokens(F.col("__toks"), shingle_n).alias("sh"),
     )
-    return pin_frame(
-        sh_df.select(
-            "doc_id",
-            "quality_score",
-            "content_hash",
-            F.array_distinct(F.transform(F.col("sh"), lambda s: phash(s))).alias("hsh"),
-            *minhash_signature(F.col("sh"), n_hashes),
-        )
-    )
+    return pin_frame(shingle_hashes(sh_df, n_hashes))
 
 
 def _near_dropped_from_profiles(
@@ -785,7 +764,7 @@ def corpus_pipeline_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("doc_id")
             == F.min("doc_id").over(Window.partitionBy("content_hash")),
         )
-        .join(F.broadcast(near_ids.withColumn("nd", F.lit(True))), "doc_id", "left")
+        .join(near_ids.withColumn("nd", F.lit(True)), "doc_id", "left")
         .select("doc_id", "q", "canon", F.coalesce("nd", F.lit(False)).alias("nd"))
         .localCheckpoint(eager=True)
     )

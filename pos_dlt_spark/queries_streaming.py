@@ -548,10 +548,12 @@ def streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         def mk(kind: str, off: int):
             # clicks land 1 s after same-index purchases: some pairs fall
             # inside the 1-hour bound (join matches — emitted then
-            # filtered), the rest only exercise state insert + eviction
+            # filtered), the rest only exercise state insert + eviction.
+            # Sixteen negative users keep the matches per tick small: on
+            # one shared user each purchase matched up to 360 clicks
             return spark.range(half).select(
                 (-F.lit(n * 100000 + off) - F.col("id") * 2).alias("event_id"),
-                F.lit(-1).cast("long").alias("user_id"),
+                (-(F.col("id") % 16) - 1).alias("user_id"),
                 F.lit(kind).alias("event_type"),
                 F.expr(
                     f"timestamp'{_TICK_TS0}'"

@@ -574,33 +574,3 @@ def make_dv_descriptor_bytes(
         "sizeInBytes": entries[0][1],
         "cardinality": cardinality,
     }
-
-
-def make_dv_descriptor(
-    table_path: str, indices: list[int], inline_threshold: int = 512
-) -> dict:
-    """Build a descriptor (and sidecar file when above the inline
-    threshold) for the given deleted row indices — the writer half."""
-    import os
-    import uuid as _uuid
-
-    data = encode_dv_bitmap(indices)
-    if len(data) <= inline_threshold:
-        pad = (-len(data)) % 4
-        return {
-            "storageType": "i",
-            "pathOrInlineDv": z85_encode(data + b"\x00" * pad),
-            "offset": None,
-            "sizeInBytes": len(data),
-            "cardinality": len(set(indices)),
-        }
-    u = _uuid.uuid4()
-    fname = f"deletion_vector_{u}.bin"
-    entries = write_dv_file(os.path.join(table_path, fname), [data])
-    return {
-        "storageType": "u",
-        "pathOrInlineDv": z85_encode(u.bytes),
-        "offset": entries[0][0],
-        "sizeInBytes": entries[0][1],
-        "cardinality": len(set(indices)),
-    }

@@ -11,19 +11,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-TESTDATA_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
@@ -110,15 +97,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str, spread: bool = False
         if len(df.inputFiles()) < cores:
             df = df.repartition(cores)
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str, names=TESTDATA_TABLES) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in names}
-
-
-def register_views(spark: SparkSession, sf_dir: str, names=TESTDATA_TABLES) -> None:
-    for name in names:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
 def scratch_dir(prefix: str) -> str:
