@@ -32,6 +32,7 @@ from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
 from pos_dlt_spark.functions import phash
 from pos_dlt_spark.operators.text import tokens
+from pos_dlt_spark.pyworker import map_in_pandas
 
 
 # -- shingling --------------------------------------------------------------
@@ -99,9 +100,9 @@ def exact_dedup_groups(df: DataFrame, text_col: str = "text", id_col: str = "doc
 # -- MinHash + LSH ----------------------------------------------------------
 
 
-def shingle_hashes(df: DataFrame, n_hashes: int, sh_col: str = "sh") -> DataFrame:
+def shingle_hashes(df: DataFrame, n_hashes: int) -> DataFrame:
     """Hash every row's shingle array ONCE, in one Arrow-batched
-    ``mapInPandas`` stage: ``df``'s columns minus ``sh_col``, then ``hsh``
+    ``mapInPandas`` stage: ``df``'s columns minus ``sh``, then ``hsh``
     (the distinct :func:`~pos_dlt_spark.functions.phash` values in
     first-occurrence order, as ``array_distinct(transform(sh, phash))``)
     and ``mh0..mh{n-1}`` (the min over shingles of the phash salted with
@@ -117,29 +118,16 @@ def shingle_hashes(df: DataFrame, n_hashes: int, sh_col: str = "sh") -> DataFram
     ``transform`` / ``conv`` / hex strings (a JVM ``transform`` lambda is
     a codegen fallback: its projection runs element by element)."""
     schema = StructType(
-        [f for f in df.schema.fields if f.name != sh_col]
+        [f for f in df.schema.fields if f.name != "sh"]
         + [StructField("hsh", ArrayType(LongType()))]
         + [StructField(f"mh{i}", LongType()) for i in range(n_hashes)]
     )
     salts = [f"{i}:".encode() for i in range(n_hashes)]
 
     def run(batches: Iterator) -> Iterator:
-        import sys
-        import zipimport
         from hashlib import md5
 
         import pandas as pd
-
-        # The Python worker calls importlib.invalidate_caches() at the start
-        # of every task, and on CPython 3.11 each cached zipimporter then
-        # re-reads its whole archive directory (pyspark.zip, py4j and the
-        # spark-core jar, once per imported package): ~0.25 CPU-s per task
-        # on a 4-vCPU host, more than hashing a partition. Dropping the
-        # entries is free: an import miss rebuilds one from zipimport's
-        # directory cache. It takes effect from the worker's next task.
-        for path, finder in list(sys.path_importer_cache.items()):
-            if isinstance(finder, zipimport.zipimporter):
-                del sys.path_importer_cache[path]
 
         def digest32(seed, b: bytes) -> int:
             h = seed.copy()
@@ -151,7 +139,7 @@ def shingle_hashes(df: DataFrame, n_hashes: int, sh_col: str = "sh") -> DataFram
         for pdf in batches:
             hsh: list = []
             mins: list[list] = [[] for _ in seeds]
-            for sh in pdf.pop(sh_col):
+            for sh in pdf.pop("sh"):
                 if sh is None:
                     hsh.append(None)
                     for col in mins:
@@ -169,7 +157,7 @@ def shingle_hashes(df: DataFrame, n_hashes: int, sh_col: str = "sh") -> DataFram
                 pdf[f"mh{i}"] = pd.Series(col, index=pdf.index, dtype=object)
             yield pdf
 
-    return df.mapInPandas(run, schema)
+    return map_in_pandas(df, run, schema)
 
 
 def minhash_signatures(

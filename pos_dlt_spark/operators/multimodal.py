@@ -54,6 +54,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from pos_dlt_spark.pyworker import map_in_pandas
+
 MEDIA_FEATURE_SCHEMA = StructType(
     [
         StructField("media_id", LongType()),
@@ -129,7 +131,7 @@ def extract_media_features(df: DataFrame, fake: bool = True) -> DataFrame:
                 }
             )
 
-    return df.select("media_id", "kind", "payload").mapInPandas(run, MEDIA_FEATURE_SCHEMA)
+    return map_in_pandas(df.select("media_id", "kind", "payload"), run, MEDIA_FEATURE_SCHEMA)
 
 
 # -- real decoder: uncompressed 24-bit BMP (no codec library needed) ---------
@@ -234,8 +236,8 @@ def bmp_features(df: DataFrame) -> DataFrame:
     happens in the calling query so both engines divide the same exact
     integers. Embarrassingly parallel, no shuffle; payloads never leave
     the executor."""
-    return df.select("media_id", "payload").mapInPandas(
-        _bmp_feature_batches, BMP_FEATURE_SCHEMA
+    return map_in_pandas(
+        df.select("media_id", "payload"), _bmp_feature_batches, BMP_FEATURE_SCHEMA
     )
 
 
@@ -269,7 +271,7 @@ def synth_bmp_media(df: DataFrame, id_col: str = "media_id") -> DataFrame:
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         return _synth_bmp_batches(batches, id_col)
 
-    return df.select(F.col(id_col)).mapInPandas(run, schema)
+    return map_in_pandas(df.select(F.col(id_col)), run, schema)
 
 
 def synth_bmp_features(df: DataFrame, id_col: str = "media_id") -> DataFrame:
@@ -284,7 +286,7 @@ def synth_bmp_features(df: DataFrame, id_col: str = "media_id") -> DataFrame:
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         return _bmp_feature_batches(_synth_bmp_batches(batches, id_col))
 
-    return df.select(F.col(id_col)).mapInPandas(run, BMP_FEATURE_SCHEMA)
+    return map_in_pandas(df.select(F.col(id_col)), run, BMP_FEATURE_SCHEMA)
 
 
 # -- real decoder #2: RIFF/WAVE PCM16 audio (no codec library needed) --------
@@ -409,8 +411,8 @@ def wav_features(df: DataFrame) -> DataFrame:
     a decoder with wrong sample order, byte order, or chunk offsets —
     means alone cannot). Embarrassingly parallel, no shuffle; payloads
     never leave the executor."""
-    return df.select("media_id", "payload").mapInPandas(
-        _wav_feature_batches, WAV_FEATURE_SCHEMA
+    return map_in_pandas(
+        df.select("media_id", "payload"), _wav_feature_batches, WAV_FEATURE_SCHEMA
     )
 
 
@@ -447,7 +449,7 @@ def synth_wav_media(df: DataFrame, id_col: str = "media_id") -> DataFrame:
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         return _synth_wav_batches(batches, id_col)
 
-    return df.select(F.col(id_col)).mapInPandas(run, schema)
+    return map_in_pandas(df.select(F.col(id_col)), run, schema)
 
 
 def synth_wav_features(df: DataFrame, id_col: str = "media_id") -> DataFrame:
@@ -459,7 +461,7 @@ def synth_wav_features(df: DataFrame, id_col: str = "media_id") -> DataFrame:
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         return _wav_feature_batches(_synth_wav_batches(batches, id_col))
 
-    return df.select(F.col(id_col)).mapInPandas(run, WAV_FEATURE_SCHEMA)
+    return map_in_pandas(df.select(F.col(id_col)), run, WAV_FEATURE_SCHEMA)
 
 
 
@@ -680,8 +682,8 @@ def png_features(df: DataFrame) -> DataFrame:
     catches a decoder whose defilter or chunk concatenation is off by
     anything, which channel means alone cannot). Embarrassingly
     parallel, no shuffle; payloads never leave the executor."""
-    return df.select("media_id", "payload").mapInPandas(
-        _png_feature_batches, PNG_FEATURE_SCHEMA
+    return map_in_pandas(
+        df.select("media_id", "payload"), _png_feature_batches, PNG_FEATURE_SCHEMA
     )
 
 
@@ -717,7 +719,7 @@ def synth_png_media(df: DataFrame, id_col: str = "media_id") -> DataFrame:
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         return _synth_png_batches(batches, id_col)
 
-    return df.select(F.col(id_col)).mapInPandas(run, schema)
+    return map_in_pandas(df.select(F.col(id_col)), run, schema)
 
 
 def synth_png_features(df: DataFrame, id_col: str = "media_id") -> DataFrame:
@@ -729,7 +731,7 @@ def synth_png_features(df: DataFrame, id_col: str = "media_id") -> DataFrame:
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         return _png_feature_batches(_synth_png_batches(batches, id_col))
 
-    return df.select(F.col(id_col)).mapInPandas(run, PNG_FEATURE_SCHEMA)
+    return map_in_pandas(df.select(F.col(id_col)), run, PNG_FEATURE_SCHEMA)
 
 
 # -- real decoder #4: baseline sequential JPEG (ITU T.81, stdlib+numpy) ------
@@ -1456,8 +1458,8 @@ def jpeg_features(df: DataFrame) -> DataFrame:
     decode features (dims, mean pixel, position-weighted checksum) —
     Arrow-batched, embarrassingly parallel, payloads never reach the
     driver."""
-    return df.select("media_id", "payload").mapInPandas(
-        _jpeg_feature_batches, JPEG_FEATURE_SCHEMA
+    return map_in_pandas(
+        df.select("media_id", "payload"), _jpeg_feature_batches, JPEG_FEATURE_SCHEMA
     )
 
 
@@ -1508,8 +1510,8 @@ def synth_jpeg_features(df: DataFrame, id_col: str = "media_id") -> DataFrame:
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         return _jpeg_feature_batches(_synth_jpeg_batches(batches, id_col))
 
-    return df.select(F.col(id_col).cast("long").alias(id_col)).mapInPandas(
-        run, JPEG_FEATURE_SCHEMA
+    return map_in_pandas(
+        df.select(F.col(id_col).cast("long").alias(id_col)), run, JPEG_FEATURE_SCHEMA
     )
 
 
@@ -1533,8 +1535,8 @@ def synth_jpeg_media(df: DataFrame, id_col: str = "media_id") -> DataFrame:
             StructField("payload", BinaryType()),
         ]
     )
-    return df.select(F.col(id_col).cast("long").alias(id_col)).mapInPandas(
-        run, schema
+    return map_in_pandas(
+        df.select(F.col(id_col).cast("long").alias(id_col)), run, schema
     )
 
 

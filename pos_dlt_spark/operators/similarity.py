@@ -25,6 +25,8 @@ import random
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from pos_dlt_spark.pyworker import map_in_pandas
+
 
 def _sql_json_arr(data, dtype: str) -> str:
     """Render a nested integer array as ONE foldable literal: a JSON
@@ -300,7 +302,7 @@ def brute_force_topk_vectorized(
             if frames:
                 yield pd.concat(frames)
 
-    partial = corpus.select(id_col, vec_col).mapInPandas(fn, out_schema)
+    partial = map_in_pandas(corpus.select(id_col, vec_col), fn, out_schema)
     w = Window.partitionBy("probe_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
     return (
         partial.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
@@ -911,4 +913,4 @@ def assign_centroids_vectorized(
                 }
             )
 
-    return df.select(id_col, vec_col).mapInPandas(fn, schema)
+    return map_in_pandas(df.select(id_col, vec_col), fn, schema)

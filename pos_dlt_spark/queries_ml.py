@@ -319,8 +319,9 @@ def dedup_exact_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def dedup_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash signatures (8 portable salted hashes over word 3-shingles) —
-    per-row array expressions, no explode, no shuffle."""
+    """MinHash signatures (8 portable salted hashes over word 3-shingles):
+    shingles built JVM-side, hashed in one Arrow ``mapInPandas`` stage, no
+    explode, no shuffle."""
     return D.minhash_signatures(load_table(spark, sf_dir, "documents", spread=True))
 
 

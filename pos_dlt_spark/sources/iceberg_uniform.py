@@ -44,6 +44,7 @@ import os
 import struct
 import uuid
 
+from pos_dlt_spark.pyworker import map_in_pandas
 from pos_dlt_spark.sources.fileindex import pruned_parquet as _pruned
 
 # --------------------------------------------------------------------------
@@ -1322,7 +1323,7 @@ def _stage_native_data(spark, df, path: str, schema: dict, spec: dict, snapshot_
                     )
                 yield pdf
 
-        work = df.mapInPandas(_gen, schema=out)
+        work = map_in_pandas(df, _gen, out)
 
     entries: list[dict] = []
 
