@@ -28,12 +28,9 @@ if _REPO not in os.environ.get("PYTHONPATH", "").split(os.pathsep):
         else _REPO
     )
 
-from pos_dlt_spark.queries import REGISTRY  # noqa: E402
-import pos_dlt_spark.queries_analytics  # noqa: E402,F401  (registers analytics queries)
-import pos_dlt_spark.queries_corpus  # noqa: E402,F401  (registers corpus-assembly queries)
-import pos_dlt_spark.queries_ml  # noqa: E402,F401  (registers ML queries)
-import pos_dlt_spark.queries_streaming  # noqa: E402,F401  (registers streaming queries)
-import pos_dlt_spark.queries_tpch  # noqa: E402,F401  (registers TPC-H batch-2 queries)
+from pos_dlt_spark.queries import load_registry  # noqa: E402
+
+REGISTRY = load_registry()
 
 
 def entry(spark: SparkSession) -> DataFrame:

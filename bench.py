@@ -35,13 +35,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from pos_dlt_spark.queries import REGISTRY  # noqa: E402
-import pos_dlt_spark.queries_analytics  # noqa: E402,F401  (registers analytics queries)
-import pos_dlt_spark.queries_corpus  # noqa: E402,F401  (registers corpus-assembly queries)
-import pos_dlt_spark.queries_ml  # noqa: E402,F401  (registers ML queries)
-import pos_dlt_spark.queries_streaming  # noqa: E402,F401  (registers streaming queries)
-import pos_dlt_spark.queries_tpch  # noqa: E402,F401  (registers TPC-H batch-2 queries)
+from pos_dlt_spark.queries import load_registry  # noqa: E402
 from pos_dlt_spark.session import get_spark  # noqa: E402
+
+REGISTRY = load_registry()
 
 
 def _cpu_jiffies() -> tuple[int, int]:

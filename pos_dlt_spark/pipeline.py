@@ -1411,8 +1411,8 @@ class PipelineRunner:
     ``DataFrame.observe`` — violation counts cost ZERO extra scans at any
     scale (an AggregatingAccumulator on the already-running plan), unlike
     a separate ``count()`` pass which would re-read the table. Metrics
-    land in :attr:`expectation_metrics` and are appended to
-    ``storage/_events/expectations.jsonl`` (the DLT event-log analogue).
+    land in :attr:`expectation_metrics` and as ``expectation`` events in
+    the run ledger (:meth:`Pipeline.event_log`).
     """
 
     def __init__(self, pipeline: Pipeline) -> None:
@@ -1459,10 +1459,6 @@ class PipelineRunner:
                 "failed": failed,
             }
         self.expectation_metrics[table] = metrics
-        events = os.path.join(self.p.storage, "_events")
-        os.makedirs(events, exist_ok=True)
-        with open(os.path.join(events, "expectations.jsonl"), "a") as f:
-            f.write(json.dumps({"ts": time.time(), "table": table, "expectations": metrics}) + "\n")
         for name, m in metrics.items():
             self.log.emit(
                 "expectation", table=table, name=name, action=m["action"],

@@ -44,6 +44,25 @@ def query(name: str, oracle: str | None = None):
     return deco
 
 
+_GATE_MODULES = (
+    "queries_analytics",
+    "queries_corpus",
+    "queries_ml",
+    "queries_streaming",
+    "queries_tpch",
+)
+
+
+def load_registry() -> dict[str, Query]:
+    """Import every ``queries_*`` module (each registers its gates on
+    import) and return the full :data:`REGISTRY`."""
+    import importlib
+
+    for mod in _GATE_MODULES:
+        importlib.import_module(f"pos_dlt_spark.{mod}")
+    return REGISTRY
+
+
 # ---------------------------------------------------------------------------
 # POS-parity queries (reference semantics mapped onto the TESTDATA star
 # schema: l_suppkey -> store_id, l_partkey -> item_id, l_shipdate ->

@@ -1065,7 +1065,8 @@ def scan_rels(
         "spark.sql.sources.parallelPartitionDiscovery.parallelism", "64"
     )
     path = snap.path
-    wanted = [(rel, pv) for rel, pv in snap.files if rels is None or rel in set(rels)]
+    sel = None if rels is None else set(rels)
+    wanted = [(rel, pv) for rel, pv in snap.files if sel is None or rel in sel]
     if not wanted:
         return None
     out_cols = [f.name for f in snap.schema.fields]
@@ -1339,6 +1340,37 @@ def _apply_deletion_vectors(
     return out
 
 
+def scan_live_rows(
+    spark: SparkSession,
+    snap: DeltaSnapshot,
+    rels: list[str] | None = None,
+    with_meta: bool = False,
+    extra_fields: list[str] | None = None,
+) -> DataFrame | None:
+    """The LIVE rows of (a subset of) a snapshot's files: files without a
+    deletion vector take the plain :func:`scan_rels` scan, the others
+    :func:`_apply_deletion_vectors`, and the two halves union by name.
+    ``with_meta`` and ``extra_fields`` pass through to both halves, so
+    ``__fpr``/``__fp``/``__ri`` and the extra columns line up. Returns
+    None when the selection is empty."""
+    wanted = set(rels) if rels is not None else None
+    plain: list[str] = []
+    dv_rels: list[str] = []
+    for rel, _pv in snap.files:
+        if wanted is None or rel in wanted:
+            has_dv = snap.adds.get(rel, {}).get("deletionVector")
+            (dv_rels if has_dv else plain).append(rel)
+    out = scan_rels(
+        spark, snap, plain, with_meta=with_meta, extra_fields=extra_fields
+    )
+    if not dv_rels:
+        return out
+    dvpart = _apply_deletion_vectors(
+        spark, snap, dv_rels, keep_meta=with_meta, extra_fields=extra_fields
+    )
+    return dvpart if out is None else out.unionByName(dvpart)
+
+
 def _resolve_dv_fid(
     spark: SparkSession,
     scan: DataFrame,
@@ -1431,13 +1463,4 @@ def read_delta(
         snap, _ = skip_files(snap, prune)
     if not snap.files:
         return spark.createDataFrame([], snap.schema)
-    dv_rels = [
-        rel for rel, _ in snap.files if snap.adds.get(rel, {}).get("deletionVector")
-    ]
-    plain = scan_rels(
-        spark, snap, [rel for rel, _ in snap.files if rel not in set(dv_rels)]
-    )
-    if not dv_rels:
-        return plain
-    dvpart = _apply_deletion_vectors(spark, snap, dv_rels)
-    return plain.unionByName(dvpart) if plain is not None else dvpart
+    return scan_live_rows(spark, snap)

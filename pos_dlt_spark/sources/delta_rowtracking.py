@@ -155,8 +155,7 @@ def scan_with_row_ids(
     from pos_dlt_spark.sources.delta import (
         DeltaProtocolError,
         _abs_file,
-        _apply_deletion_vectors,
-        scan_rels,
+        scan_live_rows,
     )
     from pos_dlt_spark.tables import local_df
 
@@ -169,33 +168,12 @@ def scan_with_row_ids(
     mat_ver = snap.configuration.get(MAT_ROW_VER_PROP)
     extra = [c for c in (mat_id, mat_ver) if c]
     out_cols = [f.name for f in snap.schema.fields]
-    wanted = [rel for rel, _ in snap.files if rels is None or rel in set(rels)]
+    sel = None if rels is None else set(rels)
+    wanted = [rel for rel, _ in snap.files if sel is None or rel in sel]
     if not wanted:
         return None
 
-    dv_rels = [
-        rel for rel in wanted if snap.adds.get(rel, {}).get("deletionVector")
-    ]
-    plain = scan_rels(
-        spark,
-        snap,
-        [rel for rel in wanted if rel not in set(dv_rels)],
-        with_meta=True,
-        extra_fields=extra,
-    )
-    dvpart = (
-        _apply_deletion_vectors(
-            spark, snap, dv_rels, keep_meta=True, extra_fields=extra
-        )
-        if dv_rels
-        else None
-    )
-    if plain is None:
-        scan = dvpart
-    elif dvpart is None:
-        scan = plain
-    else:
-        scan = plain.unionByName(dvpart)
+    scan = scan_live_rows(spark, snap, wanted, with_meta=True, extra_fields=extra)
 
     # per-file base table, keyed by every plausible raw-URI rendering of
     # the absolute path (the same renderings trick the DV fid map uses so
@@ -324,6 +302,19 @@ def scan_with_row_ids(
     )
 
 
+def to_materialized(df: DataFrame, snap, cols: list[str] | None = None) -> DataFrame:
+    """``cols`` (default: the table's columns) plus ``df``'s resolved
+    ``_row_id`` / ``_row_commit_version`` aliased into the table's
+    materialized physical columns — the staging shape of every rewrite
+    that keeps row ids stable."""
+    mat_id, mat_ver = require_materialized_columns(snap)
+    return df.select(
+        *(cols if cols is not None else [f.name for f in snap.schema.fields]),
+        F.col(ROW_ID_COL).alias(mat_id),
+        F.col(ROW_VER_COL).alias(mat_ver),
+    )
+
+
 def read_delta_with_row_ids(
     spark: SparkSession, path: str, version: int | None = None
 ) -> DataFrame:
@@ -355,5 +346,6 @@ __all__ = [
     "hwm_action",
     "assign_base_row_ids",
     "scan_with_row_ids",
+    "to_materialized",
     "read_delta_with_row_ids",
 ]

@@ -37,6 +37,8 @@ from __future__ import annotations
 import json
 import os
 import uuid
+from collections.abc import Callable
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 
@@ -889,31 +891,29 @@ def _write_crc(
     os.replace(tmp, os.path.join(log_dir, f"{version:020d}.crc"))
 
 
-def _lost_race_cleanup(path: str, actions: list[dict], remove_adds: bool) -> None:
-    """Remove files staged by a commit attempt that lost its O_EXCL race
-    so the retry (or the caller's re-run) never leaks unreferenced data:
-    staged cdc change files, staged data files (``remove_adds=True`` —
-    copy-on-write rewrites; dv-mode DELETE re-adds PRE-EXISTING files, so
-    its caller passes False), and DV sidecar files written this attempt
-    (dv-mode adds always carry a descriptor minted this attempt — prior
-    descriptors, still referenced by the committed log, point at
-    different sidecar files)."""
+def _discard_staged(
+    path: str, actions: list[dict], remove_adds: bool = True
+) -> None:
+    """Remove the files a commit attempt staged when it fails or loses its
+    O_EXCL race, so the retry (or the caller's re-run) never leaks
+    unreferenced data: staged cdc change files; for an add carrying a
+    deletion vector — a re-add of a PRE-EXISTING file, whose data stays —
+    the DV sidecar minted this attempt (prior descriptors, still
+    referenced by the committed log, point at different sidecar files);
+    and, with ``remove_adds``, the staged data file of every other add."""
     from pos_dlt_spark.sources.dv import dv_relative_path
 
     for a in actions:
-        rels: list[str] = []
+        rel = None
         if "cdc" in a:
-            rels.append(a["cdc"]["path"])
+            rel = a["cdc"]["path"]
         elif "add" in a:
-            if remove_adds:
-                rels.append(a["add"]["path"])
-            else:
-                dvd = a["add"].get("deletionVector")
-                if dvd:
-                    sp = dv_relative_path(dvd)
-                    if sp:
-                        rels.append(sp)
-        for rel in rels:
+            dvd = a["add"].get("deletionVector")
+            if dvd:
+                rel = dv_relative_path(dvd)  # None: inline or absolute DV
+            elif remove_adds:
+                rel = a["add"]["path"]
+        if rel:
             try:
                 os.remove(os.path.join(path, rel))
             except OSError:
@@ -1016,12 +1016,7 @@ def _replace_where_actions(
       covering the matches (straddling files, merge-on-read: kilobytes
       of bitmap instead of rewriting the file). DV re-adds carry
       dataChange=true and declare the deletionVectors feature."""
-    from pos_dlt_spark.sources.delta import (
-        _abs_file,
-        _apply_deletion_vectors,
-        scan_rels,
-        skip_files,
-    )
+    from pos_dlt_spark.sources.delta import scan_live_rows
 
     if not snap.files:
         return []
@@ -1033,76 +1028,32 @@ def _replace_where_actions(
         ]
     from pyspark.sql import functions as F
 
-    preds = _skipping_predicates(predicate)
-    scan_snap = skip_files(snap, preds)[0] if preds else snap
+    from pos_dlt_spark.sources.dv import bitmap_cardinality
+
+    scan_snap = _stats_candidates(snap, predicate)
     if not scan_snap.files:
         return []
-    dv_rels = [
-        rel
-        for rel, _ in scan_snap.files
-        if scan_snap.adds.get(rel, {}).get("deletionVector")
-    ]
-    plain = scan_rels(
-        spark,
-        scan_snap,
-        [rel for rel, _ in scan_snap.files if rel not in set(dv_rels)],
-        with_meta=True,
-    )
-    dvpart = (
-        _apply_deletion_vectors(spark, scan_snap, dv_rels, keep_meta=True)
-        if dv_rels
-        else None
-    )
-    if plain is None:
-        scan = dvpart
-    elif dvpart is not None:
-        scan = plain.unionByName(dvpart)
-    else:
-        scan = plain
+    scan = scan_live_rows(spark, scan_snap, with_meta=True)
     matches = scan.filter(F.expr(predicate)).select("__fp", "__ri")
-    rows = _encode_dv_groups(spark, snap, path, matches)
-    if not rows:
-        return []
-    from pos_dlt_spark.sources.dv import (
-        bitmap_cardinality,
-        make_dv_descriptor_bytes,
-    )
-
-    abs_to_rel = {
-        os.path.abspath(_abs_file(path, rel)): rel for rel, _ in snap.files
-    }
-    actions: list[dict] = []
-    any_dv = False
-    for r in sorted(rows, key=lambda r: r["__fp"]):
-        rel = abs_to_rel.get(r["__fp"])
+    rel_of = _rel_by_abs_path(snap)
+    partial, whole = [], []
+    for r in _encode_dv_groups(spark, snap, path, matches):
+        rel = rel_of.get(r["__fp"])
         if rel is None:
             raise ValueError(f"replaceWhere scan yielded unknown file {r['__fp']}")
         add = snap.adds[rel]
-        data = bytes(r["dv"])
-        card = bitmap_cardinality(data)
         nrec = None
         try:
             nrec = json.loads(add.get("stats") or "{}").get("numRecords")
         except (TypeError, ValueError):
             pass
-        if nrec is not None and card >= int(nrec):
+        if nrec is not None and bitmap_cardinality(bytes(r["dv"])) >= int(nrec):
             # every row of the file is now dead: drop it whole (no DV
             # descriptor is minted, no sidecar written)
-            actions.append(fx.remove_action(rel, size=add.get("size")))
-            continue
-        any_dv = True
-        new_add = dict(add)
-        new_add["deletionVector"] = make_dv_descriptor_bytes(
-            path, data, card, inline_threshold=inline_threshold
-        )
-        new_add["dataChange"] = True  # DML re-add (see _dv_readd_actions)
-        actions.append(fx.remove_action(rel, size=add.get("size")))
-        actions.append({"add": new_add})
-    if any_dv:
-        actions = [
-            _merged_protocol(snap.protocol, ("deletionVectors",), ("deletionVectors",))
-        ] + actions
-    return actions
+            whole.append(fx.remove_action(rel, size=add.get("size")))
+        else:
+            partial.append(r)
+    return _dv_readd_actions(snap, path, partial, inline_threshold) + whole
 
 
 _SHRED_TYPES = {
@@ -1797,11 +1748,7 @@ def write_delta(
             # abort before any commit: the staged files were already moved
             # into the table root but NO commit references them — remove
             # them so the table is byte-identical to before
-            for a in adds:
-                try:
-                    os.remove(os.path.join(path, a["add"]["path"]))
-                except OSError:
-                    pass
+            _discard_staged(path, adds)
             raise
 
     # 2. commit loop (optimistic concurrency)
@@ -1812,11 +1759,7 @@ def write_delta(
             if txn is not None and snap.txns.get(txn[0], -1) >= txn[1]:
                 # a concurrent writer sharing our appId landed this batch
                 # while we were staging — drop our staged twin and yield
-                for a in adds:
-                    try:
-                        os.remove(os.path.join(path, a["add"]["path"]))
-                    except OSError:
-                        pass
+                _discard_staged(path, adds)
                 return snap.version
             version = snap.version + 1
             # names + types, nullability excluded: file sources surface
@@ -1916,26 +1859,9 @@ def write_delta(
                     # plan staged above)
                     from pyspark.sql import functions as F
 
-                    from pos_dlt_spark.sources.delta import (
-                        _apply_deletion_vectors,
-                        scan_rels,
-                    )
+                    from pos_dlt_spark.sources.delta import scan_live_rows
 
-                    dv_all = [
-                        r
-                        for r, _ in snap.files
-                        if snap.adds.get(r, {}).get("deletionVector")
-                    ]
-                    live = scan_rels(
-                        spark,
-                        snap,
-                        [r for r, _ in snap.files if r not in set(dv_all)],
-                    )
-                    if dv_all:
-                        dvp = _apply_deletion_vectors(spark, snap, dv_all)
-                        live = (
-                            live.unionByName(dvp) if live is not None else dvp
-                        )
+                    live = scan_live_rows(spark, snap)
                     ins = df.select(
                         *[F.col(f"`{f.name}`") for f in snap.schema.fields]
                     ).withColumn(CHANGE_TYPE, F.lit("insert"))
@@ -2016,7 +1942,7 @@ def write_delta(
             # against the fresh snapshot on the next loop iteration.
             # (With identity values assigned this attempt, fall through
             # to the identity raise below — the values are stale.)
-            _lost_race_cleanup(path, actions, remove_adds=False)
+            _discard_staged(path, actions, remove_adds=False)
             if not assigned_identity:
                 exists = True
                 continue
@@ -2024,11 +1950,7 @@ def write_delta(
             # our identity values were allocated against a now-stale
             # watermark; a concurrent assigner may have claimed the same
             # range — the append must re-run (and re-assign), not replay
-            for a in adds:
-                try:
-                    os.remove(os.path.join(path, a["add"]["path"]))
-                except OSError:
-                    pass
+            _discard_staged(path, adds)
             raise DeltaCommitConflict(
                 f"version {version} was committed concurrently and this "
                 "append assigned identity values against the prior "
@@ -2038,125 +1960,35 @@ def write_delta(
     raise DeltaCommitConflict(f"gave up after {max_retries} commit races")
 
 
-def delta_merge(
-    spark,
-    path: str,
-    updates: DataFrame,
-    keys: list[str],
-    sequence_by: str,
-    tiebreakers: list[str] | None = None,
-    txn: tuple[str, int] | None = None,
-    range_join_threshold: int = 100_000,
-    checkpoint_interval: int = 10,
-    max_retries: int = 3,
-    delete_predicate: str | None = None,
-    write_change_files: bool = True,
-    mode: str = "rewrite",
-    inline_threshold: int = 512,
-) -> int:
-    """Latest-per-key MERGE (upsert) into a Delta table — the operation
-    the reference's CDC rides (`03_Bronze-to-Silver ETL.py:379-384`,
-    Delta MERGE), rebuilt on the protocol primitives:
+def _merge_touched_files(
+    spark, snap: DeltaSnapshot, updates: DataFrame, key: str, range_join_threshold: int
+) -> tuple[list[str], bool]:
+    """The files a MERGE batch must touch on ``key`` (= ``keys[0]``), and
+    whether the batch is empty.
 
-    1. **File pruning from log stats**: only files whose per-file
-       min/max on ``keys[0]`` can overlap the update batch's key range
-       are TOUCHED; provably-disjoint files are never read or rewritten
-       (the same skipping machinery reads use). Conservative: files
-       without stats are touched.
-    2. Touched rows ∪ updates go through one latest-per-key window
-       (``sequence_by`` DESC + tiebreakers — out-of-order updates LOSE
-       to newer rows already in the table, so replays are idempotent),
-       new files are written distributed, and the commit is one atomic
-       remove(touched)+add(new) JSON — readers see the old or the new
-       snapshot, never a mix.
-    3. A lost commit race RE-RUNS the whole merge against the fresh
-       snapshot (staged files cleaned up first) — never a blind replay
-       of the stale result, which could resurrect overwritten rows. The
-       re-run is always safe: the merge is deterministic in (snapshot,
-       updates) and commits atomically or not at all; SetTransaction
-       idempotence is re-checked on entry, so a concurrent writer
-       sharing the appId short-circuits. After ``max_retries`` lost
-       races :class:`DeltaCommitConflict` raises.
+    EXACT per-file pruning, not the update batch's min/max hull: a
+    single insert at the top of the keyspace would widen the hull over
+    every file (measured: 95/100 files touched where 3 suffice). Build
+    the per-file [min, max] table from the log stats, broadcast it
+    against the DISTINCT update keys with a BETWEEN join, and collect
+    the touched file ids — driver cost bounded by FILE COUNT. Files
+    without usable stats are always touched (conservative). Past
+    ``range_join_threshold`` stat-ful files (integral keys), the
+    broadcast BETWEEN join — O(files x distinct keys) comparisons —
+    switches to a BUCKETIZED interval equi-join (the rangejoin.py
+    pattern on the numeric domain): bucket width = widest file
+    interval, each file lands in <= 2 buckets, keys hash to their
+    bucket, and the residual BETWEEN applies after the equi-join —
+    same exact touched set, shuffle-partitioned instead of all-pairs.
 
-    Keys absent from the table INSERT; keys present UPDATE (newest
-    sequence wins; an EQUAL sequence — after any explicit tiebreakers —
-    resolves update-wins, matching DLT apply_changes' sequencing, so the
-    outcome is deterministic without caller-supplied tiebreakers).
-    Precondition: the table's live rows are unique per
-    key (the invariant every merge commit preserves; the window dedups
-    a violated precondition too, keeping the newest row).
-
-    ``delete_predicate`` is MERGE's whenMatchedDelete / DLT's
-    apply_as_deletes: an update row matching the SQL predicate is a
-    DELETE tombstone — when it wins the per-key sequence ordering the
-    key is REMOVED from the table (a stale tombstone loses like any
-    stale update). The predicate is evaluated on the RAW update batch
-    (it may reference columns outside the table schema, e.g. an op
-    marker — extra columns never reach the files); tombstones are not
-    retained across calls, so deletes assume per-key monotone
-    sequences. With CDF enabled, removed keys emit ``delete`` change
-    rows (their preimage) alongside the usual update/insert changes.
-    The change rows are classified on the merge's own key window and
-    staged from the same frozen ranked frame as the data files; a null
-    key groups with the table's null-key row, as in the merge itself.
-
-    Returns the committed version."""
-    from pyspark.sql import Window
+    The touched-file query answers emptiness too; only the branches
+    without one probe the batch for a row."""
     from pyspark.sql import functions as F
 
-    if mode not in ("dv", "rewrite"):
-        raise ValueError(f"mode must be dv|rewrite, got {mode!r}")
-    if not write_change_files and mode == "dv":
-        raise ValueError(
-            "write_change_files=False (merge-on-read CDF) requires "
-            "mode='rewrite': the derived feed does not classify "
-            "DV-merge commit shapes"
-        )
-    tiebreakers = list(tiebreakers or [])
-    snap = delta_snapshot(spark, path)
-    _writer_supports(snap)
-    _ident_always = [
-        n for n, s in _identity_spec(snap.schema).items()
-        if not s["allowExplicitInsert"]
-    ]
-    if _ident_always:
-        from pos_dlt_spark.sources.delta import DeltaProtocolError
-
-        raise DeltaProtocolError(
-            f"MERGE into a table whose identity column(s) {_ident_always} "
-            "are GENERATED ALWAYS would supply explicit values; use "
-            "allowExplicitInsert (GENERATED BY DEFAULT) for merge targets"
-        )
-    if txn is not None and snap.txns.get(txn[0], -1) >= txn[1]:
-        return snap.version  # batch already merged: replay skipped
-    if not set(keys + [sequence_by] + tiebreakers) <= {f.name for f in snap.schema.fields}:
-        raise ValueError("merge keys/sequence columns missing from table schema")
-
-    # column defaults apply to MERGE-supplied rows the same as appends:
-    # an updates frame that omits a defaulted column materializes it
-    # (the SQL MERGE INSERT-without-column path)
-    updates = _apply_column_defaults(updates, snap.schema)
-
-    # An empty batch commits nothing. The touched-file query below answers
-    # that too (``empty``), so only the branches without one probe.
     empty: bool | None = None
-    # EXACT per-file pruning, not the update batch's min/max hull: a
-    # single insert at the top of the keyspace would widen the hull over
-    # every file (measured: 95/100 files touched where 3 suffice). Build
-    # the per-file [min, max] table from the log stats, broadcast it
-    # against the DISTINCT update keys with a BETWEEN join, and collect
-    # the touched file ids — driver cost bounded by FILE COUNT. Files
-    # without usable stats are always touched (conservative). Past
-    # ``range_join_threshold`` stat-ful files (integral keys), the
-    # broadcast BETWEEN join — O(files x distinct keys) comparisons —
-    # switches to a BUCKETIZED interval equi-join (the rangejoin.py
-    # pattern on the numeric domain): bucket width = widest file
-    # interval, each file lands in <= 2 buckets, keys hash to their
-    # bucket, and the residual BETWEEN applies after the equi-join —
-    # same exact touched set, shuffle-partitioned instead of all-pairs.
     _PARTITION_RENDER_SAFE = {"string", "tinyint", "smallint", "int", "bigint", "boolean", "date"}
-    if keys[0] in snap.partition_columns:
-        key_type = {f.name: f.dataType.simpleString() for f in snap.schema.fields}[keys[0]]
+    if key in snap.partition_columns:
+        key_type = {f.name: f.dataType.simpleString() for f in snap.schema.fields}[key]
         if key_type in _PARTITION_RENDER_SAFE:
             # partition-keyed merge: the EXACT touched set comes straight
             # from the log's partitionValues (files never store the column,
@@ -2172,7 +2004,7 @@ def delta_merge(
             # bails out to touch-all first (the collect stays bounded by
             # the threshold, never by the batch).
             approx = updates.agg(
-                F.approx_count_distinct(keys[0]).alias("__n")
+                F.approx_count_distinct(key).alias("__n")
             ).first()["__n"]
             if approx > PRUNE_MAX_DISTINCT_KEYS:
                 touched = [rel for rel, _pv in snap.files]
@@ -2180,11 +2012,11 @@ def delta_merge(
                 vals = {
                     r["__p"]
                     for r in updates.select(
-                        F.col(keys[0]).cast("string").alias("__p")
+                        F.col(key).cast("string").alias("__p")
                     ).distinct().collect()
                 }
                 empty = not vals  # a null key collects as None
-                touched = [rel for rel, pv in snap.files if pv.get(keys[0]) in vals]
+                touched = [rel for rel, pv in snap.files if pv.get(key) in vals]
         else:
             touched = [rel for rel, _pv in snap.files]  # conservative: all
         ranges = []
@@ -2192,7 +2024,7 @@ def delta_merge(
         ranges = []
         touched_always = []
         # stats in column-mapping tables are keyed by PHYSICAL names
-        skey = snap.physical_names.get(keys[0], keys[0])
+        skey = snap.physical_names.get(key, key)
         for rel, _pv in snap.files:
             raw = snap.adds.get(rel, {}).get("stats")
             try:
@@ -2210,10 +2042,10 @@ def delta_merge(
         try:
             from pos_dlt_spark.tables import local_df
 
-            kt = updates.select(F.col(keys[0]).alias("__k")).distinct()
+            kt = updates.select(F.col(key).alias("__k")).distinct()
             key_type = dict(
                 (f.name, f.dataType.simpleString()) for f in snap.schema.fields
-            )[keys[0]]
+            )[key]
             integral = key_type in ("tinyint", "smallint", "int", "bigint")
             if integral and len(ranges) > range_join_threshold:
                 # bucketized interval equi-join (the scale path). Shift by
@@ -2258,199 +2090,244 @@ def delta_merge(
             touched += [rel for rel, _lo, _hi in ranges]
     if empty is None:
         empty = updates.limit(1).count() == 0
-    if empty:
-        return snap.version  # empty update batch: nothing to commit
-    if touched and _append_only(snap.configuration):
-        from pos_dlt_spark.sources.delta import DeltaProtocolError
+    return touched, empty
 
-        raise DeltaProtocolError(
-            "table is delta.appendOnly: merge would rewrite existing rows "
-            "(a pure-insert batch on disjoint keys is allowed)"
-        )
 
-    cols = [f.name for f in snap.schema.fields]
-    if mode == "dv":
-        from pos_dlt_spark.sources.delta import _abs_file as _absf
+def delta_merge(
+    spark,
+    path: str,
+    updates: DataFrame,
+    keys: list[str],
+    sequence_by: str,
+    tiebreakers: list[str] | None = None,
+    txn: tuple[str, int] | None = None,
+    range_join_threshold: int = 100_000,
+    checkpoint_interval: int = 10,
+    max_retries: int = 3,
+    delete_predicate: str | None = None,
+    write_change_files: bool = True,
+    mode: str = "rewrite",
+    inline_threshold: int = 512,
+) -> int:
+    """Latest-per-key MERGE (upsert) into a Delta table — the operation
+    the reference's CDC rides (`03_Bronze-to-Silver ETL.py:379-384`,
+    Delta MERGE), rebuilt on the protocol primitives:
 
-        abs_to_rel_all = {
-            os.path.abspath(_absf(path, rel)): rel for rel, _ in snap.files
-        }
-    # keep the UNtransformed batch for the commit-race retry below: the
-    # re-run must repeat tombstone flagging / generated-column exemption /
-    # casting itself — recursing with the transformed frame (extra source
-    # columns dropped, __del demoted to a data column) would upsert
-    # tombstones as regular rows
-    raw_updates = updates
-    # tombstone flag FIRST, on the RAW batch (the predicate may reference
-    # op-marker columns outside the table schema)
-    if delete_predicate is not None:
-        updates = updates.withColumn(
-            "__del", F.coalesce(F.expr(delete_predicate), F.lit(False))
-        )
-    # generated columns: compute any the update batch omitted, validate
-    # any it provided (check runs after the staging job below; tombstone
-    # rows are exempt — their payloads never reach the table)
-    updates, check_generated = _generated(
-        updates, snap.schema,
-        exempt_col="__del" if delete_predicate is not None else None,
-    )
-    # cast the update batch to the TABLE's column types (update batches
-    # often arrive widened, e.g. int64 from pandas against an int
-    # column; writing them as-is would poison the files against the
-    # pinned log schema). ANSI mode errors on lossy casts. Extra source
-    # columns (op markers) are dropped here.
-    tbl_types = {f.name: f.dataType for f in snap.schema.fields}
-    flag = ["__del"] if delete_predicate is not None else []
-    updates = updates.select(
-        *[F.col(n).cast(tbl_types[n]).alias(n) for n in cols], *flag
-    )
-    from pos_dlt_spark.sources import delta_rowtracking as rtm
+    1. **File pruning from log stats**: only files whose per-file
+       min/max on ``keys[0]`` can overlap the update batch's key range
+       are TOUCHED; provably-disjoint files are never read or rewritten
+       (the same skipping machinery reads use). Conservative: files
+       without stats are touched.
+    2. Touched rows ∪ updates go through one latest-per-key window
+       (``sequence_by`` DESC + tiebreakers — out-of-order updates LOSE
+       to newer rows already in the table, so replays are idempotent),
+       new files are written distributed, and the commit is one atomic
+       remove(touched)+add(new) JSON — readers see the old or the new
+       snapshot, never a mix.
+    3. A lost commit race RE-RUNS the whole merge against the fresh
+       snapshot (see :func:`_apply_and_commit`) — never a blind replay
+       of the stale result, which could resurrect overwritten rows. The
+       re-run is always safe: the merge is deterministic in (snapshot,
+       updates) and commits atomically or not at all; SetTransaction
+       idempotence is re-checked per attempt, so a concurrent writer
+       sharing the appId short-circuits. After ``max_retries`` lost
+       races :class:`DeltaCommitConflict` raises.
 
-    rt_on = rtm.row_tracking_enabled(snap.configuration)
-    if rt_on:
-        rtm.require_materialized_columns(snap)
-    elif not write_change_files:
-        raise ValueError(
-            "write_change_files=False needs row tracking: without stable "
-            "row ids the change feed cannot derive update pairs"
-        )
-    rt_nulls = (
-        [
-            F.lit(None).cast("bigint").alias(rtm.ROW_ID_COL),
-            F.lit(None).cast("bigint").alias(rtm.ROW_VER_COL),
+    Keys absent from the table INSERT; keys present UPDATE (newest
+    sequence wins; an EQUAL sequence — after any explicit tiebreakers —
+    resolves update-wins, matching DLT apply_changes' sequencing, so the
+    outcome is deterministic without caller-supplied tiebreakers).
+    Precondition: the table's live rows are unique per
+    key (the invariant every merge commit preserves; the window dedups
+    a violated precondition too, keeping the newest row).
+
+    ``delete_predicate`` is MERGE's whenMatchedDelete / DLT's
+    apply_as_deletes: an update row matching the SQL predicate is a
+    DELETE tombstone — when it wins the per-key sequence ordering the
+    key is REMOVED from the table (a stale tombstone loses like any
+    stale update). The predicate is evaluated on the RAW update batch
+    (it may reference columns outside the table schema, e.g. an op
+    marker — extra columns never reach the files); tombstones are not
+    retained across calls, so deletes assume per-key monotone
+    sequences. With CDF enabled, removed keys emit ``delete`` change
+    rows (their preimage) alongside the usual update/insert changes.
+    The change rows are classified on the merge's own key window and
+    staged from the same frozen ranked frame as the data files; a null
+    key groups with the table's null-key row, as in the merge itself.
+
+    Returns the committed version."""
+    tiebreakers = list(tiebreakers or [])
+
+    def plan(snap: DeltaSnapshot, want_changes: bool) -> _DmlPlan | None:
+        from pyspark.sql import Window
+        from pyspark.sql import functions as F
+
+        from pos_dlt_spark.sources import delta_rowtracking as rtm
+        from pos_dlt_spark.sources.delta import scan_live_rows
+        from pos_dlt_spark.sources.delta_cdf import CHANGE_TYPE
+
+        _ident_always = [
+            n for n, s in _identity_spec(snap.schema).items()
+            if not s["allowExplicitInsert"]
         ]
-        if rt_on
-        else []
-    )
-    old = None
-    if touched:
-        # the shared snapshot scanner recovers partition values (Hive
-        # discovery or per-tuple literals) AND applies any deletion
-        # vectors on touched files — a merge that read a DV'd file raw
-        # would resurrect its deleted rows into the rewrite. On a
-        # ROW-TRACKING table the scan also resolves each old row's
-        # id/commit-version so the rewrite can preserve them.
-        from pos_dlt_spark.sources.delta import _apply_deletion_vectors, scan_rels
+        if _ident_always:
+            from pos_dlt_spark.sources.delta import DeltaProtocolError
 
-        keep_meta = mode == "dv"  # dv mode needs each old row's (__fp, __ri)
-        if rt_on:
-            old = rtm.scan_with_row_ids(
-                spark, snap, touched, with_meta=keep_meta
+            raise DeltaProtocolError(
+                f"MERGE into a table whose identity column(s) {_ident_always} "
+                "are GENERATED ALWAYS would supply explicit values; use "
+                "allowExplicitInsert (GENERATED BY DEFAULT) for merge targets"
             )
-        else:
-            dv_touch = [
-                rel for rel in touched if snap.adds.get(rel, {}).get("deletionVector")
-            ]
-            old = scan_rels(
-                spark, snap, [r for r in touched if r not in set(dv_touch)],
-                with_meta=keep_meta,
-            )
-            if dv_touch:
-                dvpart = _apply_deletion_vectors(
-                    spark, snap, dv_touch, keep_meta=keep_meta
-                )
-                old = old.unionByName(dvpart) if old is not None else dvpart
-        if keep_meta and "__fpr" in old.columns:
-            old = old.drop("__fpr")  # raw-path twin; only __fp/__ri needed
-        old_in = old.withColumn("__upd", F.lit(0))
+        if not set(keys + [sequence_by] + tiebreakers) <= {f.name for f in snap.schema.fields}:
+            raise ValueError("merge keys/sequence columns missing from table schema")
+
+        # column defaults apply to MERGE-supplied rows the same as appends:
+        # an updates frame that omits a defaulted column materializes it
+        # (the SQL MERGE INSERT-without-column path). Every attempt starts
+        # from the caller's raw batch: tombstone flagging, generated
+        # columns and the casts below are re-derived per snapshot.
+        batch = _apply_column_defaults(updates, snap.schema)
+        touched, empty = _merge_touched_files(
+            spark, snap, batch, keys[0], range_join_threshold
+        )
+        if empty:
+            return None  # empty update batch: nothing to commit
+
+        cols = [f.name for f in snap.schema.fields]
+        # tombstone flag FIRST, on the RAW batch (the predicate may reference
+        # op-marker columns outside the table schema)
         if delete_predicate is not None:
-            old_in = old_in.withColumn("__del", F.lit(False))
-        meta_nulls = (
+            batch = batch.withColumn(
+                "__del", F.coalesce(F.expr(delete_predicate), F.lit(False))
+            )
+        # generated columns: compute any the update batch omitted, validate
+        # any it provided (check runs after the staging job; tombstone rows
+        # are exempt — their payloads never reach the table)
+        batch, check_generated = _generated(
+            batch, snap.schema,
+            exempt_col="__del" if delete_predicate is not None else None,
+        )
+        # cast the update batch to the TABLE's column types (update batches
+        # often arrive widened, e.g. int64 from pandas against an int
+        # column; writing them as-is would poison the files against the
+        # pinned log schema). ANSI mode errors on lossy casts. Extra source
+        # columns (op markers) are dropped here.
+        tbl_types = {f.name: f.dataType for f in snap.schema.fields}
+        flag = ["__del"] if delete_predicate is not None else []
+        batch = batch.select(
+            *[F.col(n).cast(tbl_types[n]).alias(n) for n in cols], *flag
+        )
+        rt_on = rtm.row_tracking_enabled(snap.configuration)
+        rt_nulls = (
             [
-                F.lit(None).cast("string").alias("__fp"),
-                F.lit(None).cast("bigint").alias("__ri"),
+                F.lit(None).cast("bigint").alias(rtm.ROW_ID_COL),
+                F.lit(None).cast("bigint").alias(rtm.ROW_VER_COL),
             ]
-            if mode == "dv"
+            if rt_on
             else []
         )
-        merged_in = old_in.unionByName(
-            updates.select(*cols, *flag, *rt_nulls, *meta_nulls).withColumn(
+        if touched:
+            # the live rows of the touched files: deletion vectors applied
+            # (a merge that read a DV'd file raw would resurrect its deleted
+            # rows into the rewrite); on a ROW-TRACKING table with each old
+            # row's id/commit-version resolved so the rewrite keeps them.
+            # dv mode needs each old row's (__fp, __ri).
+            keep_meta = mode == "dv"
+            if rt_on:
+                old = rtm.scan_with_row_ids(spark, snap, touched, with_meta=keep_meta)
+            else:
+                old = scan_live_rows(spark, snap, touched, with_meta=keep_meta)
+            if keep_meta and "__fpr" in old.columns:
+                old = old.drop("__fpr")  # raw-path twin; only __fp/__ri needed
+            old_in = old.withColumn("__upd", F.lit(0))
+            if delete_predicate is not None:
+                old_in = old_in.withColumn("__del", F.lit(False))
+            meta_nulls = (
+                [
+                    F.lit(None).cast("string").alias("__fp"),
+                    F.lit(None).cast("bigint").alias("__ri"),
+                ]
+                if mode == "dv"
+                else []
+            )
+            merged_in = old_in.unionByName(
+                batch.select(*cols, *flag, *rt_nulls, *meta_nulls).withColumn(
+                    "__upd", F.lit(1)
+                )
+            )
+        else:
+            merged_in = batch.select(*cols, *flag, *rt_nulls).withColumn(
                 "__upd", F.lit(1)
             )
+        # equal-sequence (and equal-tiebreaker) ties resolve UPDATE-WINS —
+        # DLT apply_changes' documented sequencing — via an implicit
+        # is-update tiebreaker, so replays and ties are deterministic without
+        # requiring the caller to supply explicit tiebreakers.
+        order = (
+            [F.col(sequence_by).desc()]
+            + [F.col(t).desc() for t in tiebreakers]
+            + [F.col("__upd").desc()]
         )
-    else:
-        merged_in = updates.select(*cols, *flag, *rt_nulls).withColumn(
-            "__upd", F.lit(1)
-        )
-    # equal-sequence (and equal-tiebreaker) ties resolve UPDATE-WINS —
-    # DLT apply_changes' documented sequencing — via an implicit
-    # is-update tiebreaker, so replays and ties are deterministic without
-    # requiring the caller to supply explicit tiebreakers.
-    order = (
-        [F.col(sequence_by).desc()]
-        + [F.col(t).desc() for t in tiebreakers]
-        + [F.col("__upd").desc()]
-    )
-    w = Window.partitionBy(*keys).orderBy(*order)
-    # the whole key group, computed in the same window operator as __rn
-    key_all = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    ranked = merged_in.withColumn("__rn", F.row_number().over(w))
-    if rt_on:
-        # an UPDATE that wins an existing key keeps the OLD row's id
-        ranked = ranked.withColumn(
-            "__oldrid",
-            F.max(F.when(F.col("__upd") == 0, F.col(rtm.ROW_ID_COL))).over(key_all),
-        )
-    from pos_dlt_spark.sources.delta_cdf import (
-        CHANGE_TYPE,
-        cdf_enabled,
-        stage_change_files,
-    )
-
-    want_changes = cdf_enabled(snap) and write_change_files
-    if want_changes:
-        # the change class of every row, from the same key window: did
-        # the key have an old row, and did a live update (__wupd) or a
-        # tombstone (__wdel) win it
-        live_upd = F.col("__upd") == 1
-        if delete_predicate is not None:
+        w = Window.partitionBy(*keys).orderBy(*order)
+        # the whole key group, computed in the same window operator as __rn
+        key_all = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+        ranked = merged_in.withColumn("__rn", F.row_number().over(w))
+        if rt_on:
+            # an UPDATE that wins an existing key keeps the OLD row's id
             ranked = ranked.withColumn(
-                "__wdel", F.first(live_upd & F.col("__del")).over(key_all)
+                "__oldrid",
+                F.max(F.when(F.col("__upd") == 0, F.col(rtm.ROW_ID_COL))).over(key_all),
             )
-            live_upd = live_upd & ~F.col("__del")
-        ranked = ranked.withColumn(
-            "__had_old", F.max(F.col("__upd") == 0).over(key_all)
-        ).withColumn("__wupd", F.first(live_upd).over(key_all))
-    # the data files, the change files and (dv mode) the deletion vectors
-    # all read the ranked frame; freeze it once so they see one ranking
-    # (equal-order ties or a non-deterministic source could otherwise
-    # rank differently per read), and release it on every exit
-    frozen = None
-    dv_losers = None
-    if mode == "dv" and touched:
-        # dv mode freezes eagerly (ADVICE r08): a localCheckpoint cannot
-        # be recomputed from lineage, so a lost block fails the merge
-        # instead of re-ranking. Scope: matched files + batch, not the
-        # table. Its release handle is the checkpointed RDD.
-        ranked = ranked.localCheckpoint(eager=True)
-        frozen = ranked._jdf.queryExecution().logical().rdd()
-        # every OLD row that did not win its key's window is replaced
-        # (by an update winner) or deleted (by a tombstone winner): those
-        # are the rows to deletion-vector in place. Old winners (stale
-        # batch) stay untouched in their files; batch losers vanish.
-        dv_losers = ranked.filter(
-            (F.col("__rn") > 1) & F.col("__fp").isNotNull()
-        ).select("__fp", "__ri")
-        ranked = ranked.drop("__fp", "__ri")
-    elif want_changes:
-        # filled by the data stage's own job: no action of its own
-        ranked = frozen = ranked.persist()
-    try:
+        if want_changes:
+            # the change class of every row, from the same key window: did
+            # the key have an old row, and did a live update (__wupd) or a
+            # tombstone (__wdel) win it
+            live_upd = F.col("__upd") == 1
+            if delete_predicate is not None:
+                ranked = ranked.withColumn(
+                    "__wdel", F.first(live_upd & F.col("__del")).over(key_all)
+                )
+                live_upd = live_upd & ~F.col("__del")
+            ranked = ranked.withColumn(
+                "__had_old", F.max(F.col("__upd") == 0).over(key_all)
+            ).withColumn("__wupd", F.first(live_upd).over(key_all))
+        # the data files, the change files and (dv mode) the deletion vectors
+        # all read the ranked frame; freeze it once so they see one ranking
+        # (equal-order ties or a non-deterministic source could otherwise
+        # rank differently per read); the core releases it once all is staged
+        frozen = None
+        dv_losers = None
+        if mode == "dv" and touched:
+            # dv mode freezes eagerly (ADVICE r08): a localCheckpoint cannot
+            # be recomputed from lineage, so a lost block fails the merge
+            # instead of re-ranking. Scope: matched files + batch, not the
+            # table. Its release handle is the checkpointed RDD.
+            ranked = ranked.localCheckpoint(eager=True)
+            frozen = ranked._jdf.queryExecution().logical().rdd()
+            # every OLD row that did not win its key's window is replaced
+            # (by an update winner) or deleted (by a tombstone winner): those
+            # are the rows to deletion-vector in place. Old winners (stale
+            # batch) stay untouched in their files; batch losers vanish.
+            dv_losers = ranked.filter(
+                (F.col("__rn") > 1) & F.col("__fp").isNotNull()
+            ).select("__fp", "__ri")
+            ranked = ranked.drop("__fp", "__ri")
+        elif want_changes:
+            # filled by the data stage's own job: no action of its own
+            ranked = frozen = ranked.persist()
+
         merged_tagged = ranked.filter(F.col("__rn") == 1).drop(
             "__rn", "__had_old", "__wupd", "__wdel"
         )
-        merged = merged_tagged.drop("__upd")
-        if delete_predicate is not None:
-            # a tombstone that won the ordering removes its key from the table
-            merged = merged.filter(~F.col("__del")).drop("__del")
         if mode == "dv":
             # only BATCH winners land in new files; carried old rows stay in
             # their original files (behind a DV when they lost)
             stage_base = merged_tagged.filter(F.col("__upd") == 1).drop("__upd")
-            if delete_predicate is not None:
-                stage_base = stage_base.filter(~F.col("__del")).drop("__del")
         else:
-            stage_base = merged
+            stage_base = merged_tagged.drop("__upd")
+        if delete_predicate is not None:
+            # a tombstone that won the ordering removes its key from the table
+            stage_base = stage_base.filter(~F.col("__del")).drop("__del")
         stage_base, check_constraints = _constrained(stage_base, snap.configuration)
         stage_df = stage_base
         if rt_on:
@@ -2458,33 +2335,21 @@ def delta_merge(
             # that won an existing key takes the old id (__oldrid) with
             # THIS commit's version; brand-new keys stay null and take
             # fresh ids from the new files' baseRowId at read time
-            stage_df = stage_base.select(
-                *cols,
-                F.coalesce(F.col(rtm.ROW_ID_COL), F.col("__oldrid")).alias(
-                    snap.configuration[rtm.MAT_ROW_ID_PROP]
+            stage_df = rtm.to_materialized(
+                stage_base.withColumn(
+                    rtm.ROW_ID_COL,
+                    F.coalesce(F.col(rtm.ROW_ID_COL), F.col("__oldrid")),
+                ).withColumn(
+                    rtm.ROW_VER_COL,
+                    F.coalesce(
+                        F.col(rtm.ROW_VER_COL),
+                        F.lit(snap.version + 1).cast("bigint"),
+                    ),
                 ),
-                F.coalesce(
-                    F.col(rtm.ROW_VER_COL),
-                    F.lit(snap.version + 1).cast("bigint"),
-                ).alias(snap.configuration[rtm.MAT_ROW_VER_PROP]),
+                snap,
             )
-        adds = _stage_and_move(
-            _to_physical(stage_df, snap), path, _physical_partition_by(snap)
-        )
-        for chk in (check_generated, check_constraints):
-            if chk is None:
-                continue
-            try:
-                chk()
-            except BaseException:
-                for a in adds:
-                    try:
-                        os.remove(os.path.join(path, a["add"]["path"]))
-                    except OSError:
-                        pass
-                raise
 
-        cdc_actions: list[dict] = []
+        changes = None
         if want_changes:
             # a key won by a live update emits its winner (update_postimage
             # when the key had an old row, else insert) and its old rows
@@ -2501,107 +2366,21 @@ def delta_merge(
             changes = ranked.select(*cols, kind.alias(CHANGE_TYPE)).filter(
                 F.col(CHANGE_TYPE).isNotNull()
             )
-            # change files carry PHYSICAL column names under column mapping,
-            # exactly like data files; _change_type is unmapped and passes
-            # through _to_physical untouched
-            cdc_actions = stage_change_files(
-                _to_physical(changes, snap), path, _physical_partition_by(snap)
-            )
-        dv_rows = (
-            _encode_dv_groups(spark, snap, path, dv_losers)
-            if dv_losers is not None
-            else []
+        return _DmlPlan(
+            new_rows=stage_df,
+            removes=touched if mode == "rewrite" else [],
+            dv_losers=dv_losers,
+            changes=changes,
+            checks=(check_generated, check_constraints),
+            release=None if frozen is None else (lambda: frozen.unpersist(False)),
         )
-    finally:
-        if frozen is not None:
-            frozen.unpersist(False)
 
-    # BY DEFAULT identity columns: advance the watermark past every
-    # staged value (footer stats — the column is primitive) in the same
-    # commit, so a later assigning append can never collide
-    ident_meta: list[dict] = []
-    idents = _identity_spec(snap.schema)
-    if idents:
-        hwms: dict[str, int] = {}
-        for name, spec in idents.items():
-            phys = snap.physical_names.get(name, name)
-            cand = _hwm_candidate(
-                spec, [a["add"].get("stats") for a in adds], phys
-            )
-            if cand is not None:
-                hwms[name] = cand
-        if hwms:
-            ident_meta = [
-                fx.metadata_action(
-                    _schema_with_hwm(snap.schema, hwms),
-                    partition_columns=snap.partition_columns,
-                    table_id=snap.table_id,
-                    configuration=snap.configuration or None,
-                )
-            ]
-    if mode == "dv":
-        dv_actions = (
-            [
-                _merged_protocol(
-                    snap.protocol, ("deletionVectors",), ("deletionVectors",)
-                )
-            ]
-            + _dv_readd_actions(snap, path, abs_to_rel_all, dv_rows, inline_threshold)
-            if dv_rows
-            else []
-        )
-        actions = ident_meta + cdc_actions + dv_actions + adds
-    else:
-        actions = ident_meta + cdc_actions + [fx.remove_action(rel, size=(snap.adds.get(rel) or {}).get("size")) for rel in touched] + adds
-    if rt_on:
-        actions = actions + [
-            rtm.hwm_action(
-                rtm.assign_base_row_ids(
-                    adds, snap.version + 1, rtm.row_id_high_water_mark(snap)
-                )
-            )
-        ]
-    if txn is not None:
-        actions = [fx.txn_action(txn[0], txn[1])] + actions
-    actions = [fx.commit_info_action("MERGE", {"keys": keys, "sequenceBy": sequence_by})] + actions
-    version = snap.version + 1
-    if not _try_commit(
-        os.path.join(path, "_delta_log"), version, actions,
-        conf=snap.configuration,
-    ):
-        # lost the race: the staged files are unreferenced — remove them
-        # and re-run the WHOLE merge on the fresh snapshot (bounded)
-        for a in adds:
-            try:
-                os.remove(os.path.join(path, a["add"]["path"]))
-            except OSError:
-                pass
-        for c in cdc_actions:
-            try:
-                os.remove(os.path.join(path, c["cdc"]["path"]))
-            except OSError:
-                pass
-        if mode == "dv":
-            # fresh DV sidecars of the re-adds; data bytes stay
-            _lost_race_cleanup(path, actions, remove_adds=False)
-        if max_retries > 1:
-            return delta_merge(
-                spark, path, raw_updates, keys, sequence_by,
-                tiebreakers=tiebreakers, txn=txn,
-                checkpoint_interval=checkpoint_interval,
-                range_join_threshold=range_join_threshold,
-                max_retries=max_retries - 1,
-                delete_predicate=delete_predicate,
-                write_change_files=write_change_files,
-                mode=mode, inline_threshold=inline_threshold,
-            )
-        raise DeltaCommitConflict(
-            f"version {version} was committed concurrently and retries "
-            "are exhausted; merge must re-run against the new snapshot"
-        )
-    _maybe_checkpoint(spark, path, version, checkpoint_interval)
-    _uniform_after_commit(spark, path, snap.configuration)
-    return version
+    return _apply_and_commit(
+        spark, path, "MERGE", {"keys": keys, "sequenceBy": sequence_by}, plan,
+        mode=mode, write_change_files=write_change_files, txn=txn,
+        checkpoint_interval=checkpoint_interval, max_retries=max_retries,
+        inline_threshold=inline_threshold,
+    )[0]
 
 
 def delta_optimize(
@@ -2684,9 +2463,8 @@ def delta_optimize(
     incremental = bool(cluster_phys) and not full
 
     rt_on = rt.row_tracking_enabled(snap.configuration)
-    rt_mat_id = rt_mat_ver = None
     if rt_on:
-        rt_mat_id, rt_mat_ver = rt.require_materialized_columns(snap)
+        rt.require_materialized_columns(snap)
     from pos_dlt_spark.sources.delta import variant_shred_spec
 
     shred_spec = variant_shred_spec(snap.configuration)
@@ -2793,41 +2571,25 @@ def delta_optimize(
         if len(rels) <= group_target and not dv_rels and not reorder:
             continue  # DV'd files always compact: OPTIMIZE is also PURGE
         data_cols = [f.name for f in snap.data_schema.fields]
-        plain = [r for r in rels if r not in set(dv_rels)]
-        data = None
         if rt_on:
             # ROW TRACKING preservation: the rewrite scans with each
             # row's resolved id/commit-version and writes them into the
             # table's MATERIALIZED physical columns — rewritten rows keep
             # their ids; the group's new files still get fresh baseRowIds
             # below (the materialized values take precedence on read)
-            from pos_dlt_spark.sources import delta_rowtracking as _rt
-
-            scan = _rt.scan_with_row_ids(spark, snap, rels)
-            data = scan.select(
-                *data_cols,
-                F.col(_rt.ROW_ID_COL).alias(rt_mat_id),
-                F.col(_rt.ROW_VER_COL).alias(rt_mat_ver),
+            data = rt.to_materialized(
+                rt.scan_with_row_ids(spark, snap, rels), snap, data_cols
+            )
+        elif not dv_rels and snap.column_mapping == "none":
+            data = spark.read.schema(snap.data_schema).parquet(
+                *[_abs_file(path, rel) for rel in rels]
             )
         else:
-            if plain:
-                if snap.column_mapping == "none":
-                    data = spark.read.schema(snap.data_schema).parquet(
-                        *[_abs_file(path, rel) for rel in plain]
-                    )
-                else:
-                    # cm files carry physical names; the shared scanner
-                    # resolves them back to logical
-                    from pos_dlt_spark.sources.delta import scan_rels
+            # cm files carry physical names and DV'd files drop their dead
+            # rows: the shared live-row scanner resolves both
+            from pos_dlt_spark.sources.delta import scan_live_rows
 
-                    data = scan_rels(spark, snap, plain).select(*data_cols)
-            if dv_rels:
-                from pos_dlt_spark.sources.delta import _apply_deletion_vectors
-
-                dvpart = _apply_deletion_vectors(spark, snap, dv_rels).select(
-                    *data_cols
-                )
-                data = data.unionByName(dvpart) if data is not None else dvpart
+            data = scan_live_rows(spark, snap, rels).select(*data_cols)
         if shred_spec:
             # a compaction of a shredded-variant table must RE-SHRED:
             # dropping the typed twins here would silently demote every
@@ -3259,8 +3021,8 @@ def _encode_dv_groups(spark, snap, path: str, matches: DataFrame):
     row count (the read path's bound, symmetric on the write path). A
     predicate concentrating hundreds of millions of rows in ONE file
     strains that file's single executor group and belongs in
-    ``mode='rewrite'``, which stays fully distributed. Shared by
-    dv-mode DELETE and dv-mode UPDATE."""
+    ``mode='rewrite'``, which stays fully distributed. Shared by every
+    DV-producing DML (:func:`_apply_and_commit`, replaceWhere)."""
     import numpy as np
 
     from pos_dlt_spark.sources.delta import _abs_file
@@ -3305,16 +3067,34 @@ def _encode_dv_groups(spark, snap, path: str, matches: DataFrame):
     )
 
 
-def _dv_readd_actions(
-    snap, path: str, abs_to_rel: dict, rows, inline_threshold: int
-) -> list[dict]:
-    """remove + re-add (same path, updated DV descriptor) actions for
-    the encoded groups — the commit shape of every DV-producing DML."""
+
+
+def _rel_by_abs_path(snap: DeltaSnapshot) -> dict[str, str]:
+    """Live file rel path keyed by its normalized absolute path — the
+    ``__fp`` rendering the match scans and the DV encoder report."""
+    from pos_dlt_spark.sources.delta import _abs_file
+
+    return {
+        os.path.abspath(_abs_file(snap.path, rel)): rel for rel, _ in snap.files
+    }
+
+
+def _dv_readd_actions(snap, path: str, rows, inline_threshold: int) -> list[dict]:
+    """The commit shape of every DV-producing DML for the encoded groups:
+    the protocol declaring deletionVectors, then per file a remove +
+    re-add of the same path with the updated DV descriptor (a sidecar
+    file is minted here when the bitmap exceeds ``inline_threshold``).
+    Empty for no groups."""
     from pos_dlt_spark.sources.dv import bitmap_cardinality, make_dv_descriptor_bytes
 
-    actions: list[dict] = []
+    if not rows:
+        return []
+    rel_of = _rel_by_abs_path(snap)
+    actions: list[dict] = [
+        _merged_protocol(snap.protocol, ("deletionVectors",), ("deletionVectors",))
+    ]
     for r in sorted(rows, key=lambda r: r["__fp"]):
-        rel = abs_to_rel.get(r["__fp"])
+        rel = rel_of.get(r["__fp"])
         if rel is None:
             raise ValueError(f"scan yielded unknown file {r['__fp']}")
         data = bytes(r["dv"])
@@ -3333,6 +3113,235 @@ def _dv_readd_actions(
         )
         actions.append({"add": add})
     return actions
+
+
+def _identity_hwm_actions(snap: DeltaSnapshot, adds: list[dict]) -> list[dict]:
+    """BY DEFAULT identity columns: a metaData action advancing each
+    column's watermark past every staged value (footer stats — the
+    column is primitive), so a later assigning append can never collide.
+    Empty when no staged value passes a watermark."""
+    idents = _identity_spec(snap.schema)
+    hwms: dict[str, int] = {}
+    for name, spec in idents.items():
+        phys = snap.physical_names.get(name, name)
+        cand = _hwm_candidate(spec, [a["add"].get("stats") for a in adds], phys)
+        if cand is not None:
+            hwms[name] = cand
+    if not hwms:
+        return []
+    return [
+        fx.metadata_action(
+            _schema_with_hwm(snap.schema, hwms),
+            partition_columns=snap.partition_columns,
+            table_id=snap.table_id,
+            configuration=snap.configuration or None,
+        )
+    ]
+
+
+@dataclass
+class _DmlPlan:
+    """What one DML attempt changes, as its verb derives it from the
+    attempt's snapshot; :func:`_apply_and_commit` stages and commits it.
+
+    - ``new_rows``: rows for fresh data files (logical column names; on
+      a row-tracking table plus the materialized row-id columns);
+    - ``removes``: files removed whole (rewrite mode);
+    - ``dv_losers``: ``(__fp, __ri)`` rows to deletion-vector in place
+      (dv mode);
+    - ``changes``: change-feed rows (table columns + ``_change_type``);
+    - ``checks``: raise after the staging job (generated columns, CHECK
+      constraints); None entries are skipped;
+    - ``release``: frees a frozen frame once everything is staged;
+    - ``rows``: the row count to report; None reports the rows the
+      deletion vectors newly delete."""
+
+    new_rows: DataFrame | None = None
+    removes: list[str] = field(default_factory=list)
+    dv_losers: DataFrame | None = None
+    changes: DataFrame | None = None
+    checks: tuple = ()
+    release: Callable[[], object] | None = None
+    rows: int | None = None
+
+
+def _apply_and_commit(
+    spark,
+    path: str,
+    op: str,
+    params: dict,
+    plan_fn: Callable[[DeltaSnapshot, bool], _DmlPlan | None],
+    mode: str = "rewrite",
+    write_change_files: bool = True,
+    txn: tuple[str, int] | None = None,
+    checkpoint_interval: int = 10,
+    max_retries: int = 3,
+    inline_threshold: int = 512,
+) -> tuple[int, int]:
+    """The one apply-and-commit core of DELETE, UPDATE and MERGE. Every
+    attempt folds a fresh snapshot and asks ``plan_fn(snap,
+    want_changes)`` for the attempt's :class:`_DmlPlan` (None: nothing
+    to do), then:
+
+    1. guards, before anything is staged: the mode, the writer
+       features, the ``write_change_files`` refusals, ``txn``
+       idempotence; after matching, an append-only table refuses a plan
+       that removes or deletion-vectors existing rows;
+    2. dv mode encodes the losers' bitmaps executor-side; a plan with no
+       new rows, no removes and no newly deleted row commits nothing;
+    3. stages the new rows and runs the plan's checks, stages the change
+       rows, and releases the plan's frozen frame;
+    4. commits commitInfo, txn, identity watermarks, the cdc files, the
+       DV re-adds or the removes, the adds and the row-tracking
+       watermark as ``snap.version + 1`` (put-if-absent).
+
+    Whatever an attempt staged is removed when it fails or loses the
+    commit race (staged adds, cdc files, DV sidecars minted this
+    attempt); a lost race then re-runs the whole attempt against the new
+    snapshot — never a replay of the stale result, which could resurrect
+    overwritten rows. After ``max_retries`` lost races
+    :class:`DeltaCommitConflict` raises.
+
+    Returns ``(version, rows)`` — ``plan.rows``, or the newly
+    deletion-vectored row count when the plan leaves it None; a no-op
+    returns the current version and 0."""
+    from pos_dlt_spark.sources import delta_rowtracking as rtm
+    from pos_dlt_spark.sources.delta import DeltaProtocolError
+    from pos_dlt_spark.sources.delta_cdf import cdf_enabled, stage_change_files
+
+    if mode not in ("dv", "rewrite"):
+        raise ValueError(f"mode must be dv|rewrite, got {mode!r}")
+    if not write_change_files and mode == "dv":
+        raise ValueError(
+            "write_change_files=False (merge-on-read CDF) requires "
+            "mode='rewrite': the derived feed does not classify "
+            f"DV-{op.lower()} commit shapes"
+        )
+    for _attempt in range(max(max_retries, 1)):
+        snap = delta_snapshot(spark, path)
+        _writer_supports(snap)
+        rt_on = rtm.row_tracking_enabled(snap.configuration)
+        if rt_on:
+            rtm.require_materialized_columns(snap)
+        elif not write_change_files:
+            raise ValueError(
+                "write_change_files=False needs row tracking: without stable "
+                "row ids the change feed cannot derive update pairs"
+            )
+        if txn is not None and snap.txns.get(txn[0], -1) >= txn[1]:
+            return snap.version, 0  # batch already applied: replay skipped
+        plan = plan_fn(snap, cdf_enabled(snap) and write_change_files)
+        if plan is None:
+            return snap.version, 0
+        version = snap.version + 1
+        part_by = _physical_partition_by(snap)
+        staged: list[dict] = []
+        try:
+            try:
+                if _append_only(snap.configuration) and (
+                    plan.removes or plan.dv_losers is not None
+                ):
+                    raise DeltaProtocolError(
+                        f"table is delta.appendOnly: {op} would change "
+                        "existing rows (only pure inserts are allowed)"
+                    )
+                dv_rows = (
+                    _encode_dv_groups(spark, snap, path, plan.dv_losers)
+                    if plan.dv_losers is not None
+                    else []
+                )
+                n_dv = sum(int(r["n_new"]) for r in dv_rows)
+                if plan.new_rows is None and not plan.removes and not n_dv:
+                    return snap.version, 0  # nothing matched, or all dead already
+                adds: list[dict] = []
+                if plan.new_rows is not None:
+                    adds = _stage_and_move(
+                        _to_physical(plan.new_rows, snap), path, part_by
+                    )
+                    staged += adds
+                for check in plan.checks:
+                    if check is not None:
+                        check()
+                cdc: list[dict] = []
+                if plan.changes is not None:
+                    # change files carry PHYSICAL column names under column
+                    # mapping, like data files; _change_type is unmapped
+                    cdc = stage_change_files(
+                        _to_physical(plan.changes, snap), path, part_by
+                    )
+                    staged += cdc
+            finally:
+                if plan.release is not None:
+                    plan.release()
+            dv_actions = _dv_readd_actions(snap, path, dv_rows, inline_threshold)
+            staged += dv_actions
+            actions = [fx.commit_info_action(op, params)]
+            if txn is not None:
+                actions.append(fx.txn_action(txn[0], txn[1]))
+            actions += _identity_hwm_actions(snap, adds) + cdc + dv_actions
+            actions += [
+                fx.remove_action(rel, size=(snap.adds.get(rel) or {}).get("size"))
+                for rel in plan.removes
+            ]
+            actions += adds
+            if rt_on and plan.new_rows is not None:
+                actions.append(
+                    rtm.hwm_action(
+                        rtm.assign_base_row_ids(
+                            adds, version, rtm.row_id_high_water_mark(snap)
+                        )
+                    )
+                )
+            committed = _try_commit(
+                os.path.join(path, "_delta_log"), version, actions,
+                conf=snap.configuration,
+            )
+        except BaseException:
+            _discard_staged(path, staged)
+            raise
+        if committed:
+            _maybe_checkpoint(spark, path, version, checkpoint_interval)
+            _uniform_after_commit(spark, path, snap.configuration)
+            return version, n_dv if plan.rows is None else plan.rows
+        _discard_staged(path, staged)
+    raise DeltaCommitConflict(
+        f"version {version} was committed concurrently and retries "
+        f"are exhausted; {op.lower()} must re-run against the new snapshot"
+    )
+
+
+def _stats_candidates(snap: DeltaSnapshot, predicate: str) -> DeltaSnapshot:
+    """The snapshot cut to the files whose log stats cannot exclude a
+    match of ``predicate`` (see :func:`_skipping_predicates`)."""
+    from pos_dlt_spark.sources.delta import skip_files
+
+    preds = _skipping_predicates(predicate)
+    return skip_files(snap, preds)[0] if preds else snap
+
+
+def _match_scan(spark, snap: DeltaSnapshot, predicate: str):
+    """The DML match scan: ``(matches, candidates)`` — the ``(__fp,
+    __ri)`` of every PHYSICAL row matching ``predicate`` (rows a DV
+    already deleted included), over the :func:`_stats_candidates`
+    snapshot. ``(None, candidates)`` when the stats exclude every file:
+    no scan task is scheduled."""
+    from pyspark.sql import functions as F
+
+    from pos_dlt_spark.sources.delta import scan_rels
+
+    cand = _stats_candidates(snap, predicate)
+    if not cand.files:
+        return None, cand
+    scan = scan_rels(spark, cand, None, with_meta=True)
+    return scan.filter(F.expr(predicate)).select("__fp", "__ri"), cand
+
+
+def _hit_files(snap: DeltaSnapshot, matches: DataFrame) -> list[str]:
+    """The sorted live rels holding >= 1 of the match scan's rows."""
+    rel_of = _rel_by_abs_path(snap)
+    return sorted(
+        {rel_of[r["__fp"]] for r in matches.select("__fp").distinct().collect()}
+    )
 
 
 def delta_delete(
@@ -3369,157 +3378,65 @@ def delta_delete(
     in ONE file strains that file's single executor group and belongs
     in ``mode='rewrite'``, which stays fully distributed.
 
+    With CDF enabled the commit carries ``delete`` change files: the
+    live rows (prior DVs applied — already-dead rows are not deleted
+    again) of the touched files that match the predicate.
+
     Returns ``(committed version, rows deleted)``. A lost commit race is
     ABSORBED: staged files (rewrites, cdc, fresh DV sidecars) are
-    removed and the whole DELETE re-runs on the fresh snapshot —
-    matching MERGE's retry discipline, so multi-writer callers never see
-    an exception a platform runtime would have retried for them. After
+    removed and the whole DELETE re-runs on the fresh snapshot (see
+    :func:`_apply_and_commit`), so multi-writer callers never see an
+    exception a platform runtime would have retried for them. After
     ``max_retries`` lost races :class:`DeltaCommitConflict` raises."""
-    from pyspark.sql import functions as F
 
-    from pos_dlt_spark.sources.delta import (
-        _abs_file,
-        _apply_deletion_vectors,
-        scan_rels,
-    )
+    def plan(snap: DeltaSnapshot, want_changes: bool) -> _DmlPlan | None:
+        from pyspark.sql import functions as F
 
-    if mode not in ("dv", "rewrite"):
-        raise ValueError(f"mode must be dv|rewrite, got {mode!r}")
-    snap = delta_snapshot(spark, path)
-    _writer_supports(snap)
-    if _append_only(snap.configuration):
-        from pos_dlt_spark.sources.delta import DeltaProtocolError
-
-        raise DeltaProtocolError("table is delta.appendOnly: DELETE refused")
-    if not snap.files:
-        return snap.version, 0
-
-    # stats skipping on the MATCH scan (same conservative conjunct
-    # extraction UPDATE uses): provably-disjoint files never scanned
-    from pos_dlt_spark.sources.delta import skip_files
-
-    preds = _skipping_predicates(predicate)
-    scan_snap = skip_files(snap, preds)[0] if preds else snap
-    if not scan_snap.files:
-        return snap.version, 0
-    scan = scan_rels(spark, scan_snap, None, with_meta=True)
-    matches = scan.filter(F.expr(predicate)).select("__fp", "__ri")
-
-    abs_to_rel = {
-        os.path.abspath(_abs_file(path, rel)): rel for rel, _ in snap.files
-    }
-    if mode == "dv":
-        rows = _encode_dv_groups(spark, snap, path, matches)
-        n_deleted = sum(int(r["n_new"]) for r in rows)
-        if not rows or n_deleted == 0:
-            return snap.version, 0  # nothing matched, or all dead already
-        actions = [
-            _merged_protocol(
-                snap.protocol, ("deletionVectors",), ("deletionVectors",)
-            )
-        ] + _dv_readd_actions(snap, path, abs_to_rel, rows, inline_threshold)
-    else:
-        # classic copy-on-write: rewrite each file that has >=1 match,
-        # keeping only non-matching rows; deletes of whole files become
-        # plain removes (no replacement add)
-        hit_rels = sorted(
-            {
-                abs_to_rel[r["__fp"]]
-                for r in matches.select("__fp").distinct().collect()
-            }
-        )
-        if not hit_rels:
-            return snap.version, 0
         from pos_dlt_spark.sources import delta_rowtracking as rtm
+        from pos_dlt_spark.sources.delta import scan_live_rows
+        from pos_dlt_spark.sources.delta_cdf import CHANGE_TYPE
 
-        rt_on = rtm.row_tracking_enabled(snap.configuration)
-        if rt_on:
-            rtm.require_materialized_columns(snap)
+        if not snap.files:
+            return None
+        matches, cand = _match_scan(spark, snap, predicate)
+        if matches is None:
+            return None
+        hit = F.coalesce(F.expr(predicate), F.lit(False))
+        if mode == "dv":
+            plan = _DmlPlan(dv_losers=matches)
+            gone = scan_live_rows(spark, cand).filter(hit) if want_changes else None
+        else:
+            # classic copy-on-write: rewrite each file that has >=1 match,
+            # keeping only non-matching rows; a file left without rows is
+            # removed with no replacement add
+            hit_rels = _hit_files(snap, matches)
+            if not hit_rels:
+                return None
+            rt_on = rtm.row_tracking_enabled(snap.configuration)
             # ROW TRACKING: the rewrite materializes surviving rows'
             # resolved ids so they stay stable across the copy
-            old = rtm.scan_with_row_ids(spark, snap, hit_rels)
-        else:
-            dv_touch = [
-                rel for rel in hit_rels if snap.adds.get(rel, {}).get("deletionVector")
-            ]
-            old = scan_rels(spark, snap, [r for r in hit_rels if r not in set(dv_touch)])
-            if dv_touch:
-                dvpart = _apply_deletion_vectors(spark, snap, dv_touch)
-                old = old.unionByName(dvpart) if old is not None else dvpart
-        keep = old.filter(~F.coalesce(F.expr(predicate), F.lit(False)))
-        n_deleted = old.count() - keep.count()
-        if rt_on:
-            field_names = [f.name for f in snap.schema.fields]
-            keep = keep.select(
-                *field_names,
-                F.col(rtm.ROW_ID_COL).alias(
-                    snap.configuration[rtm.MAT_ROW_ID_PROP]
-                ),
-                F.col(rtm.ROW_VER_COL).alias(
-                    snap.configuration[rtm.MAT_ROW_VER_PROP]
-                ),
+            old = (
+                rtm.scan_with_row_ids(spark, snap, hit_rels)
+                if rt_on
+                else scan_live_rows(spark, snap, hit_rels)
             )
-        adds = _stage_and_move(
-            _to_physical(keep, snap), path, _physical_partition_by(snap)
-        )
-        actions = [fx.remove_action(rel, size=(snap.adds.get(rel) or {}).get("size")) for rel in hit_rels] + adds
-        if rt_on:
-            actions = actions + [
-                rtm.hwm_action(
-                    rtm.assign_base_row_ids(
-                        adds, snap.version + 1, rtm.row_id_high_water_mark(snap)
-                    )
-                )
-            ]
+            keep = old.filter(~hit)
+            gone = old.filter(hit)
+            plan = _DmlPlan(
+                new_rows=rtm.to_materialized(keep, snap) if rt_on else keep,
+                removes=hit_rels,
+                rows=gone.count(),
+            )
+        if want_changes:
+            cols = [f.name for f in snap.schema.fields]
+            plan.changes = gone.select(*cols).withColumn(CHANGE_TYPE, F.lit("delete"))
+        return plan
 
-    from pos_dlt_spark.sources.delta_cdf import (
-        CHANGE_TYPE,
-        cdf_enabled,
-        stage_change_files,
+    return _apply_and_commit(
+        spark, path, "DELETE", {"predicate": predicate, "mode": mode}, plan,
+        mode=mode, checkpoint_interval=checkpoint_interval,
+        max_retries=max_retries, inline_threshold=inline_threshold,
     )
-
-    if cdf_enabled(snap):
-        # change files hold the NEWLY deleted rows: live rows (prior DVs
-        # applied — already-dead rows are not deleted again) matching the
-        # predicate, tagged 'delete'. Under column mapping they carry
-        # PHYSICAL names, like data files.
-        dv_all = [
-            rel for rel, _ in snap.files if snap.adds.get(rel, {}).get("deletionVector")
-        ]
-        live = scan_rels(spark, snap, [r for r, _ in snap.files if r not in set(dv_all)])
-        if dv_all:
-            dvpart = _apply_deletion_vectors(spark, snap, dv_all)
-            live = live.unionByName(dvpart) if live is not None else dvpart
-        changes = live.filter(F.expr(predicate)).withColumn(
-            CHANGE_TYPE, F.lit("delete")
-        )
-        actions = stage_change_files(
-            _to_physical(changes, snap), path, _physical_partition_by(snap)
-        ) + actions
-
-    actions = [
-        fx.commit_info_action("DELETE", {"predicate": predicate, "mode": mode})
-    ] + actions
-    version = snap.version + 1
-    if not _try_commit(
-        os.path.join(path, "_delta_log"), version, actions,
-        conf=snap.configuration,
-    ):
-        _lost_race_cleanup(path, actions, remove_adds=(mode == "rewrite"))
-        if max_retries > 1:
-            return delta_delete(
-                spark, path, predicate, mode=mode,
-                inline_threshold=inline_threshold,
-                checkpoint_interval=checkpoint_interval,
-                max_retries=max_retries - 1,
-            )
-        raise DeltaCommitConflict(
-            f"version {version} was committed concurrently and retries "
-            "are exhausted; delete must re-run against the new snapshot"
-        )
-    _maybe_checkpoint(spark, path, version, checkpoint_interval)
-    _uniform_after_commit(spark, path, snap.configuration)
-    return version, n_deleted
 
 
 def _skipping_predicates(predicate: str) -> list[tuple[str, str, object]]:
@@ -3650,263 +3567,136 @@ def delta_update(
     Returns ``(committed version, rows updated)``. A lost commit race is
     ABSORBED: staged files (rewrites + cdc + fresh DV sidecars) are
     removed and the whole UPDATE re-runs on the fresh snapshot — the
-    same retry discipline MERGE and DELETE have. After ``max_retries``
-    lost races :class:`DeltaCommitConflict` raises."""
-    if mode not in ("dv", "rewrite"):
-        raise ValueError(f"mode must be dv|rewrite, got {mode!r}")
-    if not write_change_files and mode == "dv":
-        raise ValueError(
-            "write_change_files=False (merge-on-read CDF) requires "
-            "mode='rewrite': the derived feed does not classify "
-            "DV-update commit shapes"
-        )
-    from pyspark.sql import functions as F
+    same retry discipline MERGE and DELETE have (see
+    :func:`_apply_and_commit`). After ``max_retries`` lost races
+    :class:`DeltaCommitConflict` raises."""
 
-    from pos_dlt_spark.sources.delta import (
-        _abs_file,
-        _apply_deletion_vectors,
-        scan_rels,
-    )
+    def plan(snap: DeltaSnapshot, want_changes: bool) -> _DmlPlan | None:
+        from pyspark.sql import functions as F
 
-    snap = delta_snapshot(spark, path)
-    _writer_supports(snap)
-    if _append_only(snap.configuration):
-        from pos_dlt_spark.sources.delta import DeltaProtocolError
+        from pos_dlt_spark.sources import delta_rowtracking as rtm
+        from pos_dlt_spark.sources.delta import DeltaProtocolError, scan_live_rows
+        from pos_dlt_spark.sources.delta_cdf import CHANGE_TYPE
 
-        raise DeltaProtocolError("table is delta.appendOnly: UPDATE refused")
-    field_names = [f.name for f in snap.schema.fields]
-    unknown = sorted(set(set_exprs) - set(field_names))
-    if unknown:
-        raise ValueError(f"SET assigns columns not in the table schema: {unknown}")
-    if not set_exprs:
-        raise ValueError("SET is empty: nothing to update")
-    _ident_always = [
-        n for n, s in _identity_spec(snap.schema).items()
-        if n in set_exprs and not s["allowExplicitInsert"]
-    ]
-    if _ident_always:
-        from pos_dlt_spark.sources.delta import DeltaProtocolError
-
-        raise DeltaProtocolError(
-            f"UPDATE cannot SET GENERATED ALWAYS identity column(s) "
-            f"{_ident_always}"
-        )
-    if not snap.files:
-        return snap.version, 0
-
-    # stats skipping on the MATCH scan: provably-disjoint files are never
-    # read (the real filter still runs on whatever survives)
-    from pos_dlt_spark.sources.delta import skip_files
-
-    preds = _skipping_predicates(predicate)
-    scan_snap = skip_files(snap, preds)[0] if preds else snap
-    if not scan_snap.files:
-        return snap.version, 0
-    scan = scan_rels(spark, scan_snap, None, with_meta=True)
-    matches = scan.filter(F.expr(predicate)).select("__fp")
-    abs_to_rel = {
-        os.path.abspath(_abs_file(path, rel)): rel for rel, _ in snap.files
-    }
-    hit_rels = sorted(
-        {abs_to_rel[r["__fp"]] for r in matches.distinct().collect()}
-    )
-    if not hit_rels:
-        return snap.version, 0
-
-    # live rows of the touched files (prior DVs applied — dead rows are
-    # neither updated nor carried into the rewrite). On a ROW-TRACKING
-    # table the scan resolves each row's id/commit-version so the
-    # rewrite can materialize them: carried rows keep both, updated rows
-    # keep their id and take THIS commit's version (the spec's
-    # stable-id / last-update-version contract).
-    from pos_dlt_spark.sources import delta_rowtracking as rtm
-
-    rt_on = rtm.row_tracking_enabled(snap.configuration)
-    rt_mat_id = rt_mat_ver = None
-    if rt_on:
-        rt_mat_id, rt_mat_ver = rtm.require_materialized_columns(snap)
-    rt_cols = [rtm.ROW_ID_COL, rtm.ROW_VER_COL] if rt_on else []
-    keep_meta = mode == "dv"  # dv mode needs each match's (__fp, __ri)
-    if rt_on:
-        old = rtm.scan_with_row_ids(
-            spark, snap, hit_rels, with_meta=keep_meta
-        )
-    else:
-        dv_touch = [
-            rel for rel in hit_rels if snap.adds.get(rel, {}).get("deletionVector")
+        field_names = [f.name for f in snap.schema.fields]
+        unknown = sorted(set(set_exprs) - set(field_names))
+        if unknown:
+            raise ValueError(f"SET assigns columns not in the table schema: {unknown}")
+        if not set_exprs:
+            raise ValueError("SET is empty: nothing to update")
+        _ident_always = [
+            n for n, s in _identity_spec(snap.schema).items()
+            if n in set_exprs and not s["allowExplicitInsert"]
         ]
-        old = scan_rels(
-            spark, snap, [r for r in hit_rels if r not in set(dv_touch)],
-            with_meta=keep_meta,
-        )
-        if dv_touch:
-            dvpart = _apply_deletion_vectors(
-                spark, snap, dv_touch, keep_meta=keep_meta
+        if _ident_always:
+            raise DeltaProtocolError(
+                f"UPDATE cannot SET GENERATED ALWAYS identity column(s) "
+                f"{_ident_always}"
             )
-            old = old.unionByName(dvpart) if old is not None else dvpart
-    hit = F.coalesce(F.expr(predicate), F.lit(False))
-    upd_src = old.filter(hit)
-    if mode == "dv":
-        # dv mode consumes the matched rows TWICE (stage the updated
-        # copies; DV the originals via (__fp, __ri)) — freeze them once
-        # so non-deterministic SET expressions or sources cannot make
-        # the two lineages disagree (ADVICE r08). Scope: matched rows.
-        upd_src = upd_src.localCheckpoint(eager=True)
-    n_updated = upd_src.count()
-    if n_updated == 0:
-        # files matched on the raw scan but every match was DV-dead
-        return snap.version, 0
-    upd_old = upd_src.select(*field_names, *rt_cols)
-    # one simultaneous projection: every RHS sees the OLD row
-    upd_new = upd_old.select(
-        *[
-            F.expr(set_exprs[c]).alias(c) if c in set_exprs else F.col(f"`{c}`")
-            for c in field_names
-        ],
-        *(
-            [
-                F.col(rtm.ROW_ID_COL),
-                F.lit(snap.version + 1).cast("bigint").alias(rtm.ROW_VER_COL),
-            ]
-            if rt_on
-            else []
-        ),
-    )
-    # generated columns whose bases may have moved: recompute unless the
-    # caller assigned them explicitly (then validate, like any write)
-    gens = _generation_exprs(snap.schema)
-    recompute = [g for g in gens if g not in set_exprs]
-    if recompute:
-        upd_new = upd_new.drop(*recompute)
-    upd_new, check_generated = _generated(upd_new, snap.schema)
-    upd_new, check_constraints = _constrained(upd_new, snap.configuration)
-    # cast SET results to the TABLE's column types: a literal like 0.0
-    # is DECIMAL(1,1) and would otherwise stage a decimal-typed file
-    # into a double column — rewrite mode happened to coerce via the
-    # union with kept rows, dv mode stages the updated rows ALONE and
-    # must pin the types itself (ANSI mode errors on lossy casts)
-    tbl_types = {f.name: f.dataType for f in snap.schema.fields}
-    upd_new = upd_new.select(
-        *[F.col(f"`{c}`").cast(tbl_types[c]).alias(c) for c in field_names],
-        *rt_cols,
-    )
+        if not snap.files:
+            return None
+        matches, _cand = _match_scan(spark, snap, predicate)
+        if matches is None:
+            return None
+        hit_rels = _hit_files(snap, matches)
+        if not hit_rels:
+            return None
 
-    if mode == "dv":
-        # untouched rows stay in their original files behind the DV;
-        # only the updated rows' new versions land in fresh files
-        new_data = upd_new
-    else:
-        new_data = old.filter(~hit).select(*field_names, *rt_cols).unionByName(
-            upd_new
+        # live rows of the touched files (prior DVs applied — dead rows are
+        # neither updated nor carried into the rewrite). On a ROW-TRACKING
+        # table the scan resolves each row's id/commit-version so the
+        # rewrite can materialize them: carried rows keep both, updated rows
+        # keep their id and take THIS commit's version (the spec's
+        # stable-id / last-update-version contract).
+        rt_on = rtm.row_tracking_enabled(snap.configuration)
+        rt_cols = [rtm.ROW_ID_COL, rtm.ROW_VER_COL] if rt_on else []
+        keep_meta = mode == "dv"  # dv mode needs each match's (__fp, __ri)
+        if rt_on:
+            old = rtm.scan_with_row_ids(spark, snap, hit_rels, with_meta=keep_meta)
+        else:
+            old = scan_live_rows(spark, snap, hit_rels, with_meta=keep_meta)
+        hit = F.coalesce(F.expr(predicate), F.lit(False))
+        upd_src = old.filter(hit)
+        if mode == "dv":
+            # dv mode consumes the matched rows TWICE (stage the updated
+            # copies; DV the originals via (__fp, __ri)) — freeze them once
+            # so non-deterministic SET expressions or sources cannot make
+            # the two lineages disagree (ADVICE r08). Scope: matched rows.
+            upd_src = upd_src.localCheckpoint(eager=True)
+        n_updated = upd_src.count()
+        if n_updated == 0:
+            # files matched on the raw scan but every match was DV-dead
+            return None
+        upd_old = upd_src.select(*field_names, *rt_cols)
+        # one simultaneous projection: every RHS sees the OLD row
+        upd_new = upd_old.select(
+            *[
+                F.expr(set_exprs[c]).alias(c) if c in set_exprs else F.col(f"`{c}`")
+                for c in field_names
+            ],
+            *(
+                [
+                    F.col(rtm.ROW_ID_COL),
+                    F.lit(snap.version + 1).cast("bigint").alias(rtm.ROW_VER_COL),
+                ]
+                if rt_on
+                else []
+            ),
         )
-    if rt_on:
-        # rt ids land in the table's materialized physical columns
-        new_data = new_data.select(
-            *field_names,
-            F.col(rtm.ROW_ID_COL).alias(rt_mat_id),
-            F.col(rtm.ROW_VER_COL).alias(rt_mat_ver),
+        # generated columns whose bases may have moved: recompute unless the
+        # caller assigned them explicitly (then validate, like any write)
+        gens = _generation_exprs(snap.schema)
+        recompute = [g for g in gens if g not in set_exprs]
+        if recompute:
+            upd_new = upd_new.drop(*recompute)
+        upd_new, check_generated = _generated(upd_new, snap.schema)
+        upd_new, check_constraints = _constrained(upd_new, snap.configuration)
+        # cast SET results to the TABLE's column types: a literal like 0.0
+        # is DECIMAL(1,1) and would otherwise stage a decimal-typed file
+        # into a double column — rewrite mode happened to coerce via the
+        # union with kept rows, dv mode stages the updated rows ALONE and
+        # must pin the types itself (ANSI mode errors on lossy casts)
+        tbl_types = {f.name: f.dataType for f in snap.schema.fields}
+        upd_new = upd_new.select(
+            *[F.col(f"`{c}`").cast(tbl_types[c]).alias(c) for c in field_names],
+            *rt_cols,
         )
-    adds = _stage_and_move(
-        _to_physical(new_data, snap), path, _physical_partition_by(snap)
-    )
-    for check in (check_generated, check_constraints):
-        if check is None:
-            continue
-        try:
-            check()
-        except BaseException:
-            for a in adds:
-                try:
-                    os.remove(os.path.join(path, a["add"]["path"]))
-                except OSError:
-                    pass
-            raise
 
-    if mode == "dv":
-        rows = _encode_dv_groups(
-            spark, snap, path, upd_src.select("__fp", "__ri")
-        )
-        actions = [
-            _merged_protocol(
-                snap.protocol, ("deletionVectors",), ("deletionVectors",)
+        if mode == "dv":
+            # untouched rows stay in their original files behind the DV;
+            # only the updated rows' new versions land in fresh files
+            new_data = upd_new
+        else:
+            new_data = old.filter(~hit).select(*field_names, *rt_cols).unionByName(
+                upd_new
             )
-        ] + _dv_readd_actions(snap, path, abs_to_rel, rows, inline_threshold) + adds
-    else:
-        actions = [
-            fx.remove_action(rel, size=(snap.adds.get(rel) or {}).get("size"))
-            for rel in hit_rels
-        ] + adds
-
-    from pos_dlt_spark.sources.delta_cdf import (
-        CHANGE_TYPE,
-        cdf_enabled,
-        stage_change_files,
-    )
-
-    if not write_change_files and not rt_on:
-        raise ValueError(
-            "write_change_files=False needs row tracking: without stable "
-            "row ids the change feed cannot derive update pairs"
-        )
-    if cdf_enabled(snap) and write_change_files:
-        # change files carry the TABLE schema only — rt helper columns out
-        changes = upd_old.select(*field_names).withColumn(
-            CHANGE_TYPE, F.lit("update_preimage")
-        ).unionByName(
-            upd_new.select(*field_names).withColumn(
-                CHANGE_TYPE, F.lit("update_postimage")
-            )
-        )
-        actions = stage_change_files(
-            _to_physical(changes, snap), path, _physical_partition_by(snap)
-        ) + actions
-
-    actions = [
-        fx.commit_info_action(
-            "UPDATE", {"predicate": predicate, "set": dict(sorted(set_exprs.items()))}
-        )
-    ] + actions
-    version = snap.version + 1
-    if rt_on:
-        actions = actions + [
-            rtm.hwm_action(
-                rtm.assign_base_row_ids(
-                    adds, version, rtm.row_id_high_water_mark(snap)
+        changes = None
+        if want_changes:
+            # change files carry the TABLE schema only — rt helper columns out
+            changes = upd_old.select(*field_names).withColumn(
+                CHANGE_TYPE, F.lit("update_preimage")
+            ).unionByName(
+                upd_new.select(*field_names).withColumn(
+                    CHANGE_TYPE, F.lit("update_postimage")
                 )
             )
-        ]
-    if not _try_commit(
-        os.path.join(path, "_delta_log"), version, actions,
-        conf=snap.configuration,
-    ):
-        if mode == "dv":
-            # re-adds of PRE-EXISTING files must keep their data bytes;
-            # remove only their fresh DV sidecars plus the staged
-            # new-row files (the adds without a descriptor)
-            _lost_race_cleanup(path, actions, remove_adds=False)
-            for a in actions:
-                if "add" in a and not a["add"].get("deletionVector"):
-                    try:
-                        os.remove(os.path.join(path, a["add"]["path"]))
-                    except OSError:
-                        pass
-        else:
-            _lost_race_cleanup(path, actions, remove_adds=True)
-        if max_retries > 1:
-            return delta_update(
-                spark, path, predicate, set_exprs,
-                checkpoint_interval=checkpoint_interval,
-                max_retries=max_retries - 1,
-                write_change_files=write_change_files,
-                mode=mode, inline_threshold=inline_threshold,
-            )
-        raise DeltaCommitConflict(
-            f"version {version} was committed concurrently and retries "
-            "are exhausted; update must re-run against the new snapshot"
+        return _DmlPlan(
+            # rt ids land in the table's materialized physical columns
+            new_rows=rtm.to_materialized(new_data, snap) if rt_on else new_data,
+            removes=hit_rels if mode == "rewrite" else [],
+            dv_losers=upd_src.select("__fp", "__ri") if mode == "dv" else None,
+            changes=changes,
+            checks=(check_generated, check_constraints),
+            rows=n_updated,
         )
-    _maybe_checkpoint(spark, path, version, checkpoint_interval)
-    _uniform_after_commit(spark, path, snap.configuration)
-    return version, n_updated
+
+    return _apply_and_commit(
+        spark, path, "UPDATE",
+        {"predicate": predicate, "set": dict(sorted(set_exprs.items()))}, plan,
+        mode=mode, write_change_files=write_change_files,
+        checkpoint_interval=checkpoint_interval, max_retries=max_retries,
+        inline_threshold=inline_threshold,
+    )
 
 
 def delta_reorg_purge(
@@ -3923,7 +3713,7 @@ def delta_reorg_purge(
 
     Returns ``(committed version, files purged)`` — ``(version, 0)``
     without a commit when no live file carries a DV."""
-    from pos_dlt_spark.sources.delta import _apply_deletion_vectors
+    from pos_dlt_spark.sources.delta import scan_live_rows
 
     snap = delta_snapshot(spark, path)
     _writer_supports(snap)
@@ -3936,16 +3726,9 @@ def delta_reorg_purge(
 
     rt_on = rtm.row_tracking_enabled(snap.configuration)
     if rt_on:
-        rtm.require_materialized_columns(snap)
-        from pyspark.sql import functions as F
-
-        live = rtm.scan_with_row_ids(spark, snap, dv_rels).select(
-            *[f.name for f in snap.schema.fields],
-            F.col(rtm.ROW_ID_COL).alias(snap.configuration[rtm.MAT_ROW_ID_PROP]),
-            F.col(rtm.ROW_VER_COL).alias(snap.configuration[rtm.MAT_ROW_VER_PROP]),
-        )
+        live = rtm.to_materialized(rtm.scan_with_row_ids(spark, snap, dv_rels), snap)
     else:
-        live = _apply_deletion_vectors(spark, snap, dv_rels)
+        live = scan_live_rows(spark, snap, dv_rels)
     adds = _stage_and_move(
         _to_physical(live, snap), path, _physical_partition_by(snap)
     )

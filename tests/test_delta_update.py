@@ -19,6 +19,7 @@ from pos_dlt_spark.sources.delta import (
 from pos_dlt_spark.sources.delta_cdf import read_change_feed
 from pos_dlt_spark.sources.delta_writer import (
     delta_delete,
+    delta_merge,
     delta_reorg_purge,
     delta_update,
     write_delta,
@@ -302,37 +303,21 @@ def test_delete_compound_between_not_wrongly_pruned(spark, tmp_path):
     assert ids == list(range(0, 10)) + list(range(13, 20))
 
 
-def test_update_retry_absorbs_lost_race(spark, tmp_path, monkeypatch):
-    """A lost commit race must be ABSORBED by UPDATE (same discipline as
-    MERGE): staged rewrite + cdc files from the aborted attempt are
-    removed and the re-run lands on the fresh snapshot."""
-    import pos_dlt_spark.sources.delta_writer as dw
+def _on_disk(table, suffix):
+    """Table-relative paths of the ``suffix`` files outside the log."""
+    return {
+        os.path.relpath(os.path.join(r, f), table).replace(os.sep, "/")
+        for r, _d, fs in os.walk(table)
+        for f in fs
+        if f.endswith(suffix) and "_delta_log" not in r
+    }
 
-    table = str(tmp_path / "uretry")
-    write_delta(
-        _df(spark, 0, 20).repartition(1), table,
-        configuration={"delta.enableChangeDataFeed": "true"},
-    )
-    real = dw._try_commit
-    fails = {"n": 1}
 
-    def flaky(log_dir, version, actions, **kw):
-        if fails["n"]:
-            fails["n"] -= 1
-            return False
-        return real(log_dir, version, actions)
-
-    monkeypatch.setattr(dw, "_try_commit", flaky)
-    v, n = delta_update(spark, table, "id < 5", {"name": "concat(name, '-u')"})
-    assert (v, n) == (1, 5)
-    got = {r.id: r.name for r in read_delta(spark, table).collect()}
-    assert all(got[i] == f"n{i}-u" for i in range(5))
-    assert all(got[i] == f"n{i}" for i in range(5, 20))
-    ch = read_change_feed(spark, table, start_version=v, end_version=v)
-    assert sum(r._change_type == "update_postimage" for r in ch.collect()) == 5
-    # nothing the aborted attempt staged survives: every on-disk file is
-    # referenced by the log
+def _log_references(table):
+    """Every data, change and DV sidecar path any commit references."""
     import json as _json
+
+    from pos_dlt_spark.sources.dv import dv_relative_path
 
     refs: set[str] = set()
     log_dir = os.path.join(table, "_delta_log")
@@ -343,13 +328,95 @@ def test_update_retry_absorbs_lost_race(spark, tmp_path, monkeypatch):
                 for k in ("add", "remove", "cdc"):
                     if k in a:
                         refs.add(a[k]["path"])
-    on_disk = {
-        os.path.relpath(os.path.join(r, f), table).replace(os.sep, "/")
-        for r, _d, fs in os.walk(table)
-        for f in fs
-        if f.endswith(".parquet") and "_delta_log" not in r
-    }
-    assert on_disk <= refs
+                        dvd = a[k].get("deletionVector")
+                        if dvd and dv_relative_path(dvd):
+                            refs.add(dv_relative_path(dvd))
+    return refs
+
+
+def _run_dml(spark, verb, mode, table):
+    """One DML per verb over ``_df(0, 20)``: ids 0-4 change (and, for
+    MERGE, keys 20-22 insert); every attempt writes change files and, in
+    dv mode, a DV sidecar per touched file."""
+    if verb == "delete":
+        return delta_delete(spark, table, "id < 5", mode=mode, inline_threshold=0)
+    if verb == "update":
+        return delta_update(
+            spark, table, "id < 5", {"name": "concat(name, '-u')"},
+            mode=mode, inline_threshold=0,
+        )
+    batch = _df(spark, 0, 5).withColumn("name", F.concat("name", F.lit("-u")))
+    return delta_merge(
+        spark, table, batch.unionByName(_df(spark, 20, 23)), keys=["id"],
+        sequence_by="bucket", mode=mode, inline_threshold=0,
+    )
+
+
+@pytest.mark.parametrize("mode", ["rewrite", "dv"])
+@pytest.mark.parametrize("verb", ["update", "delete", "merge"])
+def test_update_retry_absorbs_lost_race(spark, tmp_path, monkeypatch, verb, mode):
+    """A lost commit race must be ABSORBED by every DML verb: whatever the
+    aborted attempt staged (rewrite or new-row files, cdc files, DV
+    sidecars) is removed and the re-run lands on the fresh snapshot with
+    the same result as an uninterrupted run."""
+    import pos_dlt_spark.sources.delta_writer as dw
+    from pos_dlt_spark.sources.delta_check import delta_fsck
+
+    conf = {"delta.enableChangeDataFeed": "true"}
+    table, twin = str(tmp_path / "uretry"), str(tmp_path / "twin")
+    for t in (table, twin):
+        write_delta(_df(spark, 0, 20).repartition(2), t, configuration=conf)
+    want = _run_dml(spark, verb, mode, twin)
+    real = dw._try_commit
+    fails = {"n": 1}
+
+    def flaky(log_dir, version, actions, **kw):
+        if fails["n"]:
+            fails["n"] -= 1
+            return False
+        return real(log_dir, version, actions)
+
+    monkeypatch.setattr(dw, "_try_commit", flaky)
+    got = _run_dml(spark, verb, mode, table)
+    monkeypatch.undo()
+    assert fails["n"] == 0 and got == want
+    if verb == "update":
+        assert got == (1, 5)
+        rows = {r.id: r.name for r in read_delta(spark, table).collect()}
+        assert all(rows[i] == f"n{i}-u" for i in range(5))
+        assert all(rows[i] == f"n{i}" for i in range(5, 20))
+        ch = read_change_feed(spark, table, start_version=1, end_version=1)
+        assert sum(r._change_type == "update_postimage" for r in ch.collect()) == 5
+
+    def state(t):
+        cols = ["id", "bucket", "name"]
+        ch = read_change_feed(spark, t, start_version=1, end_version=1)
+        return (
+            sorted(read_delta(spark, t).select(*cols).collect()),
+            sorted(ch.select(*cols, "_change_type").collect()),
+        )
+
+    assert state(table) == state(twin)
+    # nothing the aborted attempt staged survives: every on-disk data,
+    # change and DV sidecar file is referenced by the log
+    assert _on_disk(table, ".parquet") | _on_disk(table, ".bin") <= _log_references(table)
+    assert delta_fsck(spark, table) == []
+
+
+def test_refused_merge_on_read_update_stages_nothing(spark, tmp_path):
+    """``write_change_files=False`` without row tracking is refused before
+    any file is staged: the table keeps exactly its parquet files."""
+    table = str(tmp_path / "noleak")
+    write_delta(
+        _df(spark, 0, 20).repartition(4), table,
+        configuration={"delta.enableChangeDataFeed": "true"},
+    )
+    before = _on_disk(table, ".parquet")
+    with pytest.raises(ValueError, match="needs row tracking"):
+        delta_update(
+            spark, table, "id < 20", {"name": "'x'"}, write_change_files=False
+        )
+    assert _on_disk(table, ".parquet") == before
 
 
 def test_delete_dv_retry_absorbs_lost_race_and_cleans_sidecars(

@@ -123,11 +123,13 @@ def test_event_log_written(spark, tmp_path):
 
     runner = PipelineRunner(pipe)
     runner.run_once(spark)
-    log = os.path.join(str(tmp_path), "_events", "expectations.jsonl")
-    events = [json.loads(line) for line in open(log)]
-    assert events[-1]["table"] == "tbl"
-    assert events[-1]["expectations"]["b_pos"]["failed"] == 1
-    assert events[-1]["expectations"]["a_pos"]["failed"] == 0
+    events = [
+        (r.table_name, json.loads(r.details))
+        for r in pipe.event_log(spark).filter("event_type = 'expectation'").collect()
+    ]
+    assert {t for t, _ in events} == {"tbl"}
+    failed = {d["name"]: d["failed"] for _, d in events}
+    assert failed == {"a_pos": 0, "b_pos": 1}
 
 
 def test_expect_or_fail_aborts_atomically_delta_mode(spark, tmp_path):

@@ -5,10 +5,6 @@ sf0.001 — plan shape, not data volume, is under test."""
 import pytest
 
 import pos_dlt_spark.queries as Q
-import pos_dlt_spark.queries_analytics  # noqa: F401
-import pos_dlt_spark.queries_corpus  # noqa: F401
-import pos_dlt_spark.queries_ml  # noqa: F401
-import pos_dlt_spark.queries_tpch  # noqa: F401
 from pos_dlt_spark.plans import (
     assert_in_plan,
     assert_not_in_plan,
@@ -18,6 +14,8 @@ from pos_dlt_spark.plans import (
 )
 
 SF = "/root/testdata/sf0.001"
+
+Q.load_registry()
 
 
 @pytest.fixture(scope="module")
@@ -139,8 +137,6 @@ def test_ivf_assignment_has_no_centroid_shuffle(q):
 def test_q6_pushes_all_filters_to_scan(q):
     """TPC-H Q6 shape: all four predicates reach the parquet scan and the
     scan reads only the 4 referenced columns."""
-    import pos_dlt_spark.queries_analytics  # noqa: F401
-
     df = q("tpch_q6_forecast_revenue")
     schemas = scan_read_schemas(df)
     assert len(schemas) == 1
@@ -154,8 +150,6 @@ def test_q6_pushes_all_filters_to_scan(q):
 def test_q18_having_prefilter_is_broadcast(q):
     """The HAVING pre-aggregate (few hot orders) must reach the big join as
     a broadcast semi join, not a shuffle."""
-    import pos_dlt_spark.queries_analytics  # noqa: F401
-
     df = q("tpch_q18_large_volume_customer")
     from pos_dlt_spark.plans import physical_plan
 
@@ -241,7 +235,6 @@ def test_streamed_ann_index_prunes_partitions(q):
     """The cid=-partitioned index built by the streaming ingest IS the
     inverted file: routing a probe to 2 lists must become PartitionFilters
     on the index scan — reading nprobe directories, not the corpus."""
-    import pos_dlt_spark.queries_streaming  # noqa: F401 (registers)
     from pyspark.sql import functions as F
 
     from pos_dlt_spark.plans import formatted_plan

@@ -20,14 +20,11 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from pos_dlt_spark.queries import REGISTRY  # noqa: E402
-import pos_dlt_spark.queries_analytics  # noqa: E402,F401
-import pos_dlt_spark.queries_corpus  # noqa: E402,F401
-import pos_dlt_spark.queries_ml  # noqa: E402,F401
-import pos_dlt_spark.queries_streaming  # noqa: E402,F401
-import pos_dlt_spark.queries_tpch  # noqa: E402,F401
+from pos_dlt_spark.queries import load_registry  # noqa: E402
 from pos_dlt_spark.session import get_spark  # noqa: E402
 from tools.check_oracle import canon  # noqa: E402
+
+REGISTRY = load_registry()
 
 RESUMABLE = [
     "streaming_hourly_rollup",

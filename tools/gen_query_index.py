@@ -19,11 +19,8 @@ MARKER = "<!-- AUTO-GENERATED QUERY INDEX -->"
 
 def main() -> None:
     import pos_dlt_spark.queries as Q
-    import pos_dlt_spark.queries_analytics  # noqa: F401
-    import pos_dlt_spark.queries_corpus  # noqa: F401
-    import pos_dlt_spark.queries_ml  # noqa: F401
-    import pos_dlt_spark.queries_streaming  # noqa: F401
-    import pos_dlt_spark.queries_tpch  # noqa: F401
+
+    Q.load_registry()
 
     lines = [
         MARKER,

@@ -19,13 +19,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pos_dlt_spark.queries import REGISTRY, prepare_bench_fixtures  # noqa: E402
-import pos_dlt_spark.queries_analytics  # noqa: E402,F401
-import pos_dlt_spark.queries_corpus  # noqa: E402,F401
-import pos_dlt_spark.queries_ml  # noqa: E402,F401
-import pos_dlt_spark.queries_streaming  # noqa: E402,F401
-import pos_dlt_spark.queries_tpch  # noqa: E402,F401
+from pos_dlt_spark.queries import load_registry, prepare_bench_fixtures  # noqa: E402
 from pos_dlt_spark.session import get_spark  # noqa: E402
+
+REGISTRY = load_registry()
 
 
 def main() -> None:

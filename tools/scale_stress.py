@@ -196,9 +196,8 @@ def main() -> None:
     spark = build_session()
 
     import pos_dlt_spark.queries as Q
-    import pos_dlt_spark.queries_corpus  # noqa: F401
-    import pos_dlt_spark.queries_ml  # noqa: F401
-    import pos_dlt_spark.queries_streaming  # noqa: F401
+
+    Q.load_registry()
 
     if not os.path.exists(os.path.join(dst, "documents.parquet")):
         t0 = time.perf_counter()
