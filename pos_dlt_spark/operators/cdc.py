@@ -8,7 +8,8 @@ Two forms:
   row per key with a ``row_number()`` window. This is also the batch oracle
   the reference notebook describes for the streaming merge (`03:370,388`).
 - :class:`ApplyChanges` — the streaming form: ``foreachBatch`` upsert into a
-  parquet-backed keyed table. Each micro-batch is first reduced with
+  keyed table (a parquet directory or bucketed manifest store here; a Delta
+  table through the pipeline's sinks). Each micro-batch is first reduced with
   :func:`latest_per_key` (intra-batch latest), then merged against the
   current target state, keeping whichever row has the greater sequence value
   (out-of-order older rows are ignored; re-running the same batch is
@@ -105,12 +106,6 @@ def scd2_rebuild(
         order.append(F.col("__tombstone").asc())
     w = Window.partitionBy(*keys).orderBy(*order)
     if untracked:
-        bad = set(untracked) & (set(keys) | {sequence_by})
-        if bad:
-            raise ValueError(
-                f"track_history_except_column_list cannot contain keys or "
-                f"sequence_by: {sorted(bad)}"
-            )
         tracked = [
             c
             for c in df.columns
@@ -163,8 +158,77 @@ def scd2_rebuild(
     )
 
 
+# the SCD contract of a target written before the contract was pinned
+_DEFAULT_CONTRACT = {
+    "scd_type": 1, "track_history_except": [], "track_history_only": None,
+}
+
+
+def _check_scd_contract(
+    scd_type: int,
+    track_except: Sequence[str],
+    track_only: Sequence[str] | None,
+    reserved: set[str],
+) -> None:
+    """The SCD declaration rules both apply-changes forms share: type 1
+    or 2; the two track-history lists are SCD2-only and mutually
+    exclusive (DLT's contract); neither may list a ``reserved`` column
+    (keys always identify a history; the sequence always orders it)."""
+    if scd_type not in (1, 2):
+        raise ValueError(f"stored_as_scd_type must be 1 or 2, got {scd_type!r}")
+    if track_except and scd_type != 2:
+        raise ValueError(
+            "track_history_except_column_list requires stored_as_scd_type=2 "
+            "(SCD1 keeps no history to track)"
+        )
+    if track_only is not None and scd_type != 2:
+        raise ValueError("track_history_column_list requires stored_as_scd_type=2")
+    if track_except and track_only is not None:
+        raise ValueError(
+            "track_history_column_list and track_history_except_column_list "
+            "are mutually exclusive (DLT's contract)"
+        )
+    for name, cols in (
+        ("track_history_except_column_list", track_except),
+        ("track_history_column_list", track_only or ()),
+    ):
+        bad = set(cols) & reserved
+        if bad:
+            raise ValueError(
+                f"{name} cannot contain keys or sequence_by: {sorted(bad)}"
+            )
+
+
+def _recover_swap(target_path: str) -> None:
+    """A crash between :func:`_swap_in`'s two renames strands the live
+    state in ``.__old`` with no target dir; restore it before any read or
+    fold, so the next batch sees the last complete state instead of an
+    empty target (and an SCD2 store keeps its closed history)."""
+    old = target_path + ".__old"
+    if not os.path.exists(target_path) and os.path.exists(old):
+        os.rename(old, target_path)
+
+
+def _swap_in(df: DataFrame, target_path: str, tmp_suffix: str) -> None:
+    """Write-then-swap: the whole new state lands beside the target, then
+    two renames replace it. This keeps the read path consistent for the
+    writer's own cadence; the renames are not jointly atomic — a
+    concurrent reader can hit the instant where ``target_path`` does not
+    exist, and a crash between them is healed by :func:`_recover_swap`.
+    The bucketed manifest layout is the mode with true reader isolation;
+    this one trades that for zero metadata."""
+    tmp = target_path + tmp_suffix
+    df.write.mode("overwrite").parquet(tmp)
+    old = target_path + ".__old"
+    if os.path.exists(target_path):
+        os.rename(target_path, old)
+    os.rename(tmp, target_path)
+    shutil.rmtree(old, ignore_errors=True)
+
+
 class ApplyChanges:
-    """Streaming upsert into a parquet-backed keyed table.
+    """Streaming CDC upsert into a keyed table: the one definition of
+    what a micro-batch does to its target.
 
     Usage::
 
@@ -175,7 +239,15 @@ class ApplyChanges:
              .option("checkpointLocation", ckpt)
              .start())
 
-    The target directory always holds the current one-row-per-key state.
+    The target always holds the current one-row-per-key state.
+
+    :meth:`_prepare` shapes a raw batch and :meth:`_fold` folds it into
+    the prior state of the keys it touches; :meth:`merge` is the two in
+    sequence. Four stores apply that one fold: the unbucketed
+    write-then-swap parquet directory and the bucketed manifest store
+    (both behind :meth:`process_batch`), and the pipeline's SCD1 and
+    SCD2 Delta sinks (``PipelineRunner._run_cdc``), which commit it with
+    the Delta protocol.
 
     ``apply_as_deletes`` (DLT's parameter of the same name) treats
     matching source rows as DELETE tombstones: the newest-by-sequence
@@ -224,39 +296,16 @@ class ApplyChanges:
         column_list: Sequence[str] | None = None,
         ignore_null_updates: bool = False,
     ) -> None:
-        if stored_as_scd_type not in (1, 2):
-            raise ValueError(
-                f"stored_as_scd_type must be 1 or 2, got {stored_as_scd_type!r}"
-            )
-        if track_history_except_column_list and stored_as_scd_type != 2:
-            raise ValueError(
-                "track_history_except_column_list requires "
-                "stored_as_scd_type=2 (SCD1 keeps no history to track)"
-            )
+        _check_scd_contract(
+            stored_as_scd_type,
+            track_history_except_column_list,
+            track_history_column_list,
+            reserved=set(keys) | {sequence_by},
+        )
         # DLT's track_history_column_list: the POSITIVE form — ONLY the
         # listed columns' changes open new versions; every other non-key
         # column refreshes in place. Complement of the except form,
         # resolved against the actual batch columns at merge time.
-        if track_history_column_list is not None:
-            if stored_as_scd_type != 2:
-                raise ValueError(
-                    "track_history_column_list requires stored_as_scd_type=2"
-                )
-            if track_history_except_column_list:
-                raise ValueError(
-                    "track_history_column_list and "
-                    "track_history_except_column_list are mutually "
-                    "exclusive (DLT's contract)"
-                )
-            overlap = set(track_history_column_list) & (
-                set(keys) | {sequence_by}
-            )
-            if overlap:
-                raise ValueError(
-                    "track_history_column_list cannot contain keys or "
-                    f"sequence_by: {sorted(overlap)} (keys always identify "
-                    "a history; the sequence always orders it)"
-                )
         self.track_history_only = (
             list(track_history_column_list)
             if track_history_column_list is not None
@@ -355,28 +404,37 @@ class ApplyChanges:
 
     # -- merge logic (pure DataFrame in / DataFrame out, unit-testable) ----
 
-    def _tag_incoming(self, batch: DataFrame) -> DataFrame:
-        """SCD2 source prep: tombstone flag from the RAW columns (the
-        predicate may reference except-listed ones), then except-listed
-        columns drop. ALL version rows are kept — SCD2 never reduces a
-        batch to latest-per-key."""
-        incoming = batch
+    def _prepare(self, batch: DataFrame) -> DataFrame:
+        """Shape a raw micro-batch for :meth:`_fold`. The tombstone flag is
+        taken from the RAW columns (the apply_as_deletes predicate may
+        reference except-listed ones), then except_column_list /
+        column_list project the stored columns. SCD1 reduces the batch to
+        its latest row per key, except under ignore_null_updates, whose
+        fold needs every row's non-null contributions; SCD2 keeps every
+        version row, deduplicated.
+
+        SCD1's flag is the transient ``__del`` (the fold drops it). SCD2's
+        is ``__tombstone``, retained in storage — NOT named __del there:
+        that is delta_merge's transient delete-predicate tag, and a stored
+        column of that name would be misread by its change-feed
+        classifier."""
+        flag = "__tombstone" if self.scd_type == 2 else "__del"
+        rows = batch
         if self.apply_as_deletes:
-            # NOT named __del: that is delta_merge's transient
-            # delete-predicate tag, and a stored column of that name
-            # would be misread by its change-feed classifier
-            incoming = incoming.withColumn(
-                "__tombstone",
-                F.coalesce(F.expr(self.apply_as_deletes), F.lit(False)),
+            rows = rows.withColumn(
+                flag, F.coalesce(F.expr(self.apply_as_deletes), F.lit(False))
             )
         if self.except_column_list:
-            incoming = incoming.drop(*self.except_column_list)
+            rows = rows.drop(*self.except_column_list)
         if self.column_list is not None:
-            keep = list(self.column_list) + (
-                ["__tombstone"] if self.apply_as_deletes else []
+            rows = rows.select(
+                *self.column_list, *([flag] if self.apply_as_deletes else [])
             )
-            incoming = incoming.select(*keep)
-        return incoming
+        if self.scd_type == 2:
+            return self._scd2_dedupe(rows)
+        if self.ignore_null_updates:
+            return rows
+        return latest_per_key(rows, self.keys, self.sequence_by, self.tiebreakers)
 
     def _null_fold(self, df: DataFrame) -> DataFrame:
         """ignore_null_updates: every data column becomes the LAST
@@ -430,112 +488,75 @@ class ApplyChanges:
             *[F.max(c).alias(c) for c in data]
         )
 
-    def _scd2_merge(self, target: DataFrame | None, batch: DataFrame) -> DataFrame:
-        """SCD TYPE 2 merge: union the batch's version rows with the
-        target's RAW version set (interval columns stripped — they are
-        storage-owned), dedupe on the full tuple (idempotent reruns and
-        replays), and recompute the interval bounds. Out-of-order rows
-        land in the middle of their key's history and the lead() window
-        re-bounds the neighbors; a retained tombstone closes whatever
-        precedes it, even across batches."""
-        incoming = self._scd2_dedupe(self._tag_incoming(batch))
-        if target is None:
-            rows = incoming
-        else:
-            raw_target = target.drop(*SCD2_COLS)
-            expected = set(incoming.columns)
-            if set(raw_target.columns) != expected and not self.merge_schema:
+    def _fold(self, target: DataFrame | None, prepared: DataFrame) -> DataFrame:
+        """Fold a :meth:`_prepare`-d batch into ``target`` — the RAW prior
+        state (SCD2 tombstones included) of at least the keys the batch
+        touches, or None when there is none — and return those keys' new
+        state.
+
+        SCD1: union + latest-per-key == MERGE whenMatched-and-newer
+        update, whenNotMatched insert. A target row only loses to an
+        incoming row with a strictly greater (sequence, tiebreakers...)
+        ordering, because the ``__is_target`` tiebreak prefers the
+        existing row on exact ties. A delete that WON the ordering removes
+        its key; SCD1 does not retain tombstones.
+
+        SCD2: the target's version set, interval columns stripped (they
+        are storage-owned, so a re-bounded version collapses with its
+        prior self), unions the batch's, is deduplicated (idempotent
+        reruns and replays), and :func:`scd2_rebuild` recomputes the
+        bounds. Out-of-order rows land in the middle of their key's
+        history and re-bound the neighbors; a retained tombstone closes
+        whatever precedes it, even across batches."""
+        rows = prepared
+        if target is not None:
+            if self.scd_type == 2:
+                target = target.drop(*SCD2_COLS)
+            expected = set(prepared.columns) - {"__del"}
+            if set(target.columns) != expected and not self.merge_schema:
                 raise ValueError(
                     "batch schema drifted from target "
-                    f"(target={sorted(raw_target.columns)} "
-                    f"batch={sorted(expected)}); "
+                    f"(target={sorted(target.columns)} batch={sorted(expected)}); "
                     "pass merge_schema=True to evolve"
                 )
-            rows = self._scd2_dedupe(
-                raw_target.unionByName(
-                    incoming, allowMissingColumns=self.merge_schema
+            if self.scd_type == 2:
+                rows = self._scd2_dedupe(
+                    target.unionByName(
+                        prepared, allowMissingColumns=self.merge_schema
+                    )
                 )
-            )
+            else:
+                target = target.withColumn("__is_target", F.lit(1))
+                if self.apply_as_deletes:
+                    target = target.withColumn("__del", F.lit(False))
+                rows = target.unionByName(
+                    prepared.withColumn("__is_target", F.lit(0)),
+                    allowMissingColumns=self.merge_schema,
+                )
         if self.ignore_null_updates:
             rows = self._null_fold(rows)
-        return scd2_rebuild(
-            rows,
-            self.keys,
-            self.sequence_by,
-            self.tiebreakers,
-            has_tombstones=bool(self.apply_as_deletes),
-            untracked=self._untracked_for(rows.columns),
-        )
+        if self.scd_type == 2:
+            return scd2_rebuild(
+                rows,
+                self.keys,
+                self.sequence_by,
+                self.tiebreakers,
+                has_tombstones=bool(self.apply_as_deletes),
+                untracked=self._untracked_for(rows.columns),
+            )
+        if target is not None or self.ignore_null_updates:
+            # (with neither, the prepared batch is already one row per key)
+            ties = self.tiebreakers + (["__is_target"] if target is not None else [])
+            rows = latest_per_key(
+                rows, self.keys, self.sequence_by, ties
+            ).drop("__is_target")
+        if self.apply_as_deletes:
+            rows = rows.filter(~F.col("__del")).drop("__del")
+        return rows
 
     def merge(self, target: DataFrame | None, batch: DataFrame) -> DataFrame:
-        """Merge a micro-batch into the current target state."""
-        if self.scd_type == 2:
-            return self._scd2_merge(target, batch)
-        if self.ignore_null_updates:
-            # no intra-batch pre-reduce: the fold needs EVERY row's
-            # non-null contributions in sequence order; the final
-            # latest-per-key below still picks one row per key
-            incoming = batch
-        else:
-            incoming = latest_per_key(
-                batch, self.keys, self.sequence_by, self.tiebreakers
-            )
-        # delete tombstones are tagged from the RAW source columns (the
-        # predicate may reference except-listed ones), then the
-        # except-listed columns drop so the union schema matches the
-        # target state
-        if self.apply_as_deletes:
-            incoming = incoming.withColumn(
-                "__del",
-                F.coalesce(F.expr(self.apply_as_deletes), F.lit(False)),
-            )
-        if self.except_column_list:
-            incoming = incoming.drop(*self.except_column_list)
-        if self.column_list is not None:
-            incoming = incoming.select(
-                *self.column_list,
-                *(["__del"] if self.apply_as_deletes else []),
-            )
-        if target is None:
-            if self.ignore_null_updates:
-                incoming = self._null_fold(incoming)
-            incoming = latest_per_key(
-                incoming, self.keys, self.sequence_by, self.tiebreakers
-            )
-            if self.apply_as_deletes:
-                incoming = incoming.filter(~F.col("__del")).drop("__del")
-            return incoming
-        expected = set(incoming.columns) - {"__del"}
-        if set(target.columns) != expected and not self.merge_schema:
-            raise ValueError(
-                "batch schema drifted from target "
-                f"(target={sorted(target.columns)} batch={sorted(expected)}); "
-                "pass merge_schema=True to evolve"
-            )
-        # union + latest-per-key == MERGE whenMatched-and-newer update,
-        # whenNotMatched insert.  A target row only loses to an incoming row
-        # with a strictly greater (sequence, tiebreakers...) ordering because
-        # the window tiebreak below prefers the existing row on exact ties.
-        tagged_target = target.withColumn("__is_target", F.lit(1))
-        tagged_in = incoming.withColumn("__is_target", F.lit(0))
-        if self.apply_as_deletes:
-            tagged_target = tagged_target.withColumn("__del", F.lit(False))
-        unioned = tagged_target.unionByName(
-            tagged_in, allowMissingColumns=self.merge_schema
-        )
-        if self.ignore_null_updates:
-            unioned = self._null_fold(unioned)
-        merged = latest_per_key(
-            unioned,
-            self.keys,
-            self.sequence_by,
-            tiebreakers=[*self.tiebreakers, "__is_target"],
-        )
-        merged = merged.drop("__is_target")
-        if self.apply_as_deletes:
-            # a delete that WON the ordering removes its key entirely
-            merged = merged.filter(~F.col("__del")).drop("__del")
-        return merged
+        """Merge a raw micro-batch into the current target state."""
+        return self._fold(target, self._prepare(batch))
 
     # -- manifest (bucketed mode's commit log) ------------------------------
 
@@ -563,31 +584,9 @@ class ApplyChanges:
                 )
             return
         if manifest is not None:
+            self._check_pinned(manifest)
             # older manifests predate bucket_keys: they bucketed by keys
             m_bucket_keys = manifest.get("bucket_keys", manifest["keys"])
-            if manifest.get("track_history_except", []) != self.track_history_except:
-                raise ValueError(
-                    "track_history_except_column_list mismatch: target "
-                    f"stores {manifest.get('track_history_except', [])}, "
-                    f"flow declares {self.track_history_except}; changing "
-                    "the tracked-column set mid-life makes old runs and "
-                    "new runs collapse differently — recreate the target"
-                )
-            if manifest.get("track_history_only") != self.track_history_only:
-                raise ValueError(
-                    "track_history_column_list mismatch: target stores "
-                    f"{manifest.get('track_history_only')}, flow declares "
-                    f"{self.track_history_only}; changing the tracked-column "
-                    "set mid-life makes old runs and new runs collapse "
-                    "differently — recreate the target"
-                )
-            if int(manifest.get("scd_type", 1)) != self.scd_type:
-                raise ValueError(
-                    f"SCD-type mismatch: target stores type "
-                    f"{manifest.get('scd_type', 1)}, flow declares type "
-                    f"{self.scd_type}; a latest-state table and a history "
-                    "table are different schemas — recreate the target"
-                )
             if (
                 manifest["n_buckets"] != self.n_buckets
                 or manifest["keys"] != self.keys
@@ -642,6 +641,23 @@ class ApplyChanges:
         flat = manifest.get("retired") or []
         return [{"version": manifest["version"], "dirs": flat}] if flat else []
 
+    def _repoint(
+        self, manifest: dict | None, touched: list[int], epoch_dir: str
+    ) -> tuple[dict, list[str]]:
+        """The bucket map after the ``touched`` buckets were rewritten into
+        ``epoch_dir``, and the directories that rewrite retires. A touched
+        bucket the write left without a directory (every one of its keys
+        was deleted) loses its pointer instead of naming a missing dir."""
+        buckets = dict(manifest["buckets"]) if manifest else {}
+        retired = [buckets[str(b)] for b in touched if str(b) in buckets]
+        for b in touched:
+            rel = os.path.join(epoch_dir, f"__bucket={b}")
+            if os.path.isdir(os.path.join(self.target_path, rel)):
+                buckets[str(b)] = rel
+            else:
+                buckets.pop(str(b), None)
+        return buckets, retired
+
     def _commit_and_gc(
         self,
         manifest: dict | None,
@@ -681,9 +697,7 @@ class ApplyChanges:
             # back-compat mirror of history[0] for pre-retention readers
             "prev_buckets": dict(history[0]["buckets"]) if history else None,
             "schema": schema_json,
-            "scd_type": self.scd_type,
-            "track_history_except": self.track_history_except,
-            "track_history_only": self.track_history_only,
+            **self._contract(),
         }
         self._commit_manifest(new_manifest)
         for entry in gc_entries:
@@ -832,16 +846,7 @@ class ApplyChanges:
             .partitionBy("__bucket")
             .parquet(os.path.join(self.target_path, epoch_dir))
         )
-        surviving = {int(r[0]) for r in kept.select("__bucket").distinct().collect()}
-        buckets = dict(manifest["buckets"])
-        retired = [buckets[str(b)] for b in touched if str(b) in buckets]
-        for b in touched:
-            if str(b) not in buckets:
-                continue
-            if b in surviving:
-                buckets[str(b)] = os.path.join(epoch_dir, f"__bucket={b}")
-            else:
-                del buckets[str(b)]
+        buckets, retired = self._repoint(manifest, touched, epoch_dir)
         self._commit_and_gc(
             manifest,
             version,
@@ -854,31 +859,51 @@ class ApplyChanges:
         )
         return n_deleted
 
-    def _recover_unbucketed(self) -> None:
-        """A crash between the two renames below strands the live state in
-        ``.__old`` with no target dir; restore it before merging so the
-        next batch sees the last complete state instead of an empty
-        target."""
-        old = self.target_path + ".__old"
-        if not os.path.exists(self.target_path) and os.path.exists(old):
-            os.rename(old, self.target_path)
+    def _contract(self) -> dict:
+        """The layout-shaping declaration a target is pinned to: the
+        bucketed manifest and the unbucketed sidecar both store it."""
+        return {
+            "scd_type": self.scd_type,
+            "track_history_except": self.track_history_except,
+            "track_history_only": self.track_history_only,
+        }
+
+    def _check_pinned(self, stored: dict) -> None:
+        """Refuse a declaration whose SCD contract differs from the one
+        the target was written with (``stored``: its manifest or sidecar;
+        keys absent there read as the historical default)."""
+        stored = {**_DEFAULT_CONTRACT, **stored}
+        if int(stored["scd_type"]) != self.scd_type:
+            raise ValueError(
+                f"SCD-type mismatch: target {self.target_path} stores type "
+                f"{stored['scd_type']}, flow declares type {self.scd_type}; "
+                "a latest-state table and a history table are different "
+                "schemas — recreate the target"
+            )
+        declared = self._contract()
+        for key, name in (
+            ("track_history_except", "track_history_except_column_list"),
+            ("track_history_only", "track_history_column_list"),
+        ):
+            if stored[key] != declared[key]:
+                raise ValueError(
+                    f"{name} mismatch: target {self.target_path} stores "
+                    f"{stored[key]}, flow declares {declared[key]}; changing "
+                    "the tracked-column set mid-life makes old runs and new "
+                    "runs collapse differently — recreate the target"
+                )
 
     # Unbucketed targets have no manifest to pin layout-shaping flow
     # parameters, so the scd_type / tracked-column contract lives in a
     # sidecar meta file (same shape as ApplyChangesFromSnapshot's
     # _snapshot_meta.json). Without it, re-declaring an existing SCD1
-    # target with stored_as_scd_type=2 would pass _scd2_merge's schema
+    # target with stored_as_scd_type=2 would pass the fold's schema
     # check (dropping absent __START_AT/__END_AT is a no-op) and silently
     # reinterpret latest-state rows as the full version history.
     def _ac_meta_path(self) -> str:
         return self.target_path + "._ac_meta.json"
 
     def _pin_unbucketed_meta(self) -> None:
-        declared = {
-            "scd_type": self.scd_type,
-            "track_history_except": self.track_history_except,
-            "track_history_only": self.track_history_only,
-        }
         try:
             with open(self._ac_meta_path()) as f:
                 stored = json.load(f)
@@ -889,11 +914,7 @@ class ApplyChanges:
                 # one only if it claims the historical default (SCD1,
                 # nothing untracked); anything else is indistinguishable
                 # from a reinterpretation and must recreate the target
-                if (
-                    self.scd_type != 1
-                    or self.track_history_except
-                    or self.track_history_only is not None
-                ):
+                if self._contract() != _DEFAULT_CONTRACT:
                     raise ValueError(
                         f"target {self.target_path} predates the scd_type "
                         "sidecar and cannot prove it was written with "
@@ -903,34 +924,10 @@ class ApplyChanges:
                     )
             tmp = self._ac_meta_path() + ".tmp"
             with open(tmp, "w") as f:
-                json.dump(declared, f)
+                json.dump(self._contract(), f)
             os.replace(tmp, self._ac_meta_path())
             return
-        if int(stored.get("scd_type", 1)) != self.scd_type:
-            raise ValueError(
-                f"SCD-type mismatch: target {self.target_path} stores type "
-                f"{stored.get('scd_type', 1)}, flow declares type "
-                f"{self.scd_type}; a latest-state table and a history "
-                "table are different schemas — recreate the target"
-            )
-        if stored.get("track_history_except", []) != self.track_history_except:
-            raise ValueError(
-                "track_history_except_column_list mismatch: target "
-                f"{self.target_path} stores "
-                f"{stored.get('track_history_except', [])}, flow declares "
-                f"{self.track_history_except}; changing the tracked-column "
-                "set mid-life makes old runs and new runs collapse "
-                "differently — recreate the target"
-            )
-        if stored.get("track_history_only") != self.track_history_only:
-            raise ValueError(
-                "track_history_column_list mismatch: target "
-                f"{self.target_path} stores "
-                f"{stored.get('track_history_only')}, flow declares "
-                f"{self.track_history_only}; changing the tracked-column "
-                "set mid-life makes old runs and new runs collapse "
-                "differently — recreate the target"
-            )
+        self._check_pinned(stored)
 
     def process_batch(self, batch: DataFrame, epoch_id: int) -> None:
         if len(batch.take(1)) == 0:
@@ -939,26 +936,11 @@ class ApplyChanges:
             self._process_batch_bucketed(batch, epoch_id)
             return
         self._validate_layout(self._read_manifest())
-        self._recover_unbucketed()
+        _recover_swap(self.target_path)
         self._pin_unbucketed_meta()
-        spark = batch.sparkSession
-        target = self.read_target(spark, raw=True)  # merges must see tombstones
-        merged = self.merge(target, batch)
-        # Write-then-swap keeps the read path consistent FOR THE WRITER'S
-        # OWN cadence; note the two renames are not jointly atomic — a
-        # concurrent reader can hit the instant where target_path does not
-        # exist, and a crash between them strands state in .__old (healed
-        # by _recover_unbucketed on the next batch). The bucketed manifest
-        # layout is the mode with true reader isolation; this unbucketed
-        # path trades that for zero metadata.
-        tmp = self.target_path + f".__epoch_{epoch_id}"
-        merged.write.mode("overwrite").parquet(tmp)
-        final_tmp = self.target_path + ".__old"
-        if os.path.exists(self.target_path):
-            os.rename(self.target_path, final_tmp)
-        os.rename(tmp, self.target_path)
-        if os.path.exists(final_tmp):
-            shutil.rmtree(final_tmp)
+        # merges must see tombstones: read the raw stored rows
+        target = self.read_target(batch.sparkSession, raw=True)
+        _swap_in(self.merge(target, batch), self.target_path, f".__epoch_{epoch_id}")
 
     def _process_batch_bucketed(self, batch: DataFrame, epoch_id: int) -> None:
         """Partial-rewrite merge with an atomic manifest commit.
@@ -977,52 +959,26 @@ class ApplyChanges:
         manifest = self._read_manifest()
         self._validate_layout(manifest)
         pinned = manifest.get("schema") if manifest else None
-        if self.scd_type == 2:
-            # SCD2: keep EVERY version row (no latest-per-key reduction);
-            # tombstone-tag + except-drop first so the stored schema is
-            # what the drift check compares against
-            prepped = self._scd2_dedupe(self._tag_incoming(batch))
-        else:
-            inc = batch
-            if self.apply_as_deletes:
-                inc = inc.withColumn(
-                    "__del",
-                    F.coalesce(F.expr(self.apply_as_deletes), F.lit(False)),
-                )
-            if self.except_column_list:
-                inc = inc.drop(*self.except_column_list)
-            if self.column_list is not None:
-                inc = inc.select(
-                    *self.column_list,
-                    *(["__del"] if self.apply_as_deletes else []),
-                )
-            if self.ignore_null_updates:
-                # the fold needs every row's non-null contributions; the
-                # final latest-per-key below still picks one row per key
-                prepped = inc
-            else:
-                prepped = latest_per_key(
-                    inc, self.keys, self.sequence_by, self.tiebreakers
-                )
+        prepared = self._prepare(batch)
         if pinned is not None:
             pinned_cols = {f["name"] for f in json.loads(pinned)["fields"]} - set(
                 SCD2_COLS
             )
             if (
-                set(prepped.columns) - {"__del"} != pinned_cols
+                set(prepared.columns) - {"__del"} != pinned_cols
                 and not self.merge_schema
             ):
                 raise ValueError(
                     "batch schema drifted from target "
-                    f"(target={sorted(pinned_cols)} batch={sorted(prepped.columns)}); "
+                    f"(target={sorted(pinned_cols)} batch={sorted(prepared.columns)}); "
                     "pass merge_schema=True to evolve"
                 )
-        incoming = self._with_bucket(prepped).localCheckpoint(
+        incoming = self._with_bucket(prepared).localCheckpoint(
             eager=True
         )  # cut lineage: read once, used thrice
         touched = [int(r[0]) for r in incoming.select("__bucket").distinct().collect()]
 
-        merged = incoming
+        target = None
         if manifest is not None:
             touched_paths = [
                 os.path.join(self.target_path, manifest["buckets"][str(b)])
@@ -1036,59 +992,9 @@ class ApplyChanges:
                 if pinned is not None:
                     reader = reader.schema(StructType.fromJson(json.loads(pinned)))
                 target = self._with_bucket(reader.parquet(*touched_paths))
-                if self.scd_type == 2:
-                    # interval bounds are storage-owned: strip before the
-                    # union so a re-bounded version collapses with its
-                    # prior self in the version-set dedupe
-                    merged = self._scd2_dedupe(
-                        target.drop(*SCD2_COLS).unionByName(
-                            incoming, allowMissingColumns=self.merge_schema
-                        )
-                    )
-                else:
-                    tagged_target = target.withColumn("__is_target", F.lit(1))
-                    tagged_in = incoming.withColumn("__is_target", F.lit(0))
-                    if self.apply_as_deletes:
-                        tagged_target = tagged_target.withColumn(
-                            "__del", F.lit(False)
-                        )
-                    unioned = tagged_target.unionByName(
-                        tagged_in, allowMissingColumns=self.merge_schema
-                    )
-                    if self.ignore_null_updates:
-                        unioned = self._null_fold(unioned)
-                    merged = latest_per_key(
-                        unioned,
-                        self.keys,
-                        self.sequence_by,
-                        tiebreakers=[*self.tiebreakers, "__is_target"],
-                    ).drop("__is_target")
-        if self.scd_type == 1:
-            if merged is incoming and self.ignore_null_updates:
-                # no prior state for the touched buckets, raw batch: fold
-                # then reduce to one row per key (the non-fold path was
-                # already reduced in prepped)
-                merged = latest_per_key(
-                    self._null_fold(merged),
-                    self.keys, self.sequence_by, self.tiebreakers,
-                )
-            if self.apply_as_deletes:
-                # a delete that won the ordering removes its key; SCD1
-                # does not retain tombstones (same contract as unbucketed)
-                merged = merged.filter(~F.col("__del")).drop("__del")
-        if self.scd_type == 2:
-            if self.ignore_null_updates:
-                merged = self._null_fold(merged)
-            # a key's whole history lives in one bucket (bucket_keys ⊆
-            # keys), so the per-key window sees every version it needs
-            merged = scd2_rebuild(
-                merged,
-                self.keys,
-                self.sequence_by,
-                self.tiebreakers,
-                has_tombstones=bool(self.apply_as_deletes),
-                untracked=self._untracked_for(merged.columns),
-            )
+        # a key's whole state (its SCD2 history too) lives in one bucket
+        # (bucket_keys ⊆ keys), so the touched buckets are all the fold needs
+        merged = self._fold(target, incoming)
 
         # Dir name includes the manifest generation it will commit as: a
         # foreachBatch retry of an epoch whose commit DID land re-runs with a
@@ -1103,10 +1009,7 @@ class ApplyChanges:
             .parquet(os.path.join(self.target_path, epoch_dir))
         )
 
-        buckets = dict(manifest["buckets"]) if manifest else {}
-        retired = [buckets[str(b)] for b in touched if str(b) in buckets]
-        for b in touched:
-            buckets[str(b)] = os.path.join(epoch_dir, f"__bucket={b}")
+        buckets, retired = self._repoint(manifest, touched, epoch_dir)
         # Commit this generation; GC only dirs retired more than
         # `retention` commits ago — every retained generation's bucket map
         # (time travel) and any reader that resolved one stays servable.
@@ -1180,7 +1083,7 @@ class ApplyChangesFromSnapshot:
     pinning the last processed version. Crash between swap and meta
     write is safe: reprocessing the same snapshot against the
     post-swap state classifies every key as unchanged. Crash between
-    the swap's two renames is healed by ``_recover`` (state restored
+    the swap's two renames is healed by ``_recover_swap`` (state restored
     from ``.__old``) before any read or snapshot fold."""
 
     META = "_snapshot_meta.json"
@@ -1193,29 +1096,12 @@ class ApplyChangesFromSnapshot:
         track_history_except_column_list: Sequence[str] = (),
         track_history_column_list: Sequence[str] | None = None,
     ) -> None:
-        if stored_as_scd_type not in (1, 2):
-            raise ValueError(
-                f"stored_as_scd_type must be 1 or 2, got {stored_as_scd_type!r}"
-            )
-        if track_history_except_column_list and stored_as_scd_type != 2:
-            raise ValueError(
-                "track_history_except_column_list requires stored_as_scd_type=2"
-            )
-        if track_history_column_list is not None:
-            if stored_as_scd_type != 2:
-                raise ValueError(
-                    "track_history_column_list requires stored_as_scd_type=2"
-                )
-            if track_history_except_column_list:
-                raise ValueError(
-                    "track_history_column_list and "
-                    "track_history_except_column_list are mutually "
-                    "exclusive (DLT's contract)"
-                )
-            if set(track_history_column_list) & set(keys):
-                raise ValueError(
-                    "track_history_column_list cannot contain keys"
-                )
+        _check_scd_contract(
+            stored_as_scd_type,
+            track_history_except_column_list,
+            track_history_column_list,
+            reserved=set(keys),
+        )
         self.target_path = target_path
         self.keys = list(keys)
         self.scd_type = stored_as_scd_type
@@ -1255,33 +1141,13 @@ class ApplyChangesFromSnapshot:
             json.dump({"version": version}, f)
         os.replace(tmp, self._meta_path())
 
-    # -- state io (write-then-swap, same shape as ApplyChanges unbucketed) --
-
-    def _recover(self) -> None:
-        """A crash between _swap_in's two renames strands the live state
-        in ``.__old`` with no target dir; without this, the next
-        process_snapshot would see read_target()=None and silently
-        re-seed from the snapshot alone, losing every closed SCD2
-        version. Same healing contract as
-        ApplyChanges._recover_unbucketed."""
-        old = self.target_path + ".__old"
-        if not os.path.exists(self.target_path) and os.path.exists(old):
-            os.rename(old, self.target_path)
+    # -- state io (the write-then-swap store ApplyChanges' unbucketed mode uses)
 
     def read_target(self, spark: SparkSession) -> DataFrame | None:
-        self._recover()
+        _recover_swap(self.target_path)
         if not os.path.exists(os.path.join(self.target_path, "_SUCCESS")):
             return None
         return spark.read.parquet(self.target_path)
-
-    def _swap_in(self, df: DataFrame, epoch) -> None:
-        tmp = self.target_path + f".__snap_{epoch}"
-        df.write.mode("overwrite").parquet(tmp)
-        old = self.target_path + ".__old"
-        if os.path.exists(self.target_path):
-            os.rename(self.target_path, old)
-        os.rename(tmp, self.target_path)
-        shutil.rmtree(old, ignore_errors=True)
 
     # -- the diff -------------------------------------------------------------
 
@@ -1289,7 +1155,7 @@ class ApplyChangesFromSnapshot:
         """Fold one full snapshot (all rows, all keys) at ``version``
         into the target. Returns False when the version was already
         processed (replay) or is out of order."""
-        self._recover()
+        _recover_swap(self.target_path)
         last = self.last_version()
         if last is not None and version <= last:
             return False
@@ -1301,7 +1167,7 @@ class ApplyChangesFromSnapshot:
         cur = self.read_target(spark)
 
         if self.scd_type == 1:
-            self._swap_in(snap_df, version)
+            _swap_in(snap_df, self.target_path, f".__snap_{version}")
             self._save_version(version)
             return True
 
@@ -1311,7 +1177,7 @@ class ApplyChangesFromSnapshot:
             "__END_AT", null_v
         )
         if cur is None:
-            self._swap_in(opened, version)
+            _swap_in(opened, self.target_path, f".__snap_{version}")
             self._save_version(version)
             return True
 
@@ -1373,6 +1239,6 @@ class ApplyChangesFromSnapshot:
             .unionByName(close_old)
             .unionByName(open_new)
         )
-        self._swap_in(new_state, version)
+        _swap_in(new_state, self.target_path, f".__snap_{version}")
         self._save_version(version)
         return True

@@ -61,7 +61,7 @@ from typing import Callable, Literal
 
 from pyspark.sql import DataFrame, SparkSession
 
-from pos_dlt_spark.operators.cdc import ApplyChanges
+from pos_dlt_spark.operators.cdc import ApplyChanges, ApplyChangesFromSnapshot
 
 # "auto" = resolve from the materialized DataFrame's isStreaming on first
 # refresh — DLT's own python decorator has no kind parameter at all: a
@@ -130,6 +130,27 @@ class CdcFlowDef:
     column_list: list[str] | None = None  # DLT: positive projection
     ignore_null_updates: bool = False  # DLT: NULL = no change (inherit)
 
+    def operator(self, path: str) -> ApplyChanges:
+        """The flow's one ApplyChanges: every store shapes and folds its
+        batches through it, and building it validates the declaration."""
+        return ApplyChanges(
+            path,
+            keys=self.keys,
+            sequence_by=self.sequence_by,
+            tiebreakers=self.tiebreakers,
+            n_buckets=self.n_buckets,
+            bucket_keys=self.bucket_keys,
+            apply_as_deletes=self.apply_as_deletes,
+            except_column_list=self.except_column_list or (),
+            stored_as_scd_type=self.stored_as_scd_type,
+            track_history_except_column_list=(
+                self.track_history_except_column_list or ()
+            ),
+            track_history_column_list=self.track_history_column_list,
+            column_list=self.column_list,
+            ignore_null_updates=self.ignore_null_updates,
+        )
+
 
 @dataclass
 class SnapshotFlowDef:
@@ -143,6 +164,17 @@ class SnapshotFlowDef:
     stored_as_scd_type: int = 2
     track_history_except_column_list: list[str] | None = None
     track_history_column_list: list[str] | None = None
+
+    def operator(self, path: str) -> ApplyChangesFromSnapshot:
+        return ApplyChangesFromSnapshot(
+            path,
+            keys=self.keys,
+            stored_as_scd_type=self.stored_as_scd_type,
+            track_history_except_column_list=(
+                self.track_history_except_column_list or ()
+            ),
+            track_history_column_list=self.track_history_column_list,
+        )
 
 
 @dataclass
@@ -859,19 +891,9 @@ class Pipeline:
         ``stored_as_scd_type`` mirror DLT's parameters (delete
         tombstones; source-only columns dropped from the stored state;
         type 2 maintains the target as version HISTORY with
-        ``__START_AT``/``__END_AT`` — see operators/cdc.py)."""
-        if stored_as_scd_type not in (1, 2):
-            raise ValueError(
-                f"stored_as_scd_type must be 1 or 2, got {stored_as_scd_type!r}"
-            )
-        if track_history_except_column_list and stored_as_scd_type != 2:
-            raise ValueError(
-                "track_history_except_column_list requires stored_as_scd_type=2"
-            )
-        if track_history_column_list is not None and stored_as_scd_type != 2:
-            raise ValueError(
-                "track_history_column_list requires stored_as_scd_type=2"
-            )
+        ``__START_AT``/``__END_AT`` — see operators/cdc.py). The flow's
+        ApplyChanges is built here, so every declaration error raises
+        before anything is written, in every storage format."""
         if ignore_null_updates and self.storage_format == "delta" and n_buckets is None:
             raise ValueError(
                 "ignore_null_updates on a Delta-stored flow is not "
@@ -879,8 +901,7 @@ class Pipeline:
                 "use the bucketed manifest engine (n_buckets=...) or "
                 "parquet storage"
             )
-        self._note_decl(target)
-        self.cdc_flows[target] = CdcFlowDef(
+        flow = CdcFlowDef(
             target=target, source=source, keys=keys, sequence_by=sequence_by,
             reset_allowed=reset_allowed,
             tiebreakers=list(tiebreakers or []), n_buckets=n_buckets,
@@ -901,6 +922,9 @@ class Pipeline:
             column_list=list(column_list) if column_list else None,
             ignore_null_updates=ignore_null_updates,
         )
+        flow.operator(self.table_path(target))  # raises on a bad declaration
+        self._note_decl(target)
+        self.cdc_flows[target] = flow
 
     def apply_changes_from_snapshot(
         self,
@@ -920,12 +944,7 @@ class Pipeline:
         history with keys ABSENT from a snapshot closed at its version.
         See operators/cdc.ApplyChangesFromSnapshot for the diff
         semantics and cost shape."""
-        if stored_as_scd_type not in (1, 2):
-            raise ValueError(
-                f"stored_as_scd_type must be 1 or 2, got {stored_as_scd_type!r}"
-            )
-        self._note_decl(target)
-        self.snapshot_flows[target] = SnapshotFlowDef(
+        sflow = SnapshotFlowDef(
             target=target, source=source, keys=list(keys),
             stored_as_scd_type=stored_as_scd_type,
             track_history_except_column_list=(
@@ -939,6 +958,9 @@ class Pipeline:
                 else None
             ),
         )
+        sflow.operator(self.table_path(target))  # raises on a bad declaration
+        self._note_decl(target)
+        self.snapshot_flows[target] = sflow
 
     def incremental_view(
         self,
@@ -1128,27 +1150,11 @@ class Pipeline:
             from pos_dlt_spark.sources.delta import read_delta
 
             df = read_delta(spark, self.table_path(name))
-            if (
-                flow is not None
-                and flow.stored_as_scd_type == 2
-                and "__tombstone" in df.columns
-            ):
-                # SCD2 tombstones are merge bookkeeping, not versions —
-                # same reader rule as ApplyChanges.read_target
-                from pyspark.sql import functions as F
-
-                df = df.filter(~F.col("__tombstone")).drop("__tombstone")
-            return df
-        df = spark.read.parquet(self.table_path(name))
-        if (
-            flow is not None
-            and flow.stored_as_scd_type == 2
-            and "__tombstone" in df.columns
-        ):
-            from pyspark.sql import functions as F
-
-            df = df.filter(~F.col("__tombstone")).drop("__tombstone")
-        return df
+        else:
+            df = spark.read.parquet(self.table_path(name))
+        # SCD2 tombstones are merge bookkeeping, not versions
+        scd2 = flow is not None and flow.stored_as_scd_type == 2
+        return ApplyChanges._visible(df, raw=not scd2)
 
     def read_stream(self, spark: SparkSession, name: str) -> DataFrame:
         """Streaming read of another pipeline table (``dlt.read_stream``).
@@ -1622,23 +1628,7 @@ class PipelineRunner:
         return rows_out
 
     def _flow_ac(self, flow: CdcFlowDef) -> ApplyChanges:
-        return ApplyChanges(
-            self.p.table_path(flow.target),
-            keys=flow.keys,
-            sequence_by=flow.sequence_by,
-            tiebreakers=flow.tiebreakers,
-            n_buckets=flow.n_buckets,
-            bucket_keys=flow.bucket_keys,
-            apply_as_deletes=flow.apply_as_deletes,
-            except_column_list=flow.except_column_list or (),
-            stored_as_scd_type=flow.stored_as_scd_type,
-            track_history_except_column_list=(
-                flow.track_history_except_column_list or ()
-            ),
-            track_history_column_list=flow.track_history_column_list,
-            column_list=flow.column_list,
-            ignore_null_updates=flow.ignore_null_updates,
-        )
+        return flow.operator(self.p.table_path(flow.target))
 
     def _run_append_flows(self, spark: SparkSession, name: str) -> int:
         """Refresh a multi-flow streaming target (create_streaming_table)
@@ -1770,17 +1760,7 @@ class PipelineRunner:
         )
 
     def _run_snapshot_flow(self, spark: SparkSession, sflow: SnapshotFlowDef) -> dict:
-        from pos_dlt_spark.operators.cdc import ApplyChangesFromSnapshot
-
-        ac = ApplyChangesFromSnapshot(
-            self.p.table_path(sflow.target),
-            keys=sflow.keys,
-            stored_as_scd_type=sflow.stored_as_scd_type,
-            track_history_except_column_list=(
-                sflow.track_history_except_column_list or ()
-            ),
-            track_history_column_list=sflow.track_history_column_list,
-        )
+        ac = sflow.operator(self.p.table_path(sflow.target))
         snap = self.p.read(spark, sflow.source)
         # snapshot version = this update's ledger id: strictly increasing
         # across the pipeline's lifetime (the event log never reuses one)
@@ -1792,175 +1772,17 @@ class PipelineRunner:
         return {"snapshot_version": int(version), "processed": bool(processed)}
 
     def _run_cdc(self, spark: SparkSession, flow: CdcFlowDef) -> dict:
-        if (
-            self.p.storage_format == "delta"
-            and flow.n_buckets is None
-            and flow.stored_as_scd_type == 2
-        ):
-            # SCD2 on a real Delta table: per batch, the touched keys'
-            # FULL histories (semi-join restricted; delta_merge's own
-            # stats pruning bounds the rewrite) union the batch's
-            # version rows, full-tuple deduped, interval bounds
-            # recomputed, then ONE atomic MERGE commit keyed on the full
-            # version identity (keys + sequence + tiebreakers):
-            # same-version rows update in place (__END_AT re-bound —
-            # equal sequence resolves update-wins), new versions insert,
-            # rows of untouched keys are never rewritten. SetTransaction
-            # makes batch replays no-ops.
-            from pos_dlt_spark.operators.cdc import SCD2_COLS, scd2_rebuild
-            from pos_dlt_spark.sources.delta_writer import delta_merge, write_delta
-
-            path = self.p.table_path(flow.target)
-            app_id = f"pos_dlt:{self.p.name}:{flow.target}"
-
-            def scd2_sink(batch_df: DataFrame, batch_id: int) -> None:
-                from pyspark.sql import functions as F
-
-                incoming = batch_df
-                if flow.apply_as_deletes:
-                    incoming = incoming.withColumn(
-                        "__tombstone",
-                        F.coalesce(
-                            F.expr(flow.apply_as_deletes), F.lit(False)
-                        ),
-                    )
-                if flow.except_column_list:
-                    incoming = incoming.drop(*flow.except_column_list)
-                if flow.column_list:
-                    incoming = incoming.select(
-                        *flow.column_list,
-                        *(["__tombstone"] if flow.apply_as_deletes else []),
-                    )
-                incoming = incoming.dropDuplicates()
-                if flow.track_history_column_list is not None:
-                    listed = set(flow.track_history_column_list)
-                    reserved = (
-                        set(flow.keys)
-                        | {flow.sequence_by, "__tombstone", *SCD2_COLS}
-                        | set(flow.tiebreakers)
-                    )
-                    untracked = tuple(
-                        c for c in incoming.columns
-                        if c not in reserved and c not in listed
-                    )
-                else:
-                    untracked = tuple(flow.track_history_except_column_list or ())
-                rebuild = lambda rows: scd2_rebuild(  # noqa: E731
-                    rows, flow.keys, flow.sequence_by, flow.tiebreakers,
-                    has_tombstones=bool(flow.apply_as_deletes),
-                    untracked=untracked,
-                )
-                if not os.path.isdir(os.path.join(path, "_delta_log")):
-                    write_delta(
-                        rebuild(incoming), path,
-                        txn=(app_id, int(batch_id)),
-                        configuration={"delta.enableChangeDataFeed": "true"},
-                    )
-                    return
-                from pos_dlt_spark.sources.delta import read_delta
-
-                cur = read_delta(spark, path)
-                existing_full = cur.join(
-                    incoming.select(*flow.keys).distinct(), flow.keys, "left_semi"
-                )
-                rows = (
-                    existing_full.drop(*SCD2_COLS)
-                    .unionByName(incoming)
-                    .dropDuplicates()
-                )
-                rebuilt = rebuild(rows)
-                vk = [*flow.keys, flow.sequence_by, *flow.tiebreakers]
-                if flow.apply_as_deletes:
-                    # __tombstone is part of the stored version identity: a
-                    # retained tombstone and a data version at the SAME
-                    # sequence are distinct rows (scd2_rebuild's zero-width
-                    # close), so leaving it out of the merge key would let
-                    # delta_merge's latest-per-key window collapse them —
-                    # a same-sequence update could silently erase a stored
-                    # tombstone and resurrect the key
-                    vk = [*vk, "__tombstone"]
-                if untracked:
-                    # track-history collapse can REMOVE stored version rows
-                    # (a run extended by an out-of-order row re-opens at an
-                    # earlier sequence): mark versions the rebuild no longer
-                    # contains as tombstones so the SAME merge commit drops
-                    # them — one atomic remove+add, no phantom versions
-                    stale = existing_full.join(
-                        rebuilt.select(*vk).distinct(), vk, "left_anti"
-                    )
-                    updates = rebuilt.withColumn(
-                        "__scd2_stale", F.lit(False)
-                    ).unionByName(stale.withColumn("__scd2_stale", F.lit(True)))
-                    delta_merge(
-                        spark, path, updates, keys=vk,
-                        sequence_by=flow.sequence_by,
-                        txn=(app_id, int(batch_id)),
-                        delete_predicate="__scd2_stale",
-                    )
-                    return
-                delta_merge(
-                    spark, path, rebuilt,
-                    keys=vk,
-                    sequence_by=flow.sequence_by,
-                    txn=(app_id, int(batch_id)),
-                )
-
-            batch_fn = scd2_sink
-        elif self.p.storage_format == "delta" and flow.n_buckets is None:
-            # plain CDC target = a real Delta table maintained by protocol
-            # MERGE commits (the reference's `03:379-384`): first batch
-            # seeds it with the batch's latest-per-key rows, every later
-            # batch is one atomic remove+add merge commit with stats-pruned
-            # file rewrite. SetTransaction makes batch replays no-ops.
-            # (Bucketed flows keep the manifest store in both modes.)
-            from pos_dlt_spark.operators.cdc import latest_per_key
-            from pos_dlt_spark.sources.delta_writer import delta_merge, write_delta
-
-            path = self.p.table_path(flow.target)
-            app_id = f"pos_dlt:{self.p.name}:{flow.target}"
-
-            def sink(batch_df: DataFrame, batch_id: int) -> None:
-                from pyspark.sql import functions as F
-
-                if not os.path.isdir(os.path.join(path, "_delta_log")):
-                    seed = latest_per_key(
-                        batch_df, flow.keys, flow.sequence_by,
-                        tiebreakers=flow.tiebreakers,
-                    )
-                    if flow.apply_as_deletes:
-                        seed = seed.filter(
-                            ~F.coalesce(
-                                F.expr(flow.apply_as_deletes), F.lit(False)
-                            )
-                        )
-                    if flow.except_column_list:
-                        seed = seed.drop(*flow.except_column_list)
-                    if flow.column_list:
-                        # positive projection; later batches' extra source
-                        # columns never reach the files (delta_merge casts
-                        # updates to the table schema)
-                        seed = seed.select(*flow.column_list)
-                    # CDF on from birth: downstream flows consume the
-                    # target's precise change feed (table_changes /
-                    # replay_changes) instead of a forbidden file stream
-                    write_delta(
-                        seed, path, txn=(app_id, int(batch_id)),
-                        configuration={"delta.enableChangeDataFeed": "true"},
-                    )
-                else:
-                    # whenMatchedDelete rides the protocol MERGE itself;
-                    # except-listed op columns drop in the merge's cast
-                    delta_merge(
-                        spark, path, batch_df, keys=flow.keys,
-                        sequence_by=flow.sequence_by,
-                        tiebreakers=flow.tiebreakers,
-                        txn=(app_id, int(batch_id)),
-                        delete_predicate=flow.apply_as_deletes,
-                    )
-
-            batch_fn = sink
+        # Every store shapes and folds a batch through the flow's one
+        # ApplyChanges (_prepare: tombstone flag, column projection,
+        # intra-batch reduce; _fold: the merge against prior state). The
+        # parquet stores and the bucketed manifest store (in both storage
+        # formats) run it whole via process_batch; the two Delta sinks
+        # fold with it and commit through the Delta protocol.
+        ac = self._flow_ac(flow)
+        if self.p.storage_format != "delta" or flow.n_buckets is not None:
+            batch_fn = ac.process_batch
         else:
-            batch_fn = self._flow_ac(flow).process_batch
+            batch_fn = self._delta_cdc_sink(spark, flow, ac)
 
         # Event-log counters (DLT flow_progress): per micro-batch, the
         # batch's WINNING rows after the intra-batch latest-per-key reduce
@@ -1997,6 +1819,107 @@ class PipelineRunner:
         )
         q.awaitTermination()
         return stats
+
+    def _delta_cdc_sink(self, spark: SparkSession, flow: CdcFlowDef, ac: ApplyChanges):
+        """foreachBatch sink of an unbucketed CDC flow stored as Delta:
+        ``ac`` shapes and folds each batch, the Delta protocol commits it."""
+        from pos_dlt_spark.sources.delta import read_delta
+        from pos_dlt_spark.sources.delta_writer import delta_merge, write_delta
+
+        path = self.p.table_path(flow.target)
+        app_id = f"pos_dlt:{self.p.name}:{flow.target}"
+        log_dir = os.path.join(path, "_delta_log")
+
+        def seed(rows: DataFrame, batch_id: int) -> None:
+            # CDF on from birth: downstream flows consume the target's
+            # precise change feed (table_changes / replay_changes) instead
+            # of a forbidden file stream
+            write_delta(
+                rows, path, txn=(app_id, int(batch_id)),
+                configuration={"delta.enableChangeDataFeed": "true"},
+            )
+
+        if flow.stored_as_scd_type == 2:
+            # SCD2 on a real Delta table: per batch, ac._fold folds the
+            # prepared version rows into the touched keys' FULL histories
+            # (semi-join restricted; delta_merge's own stats pruning
+            # bounds the rewrite), then ONE atomic MERGE commit keyed on
+            # the full version identity (keys + sequence + tiebreakers):
+            # same-version rows update in place (__END_AT re-bound —
+            # equal sequence resolves update-wins), new versions insert,
+            # rows of untouched keys are never rewritten. SetTransaction
+            # makes batch replays no-ops.
+            def scd2_sink(batch_df: DataFrame, batch_id: int) -> None:
+                from pyspark.sql import functions as F
+
+                incoming = ac._prepare(batch_df)
+                if not os.path.isdir(log_dir):
+                    seed(ac._fold(None, incoming), batch_id)
+                    return
+                existing_full = read_delta(spark, path).join(
+                    incoming.select(*flow.keys).distinct(), flow.keys, "left_semi"
+                )
+                rebuilt = ac._fold(existing_full, incoming)
+                vk = [*flow.keys, flow.sequence_by, *flow.tiebreakers]
+                if flow.apply_as_deletes:
+                    # __tombstone is part of the stored version identity: a
+                    # retained tombstone and a data version at the SAME
+                    # sequence are distinct rows (scd2_rebuild's zero-width
+                    # close), so leaving it out of the merge key would let
+                    # delta_merge's latest-per-key window collapse them —
+                    # a same-sequence update could silently erase a stored
+                    # tombstone and resurrect the key
+                    vk = [*vk, "__tombstone"]
+                if ac._untracked_for(incoming.columns):
+                    # track-history collapse can REMOVE stored version rows
+                    # (a run extended by an out-of-order row re-opens at an
+                    # earlier sequence): mark versions the rebuild no longer
+                    # contains as tombstones so the SAME merge commit drops
+                    # them — one atomic remove+add, no phantom versions
+                    stale = existing_full.join(
+                        rebuilt.select(*vk).distinct(), vk, "left_anti"
+                    )
+                    updates = rebuilt.withColumn(
+                        "__scd2_stale", F.lit(False)
+                    ).unionByName(stale.withColumn("__scd2_stale", F.lit(True)))
+                    delta_merge(
+                        spark, path, updates, keys=vk,
+                        sequence_by=flow.sequence_by,
+                        txn=(app_id, int(batch_id)),
+                        delete_predicate="__scd2_stale",
+                    )
+                    return
+                delta_merge(
+                    spark, path, rebuilt,
+                    keys=vk,
+                    sequence_by=flow.sequence_by,
+                    txn=(app_id, int(batch_id)),
+                )
+
+            return scd2_sink
+
+        # plain CDC target = a real Delta table maintained by protocol
+        # MERGE commits (the reference's `03:379-384`): the first batch
+        # seeds it with ac.merge(None, batch) — the batch's winning
+        # rows, tombstones removed, columns projected — and every
+        # later batch is one atomic remove+add merge commit with
+        # stats-pruned file rewrite. SetTransaction makes batch
+        # replays no-ops.
+        def sink(batch_df: DataFrame, batch_id: int) -> None:
+            if not os.path.isdir(log_dir):
+                seed(ac.merge(None, batch_df), batch_id)
+                return
+            # whenMatchedDelete rides the protocol MERGE itself;
+            # except-listed op columns drop in the merge's cast
+            delta_merge(
+                spark, path, batch_df, keys=flow.keys,
+                sequence_by=flow.sequence_by,
+                tiebreakers=flow.tiebreakers,
+                txn=(app_id, int(batch_id)),
+                delete_predicate=flow.apply_as_deletes,
+            )
+
+        return sink
 
     def _count_batch(self, batch_df, batch_id, flow, inner_fn, stats) -> None:
         """Count the batch in one action, then run the sink on it unless

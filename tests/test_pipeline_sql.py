@@ -524,55 +524,141 @@ def test_sql_apply_changes_ignore_null_and_column_list(spark, tmp_path):
         )
 
 
-def test_scd2_delta_same_sequence_tombstone_parity(spark, tmp_path):
-    """ADVICE r11 (pipeline.py delta scd2_sink): a retained tombstone and
-    a data version at the SAME sequence are distinct stored rows; the
-    Delta MERGE key must include __tombstone or the latest-per-key
-    window collapses them — a same-sequence update arriving in a later
-    batch would silently erase the stored tombstone and resurrect the
-    key. Pin engine parity: parquet and delta storage produce identical
-    histories for the same landing sequence."""
+@pytest.mark.parametrize("fmt", ["parquet", "delta"])
+@pytest.mark.parametrize("bad", [
+    dict(except_column_list=["id"]),
+    dict(column_list=["id", "grp"]),
+    dict(stored_as_scd_type=2, track_history_column_list=["grp"],
+         track_history_except_column_list=["qty"]),
+], ids=["key_in_except", "column_list_without_sequence", "both_track_lists"])
+def test_apply_changes_declaration_errors_raise_at_declaration(
+    spark, tmp_path, fmt, bad
+):
+    """Every storage format refuses a bad CDC declaration when it is
+    declared, before any table directory exists."""
+    pipe = _base_pipe(spark, tmp_path, storage_format=fmt)
+    with pytest.raises(ValueError):
+        pipe.apply_changes(
+            target="t", source="src", keys=["id"], sequence_by="qty", **bad
+        )
+    assert "t" not in pipe.cdc_flows
+    assert not os.path.exists(pipe.table_path("t"))
+
+
+# flow shapes every CDC store must fold identically: the SCD2
+# except-list shape is the same-sequence tombstone case (a retained
+# tombstone and a data version at the SAME sequence are distinct stored
+# rows; the Delta MERGE key must include __tombstone or the
+# latest-per-key window collapses them, and a same-sequence update
+# arriving in a later batch would erase the stored tombstone and
+# resurrect the key)
+_PARITY_SHAPES = {
+    "scd1_deletes_except": dict(
+        apply_as_deletes="op = 'D'", except_column_list=["op"],
+    ),
+    # the delete predicate reads a column the projection drops
+    "scd1_column_list": dict(
+        apply_as_deletes="op = 'D'", column_list=["k", "val", "seq"],
+    ),
+    "scd2_deletes_except": dict(
+        apply_as_deletes="op = 'D'", except_column_list=["op"],
+        stored_as_scd_type=2,
+    ),
+    "scd2_deletes_track": dict(
+        apply_as_deletes="op = 'D'", except_column_list=["op"],
+        stored_as_scd_type=2, track_history_column_list=["val"],
+    ),
+}
+_PARITY_STORES = {
+    "parquet": ("parquet", None),
+    "parquet_bucketed": ("parquet", 4),
+    "delta": ("delta", None),
+}
+
+
+def _land_cdc_batches(spark, tmp_path, store, shape, batches):
+    """Land each batch as one file + one pipeline update; return the
+    target's rows as read through ``Pipeline.read``."""
     import json as _json
 
-    def run_engine(fmt):
-        in_dir = str(tmp_path / f"land_{fmt}")
-        os.makedirs(in_dir)
-        pipe = Pipeline(f"par_{fmt}", str(tmp_path / f"s_{fmt}"),
-                        storage_format=fmt)
+    fmt, n_buckets = _PARITY_STORES[store]
+    in_dir = str(tmp_path / f"land_{store}")
+    os.makedirs(in_dir)
+    pipe = Pipeline(f"par_{store}", str(tmp_path / f"s_{store}"),
+                    storage_format=fmt)
 
-        @pipe.table(kind="stream")
-        def feed(spark_):
-            schema = "k BIGINT, val STRING, seq BIGINT, op STRING"
-            return spark_.readStream.schema(schema).json(in_dir)
+    @pipe.table(kind="stream")
+    def feed(spark_):
+        schema = "k BIGINT, val STRING, note STRING, seq BIGINT, op STRING"
+        return spark_.readStream.schema(schema).json(in_dir)
 
-        pipe.apply_changes(
-            target="hist", source="feed", keys=["k"], sequence_by="seq",
-            apply_as_deletes="op = 'D'", except_column_list=["op"],
-            stored_as_scd_type=2,
+    pipe.apply_changes(
+        target="hist", source="feed", keys=["k"], sequence_by="seq",
+        n_buckets=n_buckets, **_PARITY_SHAPES[shape],
+    )
+    runner = PipelineRunner(pipe)
+    for i, rows in enumerate(batches):
+        with open(os.path.join(in_dir, f"b{i}.json"), "w") as fh:
+            fh.write("\n".join(
+                _json.dumps(dict(zip(["k", "val", "note", "seq", "op"], r)))
+                for r in rows
+            ))
+        runner.run_once(spark)
+    df = pipe.read(spark, "hist")
+    cols = sorted(df.columns)
+    return cols, sorted(
+        (tuple(r[c] for c in cols) for r in df.collect()), key=repr
+    )
+
+
+@pytest.mark.parametrize("shape", list(_PARITY_SHAPES))
+def test_cdc_store_parity(spark, tmp_path, shape):
+    """The parquet, bucketed-manifest and Delta stores fold the same
+    batches into the same rows: out-of-order rows (within and across
+    batches), an equal-sequence tie, a replayed row, a tombstone, and a
+    same-sequence update after the tombstone."""
+    batches = [
+        [(1, "a1", "n", 10, "U"), (2, "b5", "n", 50, "U"),
+         (2, "b4", "n", 40, "U"), (3, "c1", "n", 7, "U")],
+        # tombstone at seq 20; an older update for key 2; key 3 ties at
+        # seq 7 with a row that differs only in the dropped op marker
+        # (a tie with different stored content: the xfail below)
+        [(1, "", "n", 20, "D"), (2, "b3", "n", 30, "U"),
+         (3, "c1", "n", 7, "I")],
+        # a LATER batch carries a data version at the tombstone's
+        # sequence; key 2's newest row is replayed
+        [(1, "a2", "n", 20, "U"), (2, "b5", "n", 50, "U"),
+         (4, "d1", "n", 1, "U")],
+    ]
+    got = {
+        store: _land_cdc_batches(spark, tmp_path, store, shape, batches)
+        for store in _PARITY_STORES
+    }
+    assert got["delta"] == got["parquet"] == got["parquet_bucketed"], got
+    cols, rows = got["delta"]
+    assert "op" not in cols
+    if "__END_AT" in cols:
+        # SCD2: the key stays DEAD in every store — no open version
+        k, end = cols.index("k"), cols.index("__END_AT")
+        assert not [r for r in rows if r[k] == 1 and r[end] is None], rows
+
+
+@pytest.mark.xfail(strict=True, reason=(
+    "SCD1 stores disagree on an equal-sequence tie with different "
+    "content: the fold keeps the stored row, the Delta MERGE takes the "
+    "update"
+))
+def test_cdc_store_parity_scd1_content_tie(spark, tmp_path):
+    """A later batch re-sends a key at its stored sequence with a new
+    value. Every SCD1 store should resolve the tie the same way."""
+    batches = [[(1, "a1", "n", 10, "U")], [(1, "a2", "n", 10, "U")]]
+    got = {
+        store: _land_cdc_batches(
+            spark, tmp_path, store, "scd1_deletes_except", batches
         )
-        runner = PipelineRunner(pipe)
-        batches = [
-            [{"k": 1, "val": "a1", "seq": 10, "op": "U"}],
-            # tombstone at seq 20 lands FIRST ...
-            [{"k": 1, "val": "", "seq": 20, "op": "D"}],
-            # ... then a LATER batch carries a data version at the SAME
-            # sequence: it must not erase the stored tombstone
-            [{"k": 1, "val": "a2", "seq": 20, "op": "U"}],
-        ]
-        for i, rows in enumerate(batches):
-            with open(os.path.join(in_dir, f"b{i}.json"), "w") as fh:
-                fh.write("\n".join(_json.dumps(r) for r in rows))
-            runner.run_once(spark)
-        return sorted(
-            (r["k"], r["seq"], r["val"], r["__START_AT"], r["__END_AT"])
-            for r in pipe.read(spark, "hist").collect()
-        )
-
-    parquet = run_engine("parquet")
-    delta = run_engine("delta")
-    assert delta == parquet, (parquet, delta)
-    # and in both engines the key stays DEAD: no open (__END_AT NULL) row
-    assert not [r for r in delta if r[4] is None], delta
+        for store in ("parquet", "delta")
+    }
+    assert got["delta"] == got["parquet"], got
 
 
 def test_cdc_counted_caches_micro_batch(spark, tmp_path, monkeypatch):
