@@ -199,6 +199,17 @@ def _check_scd_contract(
             )
 
 
+def _rmdir_if_no_bucket(d: str) -> None:
+    """Remove epoch directory ``d`` once it holds no ``__bucket=`` data
+    directory: what remains are job markers (``_SUCCESS`` and the hidden
+    ``._SUCCESS.crc`` Hadoop writes beside it)."""
+    try:
+        if not any(e.startswith("__bucket=") for e in os.listdir(d)):
+            shutil.rmtree(d, ignore_errors=True)
+    except FileNotFoundError:
+        pass
+
+
 def _recover_swap(target_path: str) -> None:
     """A crash between :func:`_swap_in`'s two renames strands the live
     state in ``.__old`` with no target dir; restore it before any read or
@@ -647,7 +658,8 @@ class ApplyChanges:
         """The bucket map after the ``touched`` buckets were rewritten into
         ``epoch_dir``, and the directories that rewrite retires. A touched
         bucket the write left without a directory (every one of its keys
-        was deleted) loses its pointer instead of naming a missing dir."""
+        was deleted) loses its pointer instead of naming a missing dir;
+        an ``epoch_dir`` left with no bucket at all is removed."""
         buckets = dict(manifest["buckets"]) if manifest else {}
         retired = [buckets[str(b)] for b in touched if str(b) in buckets]
         for b in touched:
@@ -656,6 +668,7 @@ class ApplyChanges:
                 buckets[str(b)] = rel
             else:
                 buckets.pop(str(b), None)
+        _rmdir_if_no_bucket(os.path.join(self.target_path, epoch_dir))
         return buckets, retired
 
     def _commit_and_gc(
@@ -704,12 +717,7 @@ class ApplyChanges:
             for rel in entry["dirs"]:
                 gone = os.path.join(self.target_path, rel)
                 shutil.rmtree(gone, ignore_errors=True)
-                parent = os.path.dirname(gone)
-                try:  # drop the epoch dir once only job markers remain
-                    if all(e.startswith("_") for e in os.listdir(parent)):
-                        shutil.rmtree(parent, ignore_errors=True)
-                except FileNotFoundError:
-                    pass
+                _rmdir_if_no_bucket(os.path.dirname(gone))
 
     # -- foreachBatch sink --------------------------------------------------
 
@@ -771,14 +779,19 @@ class ApplyChanges:
             else:
                 bmap = manifest["buckets"]
             paths = [os.path.join(self.target_path, p) for p in bmap.values()]
+            # manifest-pinned schema: after evolution old bucket dirs
+            # lack the new columns; an explicit schema null-fills them
+            # on scan with NO per-file footer merge (mergeSchema cost)
+            schema = manifest.get("schema")
+            schema = StructType.fromJson(json.loads(schema)) if schema else None
             if not paths:
-                return None
-            reader = spark.read
-            if manifest.get("schema"):
-                # manifest-pinned schema: after evolution old bucket dirs
-                # lack the new columns; an explicit schema null-fills them
-                # on scan with NO per-file footer merge (mergeSchema cost)
-                reader = reader.schema(StructType.fromJson(json.loads(manifest["schema"])))
+                # deletes emptied every bucket: the state is empty, not absent
+                if schema is None:
+                    return None
+                from pos_dlt_spark.tables import local_df
+
+                return self._visible(local_df(spark, [], schema), raw)
+            reader = spark.read if schema is None else spark.read.schema(schema)
             return self._visible(reader.parquet(*paths), raw)
         if previous:
             raise ValueError(

@@ -41,6 +41,7 @@ from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
+from pyspark.sql.types import StructType
 
 from pos_dlt_spark.sources import delta_fixture as fx
 from pos_dlt_spark.sources.delta import DeltaSnapshot, delta_snapshot
@@ -555,25 +556,47 @@ def delta_create_table(
         n.endswith(".json") or n.endswith(".parquet") for n in os.listdir(log_dir)
     ):
         raise ValueError(f"{path} is already a Delta table")
-    conf = dict(configuration or {})
+    schema, conf, cm = _creation_layout(schema, dict(configuration or {}), partition_by)
+    actions = [
+        fx.commit_info_action("CREATE TABLE", {"partitionBy": list(partition_by or [])}),
+        *_creation_actions(schema, conf, partition_by, cluster_by, cm is not None),
+    ]
+    if not _try_commit(log_dir, 0, actions):
+        raise DeltaCommitConflict("commit 0 appeared concurrently during create")
+    # data-less CREATE on a UniForm table: emit an EMPTY Iceberg
+    # snapshot so the table is discoverable before its first row
+    _uniform_after_commit(spark, path, conf)
+    return 0
+
+
+def _creation_layout(schema, conf: dict, partition_by):
+    """A new table's schema, configuration and minted column mapping
+    (None without one), checked as CREATE checks them: column mapping
+    with row tracking refuses, row tracking mints its materialized
+    columns (so every future rewrite preserves ids under one agreed
+    physical column), and a UniForm table refuses every shape whose
+    later evolution the Iceberg rendering could not follow."""
+    from pos_dlt_spark.sources import delta_rowtracking as rt
+    from pos_dlt_spark.sources import iceberg_uniform as uf
+
+    _refuse_cm_with_row_tracking(conf)
+    cm = None
+    if (conf.get("delta.columnMapping.mode") or "none") != "none":
+        schema, conf, cm = _mint_column_mapping(schema, conf, partition_by)
+    if rt.row_tracking_enabled(conf):
+        conf = rt.mint_materialized_columns(conf)
+    if uf.uniform_enabled(conf):
+        uf.refuse_unsupported_uniform(conf, schema, partition_by)
+    return schema, conf, cm
+
+
+def _creation_actions(schema, conf: dict, partition_by, cluster_by, cm: bool) -> list[dict]:
+    """Version 0's protocol, metaData and CLUSTER BY domain — shared by
+    CREATE TABLE and the first write."""
     from pos_dlt_spark.sources import delta_clustering as cl
     from pos_dlt_spark.sources import delta_rowtracking as rt
 
-    _refuse_cm_with_row_tracking(conf)
-    if (conf.get("delta.columnMapping.mode") or "none") != "none":
-        schema, conf, _ns = _mint_column_mapping(schema, conf, partition_by)
-        cm = True
-    else:
-        cm = False
-    if rt.row_tracking_enabled(conf):
-        conf = rt.mint_materialized_columns(conf)
-    from pos_dlt_spark.sources import iceberg_uniform as uf
-
-    if uf.uniform_enabled(conf):
-        # same enablement gate as the write path, BEFORE the commit
-        uf.refuse_unsupported_uniform(conf, schema, partition_by)
     actions = [
-        fx.commit_info_action("CREATE TABLE", {"partitionBy": list(partition_by or [])}),
         _creation_protocol(
             schema, cm,
             row_tracking=rt.row_tracking_enabled(conf),
@@ -594,13 +617,7 @@ def delta_create_table(
             for c in cluster_by
         ]
         actions.append(cl.clustering_domain_action(phys))
-    if not _try_commit(log_dir, 0, actions):
-        raise DeltaCommitConflict("commit 0 appeared concurrently during create")
-    if uf.uniform_enabled(conf):
-        # data-less CREATE on a UniForm table: emit an EMPTY Iceberg
-        # snapshot so the table is discoverable before its first row
-        uf.uniform_sync(spark, path)
-    return 0
+    return actions
 
 
 def _writer_supports(snap: DeltaSnapshot) -> None:
@@ -960,8 +977,11 @@ def _partition_exact_rels(spark, snap: DeltaSnapshot, predicate: str):
     table's column types — the same rendering the read path recovers),
     so any analyzable predicate over partition columns qualifies, not
     just the conservative skipping grammar; a reference to a data column
-    fails analysis and falls back to the scan path."""
+    fails analysis and falls back to the scan path. OPTIMIZE WHERE
+    selects its partitions the same way."""
     from pyspark.errors import AnalysisException
+
+    from pos_dlt_spark.tables import local_df
 
     pcols = list(snap.partition_columns)
     if not pcols:
@@ -974,18 +994,15 @@ def _partition_exact_rels(spark, snap: DeltaSnapshot, predicate: str):
     if not tuples:
         return []
     from pyspark.sql import functions as F
-    from pyspark.sql.types import StringType, StructField, StructType
 
     # each tuple rides with its index so the match set is decided by row
     # identity, never by round-tripping the typed values back to strings
     # (Spark's cast-to-string and Hive's dir rendering can drift)
-    raw = spark.createDataFrame(
+    raw = local_df(
+        spark,
         [(str(i),) + tuple(t) for i, t in enumerate(tuples)],
-        StructType(
-            [StructField("__tix", StringType(), True)]
-            + [StructField(c, StringType(), True) for c in pcols]
-        ),
-    ).select("__tix", *[F.col(c).cast(ptypes[c]).alias(c) for c in pcols])
+        ", ".join(["__tix string"] + [f"`{c}` string" for c in pcols]),
+    ).select("__tix", *[F.col(f"`{c}`").cast(ptypes[c]).alias(c) for c in pcols])
     try:
         hit_ix = {
             int(r["__tix"])
@@ -1003,9 +1020,10 @@ def _partition_exact_rels(spark, snap: DeltaSnapshot, predicate: str):
 
 def _replace_where_actions(
     spark, snap: DeltaSnapshot, path: str, predicate: str, inline_threshold: int
-) -> list[dict]:
+) -> tuple[list[dict], list[str]]:
     """The remove/re-add half of a ``replaceWhere`` commit: delete
-    exactly the live rows matching ``predicate``.
+    exactly the live rows matching ``predicate``. Returns ``(DV re-add
+    actions, rels removed whole)``.
 
     - Partition-decidable predicate → whole-file removes, no scan.
     - Else: stats-prune to candidate files (provably-disjoint files are
@@ -1019,20 +1037,17 @@ def _replace_where_actions(
     from pos_dlt_spark.sources.delta import scan_live_rows
 
     if not snap.files:
-        return []
+        return [], []
     exact = _partition_exact_rels(spark, snap, predicate)
     if exact is not None:
-        return [
-            fx.remove_action(rel, size=(snap.adds.get(rel) or {}).get("size"))
-            for rel in exact
-        ]
+        return [], exact
     from pyspark.sql import functions as F
 
     from pos_dlt_spark.sources.dv import bitmap_cardinality
 
     scan_snap = _stats_candidates(snap, predicate)
     if not scan_snap.files:
-        return []
+        return [], []
     scan = scan_live_rows(spark, scan_snap, with_meta=True)
     matches = scan.filter(F.expr(predicate)).select("__fp", "__ri")
     rel_of = _rel_by_abs_path(snap)
@@ -1050,10 +1065,10 @@ def _replace_where_actions(
         if nrec is not None and bitmap_cardinality(bytes(r["dv"])) >= int(nrec):
             # every row of the file is now dead: drop it whole (no DV
             # descriptor is minted, no sidecar written)
-            whole.append(fx.remove_action(rel, size=add.get("size")))
+            whole.append(rel)
         else:
             partial.append(r)
-    return _dv_readd_actions(snap, path, partial, inline_threshold) + whole
+    return _dv_readd_actions(snap, path, partial, inline_threshold), whole
 
 
 _SHRED_TYPES = {
@@ -1183,12 +1198,20 @@ def _backfill_shred_stats(spark, path: str, adds: list[dict], spec: dict) -> Non
         )
 
 
-def _stage_and_move(df: DataFrame, path: str, partition_by: list[str] | None):
+def _stage_and_move(
+    df: DataFrame,
+    path: str,
+    partition_by: list[str] | None,
+    rel_dir: str = "",
+    partition_values: dict | None = None,
+):
     """Distributed write into a staging dir, then rename into the table
     root (Hive-style ``col=value/`` subdirs when partitioned — the layout
     Delta writers produce and the reader's single-scan fast path expects)
     under fresh unique names. Returns add actions with partitionValues
-    parsed back from the directory segments."""
+    parsed back from the directory segments. ``rel_dir`` and
+    ``partition_values`` place an unpartitioned frame into one existing
+    partition (OPTIMIZE's per-partition rewrite)."""
     from urllib.parse import unquote
 
     staging = os.path.join(path, f"_staging_{uuid.uuid4().hex[:12]}")
@@ -1203,12 +1226,12 @@ def _stage_and_move(df: DataFrame, path: str, partition_by: list[str] | None):
                 continue
             sub = os.path.relpath(root, staging)
             segs = [] if sub == "." else sub.split(os.sep)
-            pvals: dict[str, str | None] = {}
+            pvals: dict[str, str | None] = dict(partition_values or {})
             for seg in segs:
                 k, _, v = seg.partition("=")
                 pvals[k] = None if v == "__HIVE_DEFAULT_PARTITION__" else unquote(v)
-            rel_dir = "/".join(segs)
-            rel = (rel_dir + "/" if rel_dir else "") + f"part-{uuid.uuid4().hex}.parquet"
+            sub_dir = "/".join([rel_dir] + segs if rel_dir else segs)
+            rel = (sub_dir + "/" if sub_dir else "") + f"part-{uuid.uuid4().hex}.parquet"
             dest = os.path.join(path, rel)
             os.makedirs(os.path.dirname(dest), exist_ok=True)
             os.replace(os.path.join(root, n), dest)
@@ -1529,8 +1552,14 @@ def write_delta(
     """Write ``df`` to the Delta table at ``path`` (created if absent).
     Returns the committed version.
 
-    ``mode='append'`` adds files; on a lost commit race it retries at the
-    next version (blind appends never conflict). ``mode='overwrite'``
+    Every commit after the create (version 0) goes through
+    :func:`_apply_and_commit`, the commit core DELETE, UPDATE, MERGE,
+    OPTIMIZE and REORG share; whatever a refused or raising write staged
+    is removed. ``mode='append'`` adds files; on a lost commit race it
+    retries at the next version with the same staged files, row ids
+    re-stamped (blind appends never conflict) — unless it assigned
+    identity values, which were allocated against the stale watermark:
+    then it raises :class:`DeltaCommitConflict`. ``mode='overwrite'``
     removes every live file and adds the new ones; a lost race raises
     :class:`DeltaCommitConflict`. Schema: first commit pins the
     DataFrame's schema in metaData (and ``partition_by`` as the table's
@@ -1609,23 +1638,11 @@ def write_delta(
             "cluster_by is set at table creation only; use "
             "delta_alter_cluster_by to re-cluster an existing table"
         )
-    conf = configuration or {}
     prior: DeltaSnapshot | None = None
-    created_schema = df.schema
-    cm_new = None  # minted mapping for a CREATE with column mapping on
+    created_schema, conf, cm_new = df.schema, configuration or {}, None
     if not exists:
-        _refuse_cm_with_row_tracking(conf)
-    if not exists and (conf.get("delta.columnMapping.mode") or "none") != "none":
-        created_schema, conf, cm_new = _mint_column_mapping(
-            df.schema, conf, partition_by
-        )
-    from pos_dlt_spark.sources import delta_rowtracking as rt
-
-    if not exists and rt.row_tracking_enabled(conf):
-        # mint the materialized-column names at creation so every future
-        # rewrite preserves ids under one agreed physical column
-        conf = rt.mint_materialized_columns(conf)
-    if exists:
+        created_schema, conf, cm_new = _creation_layout(df.schema, conf, partition_by)
+    else:
         prior = delta_snapshot(spark, path)
         _writer_supports(prior)
         conf = prior.configuration
@@ -1637,12 +1654,9 @@ def write_delta(
             raise DeltaProtocolError(
                 "table is delta.appendOnly: overwrite would remove data"
             )
+    from pos_dlt_spark.sources import delta_rowtracking as rt
     from pos_dlt_spark.sources import iceberg_uniform as uf
 
-    if not exists and uf.uniform_enabled(conf):
-        # UniForm (Iceberg) enablement: refuse every table shape whose
-        # later evolution the Iceberg rendering could not follow
-        uf.refuse_unsupported_uniform(conf, created_schema, partition_by)
     # VARIANT SHREDDING: spec fixed at creation (rides configuration, so
     # every later append shreds identically); appends inherit it
     from pos_dlt_spark.sources.delta import SHRED_CONF_PREFIX, variant_shred_spec
@@ -1667,11 +1681,11 @@ def write_delta(
             )
     # IDENTITY columns: assign when absent (advancing the high watermark
     # in the same commit); explicitly-provided values are only legal on
-    # GENERATED BY DEFAULT columns (allowExplicitInsert)
+    # GENERATED BY DEFAULT columns (allowExplicitInsert) and advance it
+    # from the staged files' stats
     idents = _identity_spec(prior.schema if prior is not None else created_schema)
+    assigned = [name for name in idents if name not in df.columns]
     hwm_updates: dict[str, int] = {}
-    explicit_idents: list[str] = []
-    assigned_identity = False
     for name, spec in idents.items():
         if name in df.columns:
             if not spec["allowExplicitInsert"]:
@@ -1681,10 +1695,8 @@ def write_delta(
                     f"identity column {name!r} is GENERATED ALWAYS: writers "
                     "must not supply values (allowExplicitInsert=false)"
                 )
-            explicit_idents.append(name)
         else:
             df, new_hwm = _assign_identity(df, name, spec)
-            assigned_identity = True
             if new_hwm is not None:
                 hwm_updates[name] = int(new_hwm)
     df = _apply_column_defaults(
@@ -1704,260 +1716,177 @@ def write_delta(
             # SAME rows (the dv-mode DML freeze discipline)
             df = df.localCheckpoint(eager=True)
         df, check_replace = _replace_where_guard(df, replace_where)
-    if prior is not None and prior.column_mapping != "none":
-        # cm table: files + partition dirs carry PHYSICAL names
-        adds = _stage_and_move(
-            _to_physical(df, prior), path, _physical_partition_by(prior)
-        )
-    elif cm_new is not None:
-        adds = _stage_and_move(
-            _to_physical(df, cm_new), path, _physical_partition_by(cm_new)
-        )
-    else:
-        adds = _stage_and_move(
-            _with_shred_columns(df, shred_spec) if shred_spec else df,
-            path,
-            partition_by,
+    checks = (check_generated, check_constraints, check_replace, precommit)
+
+    def stage(layout) -> list[dict]:
+        """Stage ``df`` in the table's layout: a column-mapped table's
+        files and partition dirs carry PHYSICAL names."""
+        frame = _with_shred_columns(df, shred_spec) if shred_spec else df
+        files = _stage_and_move(
+            frame if layout is None else _to_physical(frame, layout), path,
+            partition_by if layout is None else _physical_partition_by(layout),
         )
         if shred_spec:
             # variant footers defeat pyarrow; derive the shredded
             # columns' stats with one distributed pass over the staged
             # files so selective variant predicates can skip files
-            _backfill_shred_stats(spark, path, adds, shred_spec)
-    for name in explicit_idents:
-        # GENERATED BY DEFAULT with provided values: advance the high
-        # watermark past them, from the staged files' footer stats (the
-        # identity column is a primitive — stats are exact; no rescan)
-        if prior is not None:
-            phys = prior.physical_names.get(name, name)
-        elif cm_new is not None:
-            phys = cm_new.physical_names.get(name, name)
-        else:
-            phys = name
-        cand = _hwm_candidate(
-            idents[name], [a["add"].get("stats") for a in adds], phys
-        )
-        if cand is not None:
-            hwm_updates[name] = cand
-    for pre in (check_generated, check_constraints, check_replace, precommit):
-        if pre is None:
-            continue
+            _backfill_shred_stats(spark, path, files, shred_spec)
+        return files
+
+    adds: list[dict] | None = None
+    raced = False  # a commit race was lost: the create's, or an attempt's
+    if not exists:
+        adds = stage(cm_new)
         try:
-            pre()
+            for pre in checks:
+                if pre is not None:
+                    pre()
+            phys = cm_new.physical_names if cm_new is not None else {}
+            hwms = {**_staged_hwms(created_schema, phys, adds), **hwm_updates}
+            actions = [
+                fx.commit_info_action(
+                    "WRITE", {"mode": mode, "partitionBy": list(partition_by or [])}
+                ),
+                *_creation_actions(
+                    _schema_with_hwm(created_schema, hwms), conf, partition_by,
+                    cluster_by, cm_new is not None,
+                ),
+                *adds,
+            ]
+            if txn is not None:
+                actions.insert(1, fx.txn_action(txn[0], txn[1]))
+            if rt.row_tracking_enabled(conf):
+                # fresh row ids from footer numRecords, and the watermark
+                actions.append(rt.hwm_action(rt.assign_base_row_ids(adds, 0, -1)))
+            created = _try_commit(log_dir, 0, actions, conf=conf)
         except BaseException:
-            # abort before any commit: the staged files were already moved
-            # into the table root but NO commit references them — remove
-            # them so the table is byte-identical to before
+            # abort before any commit: the path holds no table, as before
             _discard_staged(path, adds)
             raise
+        if created:
+            _maybe_checkpoint(spark, path, 0, checkpoint_interval, checkpoint_format)
+            _uniform_after_commit(spark, path, conf)
+            return 0
+        # lost the create race: write into the winner's table instead,
+        # re-staged in its layout
+        _discard_staged(path, adds)
+        adds, raced = None, True
 
-    # 2. commit loop (optimistic concurrency)
-    for _ in range(max_retries):
-        if exists:
-            snap: DeltaSnapshot | None = delta_snapshot(spark, path)
-            _writer_supports(snap)
-            if txn is not None and snap.txns.get(txn[0], -1) >= txn[1]:
-                # a concurrent writer sharing our appId landed this batch
-                # while we were staging — drop our staged twin and yield
-                _discard_staged(path, adds)
-                return snap.version
-            version = snap.version + 1
-            # names + types, nullability excluded: file sources surface
-            # everything nullable, so a strict equality would flag every
-            # append of a computed (non-null) column as drift
-            evolved_schema = None
-            if merge_schema:
-                if snap.column_mapping != "none":
-                    raise ValueError(
-                        "merge_schema with column mapping is not supported "
-                        "(new physical names would need minting)"
-                    )
-                tbl_types = {f.name: f.dataType for f in snap.schema.fields}
-                conflicts = [
-                    f.name
-                    for f in df.schema.fields
-                    if f.name in tbl_types and tbl_types[f.name] != f.dataType
-                ]
-                if conflicts:
-                    raise ValueError(
-                        f"merge_schema: type conflict on {conflicts} — "
-                        "silent coercion is not evolution; use "
-                        "delta_alter_column_type for widening"
-                    )
-                from pyspark.sql.types import StructField, StructType
-
-                new_fields = [
-                    StructField(f.name, f.dataType, True)
-                    for f in df.schema.fields
-                    if f.name not in tbl_types
-                ]
-                if new_fields:
-                    evolved_schema = StructType(
-                        list(snap.schema.fields) + new_fields
-                    )
-                    if uf.uniform_enabled(conf):
-                        # a non-renderable new column must refuse BEFORE
-                        # the commit, not in the post-commit sync
-                        uf.refuse_unsupported_uniform(
-                            conf, evolved_schema, snap.partition_columns
-                        )
-                # omitted existing columns are fine: the staged files
-                # simply lack them and the scan null-fills
-            elif sorted(
-                [(f.name, f.dataType) for f in snap.schema.fields]
-            ) != sorted([(f.name, f.dataType) for f in df.schema.fields]):
-                raise ValueError(
-                    "schema drift: table "
-                    f"{[f.name for f in snap.schema.fields]} vs dataframe "
-                    f"{[f.name for f in df.schema.fields]} — writer refuses "
-                    "silent evolution (merge_schema=True opts in)"
-                )
-            if list(partition_by or []) != list(snap.partition_columns):
-                raise ValueError(
-                    f"partitioning drift: table {snap.partition_columns} vs "
-                    f"write {partition_by or []}"
-                )
-            actions = list(adds)
-            if hwm_updates or evolved_schema is not None:
-                # identity watermark advances and/or merge_schema
-                # evolution ride the SAME commit as one metadata action;
-                # hwms merge with any watermark a concurrent writer
-                # advanced (fresh snapshot per retry)
-                meta_schema = evolved_schema or snap.schema
-                if hwm_updates:
-                    fresh = _identity_spec(snap.schema)
-                    merged = _merge_hwms(hwm_updates, fresh)
-                    meta_schema = _schema_with_hwm(meta_schema, merged)
-                actions = [
-                    fx.metadata_action(
-                        meta_schema,
-                        partition_columns=snap.partition_columns,
-                        table_id=snap.table_id,
-                        configuration=snap.configuration or None,
-                    )
-                ] + actions
-            if mode == "overwrite" and replace_where is None:
-                actions = [fx.remove_action(rel, size=(snap.adds.get(rel) or {}).get("size")) for rel, _ in snap.files] + actions
-            elif replace_where is not None:
-                # computed INSIDE the commit loop: a lost race re-derives
-                # the replaced slice against the fresh snapshot
-                rw_actions = _replace_where_actions(
-                    spark, snap, path, replace_where, inline_threshold
-                )
-                cdc_actions: list[dict] = []
-                from pos_dlt_spark.sources.delta_cdf import (
-                    CHANGE_TYPE,
-                    cdf_enabled,
-                    stage_change_files,
-                )
-
-                if cdf_enabled(snap):
-                    # with ANY cdc action in the commit, the reader uses
-                    # change files as THE change set — so they must hold
-                    # BOTH halves: the replaced live rows (deletes) and
-                    # the incoming rows (inserts, re-read from the frozen
-                    # plan staged above)
-                    from pyspark.sql import functions as F
-
-                    from pos_dlt_spark.sources.delta import scan_live_rows
-
-                    live = scan_live_rows(spark, snap)
-                    ins = df.select(
-                        *[F.col(f"`{f.name}`") for f in snap.schema.fields]
-                    ).withColumn(CHANGE_TYPE, F.lit("insert"))
-                    changes = ins
-                    if live is not None:
-                        dels = live.filter(F.expr(replace_where)).withColumn(
-                            CHANGE_TYPE, F.lit("delete")
-                        )
-                        changes = dels.unionByName(ins)
-                    cdc_actions = stage_change_files(
-                        _to_physical(changes, snap),
-                        path,
-                        _physical_partition_by(snap),
-                    )
-                actions = cdc_actions + rw_actions + actions
-        else:
-            snap, version = None, 0
-            actions = [
-                _creation_protocol(
-                    created_schema, cm_new is not None,
-                    row_tracking=rt.row_tracking_enabled(conf),
-                    clustering=cluster_by is not None,
-                    ict=_ict_enabled(conf),
-                ),
-                fx.metadata_action(
-                    _schema_with_hwm(created_schema, hwm_updates),
-                    partition_columns=list(partition_by or []),
-                    configuration=conf or None,
-                ),
-            ] + list(adds)
-            if cluster_by is not None:
-                from pos_dlt_spark.sources import delta_clustering as cl
-
-                cl.validate_cluster_by(cluster_by, created_schema, partition_by)
-                ns = {f.name: f for f in created_schema.fields}
-                phys = [
-                    (ns[c].metadata or {}).get(
-                        "delta.columnMapping.physicalName", c
-                    )
-                    for c in cluster_by
-                ]
-                actions.append(cl.clustering_domain_action(phys))
-        if rt.row_tracking_enabled(conf):
-            # fresh row ids: stamp baseRowId/defaultRowCommitVersion on the
-            # staged adds from footer numRecords (pure metadata — a lost
-            # race re-stamps against the fresh watermark) and advance the
-            # table watermark in the same commit
-            rt_hwm = rt.row_id_high_water_mark(snap) if snap is not None else -1
-            actions = actions + [
-                rt.hwm_action(rt.assign_base_row_ids(adds, version, rt_hwm))
-            ]
-        if txn is not None:
-            actions = [fx.txn_action(txn[0], txn[1])] + actions
-        actions = [
-            fx.commit_info_action(
-                "WRITE", {"mode": mode, "partitionBy": list(partition_by or [])}
-            )
-        ] + actions
-
-        if _try_commit(log_dir, version, actions, conf=conf):
-            _maybe_checkpoint(spark, path, version, checkpoint_interval, checkpoint_format)
-            if uf.uniform_enabled(conf):
-                # UniForm: the same commit also lands as an Iceberg
-                # snapshot (metadata/ JSON + manifest list + manifest),
-                # O(live files) driver-side metadata
-                uf.uniform_sync(spark, path)
-            return version
-        # lost the race
-        if mode == "overwrite" and replace_where is None:
+    def plan(snap: DeltaSnapshot, want_changes: bool) -> _DmlPlan:
+        nonlocal adds, raced
+        if raced and mode == "overwrite" and replace_where is None:
             raise DeltaCommitConflict(
-                f"version {version} was committed concurrently; overwrite "
-                "cannot be replayed safely"
+                f"version {snap.version} was committed concurrently; "
+                "overwrite cannot be replayed safely"
             )
-        if replace_where is not None:
-            # absorb: drop THIS attempt's change files and DV sidecars
-            # (the staged data adds stay valid — predicate-checked,
-            # snapshot-independent) and re-derive the replaced slice
-            # against the fresh snapshot on the next loop iteration.
-            # (With identity values assigned this attempt, fall through
-            # to the identity raise below — the values are stale.)
-            _discard_staged(path, actions, remove_adds=False)
-            if not assigned_identity:
-                exists = True
-                continue
-        if assigned_identity:
+        if raced and assigned:
             # our identity values were allocated against a now-stale
             # watermark; a concurrent assigner may have claimed the same
             # range — the append must re-run (and re-assign), not replay
-            _discard_staged(path, adds)
             raise DeltaCommitConflict(
-                f"version {version} was committed concurrently and this "
-                "append assigned identity values against the prior "
+                f"version {snap.version} was committed concurrently and "
+                "this append assigned identity values against the prior "
                 "watermark; re-run the append"
             )
-        exists = True  # re-fold and retry the append at the next version
-    raise DeltaCommitConflict(f"gave up after {max_retries} commit races")
+        raced = True
+        # names + types, nullability excluded: file sources surface
+        # everything nullable, so a strict equality would flag every
+        # append of a computed (non-null) column as drift
+        schema = None
+        if merge_schema:
+            if snap.column_mapping != "none":
+                raise ValueError(
+                    "merge_schema with column mapping is not supported "
+                    "(new physical names would need minting)"
+                )
+            tbl_types = {f.name: f.dataType for f in snap.schema.fields}
+            conflicts = [
+                f.name
+                for f in df.schema.fields
+                if f.name in tbl_types and tbl_types[f.name] != f.dataType
+            ]
+            if conflicts:
+                raise ValueError(
+                    f"merge_schema: type conflict on {conflicts} — "
+                    "silent coercion is not evolution; use "
+                    "delta_alter_column_type for widening"
+                )
+            from pyspark.sql.types import StructField
+
+            new_fields = [
+                StructField(f.name, f.dataType, True)
+                for f in df.schema.fields
+                if f.name not in tbl_types
+            ]
+            if new_fields:
+                schema = StructType(list(snap.schema.fields) + new_fields)
+                if uf.uniform_enabled(conf):
+                    # a non-renderable new column must refuse BEFORE
+                    # the commit, not in the post-commit sync
+                    uf.refuse_unsupported_uniform(
+                        conf, schema, snap.partition_columns
+                    )
+            # omitted existing columns are fine: the staged files
+            # simply lack them and the scan null-fills
+        elif sorted(
+            [(f.name, f.dataType) for f in snap.schema.fields]
+        ) != sorted([(f.name, f.dataType) for f in df.schema.fields]):
+            raise ValueError(
+                "schema drift: table "
+                f"{[f.name for f in snap.schema.fields]} vs dataframe "
+                f"{[f.name for f in df.schema.fields]} — writer refuses "
+                "silent evolution (merge_schema=True opts in)"
+            )
+        if list(partition_by or []) != list(snap.partition_columns):
+            raise ValueError(
+                f"partitioning drift: table {snap.partition_columns} vs "
+                f"write {partition_by or []}"
+            )
+        if hwm_updates:
+            # assigned identity values advance the watermark, merged with
+            # any a concurrent writer advanced (stats-less files included)
+            schema = _schema_with_hwm(
+                schema or snap.schema,
+                _merge_hwms(hwm_updates, _identity_spec(snap.schema)),
+            )
+        out, dv_readds = _DmlPlan(schema=schema), []
+        if mode == "overwrite" and replace_where is None:
+            out.removes = [rel for rel, _ in snap.files]
+        elif replace_where is not None:
+            # derived per attempt: a lost race re-derives the replaced
+            # slice against the fresh snapshot
+            dv_readds, out.removes = _replace_where_actions(
+                spark, snap, path, replace_where, inline_threshold
+            )
+            if want_changes:
+                # with ANY cdc action in the commit, the reader uses
+                # change files as THE change set — so they must hold
+                # BOTH halves: the replaced live rows (deletes) and the
+                # incoming rows (inserts, re-read from the frozen plan)
+                from pyspark.sql import functions as F
+
+                from pos_dlt_spark.sources.delta import scan_live_rows
+                from pos_dlt_spark.sources.delta_cdf import CHANGE_TYPE
+
+                live = scan_live_rows(spark, snap)
+                ins = df.select(
+                    *[F.col(f"`{f.name}`") for f in snap.schema.fields]
+                ).withColumn(CHANGE_TYPE, F.lit("insert"))
+                out.changes = ins if live is None else live.filter(
+                    F.expr(replace_where)
+                ).withColumn(CHANGE_TYPE, F.lit("delete")).unionByName(ins)
+        if adds is None:  # staged last: the core owns the files from here
+            adds, out.checks = stage(snap), checks
+        out.staged = dv_readds + adds
+        return out
+
+    return _apply_and_commit(
+        spark, path, "WRITE",
+        {"mode": mode, "partitionBy": list(partition_by or [])}, plan,
+        txn=txn, checkpoint_interval=checkpoint_interval,
+        max_retries=max_retries, inline_threshold=inline_threshold,
+        checkpoint_format=checkpoint_format,
+    )[0]
 
 
 def _merge_touched_files(
@@ -2405,9 +2334,12 @@ def delta_optimize(
     operational Delta chore). Files carrying DELETION VECTORS are always
     rewritten minus their deleted rows (this is also delta's REORG/PURGE:
     compaction materializes the deletes and drops the DV), still under
-    ``dataChange: false`` — the logical rows are unchanged. A lost commit
-    race aborts — re-run against the new snapshot; compaction is always
-    safe to retry.
+    ``dataChange: false`` — the logical rows are unchanged. The rewrite
+    commits through :func:`_apply_and_commit` as pre-staged adds and
+    removes; a lost commit race removes them and raises
+    :class:`DeltaCommitConflict` (a plan from a stale snapshot may
+    rewrite files a concurrent commit removed) — re-run against the new
+    snapshot; compaction is always safe to retry.
 
     ``zorder_by`` is OPTIMIZE ZORDER BY: within each partition the
     rewrite range-partitions AND sorts on the Morton interleave of the
@@ -2444,264 +2376,218 @@ def delta_optimize(
     :mod:`pos_dlt_spark.sources.delta_clustering`.
 
     Returns the committed version."""
-    snap = delta_snapshot(spark, path)
-    _writer_supports(snap)
-    from pyspark.sql import functions as F
+    raced = False
 
-    from pos_dlt_spark.sources.delta import _abs_file
-    from pos_dlt_spark.sources import delta_clustering as cl
-    from pos_dlt_spark.sources import delta_rowtracking as rt
-
-    cluster_phys: list[str] = []
-    if zorder_by is None:
-        # clustered table: OPTIMIZE re-clusters on the declared columns,
-        # incrementally unless full=True (see docstring)
-        ccols = cl.clustering_columns(snap)
-        if ccols:
-            zorder_by = ccols
-            cluster_phys = cl.clustering_physical_columns(snap)
-    incremental = bool(cluster_phys) and not full
-
-    rt_on = rt.row_tracking_enabled(snap.configuration)
-    if rt_on:
-        rt.require_materialized_columns(snap)
-    from pos_dlt_spark.sources.delta import variant_shred_spec
-
-    shred_spec = variant_shred_spec(snap.configuration)
-
-    # group live files per partition tuple (one group, (), when the
-    # table is unpartitioned); compaction never crosses a partition
-    # boundary — each group with more files than the target is rewritten
-    # within its own directory, everything else is untouched.
-    groups: dict[tuple, list[str]] = {}
-    pv_by_group: dict[tuple, dict] = {}
-    for rel, pv in snap.files:
-        k = tuple(pv.get(c) for c in snap.partition_columns)
-        groups.setdefault(k, []).append(rel)
-        pv_by_group[k] = pv
-    if where is not None:
+    def plan(snap: DeltaSnapshot, _want_changes: bool) -> _DmlPlan | None:
+        nonlocal raced, zorder_by
+        if raced:
+            # compaction planned against a stale snapshot may rewrite
+            # files a concurrent commit removed: re-run it instead
+            raise DeltaCommitConflict(
+                f"version {snap.version} committed concurrently; re-run optimize"
+            )
+        raced = True
         from pyspark.sql import functions as F
 
-        if not snap.partition_columns:
-            raise ValueError("OPTIMIZE WHERE requires a partitioned table")
-        from pos_dlt_spark.tables import local_df
+        from pos_dlt_spark.sources.delta import _abs_file
+        from pos_dlt_spark.sources import delta_clustering as cl
+        from pos_dlt_spark.sources import delta_rowtracking as rt
 
-        types = {f.name: f.dataType for f in snap.schema.fields}
-        keys = sorted(groups)
-        tuples = local_df(
-            spark,
-            [(i,) + k for i, k in enumerate(keys)],
-            ", ".join(
-                ["__gid bigint"]
-                + [f"`{c}` string" for c in snap.partition_columns]
-            ),
-        ).select(
-            "__gid",
-            *[
-                F.col(f"`{c}`").cast(types[c]).alias(c)
-                for c in snap.partition_columns
-            ],
-        )
-        try:
-            hit = {
-                int(r["__gid"])
-                for r in tuples.filter(F.expr(where)).select("__gid").collect()
-            }
-        except Exception as e:  # non-partition column / bad expression
-            raise ValueError(
-                f"OPTIMIZE WHERE must reference partition columns "
-                f"{snap.partition_columns} only: {e}"
-            ) from e
-        groups = {k: groups[k] for i, k in enumerate(keys) if i in hit}
-    removes: list[str] = []
-    adds: list[dict] = []
-    skipped_current = 0
-    import shutil
+        cluster_phys: list[str] = []
+        if zorder_by is None:
+            # clustered table: OPTIMIZE re-clusters on the declared columns,
+            # incrementally unless full=True (see docstring)
+            ccols = cl.clustering_columns(snap)
+            if ccols:
+                zorder_by = ccols
+                cluster_phys = cl.clustering_physical_columns(snap)
+        incremental = bool(cluster_phys) and not full
 
-    for k, rels in sorted(groups.items(), key=lambda kv: tuple(map(str, kv[0]))):
-        stamp: dict[str, str] | None = None
-        if cluster_phys:
-            stamp = cl.zcube_stamp(cluster_phys, uuid.uuid4().hex)
-        group_target = target_files
-        if incremental:
-            # skip files already clustered on the CURRENT columns; the
-            # rest (new appends / stale stamps / DV'd files) form this
-            # run's ZCube — O(new data), the Liquid maintenance contract
-            cand = [
-                r for r in rels
-                if not cl.is_current_cluster_file(
-                    snap.adds.get(r, {}), cluster_phys
-                )
-            ]
-            if min_cube_bytes:
-                # SMALL-CUBE CONSOLIDATION (real Liquid's ZCube target
-                # size): stamped cubes below the byte threshold join the
-                # rewrite so many tiny incremental runs coalesce instead
-                # of accreting forever; cubes at/above it stay untouched
-                cand_set = set(cand)
-                cubes: dict[str, list[str]] = {}
-                for r in rels:
-                    if r in cand_set:
-                        continue
-                    tags = snap.adds[r].get("tags") or {}
-                    if isinstance(tags, list):
-                        tags = dict(tags)
-                    cubes.setdefault(
-                        tags.get(cl.ZCUBE_ID_TAG, ""), []
-                    ).append(r)
-                for members in cubes.values():
-                    if sum(
-                        snap.adds[r].get("size") or 0 for r in members
-                    ) < min_cube_bytes:
-                        cand.extend(members)
-            skipped_current += len(rels) - len(cand)
-            if not cand:
-                continue
-            # size the cube's file count by its BYTE share so a small
-            # incremental slice doesn't shatter into target_files tiny
-            # files (target_files describes the whole group's layout)
-            tot = sum(snap.adds[r].get("size") or 0 for r in rels) or 1
-            cb = sum(snap.adds[r].get("size") or 0 for r in cand)
-            group_target = max(
-                1, min(target_files, round(target_files * cb / tot))
-            )
-            rels = cand
-        dv_rels = [r for r in rels if snap.adds.get(r, {}).get("deletionVector")]
-        reorder = bool(zorder_by) and (len(rels) > 1 or incremental)
-        if len(rels) <= group_target and not dv_rels and not reorder:
-            continue  # DV'd files always compact: OPTIMIZE is also PURGE
-        data_cols = [f.name for f in snap.data_schema.fields]
+        rt_on = rt.row_tracking_enabled(snap.configuration)
         if rt_on:
-            # ROW TRACKING preservation: the rewrite scans with each
-            # row's resolved id/commit-version and writes them into the
-            # table's MATERIALIZED physical columns — rewritten rows keep
-            # their ids; the group's new files still get fresh baseRowIds
-            # below (the materialized values take precedence on read)
-            data = rt.to_materialized(
-                rt.scan_with_row_ids(spark, snap, rels), snap, data_cols
+            rt.require_materialized_columns(snap)
+        from pos_dlt_spark.sources.delta import variant_shred_spec
+
+        shred_spec = variant_shred_spec(snap.configuration)
+
+        # group live files per partition tuple (one group, (), when the
+        # table is unpartitioned); compaction never crosses a partition
+        # boundary — each group with more files than the target is rewritten
+        # within its own directory, everything else is untouched.
+        groups: dict[tuple, list[str]] = {}
+        pv_by_group: dict[tuple, dict] = {}
+        for rel, pv in snap.files:
+            k = tuple(pv.get(c) for c in snap.partition_columns)
+            groups.setdefault(k, []).append(rel)
+            pv_by_group[k] = pv
+        if where is not None:
+            hit = (
+                _partition_exact_rels(spark, snap, where)
+                if snap.partition_columns
+                else None
             )
-        elif not dv_rels and snap.column_mapping == "none":
-            data = spark.read.schema(snap.data_schema).parquet(
-                *[_abs_file(path, rel) for rel in rels]
-            )
-        else:
-            # cm files carry physical names and DV'd files drop their dead
-            # rows: the shared live-row scanner resolves both
-            from pos_dlt_spark.sources.delta import scan_live_rows
-
-            data = scan_live_rows(spark, snap, rels).select(*data_cols)
-        if shred_spec:
-            # a compaction of a shredded-variant table must RE-SHRED:
-            # dropping the typed twins here would silently demote every
-            # optimized file back to the stats-less full-scan posture
-            data = _with_shred_columns(data, shred_spec)
-        staging = os.path.join(path, f"_staging_{uuid.uuid4().hex[:12]}")
-        if zorder_by:
-            from pyspark.sql import functions as F
-
-            from pos_dlt_spark.storage import zorder_key
-
-            missing = [c for c in zorder_by if c not in data_cols]
-            if missing:
+            if hit is None:
                 raise ValueError(
-                    f"zorder_by columns {missing} not data columns "
-                    "(partition columns are already directory-clustered)"
+                    "OPTIMIZE WHERE must reference the partition columns "
+                    f"{snap.partition_columns} only (and needs a partitioned table)"
                 )
-            stats_row = data.agg(
-                *[F.min(c).alias(f"mn_{c}") for c in zorder_by],
-                *[F.max(c).alias(f"mx_{c}") for c in zorder_by],
-            ).collect()[0]
-            bucketized = []
-            for c in zorder_by:
-                lo, hi = stats_row[f"mn_{c}"], stats_row[f"mx_{c}"]
-                span = max(int(hi) - int(lo), 0) + 1
-                # scale each column to the FULL 2^bits range (not floor-
-                # divide by a width): a narrow column (say 8 bits of span)
-                # next to a wide one would otherwise leave its high morton
-                # bits always zero and the z-curve degenerates into a sort
-                # on the wide column alone — no skipping on the narrow one
-                if span * (1 << zorder_bits) < (1 << 62):
-                    bucketized.append(
-                        f"LEAST(((CAST({c} AS BIGINT) - {int(lo)}) * "
-                        f"{1 << zorder_bits}) DIV {span}, {(1 << zorder_bits) - 1})"
+            hit = set(hit)
+            groups = {k: rels for k, rels in groups.items() if rels[0] in hit}
+        removes: list[str] = []
+        adds: list[dict] = []
+        skipped_current = 0
+        for k, rels in sorted(groups.items(), key=lambda kv: tuple(map(str, kv[0]))):
+            stamp: dict[str, str] | None = None
+            if cluster_phys:
+                stamp = cl.zcube_stamp(cluster_phys, uuid.uuid4().hex)
+            group_target = target_files
+            if incremental:
+                # skip files already clustered on the CURRENT columns; the
+                # rest (new appends / stale stamps / DV'd files) form this
+                # run's ZCube — O(new data), the Liquid maintenance contract
+                cand = [
+                    r for r in rels
+                    if not cl.is_current_cluster_file(
+                        snap.adds.get(r, {}), cluster_phys
                     )
-                else:  # overflow-safe fallback for astronomically wide spans
-                    width = max(-(-span // (1 << zorder_bits)), 1)
-                    bucketized.append(f"((CAST({c} AS BIGINT) - {int(lo)}) div {width})")
-            out = (
-                data.withColumn("__z", zorder_key(bucketized, bits=zorder_bits))
-                .repartitionByRange(max(group_target, 1), "__z")
-                .sortWithinPartitions("__z")
-                .drop("__z")
-            )
-            _to_physical(out, snap).write.parquet(staging)
-        else:
-            _to_physical(data.coalesce(group_target), snap).write.parquet(staging)
-        # partition directories and partitionValues keys use PHYSICAL names
-        rel_dir = "/".join(
-            f"{snap.physical_names.get(c, c)}="
-            f"{'__HIVE_DEFAULT_PARTITION__' if v is None else v}"
-            for c, v in zip(snap.partition_columns, k)
-        )
-        pvals_out = {
-            snap.physical_names.get(c, c): v for c, v in pv_by_group[k].items()
-        }
-        for n in sorted(os.listdir(staging)):
-            if not n.endswith(".parquet"):
-                continue
-            rel = (rel_dir + "/" if rel_dir else "") + f"part-{uuid.uuid4().hex}.parquet"
-            dest = os.path.join(path, rel)
-            os.makedirs(os.path.dirname(dest), exist_ok=True)
-            os.replace(os.path.join(staging, n), dest)
-            extra = {"tags": stamp} if stamp else {}
-            adds.append(
-                fx.add_action(
-                    rel,
-                    size=os.path.getsize(dest),
-                    partition_values=pvals_out or None,
-                    stats=_file_stats(dest),
-                    dataChange=False,
-                    **extra,
+                ]
+                if min_cube_bytes:
+                    # SMALL-CUBE CONSOLIDATION (real Liquid's ZCube target
+                    # size): stamped cubes below the byte threshold join the
+                    # rewrite so many tiny incremental runs coalesce instead
+                    # of accreting forever; cubes at/above it stay untouched
+                    cand_set = set(cand)
+                    cubes: dict[str, list[str]] = {}
+                    for r in rels:
+                        if r in cand_set:
+                            continue
+                        tags = snap.adds[r].get("tags") or {}
+                        if isinstance(tags, list):
+                            tags = dict(tags)
+                        cubes.setdefault(
+                            tags.get(cl.ZCUBE_ID_TAG, ""), []
+                        ).append(r)
+                    for members in cubes.values():
+                        if sum(
+                            snap.adds[r].get("size") or 0 for r in members
+                        ) < min_cube_bytes:
+                            cand.extend(members)
+                skipped_current += len(rels) - len(cand)
+                if not cand:
+                    continue
+                # size the cube's file count by its BYTE share so a small
+                # incremental slice doesn't shatter into target_files tiny
+                # files (target_files describes the whole group's layout)
+                tot = sum(snap.adds[r].get("size") or 0 for r in rels) or 1
+                cb = sum(snap.adds[r].get("size") or 0 for r in cand)
+                group_target = max(
+                    1, min(target_files, round(target_files * cb / tot))
                 )
-            )
-        shutil.rmtree(staging, ignore_errors=True)
-        removes += rels
-    if not removes:
-        return snap.version
-    if shred_spec:
-        _backfill_shred_stats(spark, path, adds, shred_spec)
-    params = {"zOrderBy": list(zorder_by or []), "where": where or ""}
-    if cluster_phys:
-        params["clusterBy"] = cluster_phys
-        params["auto"] = not full
-        params["clusteredFiles"] = len(removes)
-        params["skippedFiles"] = skipped_current
-    actions = [
-        fx.commit_info_action("OPTIMIZE", params)
-    ] + [fx.remove_action(rel, data_change=False, size=(snap.adds.get(rel) or {}).get("size")) for rel in removes] + adds
-    version = snap.version + 1
-    if rt_on:
-        actions = actions + [
-            rt.hwm_action(
-                rt.assign_base_row_ids(
-                    adds, version, rt.row_id_high_water_mark(snap)
+                rels = cand
+            dv_rels = [r for r in rels if snap.adds.get(r, {}).get("deletionVector")]
+            reorder = bool(zorder_by) and (len(rels) > 1 or incremental)
+            if len(rels) <= group_target and not dv_rels and not reorder:
+                continue  # DV'd files always compact: OPTIMIZE is also PURGE
+            data_cols = [f.name for f in snap.data_schema.fields]
+            if rt_on:
+                # ROW TRACKING preservation: the rewrite scans with each
+                # row's resolved id/commit-version and writes them into the
+                # table's MATERIALIZED physical columns — rewritten rows keep
+                # their ids; the group's new files still get fresh baseRowIds
+                # below (the materialized values take precedence on read)
+                data = rt.to_materialized(
+                    rt.scan_with_row_ids(spark, snap, rels), snap, data_cols
                 )
-            )
-        ]
-    if not _try_commit(
-        os.path.join(path, "_delta_log"), version, actions,
-        conf=snap.configuration,
-    ):
-        raise DeltaCommitConflict(f"version {version} committed concurrently; re-run optimize")
-    _maybe_checkpoint(spark, path, version, checkpoint_interval)
-    from pos_dlt_spark.sources import iceberg_uniform as uf
+            elif not dv_rels and snap.column_mapping == "none":
+                data = spark.read.schema(snap.data_schema).parquet(
+                    *[_abs_file(path, rel) for rel in rels]
+                )
+            else:
+                # cm files carry physical names and DV'd files drop their dead
+                # rows: the shared live-row scanner resolves both
+                from pos_dlt_spark.sources.delta import scan_live_rows
 
-    if uf.uniform_enabled(snap.configuration):
-        # appendOnly permits dataChange=false compaction; the Iceberg
-        # snapshot must follow in the same call so a later VACUUM never
-        # collects files the last-emitted manifest still references
-        uf.uniform_sync(spark, path)
-    return version
+                data = scan_live_rows(spark, snap, rels).select(*data_cols)
+            if shred_spec:
+                # a compaction of a shredded-variant table must RE-SHRED:
+                # dropping the typed twins here would silently demote every
+                # optimized file back to the stats-less full-scan posture
+                data = _with_shred_columns(data, shred_spec)
+            if zorder_by:
+                from pyspark.sql import functions as F
+
+                from pos_dlt_spark.storage import zorder_key
+
+                missing = [c for c in zorder_by if c not in data_cols]
+                if missing:
+                    raise ValueError(
+                        f"zorder_by columns {missing} not data columns "
+                        "(partition columns are already directory-clustered)"
+                    )
+                stats_row = data.agg(
+                    *[F.min(c).alias(f"mn_{c}") for c in zorder_by],
+                    *[F.max(c).alias(f"mx_{c}") for c in zorder_by],
+                ).collect()[0]
+                bucketized = []
+                for c in zorder_by:
+                    lo, hi = stats_row[f"mn_{c}"], stats_row[f"mx_{c}"]
+                    span = max(int(hi) - int(lo), 0) + 1
+                    # scale each column to the FULL 2^bits range (not floor-
+                    # divide by a width): a narrow column (say 8 bits of span)
+                    # next to a wide one would otherwise leave its high morton
+                    # bits always zero and the z-curve degenerates into a sort
+                    # on the wide column alone — no skipping on the narrow one
+                    if span * (1 << zorder_bits) < (1 << 62):
+                        bucketized.append(
+                            f"LEAST(((CAST({c} AS BIGINT) - {int(lo)}) * "
+                            f"{1 << zorder_bits}) DIV {span}, {(1 << zorder_bits) - 1})"
+                        )
+                    else:  # overflow-safe fallback for astronomically wide spans
+                        width = max(-(-span // (1 << zorder_bits)), 1)
+                        bucketized.append(f"((CAST({c} AS BIGINT) - {int(lo)}) div {width})")
+                data = (
+                    data.withColumn("__z", zorder_key(bucketized, bits=zorder_bits))
+                    .repartitionByRange(max(group_target, 1), "__z")
+                    .sortWithinPartitions("__z")
+                    .drop("__z")
+                )
+            else:
+                data = data.coalesce(group_target)
+            # partition directories and partitionValues keys use PHYSICAL names
+            rel_dir = "/".join(
+                f"{snap.physical_names.get(c, c)}="
+                f"{'__HIVE_DEFAULT_PARTITION__' if v is None else v}"
+                for c, v in zip(snap.partition_columns, k)
+            )
+            pvals_out = {
+                snap.physical_names.get(c, c): v for c, v in pv_by_group[k].items()
+            }
+            for a in _stage_and_move(
+                _to_physical(data, snap), path, None, rel_dir, pvals_out
+            ):
+                a["add"]["dataChange"] = False
+                if stamp:
+                    a["add"]["tags"] = stamp
+                adds.append(a)
+            removes += rels
+        if not removes:
+            return None
+        if shred_spec:
+            _backfill_shred_stats(spark, path, adds, shred_spec)
+        params["zOrderBy"] = list(zorder_by or [])
+        if cluster_phys:
+            params["clusterBy"] = cluster_phys
+            params["auto"] = not full
+            params["clusteredFiles"] = len(removes)
+            params["skippedFiles"] = skipped_current
+        return _DmlPlan(removes=removes, staged=adds, data_change=False)
+
+    # filled in by the plan: the commitInfo rides the one attempt
+    params: dict = {"zOrderBy": [], "where": where or ""}
+    return _apply_and_commit(
+        spark, path, "OPTIMIZE", params, plan,
+        checkpoint_interval=checkpoint_interval,
+    )[0]
 
 
 def delta_vacuum(
@@ -3115,23 +3001,34 @@ def _dv_readd_actions(snap, path: str, rows, inline_threshold: int) -> list[dict
     return actions
 
 
-def _identity_hwm_actions(snap: DeltaSnapshot, adds: list[dict]) -> list[dict]:
-    """BY DEFAULT identity columns: a metaData action advancing each
-    column's watermark past every staged value (footer stats — the
-    column is primitive), so a later assigning append can never collide.
-    Empty when no staged value passes a watermark."""
-    idents = _identity_spec(snap.schema)
+def _staged_hwms(schema, physical_names: dict, adds: list[dict]) -> dict[str, int]:
+    """BY DEFAULT identity columns of ``schema`` whose staged values pass
+    the declared watermark: the new watermark per column, from the staged
+    files' footer stats (the column is primitive — stats are exact)."""
     hwms: dict[str, int] = {}
-    for name, spec in idents.items():
-        phys = snap.physical_names.get(name, name)
+    for name, spec in _identity_spec(schema).items():
+        phys = physical_names.get(name, name)
         cand = _hwm_candidate(spec, [a["add"].get("stats") for a in adds], phys)
         if cand is not None:
             hwms[name] = cand
-    if not hwms:
+    return hwms
+
+
+def _identity_hwm_actions(
+    snap: DeltaSnapshot, adds: list[dict], schema=None
+) -> list[dict]:
+    """The commit's metaData action: ``schema`` (a write's evolved
+    schema; the table's when None) with each identity column's watermark
+    advanced past every staged value, so a later assigning append can
+    never collide. Empty when there is no new schema and no staged value
+    passes a watermark."""
+    base = snap.schema if schema is None else schema
+    hwms = _staged_hwms(base, snap.physical_names, adds)
+    if schema is None and not hwms:
         return []
     return [
         fx.metadata_action(
-            _schema_with_hwm(snap.schema, hwms),
+            _schema_with_hwm(base, hwms),
             partition_columns=snap.partition_columns,
             table_id=snap.table_id,
             configuration=snap.configuration or None,
@@ -3141,17 +3038,28 @@ def _identity_hwm_actions(snap: DeltaSnapshot, adds: list[dict]) -> list[dict]:
 
 @dataclass
 class _DmlPlan:
-    """What one DML attempt changes, as its verb derives it from the
-    attempt's snapshot; :func:`_apply_and_commit` stages and commits it.
+    """What one attempt of a data-staging write changes, as its verb
+    derives it from the attempt's snapshot; :func:`_apply_and_commit`
+    stages and commits it.
 
     - ``new_rows``: rows for fresh data files (logical column names; on
       a row-tracking table plus the materialized row-id columns);
-    - ``removes``: files removed whole (rewrite mode);
+    - ``removes``: files removed whole;
     - ``dv_losers``: ``(__fp, __ri)`` rows to deletion-vector in place
       (dv mode);
     - ``changes``: change-feed rows (table columns + ``_change_type``);
+    - ``staged``: actions the verb staged itself, committed as they are
+      (fresh adds; an add carrying a deletion vector re-adds an existing
+      file). After a lost race the core keeps those the next attempt's
+      plan hands back and removes the rest; a write that ends without
+      committing them removes them all;
+    - ``data_change``: the commit's ``dataChange`` flag on its removes
+      and new-row adds — False for a rewrite that changes no rows
+      (OPTIMIZE, REORG), which a ``delta.appendOnly`` table allows;
+    - ``schema``: a new metaData schema (``merge_schema`` evolution);
+      the core stamps the identity watermarks onto it;
     - ``checks``: raise after the staging job (generated columns, CHECK
-      constraints); None entries are skipped;
+      constraints, a caller's precommit); None entries are skipped;
     - ``release``: frees a frozen frame once everything is staged;
     - ``rows``: the row count to report; None reports the rows the
       deletion vectors newly delete."""
@@ -3160,6 +3068,9 @@ class _DmlPlan:
     removes: list[str] = field(default_factory=list)
     dv_losers: DataFrame | None = None
     changes: DataFrame | None = None
+    staged: list[dict] = field(default_factory=list)
+    data_change: bool = True
+    schema: StructType | None = None
     checks: tuple = ()
     release: Callable[[], object] | None = None
     rows: int | None = None
@@ -3177,30 +3088,36 @@ def _apply_and_commit(
     checkpoint_interval: int = 10,
     max_retries: int = 3,
     inline_threshold: int = 512,
+    checkpoint_format: str = "classic",
 ) -> tuple[int, int]:
-    """The one apply-and-commit core of DELETE, UPDATE and MERGE. Every
-    attempt folds a fresh snapshot and asks ``plan_fn(snap,
-    want_changes)`` for the attempt's :class:`_DmlPlan` (None: nothing
-    to do), then:
+    """The one commit core of every Delta write that stages data files:
+    WRITE (append, overwrite, replaceWhere), DELETE, UPDATE, MERGE,
+    OPTIMIZE and REORG. Every attempt folds a fresh snapshot and asks
+    ``plan_fn(snap, want_changes)`` for the attempt's :class:`_DmlPlan`
+    (None: nothing to do), then:
 
     1. guards, before anything is staged: the mode, the writer
        features, the ``write_change_files`` refusals, ``txn``
-       idempotence; after matching, an append-only table refuses a plan
-       that removes or deletion-vectors existing rows;
-    2. dv mode encodes the losers' bitmaps executor-side; a plan with no
-       new rows, no removes and no newly deleted row commits nothing;
+       idempotence; after matching, an append-only table refuses a
+       data-changing plan that removes or deletion-vectors existing rows;
+    2. dv mode encodes the losers' bitmaps executor-side; a
+       deletion-vector plan that newly deletes no row and writes or
+       removes nothing else commits nothing;
     3. stages the new rows and runs the plan's checks, stages the change
        rows, and releases the plan's frozen frame;
-    4. commits commitInfo, txn, identity watermarks, the cdc files, the
-       DV re-adds or the removes, the adds and the row-tracking
-       watermark as ``snap.version + 1`` (put-if-absent).
+    4. commits commitInfo, txn, the metaData (new schema and identity
+       watermarks), the cdc files, the DV re-adds, the removes, the
+       verb-staged actions, the adds and the row-tracking watermark as
+       ``snap.version + 1`` (put-if-absent), then checkpoints on the
+       cadence and syncs UniForm.
 
     Whatever an attempt staged is removed when it fails or loses the
     commit race (staged adds, cdc files, DV sidecars minted this
     attempt); a lost race then re-runs the whole attempt against the new
     snapshot — never a replay of the stale result, which could resurrect
-    overwritten rows. After ``max_retries`` lost races
-    :class:`DeltaCommitConflict` raises.
+    overwritten rows. The verb's ``plan_fn`` owns its lost-race policy:
+    re-derive, hand back what it staged, or raise. After ``max_retries``
+    lost races :class:`DeltaCommitConflict` raises.
 
     Returns ``(version, rows)`` — ``plan.rows``, or the newly
     deletion-vectored row count when the plan leaves it None; a no-op
@@ -3217,97 +3134,122 @@ def _apply_and_commit(
             "mode='rewrite': the derived feed does not classify "
             f"DV-{op.lower()} commit shapes"
         )
-    for _attempt in range(max(max_retries, 1)):
-        snap = delta_snapshot(spark, path)
-        _writer_supports(snap)
-        rt_on = rtm.row_tracking_enabled(snap.configuration)
-        if rt_on:
-            rtm.require_materialized_columns(snap)
-        elif not write_change_files:
-            raise ValueError(
-                "write_change_files=False needs row tracking: without stable "
-                "row ids the change feed cannot derive update pairs"
-            )
-        if txn is not None and snap.txns.get(txn[0], -1) >= txn[1]:
-            return snap.version, 0  # batch already applied: replay skipped
-        plan = plan_fn(snap, cdf_enabled(snap) and write_change_files)
-        if plan is None:
-            return snap.version, 0
-        version = snap.version + 1
-        part_by = _physical_partition_by(snap)
-        staged: list[dict] = []
-        try:
-            try:
-                if _append_only(snap.configuration) and (
-                    plan.removes or plan.dv_losers is not None
-                ):
-                    raise DeltaProtocolError(
-                        f"table is delta.appendOnly: {op} would change "
-                        "existing rows (only pure inserts are allowed)"
-                    )
-                dv_rows = (
-                    _encode_dv_groups(spark, snap, path, plan.dv_losers)
-                    if plan.dv_losers is not None
-                    else []
+    held: list[dict] = []  # verb-staged actions not committed yet
+    try:
+        for _attempt in range(max(max_retries, 1)):
+            snap = delta_snapshot(spark, path)
+            _writer_supports(snap)
+            rt_on = rtm.row_tracking_enabled(snap.configuration)
+            if not rt_on and not write_change_files:
+                raise ValueError(
+                    "write_change_files=False needs row tracking: without stable "
+                    "row ids the change feed cannot derive update pairs"
                 )
-                n_dv = sum(int(r["n_new"]) for r in dv_rows)
-                if plan.new_rows is None and not plan.removes and not n_dv:
-                    return snap.version, 0  # nothing matched, or all dead already
-                adds: list[dict] = []
-                if plan.new_rows is not None:
-                    adds = _stage_and_move(
-                        _to_physical(plan.new_rows, snap), path, part_by
+            if txn is not None and snap.txns.get(txn[0], -1) >= txn[1]:
+                return snap.version, 0  # batch already applied: replay skipped
+            plan = plan_fn(snap, cdf_enabled(snap) and write_change_files)
+            if plan is None:
+                return snap.version, 0
+            kept = {id(a) for a in plan.staged}
+            _discard_staged(path, [a for a in held if id(a) not in kept])
+            held = plan.staged
+            version = snap.version + 1
+            part_by = _physical_partition_by(snap)
+            staged: list[dict] = []
+            try:
+                try:
+                    if (
+                        plan.data_change
+                        and _append_only(snap.configuration)
+                        and (plan.removes or plan.dv_losers is not None)
+                    ):
+                        raise DeltaProtocolError(
+                            f"table is delta.appendOnly: {op} would change "
+                            "existing rows (only pure inserts are allowed)"
+                        )
+                    dv_rows = (
+                        _encode_dv_groups(spark, snap, path, plan.dv_losers)
+                        if plan.dv_losers is not None
+                        else []
                     )
-                    staged += adds
-                for check in plan.checks:
-                    if check is not None:
-                        check()
-                cdc: list[dict] = []
-                if plan.changes is not None:
-                    # change files carry PHYSICAL column names under column
-                    # mapping, like data files; _change_type is unmapped
-                    cdc = stage_change_files(
-                        _to_physical(plan.changes, snap), path, part_by
+                    n_dv = sum(int(r["n_new"]) for r in dv_rows)
+                    if plan.dv_losers is not None and not (
+                        n_dv or plan.new_rows is not None or plan.removes
+                    ):
+                        return snap.version, 0  # nothing matched, or all dead already
+                    adds: list[dict] = []
+                    if plan.new_rows is not None:
+                        adds = _stage_and_move(
+                            _to_physical(plan.new_rows, snap), path, part_by
+                        )
+                        staged += adds
+                        for a in adds:
+                            a["add"]["dataChange"] = plan.data_change
+                    for check in plan.checks:
+                        if check is not None:
+                            check()
+                    cdc: list[dict] = []
+                    if plan.changes is not None:
+                        # change files carry PHYSICAL column names under column
+                        # mapping, like data files; _change_type is unmapped
+                        cdc = stage_change_files(
+                            _to_physical(plan.changes, snap), path, part_by
+                        )
+                        staged += cdc
+                finally:
+                    if plan.release is not None:
+                        plan.release()
+                dv_actions = _dv_readd_actions(snap, path, dv_rows, inline_threshold)
+                staged += dv_actions
+                fresh = adds + [
+                    a for a in plan.staged
+                    if "add" in a and not a["add"].get("deletionVector")
+                ]
+                actions = [fx.commit_info_action(op, params)]
+                if txn is not None:
+                    actions.append(fx.txn_action(txn[0], txn[1]))
+                actions += _identity_hwm_actions(snap, fresh, plan.schema)
+                actions += cdc + dv_actions
+                actions += [
+                    fx.remove_action(
+                        rel, data_change=plan.data_change,
+                        size=(snap.adds.get(rel) or {}).get("size"),
                     )
-                    staged += cdc
-            finally:
-                if plan.release is not None:
-                    plan.release()
-            dv_actions = _dv_readd_actions(snap, path, dv_rows, inline_threshold)
-            staged += dv_actions
-            actions = [fx.commit_info_action(op, params)]
-            if txn is not None:
-                actions.append(fx.txn_action(txn[0], txn[1]))
-            actions += _identity_hwm_actions(snap, adds) + cdc + dv_actions
-            actions += [
-                fx.remove_action(rel, size=(snap.adds.get(rel) or {}).get("size"))
-                for rel in plan.removes
-            ]
-            actions += adds
-            if rt_on and plan.new_rows is not None:
-                actions.append(
-                    rtm.hwm_action(
-                        rtm.assign_base_row_ids(
-                            adds, version, rtm.row_id_high_water_mark(snap)
+                    for rel in plan.removes
+                ]
+                actions += plan.staged + adds
+                if rt_on and (plan.new_rows is not None or plan.dv_losers is None):
+                    # every plan that can add files stamps fresh row ids
+                    # on them (a lost race re-stamps) and carries the
+                    # watermark; a pure deletion-vector plan adds none
+                    actions.append(
+                        rtm.hwm_action(
+                            rtm.assign_base_row_ids(
+                                fresh, version, rtm.row_id_high_water_mark(snap)
+                            )
                         )
                     )
+                committed = _try_commit(
+                    os.path.join(path, "_delta_log"), version, actions,
+                    conf=snap.configuration,
                 )
-            committed = _try_commit(
-                os.path.join(path, "_delta_log"), version, actions,
-                conf=snap.configuration,
-            )
-        except BaseException:
+            except BaseException:
+                _discard_staged(path, staged)
+                raise
+            if committed:
+                held = []
+                _maybe_checkpoint(
+                    spark, path, version, checkpoint_interval, checkpoint_format
+                )
+                _uniform_after_commit(spark, path, snap.configuration)
+                return version, n_dv if plan.rows is None else plan.rows
             _discard_staged(path, staged)
-            raise
-        if committed:
-            _maybe_checkpoint(spark, path, version, checkpoint_interval)
-            _uniform_after_commit(spark, path, snap.configuration)
-            return version, n_dv if plan.rows is None else plan.rows
-        _discard_staged(path, staged)
-    raise DeltaCommitConflict(
-        f"version {version} was committed concurrently and retries "
-        f"are exhausted; {op.lower()} must re-run against the new snapshot"
-    )
+        raise DeltaCommitConflict(
+            f"version {version} was committed concurrently and retries "
+            f"are exhausted; {op.lower()} must re-run against the new snapshot"
+        )
+    finally:
+        _discard_staged(path, held)
 
 
 def _stats_candidates(snap: DeltaSnapshot, predicate: str) -> DeltaSnapshot:
@@ -3711,53 +3653,36 @@ def delta_reorg_purge(
     VACUUM collects the purged files and their DV sidecars. Files whose
     DV kills every row are removed without a replacement.
 
+    Commits through :func:`_apply_and_commit`: a lost commit race
+    removes this attempt's staged files and re-plans against the fresh
+    snapshot, re-reading its DV files (as DELETE does).
+
     Returns ``(committed version, files purged)`` — ``(version, 0)``
     without a commit when no live file carries a DV."""
-    from pos_dlt_spark.sources.delta import scan_live_rows
+    params = {"applyPurge": True, "files": 0}
 
-    snap = delta_snapshot(spark, path)
-    _writer_supports(snap)
-    dv_rels = sorted(
-        rel for rel, _ in snap.files if snap.adds.get(rel, {}).get("deletionVector")
-    )
-    if not dv_rels:
-        return snap.version, 0
-    from pos_dlt_spark.sources import delta_rowtracking as rtm
+    def plan(snap: DeltaSnapshot, _want_changes: bool) -> _DmlPlan | None:
+        from pos_dlt_spark.sources import delta_rowtracking as rtm
+        from pos_dlt_spark.sources.delta import scan_live_rows
 
-    rt_on = rtm.row_tracking_enabled(snap.configuration)
-    if rt_on:
-        live = rtm.to_materialized(rtm.scan_with_row_ids(spark, snap, dv_rels), snap)
-    else:
-        live = scan_live_rows(spark, snap, dv_rels)
-    adds = _stage_and_move(
-        _to_physical(live, snap), path, _physical_partition_by(snap)
-    )
-    for a in adds:
-        a["add"]["dataChange"] = False
-    actions = (
-        [fx.commit_info_action("REORG", {"applyPurge": True, "files": len(dv_rels)})]
-        + [fx.remove_action(rel, data_change=False, size=(snap.adds.get(rel) or {}).get("size")) for rel in dv_rels]
-        + adds
-    )
-    version = snap.version + 1
-    if rt_on:
-        actions = actions + [
-            rtm.hwm_action(
-                rtm.assign_base_row_ids(
-                    adds, version, rtm.row_id_high_water_mark(snap)
-                )
-            )
-        ]
-    if not _try_commit(
-        os.path.join(path, "_delta_log"), version, actions,
-        conf=snap.configuration,
-    ):
-        raise DeltaCommitConflict(
-            f"version {version} committed concurrently; re-run reorg"
+        dv_rels = sorted(
+            rel for rel, _ in snap.files
+            if snap.adds.get(rel, {}).get("deletionVector")
         )
-    _maybe_checkpoint(spark, path, version, checkpoint_interval)
-    _uniform_after_commit(spark, path, snap.configuration)
-    return version, len(dv_rels)
+        if not dv_rels:
+            return None
+        if rtm.row_tracking_enabled(snap.configuration):
+            live = rtm.to_materialized(rtm.scan_with_row_ids(spark, snap, dv_rels), snap)
+        else:
+            live = scan_live_rows(spark, snap, dv_rels)
+        params["files"] = len(dv_rels)
+        return _DmlPlan(
+            new_rows=live, removes=dv_rels, data_change=False, rows=len(dv_rels)
+        )
+
+    return _apply_and_commit(
+        spark, path, "REORG", params, plan, checkpoint_interval=checkpoint_interval
+    )
 
 
 def _column_referenced(name: str, snap: DeltaSnapshot) -> list[str]:
@@ -3826,8 +3751,7 @@ def _commit_metadata_change(
     _maybe_checkpoint(spark, path, version, checkpoint_interval)
     # UniForm: schema/property ALTERs re-emit the Iceberg metadata in
     # the same call (schema changes append an evolved schema-id there)
-    if uf.uniform_enabled(configuration):
-        uf.uniform_sync(spark, path)
+    _uniform_after_commit(spark, path, configuration)
     return version
 
 
@@ -4232,27 +4156,17 @@ def delta_enable_row_tracking(
     hwm = rtm.assign_base_row_ids(
         adds, version, rtm.row_id_high_water_mark(snap)
     )
-    actions = [
-        fx.commit_info_action("ENABLE ROW TRACKING", {"files": len(adds)}),
-        _merged_protocol(snap.protocol, (), ("rowTracking", "domainMetadata")),
-        fx.metadata_action(
-            snap.schema,
-            partition_columns=snap.partition_columns,
-            table_id=snap.table_id,
-            configuration=conf,
-        ),
-        *removes,
-        *adds,
-        rtm.hwm_action(hwm),
-    ]
-    if not _try_commit(
-        os.path.join(path, "_delta_log"), version, actions, conf=conf
-    ):
-        raise DeltaCommitConflict(
-            f"version {version} committed concurrently; re-run enablement"
-        )
-    _maybe_checkpoint(spark, path, version, checkpoint_interval)
-    return version
+    return _commit_metadata_change(
+        spark, path, snap, snap.schema, conf, snap.partition_columns,
+        "ENABLE ROW TRACKING", {"files": len(adds)},
+        extra_actions=[
+            _merged_protocol(snap.protocol, (), ("rowTracking", "domainMetadata")),
+            *removes,
+            *adds,
+            rtm.hwm_action(hwm),
+        ],
+        checkpoint_interval=checkpoint_interval,
+    )
 
 
 def delta_add_constraint(

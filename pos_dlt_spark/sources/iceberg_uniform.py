@@ -1768,78 +1768,6 @@ def _native_dml_scan(spark, path: str, op: str):
     return meta, schema, spec, files, df
 
 
-def _render_native_deletes(
-    md_dir: str, snapshot_id: int, matched, files: list, pav, schema: dict, spec: dict
-):
-    """Render matched ``(__ice_path, __ice_pos)`` pairs as position-
-    delete parquets — grouped by the owning file's partition tuple (the
-    spec: a position delete file's partition must match the data it
-    applies to), sorted by (file_path, pos), reserved field-ids
-    2147483546/2147483545 — under ONE content=1 delete manifest.
-    Returns the delete manifest's manifest-list entry."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    by_path = {_norm_file_path(f["file_path"]): f for f in files}
-    matched = matched.copy()
-    matched["__key"] = matched["__ice_path"].map(
-        lambda p: tuple(sorted((by_path[p].get("partition") or {}).items()))
-    )
-    del_entries: list[dict] = []
-    del_rows_total = 0
-    for key, grp in sorted(matched.groupby("__key"), key=lambda kv: str(kv[0])):
-        grp = grp.sort_values(["__ice_path", "__ice_pos"])
-        big = pa.table(
-            {
-                "file_path": pa.array(grp["__ice_path"], pa.string()),
-                "pos": pa.array(grp["__ice_pos"], pa.int64()),
-            }
-        ).cast(
-            pa.schema(
-                [
-                    pa.field(
-                        "file_path",
-                        pa.string(),
-                        nullable=False,
-                        metadata={"PARQUET:field_id": "2147483546"},
-                    ),
-                    pa.field(
-                        "pos",
-                        pa.int64(),
-                        nullable=False,
-                        metadata={"PARQUET:field_id": "2147483545"},
-                    ),
-                ]
-            )
-        )
-        dfile = os.path.join(
-            md_dir, f"delete-{snapshot_id}-{uuid.uuid4().hex[:8]}.parquet"
-        )
-        pq.write_table(big, dfile)
-        del_rows_total += big.num_rows
-        del_entries.append(
-            {
-                "status": 1,
-                "snapshot_id": snapshot_id,
-                "sequence_number": None,  # inherited from the list entry
-                "file_sequence_number": None,
-                "data_file": {
-                    "content": 1,
-                    "file_path": dfile,
-                    "file_format": "PARQUET",
-                    "partition": dict(key),
-                    "record_count": big.num_rows,
-                    "file_size_in_bytes": os.path.getsize(dfile),
-                    "lower_bounds": None,
-                    "upper_bounds": None,
-                },
-            }
-        )
-    return _write_delete_manifest(
-        md_dir, snapshot_id, del_entries, del_rows_total, pav, schema, spec
-    )
-
-
 def _write_delete_manifest(
     md_dir: str,
     snapshot_id: int,
@@ -1850,8 +1778,8 @@ def _write_delete_manifest(
     spec: dict,
 ) -> dict:
     """One content=1 delete manifest over the rendered delete files;
-    returns its manifest-list entry. Shared by the driver-side and
-    distributed render paths."""
+    returns its manifest-list entry. Shared by the native DML position-
+    delete render and the equality-delete fixture."""
     dman_path = os.path.join(
         md_dir, f"manifest-del-{snapshot_id}-{uuid.uuid4().hex[:8]}.avro"
     )
@@ -1884,19 +1812,13 @@ def _write_delete_manifest(
     }
 
 
-# Above this many matched rows, native DML renders its position deletes
-# DISTRIBUTED (executors sort and write per-partition delete parquets
-# with Spark's native parquet field-id emission) instead of streaming
-# (file_path, pos) pairs to the driver (~20 B/row: 2M rows ~ 40 MB —
-# fine; 100M rows ~ 2 GB — not). Overridable for tests.
-NATIVE_DML_COLLECT_MAX = 2_000_000
-
-
 def _render_native_deletes_distributed(
     spark, md_dir: str, snapshot_id: int, pairs, files: list, pav, schema: dict, spec: dict
 ) -> dict:
-    """Scale path of the delete render: the matched-pair DataFrame joins
-    a broadcast (file -> partition tuple) map built from the manifests
+    """Render matched ``(__ice_path, __ice_pos)`` pairs as position-
+    delete parquets under ONE content=1 delete manifest (returns its
+    manifest-list entry). A delete file's partition must match the data
+    it applies to, so the matched-pair DataFrame joins a broadcast (file -> partition tuple) map built from the manifests
     (metadata-scale), repartitions by partition tuple (one task per
     tuple — the same bounded fan-in as the data writer), sorts within
     each file by (file_path, pos), and writes the delete parquets
@@ -2111,10 +2033,10 @@ def delete_iceberg_native(spark, path: str, predicate: str) -> str | None:
     reserved field-ids 2147483546/2147483545, all under one content=1
     delete manifest appended to the prior manifest list — the
     incremental O(deleted) commit, exactly what ``orders_iceberg_
-    dv_deletes`` pins for the UniForm path. Matched positions stream to
-    the driver Arrow-batched (~20 B/deleted row — the same
-    driver-bounded posture as the DV render, which collects compressed
-    bitmaps). Prior snapshots, refs, schemas and partition-spec history
+    dv_deletes`` pins for the UniForm path. The delete parquets are
+    written executor-side (see :func:`_render_native_deletes_distributed`):
+    the driver never collects the matched positions, only the delete
+    files' names and footers. Prior snapshots, refs, schemas and partition-spec history
     carry through unchanged; the new snapshot's HIGHER sequence number
     makes the deletes apply to every current file (equal-or-lower rule)
     and never to files appended later.
@@ -2139,14 +2061,9 @@ def delete_iceberg_native(spark, path: str, predicate: str) -> str | None:
         return None
     snapshot_id = int(meta["current-snapshot-id"]) + 1
     pav = _partition_avro_schema(spec, schema["fields"])
-    if n <= NATIVE_DML_COLLECT_MAX:
-        dman_entry = _render_native_deletes(
-            md_dir, snapshot_id, pairs.toPandas(), files, pav, schema, spec
-        )
-    else:
-        dman_entry = _render_native_deletes_distributed(
-            spark, md_dir, snapshot_id, pairs, files, pav, schema, spec
-        )
+    dman_entry = _render_native_deletes_distributed(
+        spark, md_dir, snapshot_id, pairs, files, pav, schema, spec
+    )
     return _commit_native_snapshot(
         md_dir,
         meta,
@@ -2200,14 +2117,9 @@ def update_iceberg_native(
         return None
     snapshot_id = int(meta["current-snapshot-id"]) + 1
     pav = _partition_avro_schema(spec, schema["fields"])
-    if n <= NATIVE_DML_COLLECT_MAX:
-        dman_entry = _render_native_deletes(
-            md_dir, snapshot_id, pairs.toPandas(), files, pav, schema, spec
-        )
-    else:
-        dman_entry = _render_native_deletes_distributed(
-            spark, md_dir, snapshot_id, pairs, files, pav, schema, spec
-        )
+    dman_entry = _render_native_deletes_distributed(
+        spark, md_dir, snapshot_id, pairs, files, pav, schema, spec
+    )
     # simultaneous SET: every RHS evaluates against the pre-update row
     by_name = {f["name"]: f for f in schema["fields"]}
     sel = [

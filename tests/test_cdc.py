@@ -224,6 +224,30 @@ def test_manifest_gc_keeps_exactly_one_retired_generation(spark, tmp_path):
     assert as_dict(ac.read_target(spark)) == {(1, 1): (datetime(2021, 1, 4), 3)}
 
 
+def test_bucketed_gc_leaves_no_marker_only_epoch_dir(spark, tmp_path):
+    """Once retention has passed, an epoch directory whose buckets were
+    collected goes too — Hadoop's hidden ``._SUCCESS.crc`` beside
+    ``_SUCCESS`` is a job marker like it — and a delete that empties its
+    only bucket leaves no ``delete_g*`` directory behind."""
+    import json as _json
+    import os as _os
+
+    root = tmp_path / "t"
+    ac = ApplyChanges(str(root), keys=KEYS, sequence_by="date_time", n_buckets=2)
+    for i in range(3):  # same key every time → same bucket rewritten
+        ac.process_batch(df_of(spark, [(1, 1, datetime(2021, 1, 1 + i), i)]), i)
+    doomed = spark.createDataFrame([(1, 1)], "store_id long, item_id long")
+    assert ac.delete_keys(spark, doomed) == 1
+    for i in range(3, 6):
+        ac.process_batch(df_of(spark, [(1, 1, datetime(2021, 1, 1 + i), i)]), i)
+    manifest = _json.load(open(root / "_manifest.json"))
+    referenced = {
+        p.split("/")[0] for p in [*manifest["buckets"].values(), *manifest["retired"]]
+    }
+    on_disk = {e for e in _os.listdir(root) if e.startswith(("epoch_", "delete_g"))}
+    assert on_disk == referenced
+
+
 def test_time_travel_previous_snapshot(spark, tmp_path):
     """read_target(previous=True) = the state as of one commit back; the
     window slides with each commit and the oldest generation's dirs are

@@ -82,7 +82,9 @@ def test_emptied_bucket_loses_pointer(spark, ac):
     n = ac.delete_keys(spark, doomed)
     assert n == 12
     assert ac._read_manifest()["buckets"] == {}
-    assert ac.read_target(spark) is None
+    # the state is empty, not absent: downstream readers keep working
+    empty = ac.read_target(spark)
+    assert empty.count() == 0 and empty.columns == COLS
 
 
 def test_missing_keys_are_noops(spark, ac):

@@ -99,6 +99,71 @@ def test_append_race_retries_overwrite_race_aborts(spark, tmp_path, monkeypatch)
         write_delta(_df(spark, 0, 5), table, mode="overwrite")
 
 
+@pytest.mark.parametrize(
+    "case",
+    ["append_drift", "overwrite_race", "optimize_race", "reorg_race", "cdf_replace_where_race"],
+)
+def test_refused_or_raced_write_leaves_no_staged_files(spark, tmp_path, monkeypatch, case):
+    """Every data-staging write commits through one core: a write that is
+    refused or loses its commit race removes what it staged, so every
+    on-disk data, change and DV sidecar file stays referenced by the log.
+    REORG and replaceWhere absorb the race; REORG's retry reads like an
+    uninterrupted twin."""
+    import pos_dlt_spark.sources.delta_writer as W
+    from pos_dlt_spark.sources.delta_check import delta_fsck
+    from pos_dlt_spark.sources.delta_writer import (
+        delta_delete,
+        delta_optimize,
+        delta_reorg_purge,
+    )
+    from tests.test_delta_update import _log_references, _on_disk
+
+    cdf = {"delta.enableChangeDataFeed": "true"}
+    table, twin = str(tmp_path / "t"), str(tmp_path / "twin")
+    for t in (table, twin):
+        write_delta(
+            _df(spark, 0, 20).repartition(4), t,
+            configuration=cdf if case == "cdf_replace_where_race" else None,
+        )
+        if case == "reorg_race":
+            delta_delete(spark, t, "id % 3 = 0", inline_threshold=0)
+    real, lost = W._try_commit, []
+
+    def lose_once(log_dir, version, actions, **kw):
+        if not lost:
+            lost.append(version)
+            return False  # a concurrent writer won this version
+        return real(log_dir, version, actions, **kw)
+
+    monkeypatch.setattr(W, "_try_commit", lose_once)
+    if case == "append_drift":
+        bad = spark.range(5).select(F.col("id"), F.col("id").alias("other"))
+        with pytest.raises(ValueError, match="schema drift"):
+            write_delta(bad, table)
+    elif case == "overwrite_race":
+        with pytest.raises(DeltaCommitConflict, match="overwrite"):
+            write_delta(_df(spark, 0, 5), table, mode="overwrite")
+    elif case == "optimize_race":
+        with pytest.raises(DeltaCommitConflict, match="optimize"):
+            delta_optimize(spark, table)
+    elif case == "reorg_race":
+        got = delta_reorg_purge(spark, table)
+        monkeypatch.undo()
+        assert lost and got == delta_reorg_purge(spark, twin)
+        assert sorted(read_delta(spark, table).collect()) == sorted(
+            read_delta(spark, twin).collect()
+        )
+    else:
+        v = write_delta(
+            _df(spark, 0, 10).withColumn("name", F.lit("r")), table,
+            mode="overwrite", replace_where="id < 10",
+        )
+        assert lost and v == 1
+    on_disk = _on_disk(table, ".parquet") | _on_disk(table, ".bin")
+    assert on_disk <= _log_references(table)
+    assert delta_fsck(spark, table) == []
+
+
 def test_schema_drift_fails_fast(spark, tmp_path):
     table = str(tmp_path / "drift")
     write_delta(_df(spark, 0, 10), table)

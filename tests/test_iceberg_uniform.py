@@ -1711,15 +1711,13 @@ def test_update_iceberg_native_merge_on_read(spark, tmp_path):
 
 
 def test_native_dml_distributed_delete_render(spark, tmp_path, monkeypatch):
-    """The scale path: above NATIVE_DML_COLLECT_MAX the delete parquets
-    are written EXECUTOR-SIDE (Spark parquet field-id emission, sorted
-    within file, per-partition-tuple grouping) — forced here via a zero
-    threshold, asserted identical in effect to the driver path."""
+    """Native DML writes its delete parquets EXECUTOR-SIDE (Spark
+    parquet field-id emission, sorted within file, per-partition-tuple
+    grouping) and reads back with the matched rows gone."""
     import glob
 
     import pyarrow.parquet as pq
 
-    monkeypatch.setattr(uf, "NATIVE_DML_COLLECT_MAX", 0)
     t = str(tmp_path / "ddist")
     df = spark.range(0, 400).select(
         "id",
@@ -1863,7 +1861,6 @@ def test_distributed_render_restores_unset_fieldid_conf(spark, tmp_path, monkeyp
         spark.conf.unset(key)
     except Exception:
         pass
-    monkeypatch.setattr(uf, "NATIVE_DML_COLLECT_MAX", 0)
     t = str(tmp_path / "confdel")
     uf.write_iceberg_native(
         spark, spark.range(0, 40).withColumn("v", F.col("id") * 2), t
