@@ -494,6 +494,114 @@ _MANIFEST_LIST_SCHEMA = {
     ],
 }
 
+
+def _write_manifest(
+    md_dir: str, snapshot_id: int, entries: list[dict], schema: dict, spec: dict, content: int
+) -> dict:
+    """Write one manifest over ``entries`` — data files (``content=0``)
+    or delete files (``content=1``, position or equality) — and return
+    its manifest-list entry. The entries' sequence numbers are null, so
+    they inherit the list entry's: the new snapshot's id."""
+    prefix = "manifest" if content == 0 else "manifest-del"
+    man_path = os.path.join(md_dir, f"{prefix}-{snapshot_id}-{uuid.uuid4().hex[:8]}.avro")
+    write_avro(
+        man_path,
+        _manifest_entry_schema(_partition_avro_schema(spec, schema["fields"])),
+        entries,
+        meta={
+            "schema": json.dumps(schema),
+            "partition-spec": json.dumps(spec["fields"]),
+            "partition-spec-id": str(spec["spec-id"]),
+            "format-version": "2",
+            "content": "data" if content == 0 else "deletes",
+        },
+    )
+    return {
+        "manifest_path": man_path,
+        "manifest_length": os.path.getsize(man_path),
+        "partition_spec_id": spec["spec-id"],
+        "content": content,
+        "sequence_number": snapshot_id,
+        "min_sequence_number": snapshot_id,
+        "added_snapshot_id": snapshot_id,
+        "added_files_count": len(entries),
+        "existing_files_count": 0,
+        "deleted_files_count": 0,
+        "added_rows_count": sum(e["data_file"]["record_count"] for e in entries),
+        "existing_rows_count": 0,
+        "deleted_rows_count": 0,
+    }
+
+
+def _current_manifests(meta: dict) -> list[dict]:
+    """The manifest-list entries of the table's current snapshot."""
+    return read_avro(_resolve_snapshot(meta)["manifest-list"])[1]
+
+
+def _commit_snapshot(
+    md_dir: str,
+    meta: dict,
+    snapshot_id: int,
+    manifests: list[dict],
+    summary: dict,
+    timestamp_ms: int,
+) -> str:
+    """The one Iceberg snapshot commit. Writes ``manifests`` (the whole
+    list: carried entries + the new ones) as the snapshot's manifest
+    list, appends the snapshot and its ``snapshot-log`` entry to
+    ``meta`` (every other key — properties, refs, schema and spec
+    history — passes through), advances ``current-snapshot-id``,
+    ``last-sequence-number`` and ``last-updated-ms``, and publishes
+    ``v<snapshot_id>.metadata.json`` then ``version-hint.text``. Returns
+    the metadata JSON path."""
+    mlist_path = os.path.join(md_dir, f"snap-{snapshot_id}-{uuid.uuid4().hex[:8]}.avro")
+    write_avro(mlist_path, _MANIFEST_LIST_SCHEMA, manifests, meta={"format-version": "2"})
+    meta = dict(meta)
+    meta["snapshots"] = list(meta.get("snapshots") or []) + [
+        {
+            "snapshot-id": snapshot_id,
+            "sequence-number": snapshot_id,
+            "timestamp-ms": timestamp_ms,
+            "manifest-list": mlist_path,
+            "summary": summary,
+            "schema-id": int(meta["current-schema-id"]),
+        }
+    ]
+    meta["snapshot-log"] = [
+        {"snapshot-id": s["snapshot-id"], "timestamp-ms": s["timestamp-ms"]}
+        for s in meta["snapshots"]
+    ]
+    meta["current-snapshot-id"] = snapshot_id
+    meta["last-sequence-number"] = snapshot_id
+    meta["last-updated-ms"] = timestamp_ms
+    return _publish_metadata(md_dir, snapshot_id, meta, hint=True)
+
+
+def _publish_metadata(md_dir: str, version: int, meta: dict, hint: bool) -> str:
+    """Publish ``v<version>.metadata.json`` (and, with ``hint``,
+    ``version-hint.text``), each through a tmp file and one atomic
+    ``os.replace`` — the spec's commit is a swap of the table-metadata
+    file. A failed write removes its tmp file and leaves the prior
+    version current. Returns the metadata JSON path."""
+    md_path = os.path.join(md_dir, f"v{version}.metadata.json")
+    writes = [(md_path, lambda fh: json.dump(meta, fh))]
+    if hint:
+        writes.append(
+            (os.path.join(md_dir, "version-hint.text"), lambda fh: fh.write(str(version)))
+        )
+    for target, write in writes:
+        tmp = target + f".tmp-{uuid.uuid4().hex[:8]}"
+        try:
+            with open(tmp, "w", encoding="utf-8") as fh:
+                write(fh)
+            os.replace(tmp, target)
+        except BaseException:
+            if os.path.exists(tmp):
+                os.remove(tmp)
+            raise
+    return md_path
+
+
 UNIFORM_PROP = "delta.universalFormat.enabledFormats"
 
 
@@ -830,7 +938,6 @@ def uniform_sync(spark, path: str, snap=None) -> str:
     prior = _read_prior_metadata(md_dir)
     schema, last_col, schema_id, schemas_hist = _evolved_schema(snap.schema, prior)
     spec = _partition_spec(schema["fields"], list(snap.partition_columns))
-    pav = _partition_avro_schema(spec, schema["fields"])
     ptypes = {
         pf["name"]: next(
             f["type"] for f in schema["fields"] if f["id"] == pf["source-id"]
@@ -874,12 +981,7 @@ def uniform_sync(spark, path: str, snap=None) -> str:
                 break
         if clean:
             try:
-                cur_snap = next(
-                    s
-                    for s in prior.get("snapshots") or []
-                    if s["snapshot-id"] == prior["current-snapshot-id"]
-                )
-                _, prior_manifest_entries = read_avro(cur_snap["manifest-list"])
+                prior_manifest_entries = _current_manifests(prior)
                 live = {rel for rel, _ in snap.files}
                 sync_files = [rel for rel in window_adds if rel in live]
             except (OSError, ValueError, KeyError, StopIteration):
@@ -934,19 +1036,6 @@ def uniform_sync(spark, path: str, snap=None) -> str:
             for m in prior_manifest_entries
             if int(m.get("content") or 0) == 0
         )
-    man_path = os.path.join(md_dir, f"manifest-{snapshot_id}-{uuid.uuid4().hex[:8]}.avro")
-    write_avro(
-        man_path,
-        _manifest_entry_schema(pav),
-        entries,
-        meta={
-            "schema": json.dumps(schema),
-            "partition-spec": json.dumps(spec["fields"]),
-            "partition-spec-id": str(spec["spec-id"]),
-            "format-version": "2",
-            "content": "data",
-        },
-    )
     # ---- deletion vectors -> Iceberg position delete files ----
     # Only on FULL-rewrite syncs: a clean (append-only, DV-free) window
     # reuses the prior manifest list, whose delete manifest is still
@@ -955,7 +1044,7 @@ def uniform_sync(spark, path: str, snap=None) -> str:
     # file's partition must match the data it applies to), rows sorted
     # by (file_path, pos), written with the spec's reserved field-ids
     # (2147483546/2147483545) so foreign Iceberg readers bind them.
-    delete_mlist_entries: list[dict] = []
+    delete_manifests: list[dict] = []
     if sync_files is None:
         dv_groups: dict[tuple, list] = {}
         for rel, pv in snap.files:
@@ -971,7 +1060,6 @@ def uniform_sync(spark, path: str, snap=None) -> str:
             from pos_dlt_spark.sources.dv import decode_dv_runs, read_dv_bytes
 
             del_entries: list[dict] = []
-            del_rows_total = 0
             for key, group in sorted(dv_groups.items()):
                 tbls = []
                 for rel, dv in sorted(group):
@@ -1014,7 +1102,6 @@ def uniform_sync(spark, path: str, snap=None) -> str:
                     md_dir, f"delete-{snapshot_id}-{uuid.uuid4().hex[:8]}.parquet"
                 )
                 pq.write_table(big, dfile)
-                del_rows_total += big.num_rows
                 del_entries.append(
                     {
                         "status": 1,
@@ -1039,67 +1126,17 @@ def uniform_sync(spark, path: str, snap=None) -> str:
                     }
                 )
             if del_entries:
-                dman_path = os.path.join(
-                    md_dir, f"manifest-del-{snapshot_id}-{uuid.uuid4().hex[:8]}.avro"
+                delete_manifests.append(
+                    _write_manifest(md_dir, snapshot_id, del_entries, schema, spec, 1)
                 )
-                write_avro(
-                    dman_path,
-                    _manifest_entry_schema(pav),
-                    del_entries,
-                    meta={
-                        "schema": json.dumps(schema),
-                        "partition-spec": json.dumps(spec["fields"]),
-                        "partition-spec-id": str(spec["spec-id"]),
-                        "format-version": "2",
-                        "content": "deletes",
-                    },
-                )
-                delete_mlist_entries.append(
-                    {
-                        "manifest_path": dman_path,
-                        "manifest_length": os.path.getsize(dman_path),
-                        "partition_spec_id": 0,
-                        "content": 1,
-                        "sequence_number": snapshot_id,
-                        "min_sequence_number": snapshot_id,
-                        "added_snapshot_id": snapshot_id,
-                        "added_files_count": len(del_entries),
-                        "existing_files_count": 0,
-                        "deleted_files_count": 0,
-                        "added_rows_count": del_rows_total,
-                        "existing_rows_count": 0,
-                        "deleted_rows_count": 0,
-                    }
-                )
-
-    mlist_path = os.path.join(md_dir, f"snap-{snapshot_id}-{uuid.uuid4().hex[:8]}.avro")
-    new_entry = {
-        "manifest_path": man_path,
-        "manifest_length": os.path.getsize(man_path),
-        "partition_spec_id": 0,
-        "content": 0,
-        "sequence_number": snapshot_id,
-        "min_sequence_number": snapshot_id,
-        "added_snapshot_id": snapshot_id,
-        "added_files_count": len(entries),
-        "existing_files_count": 0,
-        "deleted_files_count": 0,
-        "added_rows_count": total_rows,
-        "existing_rows_count": 0,
-        "deleted_rows_count": 0,
-    }
+    manifests = prior_manifest_entries
     if entries or sync_files is None:
-        mlist_entries = prior_manifest_entries + [new_entry] + delete_mlist_entries
-    else:
-        # empty window manifest: reuse the prior list untouched
-        os.remove(man_path)
-        mlist_entries = prior_manifest_entries
-    write_avro(
-        mlist_path,
-        _MANIFEST_LIST_SCHEMA,
-        mlist_entries,
-        meta={"format-version": "2"},
-    )
+        # an empty append window reuses the prior list untouched
+        manifests = (
+            manifests
+            + [_write_manifest(md_dir, snapshot_id, entries, schema, spec, 0)]
+            + delete_manifests
+        )
 
     # commit wall time from the Delta commit file itself (deterministic
     # for a given table; no independent clock)
@@ -1108,34 +1145,11 @@ def uniform_sync(spark, path: str, snap=None) -> str:
         ts_ms = int(os.path.getmtime(commit_json) * 1000)
     except OSError:
         ts_ms = 0
-    snapshots = [
-        s for s in (prior.get("snapshots") or []) if s["snapshot-id"] < snapshot_id
-    ]
-    snapshots.append(
-        {
-            "snapshot-id": snapshot_id,
-            "sequence-number": snapshot_id,
-            "timestamp-ms": ts_ms,
-            "manifest-list": mlist_path,
-            "summary": {
-                "operation": (
-                    "overwrite"
-                    if delete_mlist_entries or (sync_files is None and prior)
-                    else "append"
-                ),
-                "added-data-files": str(len(entries)),
-                "total-records": str(prev_total + total_rows),
-            },
-            "schema-id": schema_id,
-        }
-    )
     meta = {
         "format-version": 2,
         "table-uuid": prior.get("table-uuid")
         or str(uuid.uuid5(uuid.NAMESPACE_URL, snap.table_id or path)),
         "location": path,
-        "last-sequence-number": snapshot_id,
-        "last-updated-ms": ts_ms,
         "last-column-id": last_col,
         "current-schema-id": schema_id,
         "schemas": schemas_hist,
@@ -1150,11 +1164,8 @@ def uniform_sync(spark, path: str, snap=None) -> str:
             "write.format.default": "parquet",
             "pos_dlt.synced-delta-version": str(version),
         },
-        "current-snapshot-id": snapshot_id,
-        "snapshots": snapshots,
-        "snapshot-log": [
-            {"snapshot-id": s["snapshot-id"], "timestamp-ms": s["timestamp-ms"]}
-            for s in snapshots
+        "snapshots": [
+            s for s in (prior.get("snapshots") or []) if s["snapshot-id"] < snapshot_id
         ],
         "metadata-log": [],
     }
@@ -1162,17 +1173,14 @@ def uniform_sync(spark, path: str, snap=None) -> str:
         # tags/branches survive every sync (their snapshots are all
         # retained here; expire owns their lifecycle)
         meta["refs"] = prior["refs"]
-    md_path = os.path.join(md_dir, f"v{snapshot_id}.metadata.json")
-    tmp = md_path + f".tmp-{uuid.uuid4().hex[:8]}"
-    with open(tmp, "w", encoding="utf-8") as fh:
-        json.dump(meta, fh)
-    os.replace(tmp, md_path)
-    hint = os.path.join(md_dir, "version-hint.text")
-    tmp = hint + f".tmp-{uuid.uuid4().hex[:8]}"
-    with open(tmp, "w", encoding="utf-8") as fh:
-        fh.write(str(snapshot_id))
-    os.replace(tmp, hint)
-    return md_path
+    summary = {
+        "operation": (
+            "overwrite" if delete_manifests or (sync_files is None and prior) else "append"
+        ),
+        "added-data-files": str(len(entries)),
+        "total-records": str(prev_total + total_rows),
+    }
+    return _commit_snapshot(md_dir, meta, snapshot_id, manifests, summary, ts_ms)
 
 
 def _read_prior_metadata(md_dir: str) -> dict:
@@ -1475,12 +1483,16 @@ def write_iceberg_native(
     ``mode='append'`` adds a snapshot to an EXISTING native table: new
     data files under the table's spec (inherited; ``partition_spec``
     must be omitted), one new manifest APPENDED to the prior manifest
-    list (the incremental shape, O(new files)), prior snapshots and
-    refs carried over. The DataFrame's Iceberg rendering must match the
-    table schema exactly — evolution is the UniForm path's job."""
-    import pandas as pd
-    from pyspark.sql import functions as F
+    list (the incremental shape, O(new files)). The prior metadata
+    passes through whole — snapshots, refs, table properties, schema
+    and spec history — exactly as native DELETE/UPDATE commit. The
+    DataFrame's Iceberg rendering must match the table schema exactly —
+    evolution is the UniForm path's job.
 
+    Both modes commit through :func:`_commit_snapshot`: the new
+    ``v<N>.metadata.json`` and ``version-hint.text`` are each published
+    by one atomic tmp+replace, so a failed commit leaves version N-1
+    current and no partial metadata file behind."""
     md_dir = os.path.join(path, "metadata")
     existing = os.path.isdir(md_dir) and bool(os.listdir(md_dir))
     if mode not in ("create", "append"):
@@ -1488,7 +1500,6 @@ def write_iceberg_native(
     if mode == "create":
         if existing:
             raise ValueError(f"{path} already has Iceberg metadata")
-        prior: dict = {}
         snapshot_id = 1
         schema, last_col = iceberg_schema(df.schema)
         by_name = {f["name"]: f for f in schema["fields"]}
@@ -1508,16 +1519,31 @@ def write_iceberg_native(
                     "field-id": 1000 + i,
                 }
             )
+        spec = {"spec-id": 0, "fields": spec_fields}
+        meta = {
+            "format-version": 2,
+            "table-uuid": str(uuid.uuid5(uuid.NAMESPACE_URL, path)),
+            "location": path,
+            "last-column-id": last_col,
+            "current-schema-id": 0,
+            "schemas": [schema],
+            "default-spec-id": 0,
+            "partition-specs": [spec],
+            "last-partition-id": max([pf["field-id"] for pf in spec_fields], default=999),
+            "default-sort-order-id": 0,
+            "sort-orders": [{"order-id": 0, "fields": []}],
+            "properties": {"write.format.default": "parquet"},
+            "metadata-log": [],
+        }
+        manifests = []
     else:
         if partition_spec is not None:
             raise ValueError("partition_spec is set at table creation only")
-        prior = _read_prior_metadata(md_dir)
-        if not prior:
+        meta = _read_prior_metadata(md_dir)
+        if not meta:
             raise ValueError(f"append requires an existing Iceberg table at {path}")
         schema = next(
-            s
-            for s in prior["schemas"]
-            if s["schema-id"] == prior["current-schema-id"]
+            s for s in meta["schemas"] if s["schema-id"] == meta["current-schema-id"]
         )
         new_schema, _ = iceberg_schema(df.schema)
         if [(f["name"], f["type"]) for f in new_schema["fields"]] != [
@@ -1528,119 +1554,22 @@ def write_iceberg_native(
                 f"{[(f['name'], f['type']) for f in schema['fields']]} vs "
                 f"dataframe {[(f['name'], f['type']) for f in new_schema['fields']]}"
             )
-        last_col = int(prior["last-column-id"])
-        # reuse the prior DEFAULT spec's own id: a foreign table whose
+        # the prior DEFAULT spec, own id included: a foreign table whose
         # default-spec-id != 0 keeps its manifests' partition_spec_id
-        # references intact, and non-default historical specs are
-        # carried through unchanged below
-        prior_default_spec = next(
-            p
-            for p in prior["partition-specs"]
-            if p["spec-id"] == prior["default-spec-id"]
+        # references intact; the whole prior metadata (spec history,
+        # properties, refs) passes through the commit unchanged
+        spec = next(
+            p for p in meta["partition-specs"] if p["spec-id"] == meta["default-spec-id"]
         )
-        spec_fields = prior_default_spec["fields"]
-        snapshot_id = int(prior["current-snapshot-id"]) + 1
-    spec = {
-        "spec-id": int(prior["default-spec-id"]) if mode == "append" else 0,
-        "fields": spec_fields,
-    }
-    pav = _partition_avro_schema(spec, schema["fields"])
-    md_dir = os.path.join(path, "metadata")
+        snapshot_id = int(meta["current-snapshot-id"]) + 1
+        manifests = _current_manifests(meta)
     os.makedirs(md_dir, exist_ok=True)
-
     entries = _stage_native_data(spark, df, path, schema, spec, snapshot_id)
-
-    man_path = os.path.join(md_dir, f"manifest-{snapshot_id}-{uuid.uuid4().hex[:8]}.avro")
-    write_avro(
-        man_path,
-        _manifest_entry_schema(pav),
-        entries,
-        meta={
-            "schema": json.dumps(schema),
-            "partition-spec": json.dumps(spec["fields"]),
-            "partition-spec-id": str(spec["spec-id"]),
-            "format-version": "2",
-            "content": "data",
-        },
+    manifests.append(_write_manifest(md_dir, snapshot_id, entries, schema, spec, 0))
+    # timestamp-ms = snapshot id: deterministic and order-preserving
+    return _commit_snapshot(
+        md_dir, meta, snapshot_id, manifests, {"operation": "append"}, snapshot_id
     )
-    total_rows = sum(e["data_file"]["record_count"] for e in entries)
-    prior_manifests: list[dict] = []
-    if mode == "append":
-        cur = next(
-            s
-            for s in prior["snapshots"]
-            if s["snapshot-id"] == prior["current-snapshot-id"]
-        )
-        _, prior_manifests = read_avro(cur["manifest-list"])
-    mlist_path = os.path.join(md_dir, f"snap-{snapshot_id}-{uuid.uuid4().hex[:8]}.avro")
-    write_avro(
-        mlist_path,
-        _MANIFEST_LIST_SCHEMA,
-        prior_manifests
-        + [
-            {
-                "manifest_path": man_path,
-                "manifest_length": os.path.getsize(man_path),
-                "partition_spec_id": spec["spec-id"],
-                "content": 0,
-                "sequence_number": snapshot_id,
-                "min_sequence_number": snapshot_id,
-                "added_snapshot_id": snapshot_id,
-                "added_files_count": len(entries),
-                "existing_files_count": 0,
-                "deleted_files_count": 0,
-                "added_rows_count": total_rows,
-                "existing_rows_count": 0,
-                "deleted_rows_count": 0,
-            }
-        ],
-        meta={"format-version": "2"},
-    )
-    snapshots = list(prior.get("snapshots") or []) + [
-        {
-            "snapshot-id": snapshot_id,
-            "sequence-number": snapshot_id,
-            "timestamp-ms": snapshot_id,  # deterministic, order-preserving
-            "manifest-list": mlist_path,
-            "summary": {"operation": "append"},
-            "schema-id": int(prior.get("current-schema-id") or 0),
-        }
-    ]
-    meta = {
-        "format-version": 2,
-        "table-uuid": prior.get("table-uuid")
-        or str(uuid.uuid5(uuid.NAMESPACE_URL, path)),
-        "location": path,
-        "last-sequence-number": snapshot_id,
-        "last-updated-ms": snapshot_id,
-        "last-column-id": last_col,
-        "current-schema-id": int(prior.get("current-schema-id") or 0),
-        "schemas": prior.get("schemas") or [schema],
-        # append: the prior table's spec history + default id pass
-        # through unchanged (old manifests reference their spec ids)
-        "default-spec-id": spec["spec-id"],
-        "partition-specs": prior.get("partition-specs") or [spec],
-        "last-partition-id": int(prior.get("last-partition-id") or 0)
-        or max([pf["field-id"] for pf in spec_fields], default=999),
-        "default-sort-order-id": 0,
-        "sort-orders": [{"order-id": 0, "fields": []}],
-        "properties": {"write.format.default": "parquet"},
-        "current-snapshot-id": snapshot_id,
-        "snapshots": snapshots,
-        "snapshot-log": [
-            {"snapshot-id": s["snapshot-id"], "timestamp-ms": s["timestamp-ms"]}
-            for s in snapshots
-        ],
-        "metadata-log": [],
-    }
-    if prior.get("refs"):
-        meta["refs"] = prior["refs"]
-    md_path = os.path.join(md_dir, f"v{snapshot_id}.metadata.json")
-    with open(md_path, "w", encoding="utf-8") as fh:
-        json.dump(meta, fh)
-    with open(os.path.join(md_dir, "version-hint.text"), "w", encoding="utf-8") as fh:
-        fh.write(str(snapshot_id))
-    return md_path
 
 
 def _native_dml_scan(spark, path: str, op: str):
@@ -1768,52 +1697,8 @@ def _native_dml_scan(spark, path: str, op: str):
     return meta, schema, spec, files, df
 
 
-def _write_delete_manifest(
-    md_dir: str,
-    snapshot_id: int,
-    del_entries: list,
-    del_rows_total: int,
-    pav,
-    schema: dict,
-    spec: dict,
-) -> dict:
-    """One content=1 delete manifest over the rendered delete files;
-    returns its manifest-list entry. Shared by the native DML position-
-    delete render and the equality-delete fixture."""
-    dman_path = os.path.join(
-        md_dir, f"manifest-del-{snapshot_id}-{uuid.uuid4().hex[:8]}.avro"
-    )
-    write_avro(
-        dman_path,
-        _manifest_entry_schema(pav),
-        del_entries,
-        meta={
-            "schema": json.dumps(schema),
-            "partition-spec": json.dumps(spec["fields"]),
-            "partition-spec-id": str(spec["spec-id"]),
-            "format-version": "2",
-            "content": "deletes",
-        },
-    )
-    return {
-        "manifest_path": dman_path,
-        "manifest_length": os.path.getsize(dman_path),
-        "partition_spec_id": spec["spec-id"],
-        "content": 1,
-        "sequence_number": snapshot_id,
-        "min_sequence_number": snapshot_id,
-        "added_snapshot_id": snapshot_id,
-        "added_files_count": len(del_entries),
-        "existing_files_count": 0,
-        "deleted_files_count": 0,
-        "added_rows_count": del_rows_total,
-        "existing_rows_count": 0,
-        "deleted_rows_count": 0,
-    }
-
-
 def _render_native_deletes_distributed(
-    spark, md_dir: str, snapshot_id: int, pairs, files: list, pav, schema: dict, spec: dict
+    spark, md_dir: str, snapshot_id: int, pairs, files: list, schema: dict, spec: dict
 ) -> dict:
     """Render matched ``(__ice_path, __ice_pos)`` pairs as position-
     delete parquets under ONE content=1 delete manifest (returns its
@@ -1872,7 +1757,6 @@ def _render_native_deletes_distributed(
             # native data files would start carrying field ids)
             spark.conf.unset("spark.sql.parquet.fieldId.write.enabled")
     del_entries: list[dict] = []
-    del_rows_total = 0
     for d in sorted(os.listdir(stage)):
         if not d.startswith("__part="):
             continue
@@ -1885,7 +1769,6 @@ def _render_native_deletes_distributed(
             )
             os.replace(os.path.join(stage, d, n), dfile)
             fmeta = pq.read_metadata(dfile)
-            del_rows_total += fmeta.num_rows
             del_entries.append(
                 {
                     "status": 1,
@@ -1905,53 +1788,7 @@ def _render_native_deletes_distributed(
                 }
             )
     _sh.rmtree(stage, ignore_errors=True)
-    return _write_delete_manifest(
-        md_dir, snapshot_id, del_entries, del_rows_total, pav, schema, spec
-    )
-
-
-def _commit_native_snapshot(
-    md_dir: str, meta: dict, snapshot_id: int, new_mlist_entries: list, summary: dict
-) -> str:
-    """Append one snapshot to a native table: prior manifest-list
-    entries carried verbatim + the new entries, metadata JSON re-emitted
-    with prior snapshots/refs/schemas/spec history unchanged."""
-    cur = next(
-        s for s in meta["snapshots"] if s["snapshot-id"] == meta["current-snapshot-id"]
-    )
-    _, prior_manifests = read_avro(cur["manifest-list"])
-    mlist_path = os.path.join(md_dir, f"snap-{snapshot_id}-{uuid.uuid4().hex[:8]}.avro")
-    write_avro(
-        mlist_path,
-        _MANIFEST_LIST_SCHEMA,
-        prior_manifests + new_mlist_entries,
-        meta={"format-version": "2"},
-    )
-    new_meta = dict(meta)
-    new_meta["snapshots"] = list(meta.get("snapshots") or []) + [
-        {
-            "snapshot-id": snapshot_id,
-            "sequence-number": snapshot_id,
-            "timestamp-ms": snapshot_id,  # deterministic, order-preserving
-            "manifest-list": mlist_path,
-            "summary": summary,
-            "schema-id": int(meta["current-schema-id"]),
-        }
-    ]
-    new_meta["snapshot-log"] = [
-        {"snapshot-id": s["snapshot-id"], "timestamp-ms": s["timestamp-ms"]}
-        for s in new_meta["snapshots"]
-    ]
-    new_meta["current-snapshot-id"] = snapshot_id
-    new_meta["last-sequence-number"] = snapshot_id
-    md_path = os.path.join(md_dir, f"v{snapshot_id}.metadata.json")
-    tmp = md_path + f".tmp-{uuid.uuid4().hex[:8]}"
-    with open(tmp, "w", encoding="utf-8") as fh:
-        json.dump(new_meta, fh)
-    os.replace(tmp, md_path)
-    with open(os.path.join(md_dir, "version-hint.text"), "w", encoding="utf-8") as fh:
-        fh.write(str(snapshot_id))
-    return md_path
+    return _write_manifest(md_dir, snapshot_id, del_entries, schema, spec, 1)
 
 
 def append_equality_delete(
@@ -1983,7 +1820,6 @@ def append_equality_delete(
         p for p in meta["partition-specs"] if p["spec-id"] == meta["default-spec-id"]
     )
     snapshot_id = int(meta["current-snapshot-id"]) + 1
-    pav = _partition_avro_schema(spec, schema["fields"])
     dfile = os.path.join(
         md_dir, f"eqdelete-{snapshot_id}-{uuid.uuid4().hex[:8]}.parquet"
     )
@@ -2006,15 +1842,14 @@ def append_equality_delete(
             "upper_bounds": None,
         },
     }
-    dman_entry = _write_delete_manifest(
-        md_dir, snapshot_id, [entry], nrows, pav, schema, spec
-    )
-    return _commit_native_snapshot(
+    dman_entry = _write_manifest(md_dir, snapshot_id, [entry], schema, spec, 1)
+    return _commit_snapshot(
         md_dir,
         meta,
         snapshot_id,
-        [dman_entry],
+        _current_manifests(meta) + [dman_entry],
         {"operation": "delete", "equality-deletes": str(nrows)},
+        snapshot_id,
     )
 
 
@@ -2060,19 +1895,19 @@ def delete_iceberg_native(spark, path: str, predicate: str) -> str | None:
     if n == 0:
         return None
     snapshot_id = int(meta["current-snapshot-id"]) + 1
-    pav = _partition_avro_schema(spec, schema["fields"])
     dman_entry = _render_native_deletes_distributed(
-        spark, md_dir, snapshot_id, pairs, files, pav, schema, spec
+        spark, md_dir, snapshot_id, pairs, files, schema, spec
     )
-    return _commit_native_snapshot(
+    return _commit_snapshot(
         md_dir,
         meta,
         snapshot_id,
-        [dman_entry],
+        _current_manifests(meta) + [dman_entry],
         {
             "operation": "delete",
             "total-position-deletes": str(dman_entry["added_rows_count"]),
         },
+        snapshot_id,
     )
 
 
@@ -2116,9 +1951,8 @@ def update_iceberg_native(
     if n == 0:
         return None
     snapshot_id = int(meta["current-snapshot-id"]) + 1
-    pav = _partition_avro_schema(spec, schema["fields"])
     dman_entry = _render_native_deletes_distributed(
-        spark, md_dir, snapshot_id, pairs, files, pav, schema, spec
+        spark, md_dir, snapshot_id, pairs, files, schema, spec
     )
     # simultaneous SET: every RHS evaluates against the pre-update row
     by_name = {f["name"]: f for f in schema["fields"]}
@@ -2136,47 +1970,17 @@ def update_iceberg_native(
     data_entries = _stage_native_data(
         spark, replacements, path, schema, spec, snapshot_id
     )
-    man_path = os.path.join(
-        md_dir, f"manifest-{snapshot_id}-{uuid.uuid4().hex[:8]}.avro"
-    )
-    write_avro(
-        man_path,
-        _manifest_entry_schema(pav),
-        data_entries,
-        meta={
-            "schema": json.dumps(schema),
-            "partition-spec": json.dumps(spec["fields"]),
-            "partition-spec-id": str(spec["spec-id"]),
-            "format-version": "2",
-            "content": "data",
-        },
-    )
-    data_entry = {
-        "manifest_path": man_path,
-        "manifest_length": os.path.getsize(man_path),
-        "partition_spec_id": spec["spec-id"],
-        "content": 0,
-        "sequence_number": snapshot_id,
-        "min_sequence_number": snapshot_id,
-        "added_snapshot_id": snapshot_id,
-        "added_files_count": len(data_entries),
-        "existing_files_count": 0,
-        "deleted_files_count": 0,
-        "added_rows_count": sum(
-            e["data_file"]["record_count"] for e in data_entries
-        ),
-        "existing_rows_count": 0,
-        "deleted_rows_count": 0,
-    }
-    return _commit_native_snapshot(
+    data_entry = _write_manifest(md_dir, snapshot_id, data_entries, schema, spec, 0)
+    return _commit_snapshot(
         md_dir,
         meta,
         snapshot_id,
-        [data_entry, dman_entry],
+        _current_manifests(meta) + [data_entry, dman_entry],
         {
             "operation": "overwrite",
             "total-position-deletes": str(dman_entry["added_rows_count"]),
         },
+        snapshot_id,
     )
 
 
@@ -2364,13 +2168,15 @@ def uniform_expire_snapshots(path: str, keep: int = 5) -> list[str]:
     """Iceberg ``expireSnapshots`` for the emitted metadata: keep the
     newest ``keep`` snapshots (the current one always survives), rewrite
     the current metadata JSON without the expired entries (atomic
-    tmp+replace — snapshot ids are unchanged, so the version-hint stays
-    valid), and delete the files only expired snapshots used: their
-    ``v<id>.metadata.json``, their manifest lists, and any manifest
-    referenced by NO surviving manifest list (incremental emission
-    REUSES manifests across snapshots, so reference-counting against
-    every retained list is the correctness condition — symmetric to the
-    Delta log's sidecar GC).
+    tmp+replace through :func:`_publish_metadata` — snapshot ids are
+    unchanged, so the version-hint stays valid), and delete the files
+    only expired snapshots used: their ``v<id>.metadata.json``, their
+    manifest lists, and any manifest referenced by NO surviving manifest
+    list (incremental emission REUSES manifests across snapshots, so
+    reference-counting against every retained list is the correctness
+    condition — symmetric to the Delta log's sidecar GC). Manifest lists
+    no retained snapshot names (``snap-*.avro`` left by a commit that
+    failed before its metadata publish) go in the same sweep.
 
     UniForm twins' DATA files are never touched: they belong to the
     Delta side, whose VACUUM owns their retention. NATIVE tables (no
@@ -2410,11 +2216,7 @@ def uniform_expire_snapshots(path: str, keep: int = 5) -> list[str]:
     meta["snapshot-log"] = [
         e for e in meta.get("snapshot-log") or [] if e["snapshot-id"] in kept_ids
     ]
-    md_path = os.path.join(md_dir, f"v{cur}.metadata.json")
-    tmp = md_path + f".tmp-{uuid.uuid4().hex[:8]}"
-    with open(tmp, "w", encoding="utf-8") as fh:
-        json.dump(meta, fh)
-    os.replace(tmp, md_path)
+    _publish_metadata(md_dir, cur, meta, hint=False)
 
     referenced: set[str] = set()
     # a retained-but-unreadable manifest list could reference ANY
@@ -2471,12 +2273,17 @@ def uniform_expire_snapshots(path: str, keep: int = 5) -> list[str]:
         if s["snapshot-id"] != cur and os.path.exists(old_md):
             _rm(old_md)
     # manifests referenced by no surviving list (expired lists already
-    # deleted above cannot re-reference them)
+    # deleted above cannot re-reference them), and manifest lists no
+    # retained snapshot names — a commit that failed after writing its
+    # list leaves one behind
     if manifest_sweep_safe:
+        kept_lists = {os.path.basename(s["manifest-list"]) for s in kept}
         for n in sorted(os.listdir(md_dir)):
-            if not n.startswith("manifest-") or not n.endswith(".avro"):
+            if not n.endswith(".avro"):
                 continue
-            if n not in referenced:
+            if (n.startswith("manifest-") and n not in referenced) or (
+                n.startswith("snap-") and n not in kept_lists
+            ):
                 _rm(os.path.join(md_dir, n))
     # position-delete parquets referenced by no surviving manifest
     if delete_sweep_safe:
@@ -2554,12 +2361,7 @@ def uniform_set_ref(
     refs = dict(meta.get("refs") or {})
     refs[name] = {"snapshot-id": sid, "type": ref_type}
     meta["refs"] = refs
-    cur = meta["current-snapshot-id"]
-    md_path = os.path.join(md_dir, f"v{cur}.metadata.json")
-    tmp = md_path + f".tmp-{uuid.uuid4().hex[:8]}"
-    with open(tmp, "w", encoding="utf-8") as fh:
-        json.dump(meta, fh)
-    os.replace(tmp, md_path)
+    _publish_metadata(md_dir, meta["current-snapshot-id"], meta, hint=False)
 
 
 def uniform_drop_ref(path: str, name: str) -> None:
@@ -2576,12 +2378,7 @@ def uniform_drop_ref(path: str, name: str) -> None:
     del refs[name]
     meta = dict(meta)
     meta["refs"] = refs
-    cur = meta["current-snapshot-id"]
-    md_path = os.path.join(md_dir, f"v{cur}.metadata.json")
-    tmp = md_path + f".tmp-{uuid.uuid4().hex[:8]}"
-    with open(tmp, "w", encoding="utf-8") as fh:
-        json.dump(meta, fh)
-    os.replace(tmp, md_path)
+    _publish_metadata(md_dir, meta["current-snapshot-id"], meta, hint=False)
 
 
 def _resolve_snapshot(

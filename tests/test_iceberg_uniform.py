@@ -1964,3 +1964,131 @@ def test_expire_collects_native_orphan_data_files(spark, tmp_path):
     before = set(glob.glob(os.path.join(t2, "*.parquet")))
     uf.uniform_expire_snapshots(t2, keep=1)
     assert set(glob.glob(os.path.join(t2, "*.parquet"))) == before
+
+
+def _native_bucketed(spark, t):
+    df = spark.range(0, 100).select(
+        "id", F.concat(F.lit("g"), (F.col("id") % 3).cast("string")).alias("grp")
+    )
+    uf.write_iceberg_native(spark, df, t, partition_spec=[("id", "bucket[4]")])
+
+
+def _native_append(spark, t):
+    df = spark.range(100, 110).select("id", F.lit("gx").alias("grp"))
+    return uf.write_iceberg_native(spark, df, t, mode="append")
+
+
+_NATIVE_COMMITS = {
+    "append": _native_append,
+    "delete": lambda spark, t: uf.delete_iceberg_native(spark, t, "id % 7 = 0"),
+    "update": lambda spark, t: uf.update_iceberg_native(
+        spark, t, "id < 10", {"grp": "'z'"}
+    ),
+    "equality_delete": lambda spark, t: uf.append_equality_delete(
+        t, {"grp": ["g1"]}, [2]
+    ),
+}
+
+
+@pytest.mark.parametrize("commit", list(_NATIVE_COMMITS))
+def test_native_commit_keeps_properties_and_stamps_last_updated(
+    spark, tmp_path, commit
+):
+    """Every native snapshot commit carries the table's properties
+    through and stamps ``last-updated-ms`` with the new snapshot's
+    ``timestamp-ms``."""
+    t = str(tmp_path / commit)
+    _native_bucketed(spark, t)
+    md_dir = os.path.join(t, "metadata")
+    meta = uf._read_prior_metadata(md_dir)
+    meta["properties"]["owner"] = "inventory"
+    with open(os.path.join(md_dir, "v1.metadata.json"), "w", encoding="utf-8") as fh:
+        json.dump(meta, fh)
+    md = _NATIVE_COMMITS[commit](spark, t)
+    with open(md, encoding="utf-8") as fh:
+        after = json.load(fh)
+    assert after["properties"].get("owner") == "inventory"
+    cur = uf._resolve_snapshot(after)
+    assert cur["snapshot-id"] == 2
+    assert after["last-updated-ms"] == cur["timestamp-ms"]
+
+
+def _fail_metadata_writes(monkeypatch):
+    """Make every Iceberg table-metadata JSON write die partway through
+    (a full disk or a killed writer); other JSON writes go through."""
+    real_dump = json.dump
+
+    def dump(obj, fh, *args, **kwargs):
+        if ".metadata.json" not in getattr(fh, "name", ""):
+            return real_dump(obj, fh, *args, **kwargs)
+        fh.write(json.dumps(obj)[:40])
+        raise OSError("simulated write failure")
+
+    monkeypatch.setattr(json, "dump", dump)
+
+
+_FAILED_PUBLISH = {
+    "native_append": (_native_bucketed, _native_append),
+    "native_delete": (_native_bucketed, _NATIVE_COMMITS["delete"]),
+    "uniform_sync": (
+        lambda spark, t: write_delta(
+            spark.range(0, 50).coalesce(1), t, configuration=UNIFORM_CONF
+        ),
+        lambda spark, t: write_delta(spark.range(50, 80).coalesce(1), t),
+    ),
+}
+
+
+@pytest.mark.parametrize("commit", list(_FAILED_PUBLISH))
+def test_failed_metadata_publish_leaves_prior_version_current(
+    spark, tmp_path, monkeypatch, commit
+):
+    """A commit whose metadata write fails leaves no ``v<N+1>`` and no
+    tmp file, the hint still names N, and both discovery rules (hint,
+    and max-version without it) resolve snapshot N."""
+    setup, run = _FAILED_PUBLISH[commit]
+    t = str(tmp_path / commit)
+    setup(spark, t)
+    md_dir = os.path.join(t, "metadata")
+    n = uf._read_prior_metadata(md_dir)["current-snapshot-id"]
+    _fail_metadata_writes(monkeypatch)
+    with pytest.raises(OSError, match="simulated write failure"):
+        run(spark, t)
+    monkeypatch.undo()
+    names = os.listdir(md_dir)
+    assert f"v{n + 1}.metadata.json" not in names
+    assert not [x for x in names if ".tmp-" in x]
+    hint = os.path.join(md_dir, "version-hint.text")
+    with open(hint, encoding="utf-8") as fh:
+        assert fh.read().strip() == str(n)
+    assert uf._read_prior_metadata(md_dir)["current-snapshot-id"] == n
+    os.remove(hint)
+    assert uf._read_prior_metadata(md_dir)["current-snapshot-id"] == n
+
+
+def test_expire_sweeps_orphan_manifest_lists(spark, tmp_path, monkeypatch):
+    """A commit that failed after writing its manifest list leaves a
+    ``snap-*.avro`` no snapshot names; expire removes it while every
+    retained snapshot still reads."""
+    import glob
+
+    t = str(tmp_path / "orphan_list")
+    _native_bucketed(spark, t)
+    _native_append(spark, t)
+    uf.delete_iceberg_native(spark, t, "id % 5 = 0")
+    _fail_metadata_writes(monkeypatch)
+    with pytest.raises(OSError, match="simulated write failure"):
+        _native_append(spark, t)
+    monkeypatch.undo()
+    md_dir = os.path.join(t, "metadata")
+    orphans = glob.glob(os.path.join(md_dir, "snap-4-*.avro"))
+    assert len(orphans) == 1
+    deleted = uf.uniform_expire_snapshots(t, keep=2)
+    assert os.path.basename(orphans[0]) in deleted
+    assert not os.path.exists(orphans[0])
+    meta = uf._read_prior_metadata(md_dir)
+    kept = {os.path.basename(s["manifest-list"]) for s in meta["snapshots"]}
+    assert {os.path.basename(p) for p in glob.glob(os.path.join(md_dir, "snap-*.avro"))} == kept
+    assert [s["snapshot-id"] for s in meta["snapshots"]] == [2, 3]
+    assert uf.read_iceberg(spark, t, snapshot_id=2).count() == 110
+    assert uf.read_iceberg(spark, t, snapshot_id=3).count() == 88
