@@ -30,7 +30,7 @@ from collections.abc import Callable, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pos_dlt_spark.operators.cdc import ApplyChanges
+from pos_dlt_spark.operators.cdc import ApplyChanges, _rmdir_if_no_bucket
 
 
 class IncrementalKeyedView:
@@ -125,17 +125,7 @@ class IncrementalKeyedView:
             .partitionBy("__bucket")
             .parquet(os.path.join(self.target_path, epoch_dir))
         )
-        buckets = dict(view_manifest["buckets"]) if view_manifest else {}
-        retired = [buckets[str(b)] for b in stale if str(b) in buckets]
-        for b in stale:
-            rel = os.path.join(epoch_dir, f"__bucket={b}")
-            if os.path.isdir(os.path.join(self.target_path, rel)):
-                buckets[str(b)] = rel
-            else:
-                # the recompute produced no rows for this bucket: it has
-                # no directory — drop its pointer instead of pointing at
-                # a path that does not exist
-                buckets.pop(str(b), None)
+        buckets, retired = self._t._repoint(view_manifest, stale, epoch_dir)
         manifest = {
             "version": version,
             "n_buckets": self._t.n_buckets,
@@ -156,12 +146,7 @@ class IncrementalKeyedView:
         for rel in (view_manifest or {}).get("retired", ()):
             gone = os.path.join(self.target_path, rel)
             shutil.rmtree(gone, ignore_errors=True)
-            parent = os.path.dirname(gone)
-            try:
-                if all(e.startswith("_") for e in os.listdir(parent)):
-                    shutil.rmtree(parent, ignore_errors=True)
-            except FileNotFoundError:
-                pass
+            _rmdir_if_no_bucket(os.path.dirname(gone))
         return stale
 
 

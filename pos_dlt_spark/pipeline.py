@@ -331,6 +331,19 @@ _SQL_FLOW_RE = re.compile(
     r"(?:(?P<byname>BY\s+NAME)\s+)?(?P<select>SELECT\s+.*)$",
     re.I | re.S,
 )
+_SQL_STREAM_REF = r"STREAM\s*\(\s*LIVE\.{}\s*\)"
+
+
+def _live_refs(select: str) -> tuple[list[str], list[str]]:
+    """The ``(stream, batch)`` pipeline tables a DLT-SQL body reads: the
+    ``STREAM(LIVE.x)`` names, then the bare ``LIVE.x`` names left once
+    those are stripped — a stream-static body may read one table both
+    ways."""
+    stream_ref = _SQL_STREAM_REF.format(r"([A-Za-z_]\w*)")
+    stream = sorted(set(re.findall(stream_ref, select, re.I)))
+    rest = re.sub(_SQL_STREAM_REF.format(r"[A-Za-z_]\w*"), "", select, flags=re.I)
+    batch = sorted(set(re.findall(r"\bLIVE\.([A-Za-z_]\w*)", rest, re.I)))
+    return stream, batch
 
 
 def _sql_create_clauses(rest: str):
@@ -419,10 +432,10 @@ class Pipeline:
         self._streams_pending: list[tuple[TableDef, DataFrame]] = []
         # non-interval SET keys from sql_table scripts (DLT pipeline conf)
         self.sql_conf: dict[str, str] = {}
-        # DLT-SQL LIVE VIEWs: name -> (select_sql, batch_deps,
-        # expanded_table_deps). Views are UNPERSISTED — they inline into
-        # each consumer's single spark.sql plan at refresh time.
-        self.sql_views: dict[str, tuple[str, tuple, set]] = {}
+        # DLT-SQL LIVE VIEWs: name -> (select_sql, expanded_table_deps).
+        # Views are UNPERSISTED — they inline into each consumer's single
+        # spark.sql plan at refresh time.
+        self.sql_views: dict[str, tuple[str, set]] = {}
         # global declaration sequence across ALL dataset categories —
         # topo_order's Kahn tiebreak must respect cross-category
         # declaration order (a live table declared AFTER the streaming
@@ -603,20 +616,12 @@ class Pipeline:
                         f"{vname}: STREAM() inside a LIVE VIEW is not "
                         "supported — stream through a STREAMING LIVE TABLE"
                     )
-                vdeps = tuple(
-                    sorted(set(re.findall(r"\bLIVE\.([A-Za-z_]\w*)", select, re.I)))
-                )
+                vdeps = _live_refs(select)[1]
                 if not vdeps:
                     raise ValueError(
                         f"{vname}: no LIVE.<table> reference in the view body"
                     )
-                table_deps: set[str] = set()
-                for d in vdeps:
-                    if d in self.sql_views:
-                        table_deps |= self.sql_views[d][2]
-                    else:
-                        table_deps.add(d)
-                self.sql_views[vname] = (select, vdeps, table_deps)
+                self.sql_views[vname] = (select, self._table_deps(vdeps))
                 created.append(vname)
                 continue
             mf = _SQL_FLOW_RE.match(stmt)
@@ -630,19 +635,7 @@ class Pipeline:
                         "by column name, not position"
                     )
                 select = mf.group("select")
-                stream_deps = sorted(
-                    set(
-                        re.findall(
-                            r"STREAM\s*\(\s*LIVE\.([A-Za-z_]\w*)\s*\)",
-                            select,
-                            re.I,
-                        )
-                    )
-                )
-                batch_deps = sorted(
-                    set(re.findall(r"\bLIVE\.([A-Za-z_]\w*)", select, re.I))
-                    - set(stream_deps)
-                )
+                stream_deps, batch_deps = _live_refs(select)
                 if not stream_deps:
                     raise ValueError(
                         f"flow {fname!r}: an append flow needs a "
@@ -664,39 +657,14 @@ class Pipeline:
                         "without AS) nor a sink"
                     )
 
-                def ffn(
-                    spark: SparkSession,
-                    _sel: str = select,
-                    _sd: tuple = tuple(stream_deps),
-                    _bd: tuple = tuple(batch_deps),
-                ) -> DataFrame:
-                    q = _sel
-                    for d in _sd:
-                        vn = f"__live_stream__{d}"
-                        self.read_stream(spark, d).createOrReplaceTempView(vn)
-                        q = re.sub(
-                            rf"STREAM\s*\(\s*LIVE\.{d}\s*\)", vn, q, flags=re.I
-                        )
-                    for d in _bd:
-                        vn = f"__live__{d}"
-                        if d in self.sql_views:
-                            self._materialize_sql_view(spark, d)
-                        else:
-                            self.read(spark, d).createOrReplaceTempView(vn)
-                        q = re.sub(rf"\bLIVE\.{d}\b", vn, q, flags=re.I)
-                    return spark.sql(q)
-
-                self.append_flow(target=target, name=fname)(ffn)
+                self.append_flow(target=target, name=fname)(
+                    self._sql_body(select)
+                )
                 # first-run scheduling: the flow's edges are knowable at
                 # declaration — record them on the shared target
                 tgt = self.streaming_targets.get(target)
                 deps_holder = tgt.deps if tgt is not None else self.sinks[target].deps
-                for d in stream_deps + batch_deps:
-                    deps_holder.add(
-                        d
-                        if d not in self.sql_views
-                        else next(iter(self.sql_views[d][2]), d)
-                    )
+                deps_holder |= self._table_deps(stream_deps + batch_deps)
                 created.append(fname)
                 continue
             m = _SQL_CREATE_RE.match(stmt)
@@ -724,19 +692,7 @@ class Pipeline:
                 }
                 created.append(tname)
                 continue
-            stream_deps = sorted(
-                set(
-                    re.findall(
-                        r"STREAM\s*\(\s*LIVE\.([A-Za-z_]\w*)\s*\)", select, re.I
-                    )
-                )
-            )
-            without_stream = re.sub(
-                r"STREAM\s*\(\s*LIVE\.[A-Za-z_]\w*\s*\)", "", select, flags=re.I
-            )
-            batch_deps = sorted(
-                set(re.findall(r"\bLIVE\.([A-Za-z_]\w*)", without_stream, re.I))
-            )
+            stream_deps, batch_deps = _live_refs(select)
             if stream_deps and not streaming:
                 raise ValueError(
                     f"{tname}: STREAM(LIVE.x) requires CREATE STREAMING "
@@ -754,52 +710,53 @@ class Pipeline:
                     "pipeline SQL tables read other pipeline tables"
                 )
 
-            def fn(
-                spark: SparkSession,
-                _sel: str = select,
-                _sd: tuple = tuple(stream_deps),
-                _bd: tuple = tuple(batch_deps),
-            ) -> DataFrame:
-                q = _sel
-                for d in _sd:
-                    vn = f"__live_stream__{d}"
-                    self.read_stream(spark, d).createOrReplaceTempView(vn)
-                    q = re.sub(
-                        rf"STREAM\s*\(\s*LIVE\.{d}\s*\)", vn, q, flags=re.I
-                    )
-                for d in _bd:
-                    vn = f"__live__{d}"
-                    if d in self.sql_views:
-                        self._materialize_sql_view(spark, d)
-                    else:
-                        self.read(spark, d).createOrReplaceTempView(vn)
-                    q = re.sub(rf"\bLIVE\.{d}\b", vn, q, flags=re.I)
-                return spark.sql(q)
-
-            # topo edges point at TABLES: a dep that is a LIVE VIEW
-            # contributes the view's own (expanded) table deps instead
-            table_deps = set(stream_deps)
-            for d in batch_deps:
-                if d in self.sql_views:
-                    table_deps |= self.sql_views[d][2]
-                else:
-                    table_deps.add(d)
             self._note_decl(tname)
             self.tables[tname] = TableDef(
                 name=tname,
-                fn=fn,
+                fn=self._sql_body(select),
                 kind="stream" if streaming else "live",
                 comment=comment,
                 interval=pending_interval,
                 partition_by=parts,
                 table_properties=props,
-                deps=table_deps,
+                deps=self._table_deps(stream_deps + batch_deps),
                 expectations=exps,
             )
             created.append(tname)
         if not created:
             raise ValueError("no CREATE LIVE TABLE statement in script")
         return created
+
+    def _table_deps(self, deps: list[str]) -> set[str]:
+        """Topo edges point at TABLES: a dep that is a LIVE VIEW
+        contributes the view's own (expanded) table deps instead."""
+        out: set[str] = set()
+        for d in deps:
+            out |= self.sql_views[d][1] if d in self.sql_views else {d}
+        return out
+
+    def _sql_body(self, select: str):
+        """The defining function of a DLT-SQL table or flow body."""
+        return lambda spark: self._live_sql(spark, select)
+
+    def _live_sql(self, spark: SparkSession, select: str, _stack: tuple = ()) -> DataFrame:
+        """Run a DLT-SQL body as one ``spark.sql``: each ``STREAM(LIVE.x)``
+        becomes a temp view over :meth:`read_stream`, each bare ``LIVE.x``
+        one over :meth:`read` — or the inlined LIVE VIEW ``x``."""
+        stream_deps, batch_deps = _live_refs(select)
+        q = select
+        for d in stream_deps:
+            vn = f"__live_stream__{d}"
+            self.read_stream(spark, d).createOrReplaceTempView(vn)
+            q = re.sub(_SQL_STREAM_REF.format(d), vn, q, flags=re.I)
+        for d in batch_deps:
+            vn = f"__live__{d}"
+            if d in self.sql_views:
+                self._materialize_sql_view(spark, d, _stack)
+            else:
+                self.read(spark, d).createOrReplaceTempView(vn)
+            q = re.sub(rf"\bLIVE\.{d}\b", vn, q, flags=re.I)
+        return spark.sql(q)
 
     def _materialize_sql_view(
         self, spark: SparkSession, name: str, _stack: tuple = ()
@@ -814,16 +771,7 @@ class Pipeline:
             raise CycleError(
                 f"LIVE VIEW cycle: {' -> '.join(_stack + (name,))}"
             )
-        select, vdeps, _ = self.sql_views[name]
-        q = select
-        for d in vdeps:
-            vn = f"__live__{d}"
-            if d in self.sql_views:
-                self._materialize_sql_view(spark, d, _stack + (name,))
-            else:
-                self.read(spark, d).createOrReplaceTempView(vn)
-            q = re.sub(rf"\bLIVE\.{d}\b", vn, q, flags=re.I)
-        df = spark.sql(q)
+        df = self._live_sql(spark, self.sql_views[name][0], _stack + (name,))
         df.createOrReplaceTempView(f"__live__{name}")
         return df
 
@@ -1476,25 +1424,38 @@ class PipelineRunner:
     def _fail_violations(metrics: dict[str, dict]) -> bool:
         return any(m["failed"] for m in metrics.values() if m["action"] == "fail")
 
-    def _write_live(self, df: DataFrame, t: TableDef) -> int:
-        from pyspark.sql import Observation
+    def _meter(self, df: DataFrame, t: TableDef, exp_obs, rows_obs) -> DataFrame:
+        """The metering prelude every table write shares: observe the
+        expectations (``exp_obs``) BEFORE the drop filters, so failed ==
+        dropped by definition, then observe the post-drop row count
+        (``rows_obs``) — both ride the write job itself, zero extra scans.
+        A batch write passes :class:`Observation` objects, a stream passes
+        observation names (per-micro-batch rows surface in
+        ``StreamingQueryProgress.observedMetrics``)."""
         from pyspark.sql import functions as F
 
         exps = t.expectations
-        obs = None
         if exps:
-            obs = Observation()
-            # observe BEFORE drop filters: failed == dropped by definition
-            df = df.observe(obs, *self._expectation_aggs(exps))
+            df = df.observe(exp_obs, *self._expectation_aggs(exps))
             df = self._apply_drops(df, exps)
-        # rows_written rides the SAME write job (post-drop count) — the
-        # event-log entry costs zero extra scans
-        out_obs = Observation()
-        df = df.observe(out_obs, F.count(F.lit(1)).cast("bigint").alias("n"))
+        df = df.observe(rows_obs, F.count(F.lit(1)).cast("bigint").alias("n"))
         if t.partition_by:
-            # same tuple-routing as the stream sink (see _run_stream):
-            # bound output files to ~#partition tuples, not tasks x tuples
+            # route rows to their partition tuple BEFORE the partitioned
+            # sink: without this every sink task writes one file per
+            # tuple it sees (tasks x tuples — measured 62k files for
+            # 100k rows at 32 tasks x ~3000 (store, day) tuples in the
+            # r11 decade), and at 20M events the commit drowns in file
+            # metadata. One extra hash shuffle bounds files to ~#tuples.
             df = df.repartition(*t.partition_by)
+        return df
+
+    def _write_live(self, df: DataFrame, t: TableDef) -> int:
+        from pyspark.sql import Observation
+
+        exps = t.expectations
+        obs = Observation() if exps else None
+        out_obs = Observation()
+        df = self._meter(df, t, obs, out_obs)
         if self.p.storage_format == "delta":
             self._write_live_delta(df, t, obs)
             return int(out_obs.get["n"] or 0)
@@ -1548,84 +1509,85 @@ class PipelineRunner:
             precommit=precommit if exps else None,
         )
 
-    def _run_stream_delta(self, df: DataFrame, t: TableDef):
-        """Stream table as per-micro-batch Delta APPEND commits.
-        Exactly-once: each batch commit carries a SetTransaction
-        (appId=pipeline/table, version=batch_id), so a foreachBatch replay
-        after a crash between sink-write and checkpoint-advance is skipped
-        by the writer instead of duplicating rows — the same idempotence
-        contract delta's own streaming sink implements."""
-        from pos_dlt_spark.sources.delta_writer import delta_stream_sink
+    @staticmethod
+    def _sink(fmt: str, path: str, app_id: str, partition_by, shared: bool):
+        """The sink of one flow into ``path``. Delta commits each
+        micro-batch with a SetTransaction (``app_id``, batch id), so a
+        foreachBatch replay after a crash between sink-write and
+        checkpoint-advance is skipped by the writer instead of duplicating
+        rows — the idempotence contract delta's own streaming sink
+        implements. A parquet stream table's one query keeps Spark's file
+        sink (returned as its path): its ``_spark_metadata`` log makes it
+        exactly-once and downstream reads list files through it. Flows
+        ``shared`` with others cannot share one file sink, so they append
+        per batch without a log (at-least-once on replay)."""
+        if fmt == "delta":
+            # looked up at call time: tracing wraps this module attribute
+            from pos_dlt_spark.sources.delta_writer import delta_stream_sink
 
-        path = self.p.table_path(t.name)
-        app_id = f"pos_dlt:{self.p.name}:{t.name}"
-        sink = delta_stream_sink(path, app_id, partition_by=t.partition_by or None)
+            return delta_stream_sink(path, app_id, partition_by=partition_by or None)
+        if not shared:
+            return path
 
-        return (
-            df.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", self.p.checkpoint_path(t.name))
-            .trigger(availableNow=True)
-            .start()
-        )
+        def append(batch_df: DataFrame, batch_id: int) -> None:
+            w = batch_df.write.mode("append")
+            if partition_by:
+                w = w.partitionBy(*partition_by)
+            w.parquet(path)
 
-    def _run_stream(self, df: DataFrame, t: TableDef) -> int:
-        from pyspark.sql import functions as F
+        return append
 
-        exps = t.expectations
-        obs_name = f"__expectations_{t.name}"
-        if exps:
-            # streaming observe: per-micro-batch metric rows surface in
-            # StreamingQueryProgress.observedMetrics; totals are the sum
-            df = df.observe(obs_name, *self._expectation_aggs(exps))
-            df = self._apply_drops(df, exps)
-        out_name = f"__rows_out_{t.name}"
-        df = df.observe(out_name, F.count(F.lit(1)).cast("bigint").alias("n"))
-        if t.partition_by:
-            # route rows to their partition tuple BEFORE the partitioned
-            # sink: without this every sink task writes one file per
-            # tuple it sees (tasks x tuples — measured 62k files for
-            # 100k rows at 32 tasks x ~3000 (store, day) tuples in the
-            # r11 decade), and at 20M events the commit drowns in file
-            # metadata. One extra hash shuffle bounds files to ~#tuples.
-            df = df.repartition(*t.partition_by)
-        if self.p.storage_format == "delta":
-            q = self._run_stream_delta(df, t)
+    @staticmethod
+    def _drain(writer, ckpt: str):
+        """Start one AvailableNow query from ``writer`` under ``ckpt`` and
+        wait until it has consumed everything available."""
+        q = writer.option("checkpointLocation", ckpt).trigger(availableNow=True).start()
+        q.awaitTermination()
+        return q
+
+    def _run_flow(self, df: DataFrame, t: TableDef, ledger: str, ckpt: str, sink) -> int:
+        """Run one streaming flow of table ``t`` — a stream table's
+        defining query or one append flow — to completion: meter it, drain
+        it into ``sink`` (a foreachBatch function or a parquet file-sink
+        path), and return its rows written. Expectation totals are summed
+        over the query's micro-batches and ledgered under ``ledger``.
+        ``expect_or_fail`` is detect-and-halt here: the violating
+        micro-batches are already committed when it raises (it stops the
+        pipeline before downstream tables consume them); use
+        ``expect_or_drop`` for containment."""
+        exp_name, rows_name = f"__expectations_{ledger}", f"__rows_out_{ledger}"
+        df = self._meter(df, t, exp_name, rows_name)
+        if callable(sink):
+            writer = df.writeStream.foreachBatch(sink)
         else:
-            writer = (
-                df.writeStream.outputMode("append")
-                .format("parquet")
-                .option("path", self.p.table_path(t.name))
-                .option("checkpointLocation", self.p.checkpoint_path(t.name))
-                .trigger(availableNow=True)
-            )
+            writer = df.writeStream.outputMode("append").format("parquet").option("path", sink)
             if t.partition_by:
                 writer = writer.partitionBy(*t.partition_by)
-            q = writer.start()
-        q.awaitTermination()
-        rows_out = 0
+        q = self._drain(writer, ckpt)
+        exps = t.expectations
+        rows = 0
+        totals = dict.fromkeys([e.name for e in exps] + ["__rows"], 0)
         for prog in q.recentProgress:
             om = getattr(prog, "observedMetrics", None) or {}
-            row = om.get(out_name)
+            row = om.get(rows_name)
             if row is not None:
-                rows_out += int(row["n"] or 0)
-        if exps:
-            totals = {e.name: 0 for e in exps}
-            totals["__rows"] = 0
-            for prog in q.recentProgress:
-                om = getattr(prog, "observedMetrics", None) or {}
-                row = om.get(obs_name)
-                if row is None:
-                    continue
+                rows += int(row["n"] or 0)
+            row = om.get(exp_name)
+            if row is not None:
                 for k in totals:
                     totals[k] += int(row[k] or 0)
-            metrics = self._record_metrics(t.name, exps, totals)
+        if exps:
+            metrics = self._record_metrics(ledger, exps, totals)
             if self._fail_violations(metrics):
-                # parquet micro-batches already committed stay committed —
-                # fail-mode on a stream is detect-and-halt (stop the
-                # pipeline before downstream tables consume the batch),
-                # not a rollback; use expect_or_drop for containment
-                raise ExpectationFailed(t.name, metrics)
-        return rows_out
+                raise ExpectationFailed(ledger, metrics)
+        return rows
+
+    def _run_stream(self, df: DataFrame, t: TableDef) -> int:
+        sink = self._sink(
+            self.p.storage_format, self.p.table_path(t.name),
+            f"pos_dlt:{self.p.name}:{t.name}", t.partition_by, shared=False,
+        )
+        return self._run_flow(df, t, t.name, self.p.checkpoint_path(t.name), sink)
 
     def _flow_ac(self, flow: CdcFlowDef) -> ApplyChanges:
         return flow.operator(self.p.table_path(flow.target))
@@ -1633,19 +1595,11 @@ class PipelineRunner:
     def _run_append_flows(self, spark: SparkSession, name: str) -> int:
         """Refresh a multi-flow streaming target (create_streaming_table)
         or an external sink: run each of its append flows under that
-        flow's OWN checkpoint, appending into the shared location.
-
-        Exactly-once: in delta format each flow commits with its own
-        SetTransaction appId (pipeline:target:flow), so batch replays
-        after a crash are no-ops per flow. Parquet targets append
-        per-batch files without a transaction log — a crash between
-        sink-write and checkpoint-advance can replay one batch
-        (at-least-once), the same contract as any log-less file sink.
+        flow's OWN checkpoint and Delta appId (pipeline:target:flow),
+        appending into the shared location (see :meth:`_sink`).
         ``once`` flows are skipped as soon as their checkpoint shows a
         committed batch (DLT's backfill contract; a full refresh clears
         the checkpoint and re-arms them)."""
-        from pyspark.sql import functions as F
-
         sink_def = self.p.sinks.get(name)
         if sink_def is not None:
             t = TableDef(name=name, fn=None, kind="stream")  # type: ignore[arg-type]
@@ -1676,54 +1630,11 @@ class PipelineRunner:
                 df = flow.fn(spark)
             finally:
                 self.p._current = None
-            exps = t.expectations
-            obs_name = f"__expectations_{name}_{flow.name}"
-            if exps:
-                df = df.observe(obs_name, *self._expectation_aggs(exps))
-                df = self._apply_drops(df, exps)
-            out_name = f"__rows_out_{name}_{flow.name}"
-            df = df.observe(out_name, F.count(F.lit(1)).cast("bigint").alias("n"))
-            if t.partition_by:
-                df = df.repartition(*t.partition_by)
-            if fmt == "delta":
-                from pos_dlt_spark.sources.delta_writer import delta_stream_sink
-
-                app_id = f"pos_dlt:{self.p.name}:{name}:{flow.name}"
-                sink = delta_stream_sink(
-                    path, app_id, partition_by=t.partition_by or None
-                )
-            else:
-                def sink(batch_df, batch_id, _p=path, _pb=t.partition_by):
-                    w = batch_df.write.mode("append")
-                    if _pb:
-                        w = w.partitionBy(*_pb)
-                    w.parquet(_p)
-
-            q = (
-                df.writeStream.foreachBatch(sink)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
+            sink = self._sink(
+                fmt, path, f"pos_dlt:{self.p.name}:{name}:{flow.name}",
+                t.partition_by, shared=True,
             )
-            q.awaitTermination()
-            rows = 0
-            exp_totals = {e.name: 0 for e in exps}
-            exp_totals["__rows"] = 0
-            for prog in q.recentProgress:
-                om = getattr(prog, "observedMetrics", None) or {}
-                row = om.get(out_name)
-                if row is not None:
-                    rows += int(row["n"] or 0)
-                erow = om.get(obs_name)
-                if erow is not None:
-                    for k in exp_totals:
-                        exp_totals[k] += int(erow[k] or 0)
-            if exps:
-                metrics = self._record_metrics(
-                    f"{name}:{flow.name}", exps, exp_totals
-                )
-                if self._fail_violations(metrics):
-                    raise ExpectationFailed(f"{name}:{flow.name}", metrics)
+            rows = self._run_flow(df, t, f"{name}:{flow.name}", ckpt, sink)
             self.log.emit(
                 "flow_progress", table=name, flow=flow.name, rows_written=rows
             )
@@ -1811,13 +1722,9 @@ class PipelineRunner:
                 batch_df.unpersist()
 
         src = self.p.read_stream(spark, flow.source)
-        q = (
-            src.writeStream.foreachBatch(counted)
-            .option("checkpointLocation", self.p.checkpoint_path(flow.target))
-            .trigger(availableNow=True)
-            .start()
+        self._drain(
+            src.writeStream.foreachBatch(counted), self.p.checkpoint_path(flow.target)
         )
-        q.awaitTermination()
         return stats
 
     def _delta_cdc_sink(self, spark: SparkSession, flow: CdcFlowDef, ac: ApplyChanges):

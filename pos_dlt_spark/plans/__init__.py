@@ -35,10 +35,6 @@ def formatted_plan(df: DataFrame) -> str:
     return _explain(df, "formatted")
 
 
-def optimized_plan(df: DataFrame) -> str:
-    return df._jdf.queryExecution().optimizedPlan().toString()
-
-
 def count_op(df: DataFrame, op: str) -> int:
     """Occurrences of a physical operator name (e.g. 'Exchange',
     'BroadcastHashJoin', 'WindowGroupLimit') in the plan tree."""

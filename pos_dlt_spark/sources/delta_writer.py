@@ -4302,12 +4302,19 @@ def delta_stream_sink(path: str, app_id: str, partition_by: list[str] | None = N
     """
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.take(1):
-            return
-        write_delta(
-            batch_df, path, mode="append", partition_by=partition_by,
-            txn=(app_id, int(batch_id)),
-        )
+        # cached so the empty-batch probe and the write compute each
+        # partition once: a re-computed partition would re-read the
+        # source and count twice in any observe() metrics on the stream
+        batch_df.persist()
+        try:
+            if not batch_df.take(1):
+                return
+            write_delta(
+                batch_df, path, mode="append", partition_by=partition_by,
+                txn=(app_id, int(batch_id)),
+            )
+        finally:
+            batch_df.unpersist()
 
     return sink
 

@@ -2207,16 +2207,17 @@ def uniform_expire_snapshots(path: str, keep: int = 5) -> list[str]:
         if s["snapshot-id"] in ref_ids and s["snapshot-id"] not in kept_ids_now:
             kept.append(s)
     kept.sort(key=lambda s: s["snapshot-id"])
-    expired = [s for s in snaps if s["snapshot-id"] not in {k["snapshot-id"] for k in kept}]
-    if not expired:
-        return []
     kept_ids = {s["snapshot-id"] for s in kept}
-    meta = dict(meta)
-    meta["snapshots"] = kept
-    meta["snapshot-log"] = [
-        e for e in meta.get("snapshot-log") or [] if e["snapshot-id"] in kept_ids
-    ]
-    _publish_metadata(md_dir, cur, meta, hint=False)
+    expired = [s for s in snaps if s["snapshot-id"] not in kept_ids]
+    if expired:
+        meta = dict(meta)
+        meta["snapshots"] = kept
+        meta["snapshot-log"] = [
+            e for e in meta.get("snapshot-log") or [] if e["snapshot-id"] in kept_ids
+        ]
+        _publish_metadata(md_dir, cur, meta, hint=False)
+    # the sweeps below run even when nothing expired: a failed commit's
+    # orphans are collectable as soon as they exist
 
     referenced: set[str] = set()
     # a retained-but-unreadable manifest list could reference ANY

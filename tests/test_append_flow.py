@@ -9,7 +9,12 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from pos_dlt_spark.pipeline import Pipeline, PipelineRunner
+from pos_dlt_spark.pipeline import (
+    ExpectationDef,
+    ExpectationFailed,
+    Pipeline,
+    PipelineRunner,
+)
 
 
 def _land(d, name, rows):
@@ -245,3 +250,120 @@ def test_sql_create_flow_two_flows_one_target(spark, tmp_path):
             "CREATE FLOW lost AS INSERT INTO nowhere BY NAME "
             "SELECT k, k AS k10 FROM STREAM(LIVE.src_a)"
         )
+
+
+def _mk_expect(tmp_path, fmt, exps):
+    a_dir, b_dir = str(tmp_path / "in_a"), str(tmp_path / "in_b")
+    os.makedirs(a_dir, exist_ok=True)
+    os.makedirs(b_dir, exist_ok=True)
+    pipe = Pipeline("mfx", str(tmp_path / "storage"), storage_format=fmt)
+    pipe.create_streaming_table("bronze", expectations=exps)
+
+    @pipe.append_flow(target="bronze", name="region_a")
+    def region_a(spark_):
+        return spark_.readStream.schema("k BIGINT, v STRING").json(a_dir)
+
+    @pipe.append_flow(target="bronze", name="region_b")
+    def region_b(spark_):
+        return spark_.readStream.schema("k BIGINT, v STRING").json(b_dir)
+
+    return pipe, a_dir, b_dir
+
+
+@pytest.mark.parametrize("fmt", ["parquet", "delta"])
+def test_append_flow_expectations_meter_each_flow(spark, tmp_path, fmt):
+    """Expectations on a multi-flow target meter every flow on its own:
+    drop mode filters per flow, the ledger key is ``<target>:<flow>``,
+    and each flow's flow_progress counts its post-drop rows."""
+    pipe, a_dir, b_dir = _mk_expect(
+        tmp_path,
+        fmt,
+        [
+            ExpectationDef("k_pos", "k > 0", "drop"),
+            ExpectationDef("v_known", "v IS NOT NULL", "allow"),
+        ],
+    )
+    _land(a_dir, "a1.json", [{"k": 1, "v": "a"}, {"k": 2, "v": "a"}, {"k": -1, "v": "a"}])
+    _land(b_dir, "b1.json", [{"k": 10}, {"k": -5, "v": "b"}])
+    runner = PipelineRunner(pipe)
+    runner.run_once(spark)
+    got = sorted((r["k"], r["v"]) for r in pipe.read(spark, "bronze").collect())
+    assert got == [(1, "a"), (2, "a"), (10, None)], got
+    m = runner.expectation_metrics
+    assert set(m) == {"bronze:region_a", "bronze:region_b"}
+    assert m["bronze:region_a"]["k_pos"] == {
+        "action": "drop", "condition": "k > 0", "passed": 2, "failed": 1,
+    }
+    assert m["bronze:region_a"]["v_known"]["failed"] == 0
+    assert m["bronze:region_b"]["k_pos"]["failed"] == 1
+    assert m["bronze:region_b"]["v_known"] == {
+        "action": "allow", "condition": "v IS NOT NULL", "passed": 1, "failed": 1,
+    }
+    events = pipe.event_log(spark).collect()
+    written = {
+        json.loads(r["details"])["flow"]: json.loads(r["details"])["rows_written"]
+        for r in events
+        if r["event_type"] == "flow_progress" and r["table_name"] == "bronze"
+    }
+    assert written == {"region_a": 2, "region_b": 1}
+    ledgered = {
+        (r["table_name"], json.loads(r["details"])["name"])
+        for r in events
+        if r["event_type"] == "expectation"
+    }
+    assert ledgered == {
+        ("bronze:region_a", "k_pos"), ("bronze:region_a", "v_known"),
+        ("bronze:region_b", "k_pos"), ("bronze:region_b", "v_known"),
+    }
+
+
+@pytest.mark.parametrize("fmt", ["parquet", "delta"])
+def test_append_flow_expect_or_fail_halts_after_commit(spark, tmp_path, fmt):
+    """``expect_or_fail`` on an append flow is detect-and-halt: the
+    violating micro-batch is already committed when the update fails,
+    and later flows of the target do not run."""
+    pipe, a_dir, b_dir = _mk_expect(
+        tmp_path, fmt, [ExpectationDef("k_pos", "k > 0", "fail")]
+    )
+    _land(a_dir, "a1.json", [{"k": 1, "v": "a"}, {"k": -1, "v": "a"}])
+    _land(b_dir, "b1.json", [{"k": 10, "v": "b"}])
+    runner = PipelineRunner(pipe)
+    with pytest.raises(ExpectationFailed) as ei:
+        runner.run_once(spark)
+    assert ei.value.table == "bronze:region_a"
+    assert ei.value.metrics["k_pos"]["failed"] == 1
+    got = sorted((r["k"], r["v"]) for r in pipe.read(spark, "bronze").collect())
+    assert got == [(-1, "a"), (1, "a")], got
+
+
+def test_sql_flow_stream_static_self_join(spark, tmp_path):
+    """A flow body that reads one table both as ``STREAM(LIVE.x)`` and as
+    ``LIVE.x`` resolves both references, like the same body as a
+    STREAMING LIVE TABLE does."""
+    a_dir = str(tmp_path / "a")
+    os.makedirs(a_dir)
+    _land(a_dir, "a1.json", [{"k": 1}, {"k": 2}, {"k": 3}])
+    pipe = Pipeline("sqlss", str(tmp_path / "storage"))
+
+    @pipe.table(kind="stream")
+    def base(spark_):
+        return spark_.readStream.schema("k INT").json(a_dir)
+
+    body = (
+        "SELECT s.k, b.k * 10 AS k10 FROM STREAM(LIVE.base) s "
+        "JOIN LIVE.base b ON b.k = s.k"
+    )
+    pipe.sql_table(
+        f"""
+        CREATE STREAMING LIVE TABLE as_table AS {body};
+
+        CREATE OR REFRESH STREAMING LIVE TABLE as_flow;
+
+        CREATE FLOW self_join AS INSERT INTO LIVE.as_flow BY NAME {body}
+        """
+    )
+    PipelineRunner(pipe).run_once(spark)
+    want = [(1, 10), (2, 20), (3, 30)]
+    for t in ("as_table", "as_flow"):
+        got = sorted((r["k"], r["k10"]) for r in pipe.read(spark, t).collect())
+        assert got == want, (t, got)

@@ -2066,10 +2066,13 @@ def test_failed_metadata_publish_leaves_prior_version_current(
     assert uf._read_prior_metadata(md_dir)["current-snapshot-id"] == n
 
 
-def test_expire_sweeps_orphan_manifest_lists(spark, tmp_path, monkeypatch):
+@pytest.mark.parametrize(
+    "keep, survivors", [(2, [2, 3]), (3, [1, 2, 3])], ids=["expires", "nothing_expires"]
+)
+def test_expire_sweeps_orphan_manifest_lists(spark, tmp_path, monkeypatch, keep, survivors):
     """A commit that failed after writing its manifest list leaves a
     ``snap-*.avro`` no snapshot names; expire removes it while every
-    retained snapshot still reads."""
+    retained snapshot still reads — also when no snapshot expires."""
     import glob
 
     t = str(tmp_path / "orphan_list")
@@ -2083,12 +2086,12 @@ def test_expire_sweeps_orphan_manifest_lists(spark, tmp_path, monkeypatch):
     md_dir = os.path.join(t, "metadata")
     orphans = glob.glob(os.path.join(md_dir, "snap-4-*.avro"))
     assert len(orphans) == 1
-    deleted = uf.uniform_expire_snapshots(t, keep=2)
+    deleted = uf.uniform_expire_snapshots(t, keep=keep)
     assert os.path.basename(orphans[0]) in deleted
     assert not os.path.exists(orphans[0])
     meta = uf._read_prior_metadata(md_dir)
     kept = {os.path.basename(s["manifest-list"]) for s in meta["snapshots"]}
     assert {os.path.basename(p) for p in glob.glob(os.path.join(md_dir, "snap-*.avro"))} == kept
-    assert [s["snapshot-id"] for s in meta["snapshots"]] == [2, 3]
+    assert [s["snapshot-id"] for s in meta["snapshots"]] == survivors
     assert uf.read_iceberg(spark, t, snapshot_id=2).count() == 110
     assert uf.read_iceberg(spark, t, snapshot_id=3).count() == 88

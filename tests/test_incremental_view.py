@@ -46,6 +46,30 @@ def test_refresh_matches_full_recompute(spark, pair):
     assert view.refresh(spark) == []
 
 
+
+def test_gc_leaves_no_marker_only_epoch_dir(spark, tmp_path):
+    """A refresh that retires the last bucket of an epoch directory
+    removes the directory too — Hadoop's hidden ``._SUCCESS.crc`` beside
+    ``_SUCCESS`` is a job marker like it."""
+    import json
+    import os
+
+    ac = ApplyChanges(
+        str(tmp_path / "silver"), keys=KEYS, sequence_by="date_time", n_buckets=4
+    )
+    root = tmp_path / "gold"
+    view = IncrementalKeyedView(ac, str(root), keyed_count_sum(KEYS, "quantity"))
+    for i in range(5):  # same key every time -> same bucket rewritten
+        ac.process_batch(_df(spark, [(1, 1, datetime(2021, 1, 1 + i), i)]), i)
+        assert view.refresh(spark)
+    manifest = json.load(open(root / "_manifest.json"))
+    referenced = {
+        p.split("/")[0] for p in [*manifest["buckets"].values(), *manifest["retired"]]
+    }
+    on_disk = {e for e in os.listdir(root) if e.startswith("epoch_")}
+    assert on_disk == referenced
+    assert {tuple(r) for r in view.read(spark).collect()} == _full(spark, ac, view)
+
 def test_refresh_touches_only_changed_buckets(spark, pair):
     ac, view = pair
     ac.process_batch(_df(spark, [(k, k, datetime(2021, 1, 1), k) for k in range(1, 20)]), 0)
