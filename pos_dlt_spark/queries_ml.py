@@ -22,11 +22,12 @@ from pos_dlt_spark.tables import load_table
 
 _TOKS = r"regexp_split_to_array(trim(lower(text)), '\s+')"
 
-# word 3-shingles, distinct, whole-doc fallback for short docs
+# word 3-shingles, distinct, whole-doc fallback for short docs (NULL text
+# shingles to [''], as Spark's shingle_table does)
 _SH = (
     "CASE WHEN len(toks) >= 3 THEN list_distinct(list_transform(range(1, len(toks)-1), "
     "i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2])) "
-    "ELSE [array_to_string(toks, ' ')] END"
+    "ELSE [coalesce(array_to_string(toks, ' '), '')] END"
 )
 
 _TOKS_CTE = f"toks_t AS (SELECT doc_id, text, {_TOKS} AS toks FROM documents)"

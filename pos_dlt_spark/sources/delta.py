@@ -1041,9 +1041,11 @@ def scan_rels(
     LOG's schema pinned and partition values recovered (Hive discovery in
     one scan when the layout allows, per-partition-tuple literal unions
     otherwise). With ``with_meta`` two helper columns ride along:
-    ``__fp`` (normalized absolute file path) and ``__ri`` (the row's
-    file-absolute index from ``_metadata.row_index`` — stable under
-    row-group skipping, which is exactly what deletion vectors address).
+    ``__fid`` (the file's position in ``snap.files``, resolved once per
+    scan by :func:`_resolve_fid`; callers map it back through the same
+    ``snap``) and ``__ri`` (the row's file-absolute index from
+    ``_metadata.row_index`` — stable under row-group skipping, which is
+    exactly what deletion vectors address).
     ``extra_fields`` names extra PHYSICAL int64 columns appended to the
     read schema (files lacking them read null — the row-tracking
     materialized-column contract); only supported without column
@@ -1065,8 +1067,8 @@ def scan_rels(
         "spark.sql.sources.parallelPartitionDiscovery.parallelism", "64"
     )
     path = snap.path
-    sel = None if rels is None else set(rels)
-    wanted = [(rel, pv) for rel, pv in snap.files if sel is None or rel in sel]
+    sel_rels = None if rels is None else set(rels)
+    wanted = [(rel, pv) for rel, pv in snap.files if sel_rels is None or rel in sel_rels]
     if not wanted:
         return None
     out_cols = [f.name for f in snap.schema.fields]
@@ -1082,18 +1084,9 @@ def scan_rels(
 
     def meta_cols():
         # __fpr: the scan's RAW file path (scheme-qualified, percent-
-        # encoded) — a zero-cost column the DV path prefers for its
-        # file-id lookup (the decoded twin below costs two regexes + a
-        # url_decode PER ROW, ~36 s over a 24M-row scan, so it must stay
-        # out of the hot path). __fp: the DECODED plain absolute path —
-        # matches the os.path rendering even for partition directories
-        # with spaces/colons (url_decode alone would also map literal
-        # '+' to a space, so '+' is pre-escaped to %2B; the composition
-        # is an exact pure-JVM percent-decoder). Consumers reference one
-        # or the other; Catalyst prunes whichever goes unused.
+        # encoded) — the zero-cost key _resolve_fid turns into __fid
         return [
             F.col("_metadata.file_path").alias("__fpr"),
-            decoded_fp_expr(F.col("_metadata.file_path")).alias("__fp"),
             F.col("_metadata.row_index").alias("__ri"),
         ]
 
@@ -1103,7 +1096,7 @@ def scan_rels(
         logical; 'id' pins parquet field ids on the requested schema and
         lets Spark's native field-id resolution match columns regardless
         of their physical names (rename-proof, the mode's whole point).
-        ``meta`` appends __fp/__ri BEFORE any projection — the _metadata
+        ``meta`` appends __fpr/__ri BEFORE any projection — the _metadata
         pseudo-column only resolves against the scan itself."""
         extra = meta_cols() if meta else []
         if snap.column_mapping == "none":
@@ -1134,11 +1127,10 @@ def scan_rels(
         return df.select("*", *extra) if meta else df
 
     if not snap.partition_columns:
-        return read_files(
+        out = read_files(
             [_abs_file(path, rel) for rel, _ in wanted], snap.schema, with_meta
         )
-
-    if snap.column_mapping == "none" and _hive_style(wanted, snap.partition_columns):
+    elif snap.column_mapping == "none" and _hive_style(wanted, snap.partition_columns):
         df = _pruned(
             spark.read.schema(widen(snap.schema)).option("basePath", path),
             [_abs_file(path, rel) for rel, _ in wanted],
@@ -1147,32 +1139,40 @@ def scan_rels(
         sel = [F.col(c).cast(types[c]).alias(c) for c in out_cols] + [
             F.col(f"`{n}`") for n in (extra_fields or [])
         ]
-        return df.select(*sel, *meta_cols()) if with_meta else df.select(*sel)
-
-    # non-Hive layout (and every column-mapping table — their directories
-    # carry PHYSICAL names, so Hive discovery would resolve the wrong
-    # columns): group files by partition tuple, union one pinned-schema
-    # scan per tuple with the log's partition values as literals.
-    groups: dict[tuple, list[str]] = {}
-    for rel, pvals in wanted:
-        key = tuple(pvals.get(c) for c in snap.partition_columns)
-        groups.setdefault(key, []).append(_abs_file(path, rel))
-    parts: list[DataFrame] = []
-    for key, fpaths in sorted(groups.items(), key=lambda kv: tuple(map(str, kv[0]))):
-        d = read_files(fpaths, snap.data_schema, with_meta)
-        for c, v in zip(snap.partition_columns, key):
-            lit = F.lit(None) if v is None else F.lit(v)
-            d = d.withColumn(c, lit.cast(types[c]))
+        out = df.select(*sel, *meta_cols()) if with_meta else df.select(*sel)
+    else:
+        # non-Hive layout (and every column-mapping table — their
+        # directories carry PHYSICAL names, so Hive discovery would
+        # resolve the wrong columns): group files by partition tuple,
+        # union one pinned-schema scan per tuple with the log's partition
+        # values as literals.
+        groups: dict[tuple, list[str]] = {}
+        for rel, pvals in wanted:
+            key = tuple(pvals.get(c) for c in snap.partition_columns)
+            groups.setdefault(key, []).append(_abs_file(path, rel))
         cols_sel = (
             out_cols
             + list(extra_fields or [])
-            + (["__fpr", "__fp", "__ri"] if with_meta else [])
+            + (["__fpr", "__ri"] if with_meta else [])
         )
-        parts.append(d.select(*[F.col(f"`{c}`") for c in cols_sel]))
-    out = parts[0]
-    for d in parts[1:]:
-        out = out.unionByName(d)
-    return out
+        out = None
+        for key, fpaths in sorted(groups.items(), key=lambda kv: tuple(map(str, kv[0]))):
+            d = read_files(fpaths, snap.data_schema, with_meta)
+            for c, v in zip(snap.partition_columns, key):
+                lit = F.lit(None) if v is None else F.lit(v)
+                d = d.withColumn(c, lit.cast(types[c]))
+            d = d.select(*[F.col(f"`{c}`") for c in cols_sel])
+            out = d if out is None else out.unionByName(d)
+    if not with_meta:
+        return out
+    return _resolve_fid(
+        spark, out,
+        {
+            fid: os.path.abspath(_abs_file(path, rel))
+            for fid, (rel, _) in enumerate(snap.files)
+            if sel_rels is None or rel in sel_rels
+        },
+    )
 
 
 # DV application strategy thresholds (module-level so tests/operators can
@@ -1183,9 +1183,9 @@ DV_RUN_JOIN_MAX = 262_144  # total exploded [fid, bucket, lo, hi] entries the
 # Selection is PER FILE (smallest bitmaps claim the budget first), so one
 # scattered monster DV no longer drags its clustered neighbours off the
 # JVM path.
-DV_FID_MAP_MAX = 1_024  # max literal-map entries for file-id resolution —
-# past this (many DV files x ~8 URI renderings each) the literals would
-# bloat the plan, so resolution switches to a broadcast hash join
+DV_FID_MAP_MAX = 1_024  # max literal-map entries for file-id resolution
+# and per-file lookups — past this (many files x ~8 URI renderings each)
+# the literals would bloat the plan, so both switch to a broadcast hash join
 
 
 def _apply_deletion_vectors(
@@ -1225,60 +1225,58 @@ def _apply_deletion_vectors(
     scanned exactly once by whichever path owns it. Files without DVs
     never pay either path.
 
-    Both paths key on ``__fid`` — a small per-file integer resolved by
-    ONE literal-map lookup on the scan's RAW ``_metadata.file_path``
-    (every plausible URI rendering of each file is a map key), falling
-    back to the decoded ``__fp`` only on a miss. Keying on the decoded
-    path directly would put two regexes + a url_decode in the per-row
-    hot path (measured: ~36 s of a 24M-row scan's 62 s)."""
+    Both paths key on the ``__fid`` the ``with_meta`` scan already
+    carries (see :func:`_resolve_fid`): run rows and probe bitmaps are
+    keyed by the file's position in ``snap.files``, and the per-file
+    bucket width rides :func:`file_attrs`. With ``keep_meta`` the
+    surviving rows keep ``__fid`` and ``__ri``."""
     from pos_dlt_spark.sources.dv import decode_dv_runs, read_dv_bytes
     from pos_dlt_spark.tables import local_df
 
-    recs: list[tuple[str, str, bytes]] = []
-    for rel in dv_rels:
-        dv = snap.adds[rel]["deletionVector"]
-        fp = os.path.abspath(_abs_file(snap.path, rel))
-        recs.append((rel, fp, read_dv_bytes(snap.path, dv)))
+    want = set(dv_rels)
+    recs: list[tuple[int, str, bytes]] = [
+        (fid, rel, read_dv_bytes(snap.path, snap.adds[rel]["deletionVector"]))
+        for fid, (rel, _pv) in enumerate(snap.files)
+        if rel in want
+    ]
 
     # per-file path selection, smallest serialized bitmaps first (size
     # correlates with run count, so clustered files claim the budget)
     budget = DV_RUN_JOIN_MAX
-    join_recs: list[tuple[str, str, list, int]] = []  # rel, fp, runs, width
-    probe_recs: list[tuple[str, str, bytes]] = []
-    for rel, fp, data in sorted(recs, key=lambda r: len(r[2])):
+    join_recs: list[tuple[int, str, list, int]] = []  # fid, rel, runs, width
+    probe_recs: list[tuple[int, str, bytes]] = []
+    for fid, rel, data in sorted(recs, key=lambda r: len(r[2])):
         runs = decode_dv_runs(data, max_runs=budget) if budget > 0 else None
         if runs is None:
-            probe_recs.append((rel, fp, data))
+            probe_recs.append((fid, rel, data))
             continue
         width = max(1, (runs[-1][1] + 1) // len(runs)) if runs else 1
         entries = sum(hi // width - lo // width + 1 for lo, hi in runs)
         if entries > budget:
-            probe_recs.append((rel, fp, data))
+            probe_recs.append((fid, rel, data))
             continue
         budget -= entries
-        join_recs.append((rel, fp, runs, width))
+        join_recs.append((fid, rel, runs, width))
 
-    meta = ["__fid"] if keep_meta else ["__fpr", "__fp", "__ri", "__fid"]
+    meta = [] if keep_meta else ["__fid", "__ri"]
     parts: list[DataFrame] = []
 
     if join_recs:
         scan = scan_rels(
-            spark, snap, [rel for rel, *_ in join_recs],
+            spark, snap, [rel for _, rel, *_ in join_recs],
             with_meta=True, extra_fields=extra_fields,
         )
         run_rows = [
-            (i, b, lo, hi)
-            for i, (_rel, _fp, runs, width) in enumerate(join_recs)
+            (fid, b, lo, hi)
+            for fid, _rel, runs, width in join_recs
             for lo, hi in runs
             for b in range(lo // width, hi // width + 1)
         ]
         if not run_rows:
-            parts.append(scan.drop("__fpr", "__fp", "__ri") if not keep_meta else scan)
+            parts.append(scan.drop(*meta))
         else:
-            scan = _resolve_dv_fid(
-                spark, scan,
-                [fp for _, fp, *_ in join_recs],
-                widths=[w for *_, w in join_recs],
+            scan = file_attrs(
+                spark, scan, {fid: (w,) for fid, *_, w in join_recs}, ["__w"]
             ).withColumn("__bk", F.expr("__ri div __w"))
             excl = local_df(
                 spark, run_rows,
@@ -1301,12 +1299,10 @@ def _apply_deletion_vectors(
         from pyspark.sql.functions import pandas_udf
 
         scan = scan_rels(
-            spark, snap, [rel for rel, *_ in probe_recs],
+            spark, snap, [rel for _, rel, _ in probe_recs],
             with_meta=True, extra_fields=extra_fields,
         )
-        scan = _resolve_dv_fid(spark, scan, [fp for _, fp, _ in probe_recs])
-        blob_list = [data for *_, data in probe_recs]
-        bc = spark.sparkContext.broadcast(blob_list)
+        bc = spark.sparkContext.broadcast({fid: data for fid, _, data in probe_recs})
         cache: dict = {}  # per-worker parsed-bitmap cache (rides the closure)
 
         def _dv_deleted_fn(fid, ri):
@@ -1351,8 +1347,8 @@ def scan_live_rows(
     deletion vector take the plain :func:`scan_rels` scan, the others
     :func:`_apply_deletion_vectors`, and the two halves union by name.
     ``with_meta`` and ``extra_fields`` pass through to both halves, so
-    ``__fpr``/``__fp``/``__ri`` and the extra columns line up. Returns
-    None when the selection is empty."""
+    ``__fid``/``__ri`` and the extra columns line up. Returns None when
+    the selection is empty."""
     wanted = set(rels) if rels is not None else None
     plain: list[str] = []
     dv_rels: list[str] = []
@@ -1371,66 +1367,102 @@ def scan_live_rows(
     return dvpart if out is None else out.unionByName(dvpart)
 
 
-def _resolve_dv_fid(
-    spark: SparkSession,
-    scan: DataFrame,
-    fps: list[str],
-    widths: list[int] | None = None,
-) -> DataFrame:
-    """Attach ``__fid`` (small per-file int; position in ``fps``) — and
-    ``__w`` (per-file bucket width) when ``widths`` is given — to a DV
-    scan, keyed by the RAW ``_metadata.file_path`` so no per-row string
-    work runs. Resolution is a literal map for few files, a broadcast
-    hash join past ``DV_FID_MAP_MAX`` entries (100k files x ~8 URI
-    renderings would otherwise bloat the plan); a TOTAL miss is LOUD —
-    a silent null would drop out of the anti-join and resurrect deleted
-    rows."""
+def _renderings(fp: str) -> set[str]:
+    """Every raw ``_metadata.file_path`` a scan may report for the
+    absolute path ``fp``: bare or ``file:``/``file://``-qualified, plain
+    or percent-encoded under each safe set Hadoop paths use."""
     from urllib.parse import quote
 
+    outs = {fp, "file:" + fp, "file://" + fp}
+    for safe in ("/", "/:", "/:+=~"):
+        q = quote(fp, safe=safe)
+        outs.update({q, "file:" + q, "file://" + q})
+    return outs
+
+
+def _resolve_fid(
+    spark: SparkSession, scan: DataFrame, fps: dict[int, str]
+) -> DataFrame:
+    """Replace a scan's raw ``__fpr`` with ``__fid``: the int file id
+    whose absolute path in ``fps`` the row came from. The key is every
+    :func:`_renderings` of each path against the raw path, so no per-row
+    string work runs on a hit; only rows missing on the raw path derive
+    the decoded path (:func:`decoded_fp_expr`) and look it up instead.
+    A literal map up to ``DV_FID_MAP_MAX`` entries, else a broadcast
+    hash join (100k files x ~8 renderings would bloat the plan). A
+    TOTAL miss is LOUD: a silent null would drop out of the DV
+    anti-join and resurrect deleted rows, or give a row a NULL id."""
     from pos_dlt_spark.tables import local_df
 
-    def renderings(fp: str) -> set[str]:
-        outs = {fp, "file:" + fp, "file://" + fp}
-        for safe in ("/", "/:", "/:+=~"):
-            q = quote(fp, safe=safe)
-            outs.update({q, "file:" + q, "file://" + q})
-        return outs
-
-    entries = [(r, i) for i, fp in enumerate(fps) for r in sorted(renderings(fp))]
+    raw = F.col("__fpr")
+    entries = [(r, fid) for fid, fp in fps.items() for r in sorted(_renderings(fp))]
     miss = F.raise_error(
-        F.concat(F.lit("DV file-id lookup failed for "), F.col("__fpr"))
+        F.concat(F.lit("file-id lookup failed for "), raw)
     ).cast("int")
     if len(entries) <= DV_FID_MAP_MAX:
         # try_element_at: NULL on miss (element_at THROWS under ANSI);
-        # the decoded-path fallback covers exotic renderings
-        raw_pairs = [x for r, i in entries for x in (F.lit(r), F.lit(i))]
-        dec_pairs = [x for i, fp in enumerate(fps) for x in (F.lit(fp), F.lit(i))]
+        # coalesce evaluates the decode only when the raw lookup missed
+        raw_map = F.create_map(*[x for r, i in entries for x in (F.lit(r), F.lit(i))])
+        dec_map = F.create_map(
+            *[x for i, fp in fps.items() for x in (F.lit(fp), F.lit(i))]
+        )
         fid = F.coalesce(
-            F.try_element_at(F.create_map(*raw_pairs), F.col("__fpr")),
-            F.try_element_at(F.create_map(*dec_pairs), F.col("__fp")),
+            F.try_element_at(raw_map, raw),
+            F.try_element_at(dec_map, decoded_fp_expr(raw)),
             miss,
         )
-        scan = scan.withColumn("__fid", fid)
-        if widths is not None:
-            wmap = F.create_map(
-                *[x for i, w in enumerate(widths) for x in (F.lit(i), F.lit(w))]
-            )
-            scan = scan.withColumn(
-                "__w", F.try_element_at(wmap, F.col("__fid")).cast("bigint")
-            )
+        return scan.withColumn("__fid", fid).drop("__fpr")
+    # a join key cannot short-circuit on a raw hit, so the decoded key is
+    # derived only for rows whose raw join missed (a NULL key never
+    # matches: raw-hit rows pass the second join for free)
+    rdf = local_df(spark, entries, "__rk string, __rfid int")
+    ddf = local_df(spark, [(fp, i) for i, fp in fps.items()], "__dk string, __dfid int")
+    return (
+        scan.join(F.broadcast(rdf), raw == F.col("__rk"), "left")
+        .withColumn("__fpd", F.when(F.col("__rfid").isNull(), decoded_fp_expr(raw)))
+        .join(F.broadcast(ddf), F.col("__fpd") == F.col("__dk"), "left")
+        .withColumn("__fid", F.coalesce(F.col("__rfid"), F.col("__dfid"), miss))
+        .drop("__fpr", "__rk", "__rfid", "__fpd", "__dk", "__dfid")
+    )
+
+
+def file_attrs(
+    spark: SparkSession,
+    scan: DataFrame,
+    attrs: dict[int, tuple],
+    names: list[str],
+) -> DataFrame:
+    """Attach per-file bigint columns ``names`` to a ``with_meta`` scan:
+    ``attrs`` maps each ``__fid`` to its values (None reads NULL). A
+    literal map up to ``DV_FID_MAP_MAX`` files, else a broadcast hash
+    join on the int key — metadata-sized either way."""
+    from pos_dlt_spark.tables import local_df
+
+    if len(attrs) <= DV_FID_MAP_MAX:
+        m = F.create_map(
+            *[
+                x
+                for fid, vals in sorted(attrs.items())
+                for x in (
+                    F.lit(fid),
+                    F.struct(
+                        *[F.lit(v).cast("bigint").alias(n) for n, v in zip(names, vals)]
+                    ),
+                )
+            ]
+        )
+        hit = F.try_element_at(m, F.col("__fid"))
+        for n in names:
+            scan = scan.withColumn(n, hit.getField(n))
         return scan
-    rows = [
-        (r, i, int(widths[i]) if widths is not None else 1)
-        for i, fp in enumerate(fps)
-        for r in sorted(renderings(fp))
-    ]
-    rdf = local_df(spark, rows, "__rk string, __rfid int, __rw bigint")
-    scan = scan.join(
-        F.broadcast(rdf), F.col("__fpr") == F.col("__rk"), "left"
-    ).withColumn("__fid", F.coalesce(F.col("__rfid"), miss))
-    if widths is not None:
-        scan = scan.withColumn("__w", F.col("__rw"))
-    return scan.drop("__rk", "__rfid", "__rw")
+    adf = local_df(
+        spark,
+        [(fid, *vals) for fid, vals in sorted(attrs.items())],
+        ", ".join(["__afid int"] + [f"{n} bigint" for n in names]),
+    )
+    return scan.join(
+        F.broadcast(adf), F.col("__fid") == F.col("__afid"), "left"
+    ).drop("__afid")
 
 
 def read_delta(

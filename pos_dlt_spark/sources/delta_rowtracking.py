@@ -22,16 +22,17 @@ feature an external modern Delta table carries after DVs / column mapping
   ``coalesce(materialized, baseRowId + row_index)`` — pure JVM, one
   broadcast of the per-file base table, no Python in the row path.
 
-Scale shape: the per-file (path -> baseRowId) table is metadata-sized
-(one row per live file) and broadcast against the scan exactly like the
-DV file-id resolution; row ids themselves are computed from the scan's
+Scale shape: the live scan resolves each row's file id (``__fid``) once,
+the same way deletion vectors and DML key on it; the per-file
+(baseRowId, defaultRowCommitVersion) lookup by that int id is
+metadata-sized (one entry per live file: a literal map, or a broadcast
+join for many files); row ids themselves are computed from the scan's
 own ``_metadata.row_index`` — nothing per-row ever touches the driver.
 """
 
 from __future__ import annotations
 
 import json
-import os
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -146,18 +147,16 @@ def scan_with_row_ids(
     files: the table's logical columns + ``_row_id`` +
     ``_row_commit_version``, each ``coalesce(materialized column,
     baseRowId + _metadata.row_index)``, DV-deleted rows dropped first
-    (their ids retire with them). The per-file base table is broadcast
-    against the scan's RAW file path (same zero-cost keying the DV path
-    uses — the decoded path would put a url_decode in the per-row hot
-    path). Returns None for an empty selection."""
-    from urllib.parse import quote
-
+    (their ids retire with them). Each file's ``baseRowId`` and
+    ``defaultRowCommitVersion`` are looked up by the ``__fid`` the live
+    scan already resolved (a file whose add carries none reads NULL —
+    pre-enablement files, a semantic state, not a miss). ``with_meta``
+    keeps ``__fid``/``__ri``. Returns None for an empty selection."""
     from pos_dlt_spark.sources.delta import (
         DeltaProtocolError,
-        _abs_file,
+        file_attrs,
         scan_live_rows,
     )
-    from pos_dlt_spark.tables import local_df
 
     _require_row_tracking(snap)
     if snap.column_mapping != "none":
@@ -169,131 +168,27 @@ def scan_with_row_ids(
     extra = [c for c in (mat_id, mat_ver) if c]
     out_cols = [f.name for f in snap.schema.fields]
     sel = None if rels is None else set(rels)
-    wanted = [rel for rel, _ in snap.files if sel is None or rel in sel]
-    if not wanted:
+    attrs = {
+        fid: (snap.adds[rel].get("baseRowId"), snap.adds[rel].get("defaultRowCommitVersion"))
+        for fid, (rel, _) in enumerate(snap.files)
+        if sel is None or rel in sel
+    }
+    if not attrs:
         return None
 
-    scan = scan_live_rows(spark, snap, wanted, with_meta=True, extra_fields=extra)
-
-    # per-file base table, keyed by every plausible raw-URI rendering of
-    # the absolute path (the same renderings trick the DV fid map uses so
-    # the join key is the scan's zero-cost _metadata.file_path)
-    def renderings(fp: str) -> set[str]:
-        outs = {fp, "file:" + fp, "file://" + fp}
-        for safe in ("/", "/:", "/:+=~"):
-            q = quote(fp, safe=safe)
-            outs.update({q, "file:" + q, "file://" + q})
-        return outs
-
-    entries: list[tuple[str, int | None, int | None]] = []
-    dec_entries: list[tuple[str, int | None, int | None]] = []
-    for rel in wanted:
-        add = snap.adds[rel]
-        base = add.get("baseRowId")
-        dcv = add.get("defaultRowCommitVersion")
-        fp = os.path.abspath(_abs_file(snap.path, rel))
-        dec_entries.append((fp, base, dcv))
-        for r in sorted(renderings(fp)):
-            entries.append((r, base, dcv))
-
-    from pos_dlt_spark.sources.delta import DV_FID_MAP_MAX
-
-    def pair_struct(base, dcv):
-        return F.struct(
-            F.lit(base).cast("bigint").alias("b"),
-            F.lit(dcv).cast("bigint").alias("d"),
-        )
-
-    # a TOTAL path miss is LOUD (mirrors _resolve_dv_fid): a silent NULL
-    # would make the row's id NULL, a rewrite would materialize that
-    # NULL, and the row would silently take a FRESH id on the next read
-    # — breaking id stability and MoR CDF (ADVICE r07 #2). A file whose
-    # add carries no baseRowId yields a present struct with NULL fields
-    # (pre-enablement files), which is a semantic state, not a miss.
-    miss = F.raise_error(
-        F.concat(
-            F.lit("row-tracking baseRowId lookup failed for file "),
-            F.col("__fpr"),
-        )
-    ).cast("struct<b:bigint,d:bigint>")
-
-    if len(entries) <= DV_FID_MAP_MAX:
-        # literal struct-valued map: ONE per-row string lookup on the
-        # zero-cost raw path (decoded-path fallback for exotic
-        # renderings) — measured cheaper than a broadcast hash join on
-        # the path string (2.6 -> ~1.6 s over a 10M-row scan)
-        raw_map = F.create_map(
-            *[x for r, b, d in entries for x in (F.lit(r), pair_struct(b, d))]
-        )
-        dec_map = F.create_map(
-            *[x for r, b, d in dec_entries for x in (F.lit(r), pair_struct(b, d))]
-        )
-        hit = F.coalesce(
-            F.try_element_at(raw_map, F.col("__fpr")),
-            F.try_element_at(dec_map, F.col("__fp")),
-            miss,
-        )
-        scan = scan.withColumn(
-            "__rtbase", hit.getField("b")
-        ).withColumn("__rtdcv", hit.getField("d"))
-    else:
-        # many files: literals would bloat the plan; broadcast hash join
-        # on the raw path + a second broadcast join on the DECODED path
-        # (exotic renderings; one row per file, still metadata-sized),
-        # then the loud-miss arm — same ladder as the map branch
-        # (__rthit marks a matched entry even when b/d are NULL)
-        bt = local_df(
-            spark,
-            [(r, b, d, True) for r, b, d in entries],
-            "__rtk string, __rtjb bigint, __rtjd bigint, __rthit boolean",
-        )
-        btd = local_df(
-            spark,
-            [(r, b, d, True) for r, b, d in dec_entries],
-            "__rtk2 string, __rtdb bigint, __rtdd bigint, __rtdhit boolean",
-        )
-        raw_hit = F.when(
-            F.col("__rthit"),
-            F.struct(F.col("__rtjb").alias("b"), F.col("__rtjd").alias("d")),
-        )
-        dec_hit = F.when(
-            F.col("__rtdhit"),
-            F.struct(F.col("__rtdb").alias("b"), F.col("__rtdd").alias("d")),
-        )
-        hit = F.coalesce(raw_hit, dec_hit, miss)
-        from pos_dlt_spark.sources.delta import decoded_fp_expr
-
-        # the DECODED key (two regexes + url_decode) is derived ONLY for
-        # rows whose raw join missed — joining on __fp directly would
-        # force the decode into the per-row hot path for EVERY row
-        # (measured ~36 s over a 24M-row scan), and unlike the map
-        # branch's coalesce a join key cannot short-circuit on a raw-path
-        # hit (ADVICE r08). A NULL join key never matches, so raw-hit
-        # rows pass the second broadcast join for free.
-        scan = (
-            scan.join(
-                F.broadcast(bt), F.col("__fpr") == F.col("__rtk"), "left"
-            )
-            .withColumn(
-                "__fpd",
-                F.when(F.col("__rthit").isNull(), decoded_fp_expr(F.col("__fpr"))),
-            )
-            .join(F.broadcast(btd), F.col("__fpd") == F.col("__rtk2"), "left")
-            .withColumn("__rtbase", hit.getField("b"))
-            .withColumn("__rtdcv", hit.getField("d"))
-            .drop(
-                "__rtk", "__rtjb", "__rtjd", "__rthit", "__fpd",
-                "__rtk2", "__rtdb", "__rtdd", "__rtdhit",
-            )
-        )
-
+    scan = file_attrs(
+        spark,
+        scan_live_rows(spark, snap, rels, with_meta=True, extra_fields=extra),
+        attrs,
+        ["__rtbase", "__rtdcv"],
+    )
     rid = F.col("__rtbase") + F.col("__ri")
     rvr = F.col("__rtdcv")
     if mat_id:
         rid = F.coalesce(F.col(f"`{mat_id}`"), rid)
     if mat_ver:
         rvr = F.coalesce(F.col(f"`{mat_ver}`"), rvr)
-    meta = ["__fp", "__ri"] if with_meta else []
+    meta = ["__fid", "__ri"] if with_meta else []
     return scan.select(
         *out_cols,
         rid.cast("bigint").alias(ROW_ID_COL),

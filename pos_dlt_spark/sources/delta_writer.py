@@ -1028,7 +1028,7 @@ def _replace_where_actions(
     - Partition-decidable predicate → whole-file removes, no scan.
     - Else: stats-prune to candidate files (provably-disjoint files are
       never read and SURVIVE — the gate asserts this), scan candidates
-      once for matching ``(__fp, __ri)``, and per file either remove it
+      once for matching ``(__fid, __ri)``, and per file either remove it
       whole (every live row matched — bitmap cardinality equals the
       footer's numRecords) or re-add it behind a deletion vector
       covering the matches (straddling files, merge-on-read: kilobytes
@@ -1048,14 +1048,13 @@ def _replace_where_actions(
     scan_snap = _stats_candidates(snap, predicate)
     if not scan_snap.files:
         return [], []
-    scan = scan_live_rows(spark, scan_snap, with_meta=True)
-    matches = scan.filter(F.expr(predicate)).select("__fp", "__ri")
-    rel_of = _rel_by_abs_path(snap)
+    scan = scan_live_rows(
+        spark, snap, [rel for rel, _ in scan_snap.files], with_meta=True
+    )
+    matches = scan.filter(F.expr(predicate)).select("__fid", "__ri")
     partial, whole = [], []
     for r in _encode_dv_groups(spark, snap, path, matches):
-        rel = rel_of.get(r["__fp"])
-        if rel is None:
-            raise ValueError(f"replaceWhere scan yielded unknown file {r['__fp']}")
+        rel = snap.files[r["__fid"]][0]
         add = snap.adds[rel]
         nrec = None
         try:
@@ -2160,20 +2159,18 @@ def delta_merge(
             # (a merge that read a DV'd file raw would resurrect its deleted
             # rows into the rewrite); on a ROW-TRACKING table with each old
             # row's id/commit-version resolved so the rewrite keeps them.
-            # dv mode needs each old row's (__fp, __ri).
+            # dv mode needs each old row's (__fid, __ri).
             keep_meta = mode == "dv"
             if rt_on:
                 old = rtm.scan_with_row_ids(spark, snap, touched, with_meta=keep_meta)
             else:
                 old = scan_live_rows(spark, snap, touched, with_meta=keep_meta)
-            if keep_meta and "__fpr" in old.columns:
-                old = old.drop("__fpr")  # raw-path twin; only __fp/__ri needed
             old_in = old.withColumn("__upd", F.lit(0))
             if delete_predicate is not None:
                 old_in = old_in.withColumn("__del", F.lit(False))
             meta_nulls = (
                 [
-                    F.lit(None).cast("string").alias("__fp"),
+                    F.lit(None).cast("int").alias("__fid"),
                     F.lit(None).cast("bigint").alias("__ri"),
                 ]
                 if mode == "dv"
@@ -2238,9 +2235,9 @@ def delta_merge(
             # are the rows to deletion-vector in place. Old winners (stale
             # batch) stay untouched in their files; batch losers vanish.
             dv_losers = ranked.filter(
-                (F.col("__rn") > 1) & F.col("__fp").isNotNull()
-            ).select("__fp", "__ri")
-            ranked = ranked.drop("__fp", "__ri")
+                (F.col("__rn") > 1) & F.col("__fid").isNotNull()
+            ).select("__fid", "__ri")
+            ranked = ranked.drop("__fid", "__ri")
         elif want_changes:
             # filled by the data stage's own job: no action of its own
             ranked = frozen = ranked.persist()
@@ -2899,7 +2896,7 @@ def _vacuum_walk_parallel(
 
 
 def _encode_dv_groups(spark, snap, path: str, matches: DataFrame):
-    """Roaring deletion-vector bitmaps for the matched ``(__fp, __ri)``
+    """Roaring deletion-vector bitmaps for the matched ``(__fid, __ri)``
     rows, built EXECUTOR-SIDE: matched row indices group per file (one
     shuffle on the file id), each group unions with the file's prior DV
     and encodes there; the driver collects only (file, compressed
@@ -2911,28 +2908,25 @@ def _encode_dv_groups(spark, snap, path: str, matches: DataFrame):
     DV-producing DML (:func:`_apply_and_commit`, replaceWhere)."""
     import numpy as np
 
-    from pos_dlt_spark.sources.delta import _abs_file
     from pos_dlt_spark.sources.dv import (
         decode_dv_numpy,
         encode_dv_bitmap_np,
         read_dv_bytes,
     )
 
-    prior_blobs: dict[str, bytes] = {}
-    for rel, _pv in snap.files:
+    prior_blobs: dict[int, bytes] = {}
+    for fid, (rel, _pv) in enumerate(snap.files):
         dvd = snap.adds[rel].get("deletionVector")
         if dvd:
-            prior_blobs[os.path.abspath(_abs_file(path, rel))] = read_dv_bytes(
-                path, dvd
-            )
+            prior_blobs[fid] = read_dv_bytes(path, dvd)
     bc_prior = spark.sparkContext.broadcast(prior_blobs)
 
     def _encode_group(pdf):
         import pandas as pd
 
-        fp = pdf["__fp"].iloc[0]
+        fid = int(pdf["__fid"].iloc[0])
         new_idx = np.unique(pdf["__ri"].to_numpy(dtype="int64"))
-        prior_bytes = bc_prior.value.get(fp)
+        prior_bytes = bc_prior.value.get(fid)
         if prior_bytes is not None:
             prior_arr = decode_dv_numpy(prior_bytes)
             n_new = int(
@@ -2942,27 +2936,15 @@ def _encode_dv_groups(spark, snap, path: str, matches: DataFrame):
         else:
             n_new, union = len(new_idx), new_idx
         return pd.DataFrame(
-            {"__fp": [fp], "dv": [encode_dv_bitmap_np(union)], "n_new": [n_new]}
+            {"__fid": [fid], "dv": [encode_dv_bitmap_np(union)], "n_new": [n_new]}
         )
 
     return (
-        matches.select("__fp", "__ri")
-        .groupBy("__fp")
-        .applyInPandas(_encode_group, schema="__fp string, dv binary, n_new long")
+        matches.select("__fid", "__ri")
+        .groupBy("__fid")
+        .applyInPandas(_encode_group, schema="__fid int, dv binary, n_new long")
         .collect()
     )
-
-
-
-
-def _rel_by_abs_path(snap: DeltaSnapshot) -> dict[str, str]:
-    """Live file rel path keyed by its normalized absolute path — the
-    ``__fp`` rendering the match scans and the DV encoder report."""
-    from pos_dlt_spark.sources.delta import _abs_file
-
-    return {
-        os.path.abspath(_abs_file(snap.path, rel)): rel for rel, _ in snap.files
-    }
 
 
 def _dv_readd_actions(snap, path: str, rows, inline_threshold: int) -> list[dict]:
@@ -2975,15 +2957,10 @@ def _dv_readd_actions(snap, path: str, rows, inline_threshold: int) -> list[dict
 
     if not rows:
         return []
-    rel_of = _rel_by_abs_path(snap)
     actions: list[dict] = [
         _merged_protocol(snap.protocol, ("deletionVectors",), ("deletionVectors",))
     ]
-    for r in sorted(rows, key=lambda r: r["__fp"]):
-        rel = rel_of.get(r["__fp"])
-        if rel is None:
-            raise ValueError(f"scan yielded unknown file {r['__fp']}")
-        data = bytes(r["dv"])
+    for rel, data in sorted((snap.files[r["__fid"]][0], bytes(r["dv"])) for r in rows):
         add = dict(snap.adds[rel])
         add["deletionVector"] = make_dv_descriptor_bytes(
             path, data, bitmap_cardinality(data), inline_threshold=inline_threshold
@@ -3045,7 +3022,7 @@ class _DmlPlan:
     - ``new_rows``: rows for fresh data files (logical column names; on
       a row-tracking table plus the materialized row-id columns);
     - ``removes``: files removed whole;
-    - ``dv_losers``: ``(__fp, __ri)`` rows to deletion-vector in place
+    - ``dv_losers``: ``(__fid, __ri)`` rows to deletion-vector in place
       (dv mode);
     - ``changes``: change-feed rows (table columns + ``_change_type``);
     - ``staged``: actions the verb staged itself, committed as they are
@@ -3262,11 +3239,12 @@ def _stats_candidates(snap: DeltaSnapshot, predicate: str) -> DeltaSnapshot:
 
 
 def _match_scan(spark, snap: DeltaSnapshot, predicate: str):
-    """The DML match scan: ``(matches, candidates)`` — the ``(__fp,
+    """The DML match scan: ``(matches, candidates)`` — the ``(__fid,
     __ri)`` of every PHYSICAL row matching ``predicate`` (rows a DV
-    already deleted included), over the :func:`_stats_candidates`
-    snapshot. ``(None, candidates)`` when the stats exclude every file:
-    no scan task is scheduled."""
+    already deleted included), over the files of the
+    :func:`_stats_candidates` snapshot; ``__fid`` indexes ``snap.files``.
+    ``(None, candidates)`` when the stats exclude every file: no scan
+    task is scheduled."""
     from pyspark.sql import functions as F
 
     from pos_dlt_spark.sources.delta import scan_rels
@@ -3274,15 +3252,14 @@ def _match_scan(spark, snap: DeltaSnapshot, predicate: str):
     cand = _stats_candidates(snap, predicate)
     if not cand.files:
         return None, cand
-    scan = scan_rels(spark, cand, None, with_meta=True)
-    return scan.filter(F.expr(predicate)).select("__fp", "__ri"), cand
+    scan = scan_rels(spark, snap, [rel for rel, _ in cand.files], with_meta=True)
+    return scan.filter(F.expr(predicate)).select("__fid", "__ri"), cand
 
 
 def _hit_files(snap: DeltaSnapshot, matches: DataFrame) -> list[str]:
     """The sorted live rels holding >= 1 of the match scan's rows."""
-    rel_of = _rel_by_abs_path(snap)
     return sorted(
-        {rel_of[r["__fp"]] for r in matches.select("__fp").distinct().collect()}
+        snap.files[r["__fid"]][0] for r in matches.select("__fid").distinct().collect()
     )
 
 
@@ -3552,7 +3529,7 @@ def delta_update(
         # stable-id / last-update-version contract).
         rt_on = rtm.row_tracking_enabled(snap.configuration)
         rt_cols = [rtm.ROW_ID_COL, rtm.ROW_VER_COL] if rt_on else []
-        keep_meta = mode == "dv"  # dv mode needs each match's (__fp, __ri)
+        keep_meta = mode == "dv"  # dv mode needs each match's (__fid, __ri)
         if rt_on:
             old = rtm.scan_with_row_ids(spark, snap, hit_rels, with_meta=keep_meta)
         else:
@@ -3561,7 +3538,7 @@ def delta_update(
         upd_src = old.filter(hit)
         if mode == "dv":
             # dv mode consumes the matched rows TWICE (stage the updated
-            # copies; DV the originals via (__fp, __ri)) — freeze them once
+            # copies; DV the originals via (__fid, __ri)) — freeze them once
             # so non-deterministic SET expressions or sources cannot make
             # the two lineages disagree (ADVICE r08). Scope: matched rows.
             upd_src = upd_src.localCheckpoint(eager=True)
@@ -3626,7 +3603,7 @@ def delta_update(
             # rt ids land in the table's materialized physical columns
             new_rows=rtm.to_materialized(new_data, snap) if rt_on else new_data,
             removes=hit_rels if mode == "rewrite" else [],
-            dv_losers=upd_src.select("__fp", "__ri") if mode == "dv" else None,
+            dv_losers=upd_src.select("__fid", "__ri") if mode == "dv" else None,
             changes=changes,
             checks=(check_generated, check_constraints),
             rows=n_updated,

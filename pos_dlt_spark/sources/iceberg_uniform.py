@@ -41,6 +41,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import struct
 import uuid
 
@@ -551,9 +552,9 @@ def _commit_snapshot(
     list, appends the snapshot and its ``snapshot-log`` entry to
     ``meta`` (every other key — properties, refs, schema and spec
     history — passes through), advances ``current-snapshot-id``,
-    ``last-sequence-number`` and ``last-updated-ms``, and publishes
-    ``v<snapshot_id>.metadata.json`` then ``version-hint.text``. Returns
-    the metadata JSON path."""
+    ``last-sequence-number`` and ``last-updated-ms``, and publishes the
+    next metadata version (see :func:`_publish_metadata`). Returns the
+    metadata JSON path."""
     mlist_path = os.path.join(md_dir, f"snap-{snapshot_id}-{uuid.uuid4().hex[:8]}.avro")
     write_avro(mlist_path, _MANIFEST_LIST_SCHEMA, manifests, meta={"format-version": "2"})
     meta = dict(meta)
@@ -574,21 +575,24 @@ def _commit_snapshot(
     meta["current-snapshot-id"] = snapshot_id
     meta["last-sequence-number"] = snapshot_id
     meta["last-updated-ms"] = timestamp_ms
-    return _publish_metadata(md_dir, snapshot_id, meta, hint=True)
+    return _publish_metadata(md_dir, meta)
 
 
-def _publish_metadata(md_dir: str, version: int, meta: dict, hint: bool) -> str:
-    """Publish ``v<version>.metadata.json`` (and, with ``hint``,
-    ``version-hint.text``), each through a tmp file and one atomic
-    ``os.replace`` — the spec's commit is a swap of the table-metadata
-    file. A failed write removes its tmp file and leaves the prior
+def _publish_metadata(md_dir: str, meta: dict) -> str:
+    """Publish ``meta`` as the table's next metadata version — the
+    current one (:func:`_current_version`) plus 1 — then move
+    ``version-hint.text`` to it, each through a tmp file and one atomic
+    ``os.replace`` (the spec's commit is a swap of the table-metadata
+    file). The version is independent of the snapshot id: snapshot
+    commits and metadata-only rewrites (refs, expiry) each take the
+    next one. A failed write removes its tmp file and leaves the prior
     version current. Returns the metadata JSON path."""
+    version = _current_version(md_dir) + 1
     md_path = os.path.join(md_dir, f"v{version}.metadata.json")
-    writes = [(md_path, lambda fh: json.dump(meta, fh))]
-    if hint:
-        writes.append(
-            (os.path.join(md_dir, "version-hint.text"), lambda fh: fh.write(str(version)))
-        )
+    writes = [
+        (md_path, lambda fh: json.dump(meta, fh)),
+        (os.path.join(md_dir, "version-hint.text"), lambda fh: fh.write(str(version))),
+    ]
     for target, write in writes:
         tmp = target + f".tmp-{uuid.uuid4().hex[:8]}"
         try:
@@ -841,7 +845,6 @@ def _apply_transform(transform: str, value, ice_type: str):
     file. Used to translate a source-column equality filter into
     manifest-level pruning."""
     import datetime
-    import re
 
     if value is None:
         return None
@@ -1183,38 +1186,38 @@ def uniform_sync(spark, path: str, snap=None) -> str:
     return _commit_snapshot(md_dir, meta, snapshot_id, manifests, summary, ts_ms)
 
 
-def _read_prior_metadata(md_dir: str) -> dict:
-    """Resolve the current table metadata: ``version-hint.text`` first
-    (HadoopTables discovery — what this emitter writes), falling back to
-    the HIGHEST ``v<N>.metadata.json`` when the hint is absent or stale
-    (foreign tables don't always write one; the spec's rule for
-    hint-less discovery is exactly max-version)."""
-    hint = os.path.join(md_dir, "version-hint.text")
+_METADATA_NAME = re.compile(r"v(\d+)\.metadata\.json")
+
+
+def _current_version(md_dir: str) -> int:
+    """The table's current metadata version: ``version-hint.text`` when
+    it names a ``v<N>.metadata.json`` on disk (HadoopTables discovery —
+    what this emitter writes), else the HIGHEST ``v<N>.metadata.json``
+    (foreign tables don't always write a hint; the spec's rule for
+    hint-less discovery is exactly max-version); 0 when there is none."""
     try:
-        with open(hint, encoding="utf-8") as fh:
+        with open(os.path.join(md_dir, "version-hint.text"), encoding="utf-8") as fh:
             v = int(fh.read().strip())
-        with open(
-            os.path.join(md_dir, f"v{v}.metadata.json"), encoding="utf-8"
-        ) as fh:
-            return json.load(fh)
+        if os.path.exists(os.path.join(md_dir, f"v{v}.metadata.json")):
+            return v
     except (OSError, ValueError):
         pass
-    import re as _re
-
-    best = -1
     try:
-        for n in os.listdir(md_dir):
-            m = _re.fullmatch(r"v(\d+)\.metadata\.json", n)
-            if m:
-                best = max(best, int(m.group(1)))
+        names = os.listdir(md_dir)
     except OSError:
-        return {}
-    if best < 0:
-        return {}
+        return 0
+    return max(
+        (int(m.group(1)) for m in map(_METADATA_NAME.fullmatch, names) if m),
+        default=0,
+    )
+
+
+def _read_prior_metadata(md_dir: str) -> dict:
+    """The current table metadata (see :func:`_current_version`); empty
+    when there is none."""
+    path = os.path.join(md_dir, f"v{_current_version(md_dir)}.metadata.json")
     try:
-        with open(
-            os.path.join(md_dir, f"v{best}.metadata.json"), encoding="utf-8"
-        ) as fh:
+        with open(path, encoding="utf-8") as fh:
             return json.load(fh)
     except (OSError, ValueError):
         return {}
@@ -2166,12 +2169,11 @@ def iceberg_metadata_table(spark, path: str, kind: str):
 
 def uniform_expire_snapshots(path: str, keep: int = 5) -> list[str]:
     """Iceberg ``expireSnapshots`` for the emitted metadata: keep the
-    newest ``keep`` snapshots (the current one always survives), rewrite
-    the current metadata JSON without the expired entries (atomic
-    tmp+replace through :func:`_publish_metadata` — snapshot ids are
-    unchanged, so the version-hint stays valid), and delete the files
-    only expired snapshots used: their ``v<id>.metadata.json``, their
-    manifest lists, and any manifest referenced by NO surviving manifest
+    newest ``keep`` snapshots (the current one always survives), publish
+    the metadata without the expired entries as the next version
+    (:func:`_publish_metadata`), and delete the files only expired
+    snapshots used: every metadata JSON whose ``current-snapshot-id``
+    expired, their manifest lists, and any manifest referenced by NO surviving manifest
     list (incremental emission REUSES manifests across snapshots, so
     reference-counting against every retained list is the correctness
     condition — symmetric to the Delta log's sidecar GC). Manifest lists
@@ -2215,7 +2217,7 @@ def uniform_expire_snapshots(path: str, keep: int = 5) -> list[str]:
         meta["snapshot-log"] = [
             e for e in meta.get("snapshot-log") or [] if e["snapshot-id"] in kept_ids
         ]
-        _publish_metadata(md_dir, cur, meta, hint=False)
+        _publish_metadata(md_dir, meta)
     # the sweeps below run even when nothing expired: a failed commit's
     # orphans are collectable as soon as they exist
 
@@ -2267,12 +2269,8 @@ def uniform_expire_snapshots(path: str, keep: int = 5) -> list[str]:
         except OSError:
             pass
 
-    expired_ids = {s["snapshot-id"] for s in expired}
     for s in expired:
         _rm(s["manifest-list"])
-        old_md = os.path.join(md_dir, f"v{s['snapshot-id']}.metadata.json")
-        if s["snapshot-id"] != cur and os.path.exists(old_md):
-            _rm(old_md)
     # manifests referenced by no surviving list (expired lists already
     # deleted above cannot re-reference them), and manifest lists no
     # retained snapshot names — a commit that failed after writing its
@@ -2305,13 +2303,20 @@ def uniform_expire_snapshots(path: str, keep: int = 5) -> list[str]:
             for n in sorted(os.listdir(ddir)):
                 if n.endswith(".parquet") and n not in referenced_data:
                     _rm(os.path.join(ddir, n))
-    # metadata JSONs of expired snapshots may survive the loop above
-    # when their snapshot never became current — sweep by version number
+    # older metadata JSONs whose current snapshot expired: selected by
+    # the snapshot they hold, since every publish takes a new version
+    # (a ref or an expiry re-publishes the same snapshot)
+    expired_ids = {s["snapshot-id"] for s in expired}
     for n in sorted(os.listdir(md_dir)):
-        m = n.removeprefix("v").removesuffix(".metadata.json")
-        if n.startswith("v") and n.endswith(".metadata.json") and m.isdigit():
-            if int(m) in expired_ids:
-                _rm(os.path.join(md_dir, n))
+        if not _METADATA_NAME.fullmatch(n):
+            continue
+        try:
+            with open(os.path.join(md_dir, n), encoding="utf-8") as fh:
+                held = json.load(fh).get("current-snapshot-id")
+        except (OSError, ValueError):
+            continue
+        if held in expired_ids:
+            _rm(os.path.join(md_dir, n))
     return deleted
 
 
@@ -2348,7 +2353,8 @@ def uniform_set_ref(
     Writing TO a branch is outside this emitter's boundary — commits
     always advance main (the Delta table is the single writable
     lineage), exactly like UniForm. ``snapshot_id=<expired id>``
-    refuses. Atomic tmp+replace on the current metadata JSON."""
+    refuses. Published as the next metadata version
+    (:func:`_publish_metadata`)."""
     if ref_type not in ("tag", "branch"):
         raise ValueError(f"ref_type must be tag|branch, got {ref_type!r}")
     md_dir = os.path.join(path, "metadata")
@@ -2362,7 +2368,7 @@ def uniform_set_ref(
     refs = dict(meta.get("refs") or {})
     refs[name] = {"snapshot-id": sid, "type": ref_type}
     meta["refs"] = refs
-    _publish_metadata(md_dir, meta["current-snapshot-id"], meta, hint=False)
+    _publish_metadata(md_dir, meta)
 
 
 def uniform_drop_ref(path: str, name: str) -> None:
@@ -2379,7 +2385,7 @@ def uniform_drop_ref(path: str, name: str) -> None:
     del refs[name]
     meta = dict(meta)
     meta["refs"] = refs
-    _publish_metadata(md_dir, meta["current-snapshot-id"], meta, hint=False)
+    _publish_metadata(md_dir, meta)
 
 
 def _resolve_snapshot(

@@ -2095,3 +2095,48 @@ def test_expire_sweeps_orphan_manifest_lists(spark, tmp_path, monkeypatch, keep,
     assert [s["snapshot-id"] for s in meta["snapshots"]] == survivors
     assert uf.read_iceberg(spark, t, snapshot_id=2).count() == 110
     assert uf.read_iceberg(spark, t, snapshot_id=3).count() == 88
+
+
+def test_metadata_only_rewrites_publish_the_next_version(spark, tmp_path):
+    """A table whose metadata version is not its snapshot id (as a
+    foreign writer leaves it: ``v3.metadata.json``, hint 3, current
+    snapshot 8): a ref write publishes ``v4`` and moves the hint, so
+    both discovery rules (hint, and max-version without it) see the ref;
+    dropping it does the same."""
+    t = str(tmp_path / "foreign_version")
+    write_delta(spark.range(0, 10).coalesce(1), t, configuration=UNIFORM_CONF)
+    for lo in range(10, 80, 10):
+        write_delta(spark.range(lo, lo + 10).coalesce(1), t)
+    md_dir = os.path.join(t, "metadata")
+    meta = uf._read_prior_metadata(md_dir)
+    assert meta["current-snapshot-id"] == 8
+    for n in os.listdir(md_dir):
+        if n.endswith(".metadata.json"):
+            os.remove(os.path.join(md_dir, n))
+    with open(os.path.join(md_dir, "v3.metadata.json"), "w", encoding="utf-8") as fh:
+        json.dump(meta, fh)
+    hint = os.path.join(md_dir, "version-hint.text")
+    with open(hint, "w", encoding="utf-8") as fh:
+        fh.write("3")
+
+    def under_both_rules(fn):
+        """``fn()`` resolved through the hint, then without it."""
+        with open(hint, encoding="utf-8") as fh:
+            saved = fh.read()
+        first = fn()
+        os.remove(hint)
+        try:
+            return first, fn()
+        finally:
+            with open(hint, "w", encoding="utf-8") as fh:
+                fh.write(saved)
+
+    uf.uniform_set_ref(t, "audit")
+    with open(hint, encoding="utf-8") as fh:
+        assert fh.read().strip() == "4"
+    assert os.path.exists(os.path.join(md_dir, "v4.metadata.json"))
+    tagged = under_both_rules(lambda: uf.read_iceberg(spark, t, ref="audit").count())
+    assert tagged == (80, 80)
+    uf.uniform_drop_ref(t, "audit")
+    refs = under_both_rules(lambda: set(uf._read_prior_metadata(md_dir).get("refs") or {}))
+    assert refs == (set(), set())

@@ -381,17 +381,23 @@ def test_dv_exclusion_is_hash_anti_join_not_nested_loop(q):
     assert_not_in_plan(df, "BroadcastNestedLoopJoin")
 
 
-def test_dml_match_scan_pushes_predicate_to_parquet(spark):
+@pytest.mark.parametrize("fid_map_max", [None, 0], ids=["literal_map", "broadcast_join"])
+def test_dml_match_scan_pushes_predicate_to_parquet(spark, monkeypatch, fid_map_max):
     """The DELETE/UPDATE match scan must push its data predicate into the
     parquet scan (PushedFilters), on top of the log-stats file pruning —
-    the _metadata pseudo-columns (__fp/__ri) must not block pushdown."""
+    the _metadata pseudo-columns and the file-id resolution (__fid/__ri;
+    literal map or broadcast join) must not block pushdown."""
     import tempfile
 
     from pyspark.sql import functions as F
 
     from pos_dlt_spark.plans import pushed_filters
+    from pos_dlt_spark.sources import delta as D
     from pos_dlt_spark.sources.delta import delta_snapshot, scan_rels
     from pos_dlt_spark.sources.delta_writer import write_delta
+
+    if fid_map_max is not None:
+        monkeypatch.setattr(D, "DV_FID_MAP_MAX", fid_map_max)
 
     t = tempfile.mkdtemp() + "/t"
     write_delta(
@@ -402,9 +408,11 @@ def test_dml_match_scan_pushes_predicate_to_parquet(spark):
     )
     snap = delta_snapshot(spark, t)
     scan = scan_rels(spark, snap, None, with_meta=True)
-    df = scan.filter(F.expr("id BETWEEN 5 AND 7")).select("__fp", "__ri")
+    df = scan.filter(F.expr("id BETWEEN 5 AND 7")).select("__fid", "__ri")
     pf = " ".join(pushed_filters(df))
     assert "GreaterThanOrEqual(id,5)" in pf and "LessThanOrEqual(id,7)" in pf
+    if fid_map_max == 0:
+        assert_in_plan(df, "BroadcastHashJoin")
 
 
 def test_budget_select_no_single_partition_window(q):

@@ -81,12 +81,9 @@ def test_kernel_equals_duckdb_phash_on_crafted_docs(spark, docs, n_hashes):
 def test_builders_match_duckdb_text_twin(spark, docs):
     """Whole path (JVM tokens + shingles, kernel hashes) against the oracle
     CTEs the gates use: ``hsh`` as a set (DuckDB's list_distinct does not
-    keep order) and every ``mh*`` exactly. NULL text is left out: the
-    engines already shingle it differently (Spark ``['']``, DuckDB
-    ``[NULL]``) before any hash runs; the kernel tests above cover it."""
+    keep order) and every ``mh*`` exactly."""
     con = duckdb.connect()
-    texts = [d for d in DOCS if d[1] is not None]
-    con.register("documents", pd.DataFrame(texts, columns=["doc_id", "text"]))
+    con.register("documents", pd.DataFrame(DOCS, columns=["doc_id", "text"]))
     mins = ", ".join(f"{_mh_sql(i)} AS mh{i}" for i in range(N))
     oracle = con.execute(
         f"WITH toks_t AS (SELECT doc_id, text, {_TOKS} AS toks FROM documents), "
