@@ -39,6 +39,7 @@ from pos_dlt_spark.operators.silver import dedup_inventory_change, parse_invento
 # the key — the CDC target holds one row per key) and GREATEST made
 # null-explicit. Filter excludes online-store BOPIS rows (`04:93`): those
 # decrement physical-store inventory when picked, not the online store's.
+# The reference's `ORDER BY date_time DESC` is a per-file sort here.
 GOLD_INVENTORY_SQL = """
 SELECT a.store_id, a.item_id,
        MAX(a.quantity) AS snapshot_quantity,
@@ -56,7 +57,6 @@ LEFT OUTER JOIN (
   ON a.store_id = b.store_id AND a.item_id = b.item_id
      AND a.date_time <= b.date_time
 GROUP BY a.store_id, a.item_id
-ORDER BY date_time DESC
 """
 
 
@@ -174,15 +174,15 @@ def build_pos_pipeline(
         )
 
     @pipe.table(kind="stream", comment="parsed, deduplicated change events",
-                partition_by=["store_id", "date_day"],
+                partition_by=(["store_id", "date_day"] if gold_authoring == "incremental"
+                              else ["date_day"]),
                 table_properties={"quality": "silver"},
                 deps=["raw_inventory_change"])
     def inventory_change(spark: SparkSession) -> DataFrame:
-        # day partitioning (VERDICT r09 #6): store_id alone leaves the
-        # gold recompute's `a.date_time <= b.date_time` residual scanning
-        # ALL history at 100x; a materialized day column lets the gold
-        # reader prune whole day directories (see inventory_current) and
-        # gives retention jobs a drop-a-directory boundary
+        # day partitions let the gold prune days no snapshot can join
+        # (see inventory_current) and give retention a directory to
+        # drop; store_id leads only for the incremental view, which keys
+        # staleness on store directories
         raw = pipe.read_stream(spark, "raw_inventory_change")
         return dedup_inventory_change(
             parse_inventory_events(raw), dedup_watermark
@@ -258,22 +258,18 @@ def build_pos_pipeline(
                 deps=["latest_inventory_snapshot", "inventory_change", "store",
                       "inventory_change_type"])
     def inventory_current(spark: SparkSession) -> DataFrame:
-        for name in ("latest_inventory_snapshot", "inventory_change", "store",
-                     "inventory_change_type"):
+        for name in ("latest_inventory_snapshot", "store", "inventory_change_type"):
             pipe.read(spark, name).createOrReplaceTempView(name)
         # Day-partition pruning for the recompute: a change strictly
         # older than the OLDEST snapshot day can never satisfy the
         # join's `a.date_time <= b.date_time` for any snapshot row, so
         # those day directories are pruned at the source (conservative
-        # at day granularity — the boundary day is kept). The min is a
-        # 1-row aggregate over the keyed CDC target, not the fact table.
-        min_day = spark.sql(
-            "SELECT CAST(MIN(date_time) AS DATE) AS d FROM latest_inventory_snapshot"
-        ).collect()[0]["d"]
-        chg = pipe.read(spark, "inventory_change")
-        if min_day is not None and "date_day" in chg.columns:
-            chg = chg.filter(F.col("date_day") >= F.lit(min_day))
-        chg.createOrReplaceTempView("inventory_change")
-        return spark.sql(GOLD_INVENTORY_SQL)
+        # at day granularity — the boundary day is kept). The bound is a
+        # scalar subquery the scan evaluates as a partition filter.
+        oldest = spark.table("latest_inventory_snapshot").select(
+            F.min("date_time").cast("date")).scalar()
+        pipe.read(spark, "inventory_change").filter(
+            F.col("date_day") >= oldest).createOrReplaceTempView("inventory_change")
+        return spark.sql(GOLD_INVENTORY_SQL).sortWithinPartitions(F.desc("date_time"))
 
     return pipe

@@ -892,6 +892,41 @@ def _abs_file(table_path: str, rel: str) -> str:
     return os.path.join(table_path, rel)
 
 
+def _rel_uri(rel: str) -> str:
+    """The ``add.path`` / ``cdc.path`` of the ``/``-separated on-disk path
+    ``rel`` below the table root: URI-encoded, as the protocol records it
+    (what :func:`_abs_file` decodes). A Hive-escaped directory keeps its
+    escape on disk (``p=k%3Dv``), so its ``%`` is encoded once more."""
+    from urllib.parse import quote
+
+    return quote(rel, safe="/=,;$&+!'()*@")
+
+
+def _hive_values(segs: list[str]) -> dict[str, str | None]:
+    """The partition values that Hive-style ``col=value`` directory
+    segments spell, unescaped (``__HIVE_DEFAULT_PARTITION__`` is None)."""
+    from urllib.parse import unquote
+
+    out: dict[str, str | None] = {}
+    for seg in segs:
+        k, eq, v = seg.partition("=")
+        if eq:
+            out[k] = None if v == "__HIVE_DEFAULT_PARTITION__" else unquote(v)
+    return out
+
+
+def _parquet_files(root: str):
+    """``(dir, name, segs)`` of every ``.parquet`` file below ``root``
+    (names starting with ``_`` skipped), sorted per directory; ``segs``
+    are the on-disk directory segments between ``root`` and the file."""
+    for d, _dirs, files in os.walk(root):
+        sub = os.path.relpath(d, root)
+        segs = [] if sub == "." else sub.split(os.sep)
+        for n in sorted(files):
+            if n.endswith(".parquet") and not n.startswith("_"):
+                yield d, n, segs
+
+
 def _hive_style(files: list[tuple[str, dict[str, str | None]]], part_cols: list[str]) -> bool:
     """True when every live file embeds every partition column Hive-style
     (``col=value/`` directory segments whose values agree with the log) —
@@ -905,14 +940,9 @@ def _hive_style(files: list[tuple[str, dict[str, str | None]]], part_cols: list[
         dec = unquote(rel)
         if urlparse(dec).scheme or os.path.isabs(dec):
             return False
-        kv: dict[str, str | None] = {}
-        for seg in rel.split("/")[:-1]:
-            k, eq, v = seg.partition("=")
-            if eq:
-                kv[k] = None if v == "__HIVE_DEFAULT_PARTITION__" else unquote(v)
-        for c in part_cols:
-            if c not in kv or kv[c] != pvals.get(c):
-                return False
+        kv = _hive_values(dec.split("/")[:-1])
+        if any(c not in kv or kv[c] != pvals.get(c) for c in part_cols):
+            return False
     return True
 
 

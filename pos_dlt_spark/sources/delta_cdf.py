@@ -52,7 +52,10 @@ from pos_dlt_spark.sources.delta import (
     DeltaSnapshot,
     _abs_file,
     _commit_actions,
+    _hive_values,
     _list_log,
+    _parquet_files,
+    _rel_uri,
     delta_snapshot,
 )
 
@@ -78,44 +81,27 @@ def stage_change_files(
     """Write the change rows (data columns + ``_change_type``) under
     ``_change_data/`` (Hive-partitioned like the data files when the
     table is partitioned) and return the ``cdc`` actions for the commit."""
-    from urllib.parse import unquote
-
-    cd = os.path.join(table_path, "_change_data")
     staging = os.path.join(table_path, f"_staging_{uuid.uuid4().hex[:12]}")
     w = changes.write
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.parquet(staging)
     actions = []
-    for root, _dirs, files in os.walk(staging):
-        for n in sorted(files):
-            if not n.endswith(".parquet"):
-                continue
-            sub = os.path.relpath(root, staging)
-            segs = [] if sub == "." else sub.split(os.sep)
-            pvals: dict[str, str | None] = {}
-            for seg in segs:
-                k, _, v = seg.partition("=")
-                pvals[k] = None if v == "__HIVE_DEFAULT_PARTITION__" else unquote(v)
-            rel_dir = "/".join(segs)
-            rel = (
-                "_change_data/"
-                + (rel_dir + "/" if rel_dir else "")
-                + f"cdc-{uuid.uuid4().hex}.parquet"
-            )
-            dest = os.path.join(table_path, rel)
-            os.makedirs(os.path.dirname(dest), exist_ok=True)
-            os.replace(os.path.join(root, n), dest)
-            actions.append(
-                {
-                    "cdc": {
-                        "path": rel,
-                        "partitionValues": pvals,
-                        "size": os.path.getsize(dest),
-                        "dataChange": False,
-                    }
+    for root, n, segs in _parquet_files(staging):
+        rel = "/".join(["_change_data", *segs, f"cdc-{uuid.uuid4().hex}.parquet"])
+        dest = os.path.join(table_path, rel)
+        os.makedirs(os.path.dirname(dest), exist_ok=True)
+        os.replace(os.path.join(root, n), dest)
+        actions.append(
+            {
+                "cdc": {
+                    "path": _rel_uri(rel),
+                    "partitionValues": _hive_values(segs),
+                    "size": os.path.getsize(dest),
+                    "dataChange": False,
                 }
-            )
+            }
+        )
     import shutil
 
     shutil.rmtree(staging, ignore_errors=True)

@@ -34,6 +34,7 @@ reader) without the delta-spark dependency.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import uuid
@@ -44,7 +45,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql.types import StructType
 
 from pos_dlt_spark.sources import delta_fixture as fx
-from pos_dlt_spark.sources.delta import DeltaSnapshot, delta_snapshot
+from pos_dlt_spark.sources.delta import (
+    DeltaSnapshot,
+    _abs_file,
+    _hive_values,
+    _parquet_files,
+    _rel_uri,
+    delta_snapshot,
+)
 
 # merge's partition-keyed pruning collects the batch's DISTINCT partition
 # keys to the driver; above this (approx) cardinality it bails out to
@@ -932,7 +940,7 @@ def _discard_staged(
                 rel = a["add"]["path"]
         if rel:
             try:
-                os.remove(os.path.join(path, rel))
+                os.remove(_abs_file(path, rel))
             except OSError:
                 pass
 
@@ -1145,7 +1153,7 @@ def _backfill_shred_stats(spark, path: str, adds: list[dict], spec: dict) -> Non
     if not todo:
         return
     base_map = {os.path.basename(a["add"]["path"]): a for a in todo}
-    paths = [os.path.join(path, a["add"]["path"]) for a in todo]
+    paths = [_abs_file(path, a["add"]["path"]) for a in todo]
     shred_cols = [
         variant_shred_col(c, f) for c, fs in spec.items() for f in fs
     ]
@@ -1211,37 +1219,27 @@ def _stage_and_move(
     parsed back from the directory segments. ``rel_dir`` and
     ``partition_values`` place an unpartitioned frame into one existing
     partition (OPTIMIZE's per-partition rewrite)."""
-    from urllib.parse import unquote
-
     staging = os.path.join(path, f"_staging_{uuid.uuid4().hex[:12]}")
     w = df.write
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.parquet(staging)
     adds = []
-    for root, _dirs, files in os.walk(staging):
-        for n in sorted(files):
-            if not n.endswith(".parquet"):
-                continue
-            sub = os.path.relpath(root, staging)
-            segs = [] if sub == "." else sub.split(os.sep)
-            pvals: dict[str, str | None] = dict(partition_values or {})
-            for seg in segs:
-                k, _, v = seg.partition("=")
-                pvals[k] = None if v == "__HIVE_DEFAULT_PARTITION__" else unquote(v)
-            sub_dir = "/".join([rel_dir] + segs if rel_dir else segs)
-            rel = (sub_dir + "/" if sub_dir else "") + f"part-{uuid.uuid4().hex}.parquet"
-            dest = os.path.join(path, rel)
-            os.makedirs(os.path.dirname(dest), exist_ok=True)
-            os.replace(os.path.join(root, n), dest)
-            adds.append(
-                fx.add_action(
-                    rel,
-                    size=os.path.getsize(dest),
-                    partition_values=pvals or None,
-                    stats=_file_stats(dest),
-                )
+    for root, n, segs in _parquet_files(staging):
+        pvals = {**(partition_values or {}), **_hive_values(segs)}
+        sub_dir = "/".join([rel_dir] + segs if rel_dir else segs)
+        rel = (sub_dir + "/" if sub_dir else "") + f"part-{uuid.uuid4().hex}.parquet"
+        dest = os.path.join(path, rel)
+        os.makedirs(os.path.dirname(dest), exist_ok=True)
+        os.replace(os.path.join(root, n), dest)
+        adds.append(
+            fx.add_action(
+                _rel_uri(rel),
+                size=os.path.getsize(dest),
+                partition_values=pvals or None,
+                stats=_file_stats(dest),
             )
+        )
     import shutil
 
     shutil.rmtree(staging, ignore_errors=True)
@@ -2386,7 +2384,6 @@ def delta_optimize(
         raced = True
         from pyspark.sql import functions as F
 
-        from pos_dlt_spark.sources.delta import _abs_file
         from pos_dlt_spark.sources import delta_clustering as cl
         from pos_dlt_spark.sources import delta_rowtracking as rt
 
@@ -2640,11 +2637,16 @@ def delta_vacuum(
     # construction (p ~ 2.7e-6 at 10M paths anyway).
     import hashlib
     from array import array
+    from urllib.parse import unquote
 
     def _ref(rel: str) -> int:
         return int.from_bytes(
             hashlib.blake2b(rel.encode("utf-8"), digest_size=8).digest(), "big"
         )
+
+    def _ref_log(uri: str) -> int:
+        # a log path is URI-encoded; the walk below sees on-disk names
+        return _ref(unquote(uri).replace("/", os.sep))
 
     referenced = array("Q")
 
@@ -2673,7 +2675,7 @@ def delta_vacuum(
     # wall at the SCALE.md decade); the window replay reads only the
     # retained commits' JSONs and keeps 8-byte digests.
     for rel, _ in latest.files:
-        referenced.append(_ref(rel))
+        referenced.append(_ref_log(rel))
     latest_dvs = (
         latest.adds.dv_paths()
         if hasattr(latest.adds, "dv_paths")
@@ -2748,7 +2750,7 @@ def delta_vacuum(
             p = seg
         for a in _commit_actions(p):
             if "remove" in a:
-                referenced.append(_ref(a["remove"]["path"].replace("/", os.sep)))
+                referenced.append(_ref_log(a["remove"]["path"]))
             elif "add" in a:
                 dv = a["add"].get("deletionVector")
                 if dv:
@@ -2757,13 +2759,13 @@ def delta_vacuum(
                 # change-data (CDF) files of RETAINED commits stay
                 # readable; those of vacuumed-out history are collected
                 # with their data files
-                referenced.append(_ref(a["cdc"]["path"].replace("/", os.sep)))
+                referenced.append(_ref_log(a["cdc"]["path"]))
     # the oldest retained version's OWN commit may carry cdc files too
     p0 = commit_map.get(min(keep_versions))
     if p0 is not None:
         for a in _commit_actions(p0):
             if "cdc" in a:
-                referenced.append(_ref(a["cdc"]["path"].replace("/", os.sep)))
+                referenced.append(_ref_log(a["cdc"]["path"]))
     if len(latest.files) >= VACUUM_PARALLEL_WALK_MIN:
         deletable = _vacuum_walk_parallel(spark, path, referenced, cutoff)
     else:
@@ -4264,34 +4266,37 @@ def delta_unset_properties(
     )
 
 
+class _EmptyBatch(Exception):
+    pass
+
+
 def delta_stream_sink(path: str, app_id: str, partition_by: list[str] | None = None):
     """Exactly-once streaming Delta sink: a ``foreachBatch`` function
     whose per-micro-batch APPEND commit carries a SetTransaction
     (``appId=app_id, version=batch_id``) — a replay of an
     already-committed batch (crash between sink-write and checkpoint
     advance) is a NO-OP instead of duplicate rows, the same idempotence
-    contract delta's own streaming sink implements. Usage::
+    contract delta's own streaming sink implements. The staging write
+    computes and counts the batch once; an empty one commits nothing::
 
         q = (stream.writeStream
              .foreachBatch(delta_stream_sink(table, "my_app"))
              .option("checkpointLocation", ckpt)
              .trigger(availableNow=True).start())
     """
+    from pyspark.sql import Observation, functions as F
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        # cached so the empty-batch probe and the write compute each
-        # partition once: a re-computed partition would re-read the
-        # source and count twice in any observe() metrics on the stream
-        batch_df.persist()
-        try:
-            if not batch_df.take(1):
-                return
+        obs = Observation()
+        def nonempty() -> None:
+            if not obs.get["n"]:
+                raise _EmptyBatch
+
+        with contextlib.suppress(_EmptyBatch):
             write_delta(
-                batch_df, path, mode="append", partition_by=partition_by,
-                txn=(app_id, int(batch_id)),
+                batch_df.observe(obs, F.count(F.lit(1)).alias("n")), path, mode="append",
+                partition_by=partition_by, txn=(app_id, int(batch_id)), precommit=nonempty,
             )
-        finally:
-            batch_df.unpersist()
 
     return sink
 
@@ -4513,7 +4518,7 @@ def delta_restore(spark, path: str, version: int | None = None, timestamp=None) 
     from pos_dlt_spark.sources.dv import dv_relative_path
 
     missing = [
-        rel for rel in tgt_live if not os.path.exists(os.path.join(path, rel))
+        rel for rel in tgt_live if not os.path.exists(_abs_file(path, rel))
     ]
     for rel in sorted(tgt_live):
         dv = target.adds[rel].get("deletionVector")
@@ -4588,9 +4593,8 @@ def delta_clone(
 
     ``version=``/``timestamp=`` clone a time-travel snapshot. Returns
     the committed version (0)."""
-    from urllib.parse import quote
+    from urllib.parse import quote, unquote
 
-    from pos_dlt_spark.sources.delta import _abs_file
     from pos_dlt_spark.sources.dv import dv_relative_path
 
     snap = delta_snapshot(spark, src, version, timestamp=timestamp)
@@ -4598,14 +4602,14 @@ def delta_clone(
     if os.path.isdir(log_dir) and os.listdir(log_dir):
         raise ValueError(f"{dst} is already a Delta table")
     adds = []
-    copies: list[tuple[str, str]] = []  # (absolute source, relative dest)
+    copies: list[tuple[str, str]] = []  # (absolute source, on-disk relative dest)
     for rel, _pv in snap.files:
         add = dict(snap.adds[rel])
         dv = add.get("deletionVector")
         if deep:
             # keep the source's relative layout (partition dirs intact)
             add["path"] = rel
-            copies.append((os.path.abspath(_abs_file(src, rel)), rel))
+            copies.append((os.path.abspath(_abs_file(src, rel)), unquote(rel)))
             if dv and dv.get("storageType") in ("u", "p"):
                 dvsrc = (
                     dv["pathOrInlineDv"]
@@ -4696,8 +4700,6 @@ def convert_to_delta(spark, parquet_dir: str) -> int:
     ``CONVERT TO DELTA`` contract. Fails if a log already exists.
 
     Returns the committed version (0)."""
-    from urllib.parse import unquote
-
     log_dir = os.path.join(parquet_dir, "_delta_log")
     if os.path.isdir(log_dir) and os.listdir(log_dir):
         raise ValueError(f"{parquet_dir} is already a Delta table")
@@ -4705,25 +4707,19 @@ def convert_to_delta(spark, parquet_dir: str) -> int:
     schema = full.schema
     # partition columns = those Spark's discovery added beyond the files'
     # physical columns (sample one file's footer for the physical set)
-    rels = []
-    for root, _dirs, files in os.walk(parquet_dir):
-        for n in sorted(files):
-            if n.endswith(".parquet") and not n.startswith("_"):
-                rels.append(os.path.relpath(os.path.join(root, n), parquet_dir))
-    if not rels:
+    files = [
+        ("/".join(segs + [n]), segs) for _d, n, segs in _parquet_files(parquet_dir)
+    ]
+    if not files:
         raise ValueError(f"no parquet files under {parquet_dir}")
     import pyarrow.parquet as pq
 
-    physical = set(pq.read_schema(os.path.join(parquet_dir, rels[0])).names)
+    physical = set(pq.read_schema(os.path.join(parquet_dir, files[0][0])).names)
     partition_columns = [f.name for f in schema.fields if f.name not in physical]
 
     adds = []
-    for rel in rels:
-        pvals: dict[str, str | None] = {}
-        for seg in rel.split(os.sep)[:-1]:
-            k, eq, v = seg.partition("=")
-            if eq:
-                pvals[k] = None if v == "__HIVE_DEFAULT_PARTITION__" else unquote(v)
+    for rel, segs in files:
+        pvals = _hive_values(segs)
         missing = [c for c in partition_columns if c not in pvals]
         if missing:
             raise ValueError(
@@ -4733,7 +4729,7 @@ def convert_to_delta(spark, parquet_dir: str) -> int:
         fpath = os.path.join(parquet_dir, rel)
         adds.append(
             fx.add_action(
-                rel.replace(os.sep, "/"),
+                _rel_uri(rel),
                 size=os.path.getsize(fpath),
                 partition_values={c: pvals[c] for c in partition_columns} or None,
                 stats=_file_stats(fpath),

@@ -46,6 +46,7 @@ import struct
 import uuid
 
 from pos_dlt_spark.pyworker import map_in_pandas
+from pos_dlt_spark.sources.delta import _abs_file
 from pos_dlt_spark.sources.fileindex import pruned_parquet as _pruned
 
 # --------------------------------------------------------------------------
@@ -1015,7 +1016,7 @@ def uniform_sync(spark, path: str, snap=None) -> str:
                 "file_sequence_number": None,
                 "data_file": {
                     "content": 0,
-                    "file_path": os.path.join(path, rel.replace("/", os.sep)),
+                    "file_path": _abs_file(path, rel),
                     "file_format": "PARQUET",
                     "partition": {
                         c: _typed_partition_value((pv or {}).get(c), ptypes[c])
@@ -1072,7 +1073,7 @@ def uniform_sync(spark, path: str, snap=None) -> str:
                     pos = np.concatenate(
                         [np.arange(s, e + 1, dtype=np.int64) for s, e in runs]
                     )
-                    fp = os.path.join(path, rel.replace("/", os.sep))
+                    fp = _abs_file(path, rel)
                     tbls.append(
                         pa.table(
                             {

@@ -12,9 +12,10 @@ materialized id, minus the decoded deletion vectors)."""
 
 from __future__ import annotations
 
+import os
+
 import pyarrow.parquet as pq
 import pytest
-from pyspark.errors import AnalysisException
 
 from pos_dlt_spark.sources import delta as D
 from pos_dlt_spark.sources.delta import _abs_file, delta_snapshot, read_delta
@@ -38,8 +39,8 @@ LAYOUTS = {
     "flat": (None, ["a", "b", "c"]),
     # directory names with a space, ',' and '(' (kept verbatim on disk)
     "partitioned": (["p"], ["a b,c", "(x) y", "z,(w)"]),
-    # '%' and '=' are escaped on disk (p=k%3Dv) but the add path records
-    # the escaped name unencoded, so the reader's URI decode misses it
+    # '%' and '=' are Hive-escaped on disk (p=k%3Dv); the add path
+    # URI-encodes that name once more (p=k%253Dv)
     "partitioned_escaped": (["p"], ["50% (off)", "k=v", "a b"]),
 }
 
@@ -100,13 +101,7 @@ def _spark_rows(spark, t):
     [
         "flat",
         "partitioned",
-        pytest.param(
-            "partitioned_escaped",
-            marks=pytest.mark.xfail(
-                strict=True, raises=AnalysisException,
-                reason="add paths of Hive-escaped partition directories are not URI-encoded",
-            ),
-        ),
+        "partitioned_escaped",
     ],
 )
 @pytest.mark.parametrize("fid_map_max", [None, 0], ids=["literal_map", "broadcast_join"])
@@ -178,3 +173,50 @@ def test_positional_reads_agree_across_resolver_branches(
     for i in updated:
         if i not in fresh:
             assert ver[i] == v_upd, i
+
+
+def test_escaped_partition_paths_survive_maintenance(spark, tmp_path):
+    """The on-disk consumers of ``add.path`` / ``cdc.path`` decode it: on
+    a table whose partition values are Hive-escaped on disk, the change
+    feed reads its change files, VACUUM collects only the overwritten
+    files, RESTORE finds its target's files, a deep CLONE copies them
+    to the same directories, and CONVERT TO DELTA records paths the
+    reader resolves."""
+    from pos_dlt_spark.sources.delta_cdf import read_change_feed
+    from pos_dlt_spark.sources.delta_writer import (
+        convert_to_delta,
+        delta_clone,
+        delta_restore,
+        delta_vacuum,
+    )
+
+    part, pvals = LAYOUTS["partitioned_escaped"]
+    t = str(tmp_path / "t")
+    write_delta(_rows(spark, pvals, range(9), 0, "a{}".format), t, partition_by=part,
+                configuration={"delta.enableChangeDataFeed": "true"})
+    live0 = {_abs_file(t, rel) for rel, _ in delta_snapshot(spark, t).files}
+    write_delta(_rows(spark, pvals, range(9), 1, "b{}".format), t, mode="overwrite",
+                partition_by=part)
+    delta_delete(spark, t, "id = 4")
+    assert sorted(
+        (r.id, r._change_type) for r in read_change_feed(spark, t, 2).collect()
+    ) == [(4, "delete")]
+
+    def rows(path):
+        return sorted((r.id, r.p, r.v) for r in read_delta(spark, path).collect())
+
+    gone = delta_vacuum(spark, t, retain_versions=1, dry_run=True)
+    assert {os.path.join(t, g) for g in gone} == live0
+    delta_restore(spark, t, version=0)
+    assert rows(t) == [(i, pvals[i % 3], f"a{i}") for i in range(9)]
+    delta_clone(spark, t, str(tmp_path / "deep"), deep=True)
+    assert rows(str(tmp_path / "deep")) == rows(t)
+
+    flat = str(tmp_path / "conv")
+    spark.createDataFrame(
+        [(i, pvals[i % 3]) for i in range(6)], "id long, p string"
+    ).write.partitionBy("p").parquet(flat)
+    convert_to_delta(spark, flat)
+    assert sorted((r.id, r.p) for r in read_delta(spark, flat).collect()) == [
+        (i, pvals[i % 3]) for i in range(6)
+    ]

@@ -1603,6 +1603,65 @@ def test_delta_stream_sink_exactly_once(spark, tmp_path):
     assert read_delta(spark, table).count() == 20
 
 
+@pytest.mark.parametrize("part", [None, ["b"]], ids=["flat", "partitioned"])
+def test_delta_stream_sink_empty_batch_and_single_compute(spark, tmp_path, part):
+    """The sink's contract: an empty micro-batch commits no version,
+    records no SetTransaction and leaves no staged file or ``_staging_*``
+    directory behind, on a new table and on an existing one; a
+    non-empty batch is computed once, so a stream-level ``observe``
+    count equals the rows the table received."""
+    from pos_dlt_spark.sources.delta import _abs_file
+    from pos_dlt_spark.sources.delta_writer import delta_stream_sink
+
+    def frame(n):
+        return spark.range(n).select("id", (F.col("id") % 2).alias("b"))
+
+    def leftovers():
+        live = {
+            os.path.abspath(_abs_file(table, rel))
+            for rel, _ in delta_snapshot(spark, table).files
+        }
+        return [
+            os.path.join(r, n)
+            for r, ds, fs in os.walk(table)
+            for n in ds + fs
+            if n.startswith("_staging_")
+            or (n.endswith(".parquet") and "_delta_log" not in r
+                and os.path.abspath(os.path.join(r, n)) not in live)
+        ]
+
+    table = str(tmp_path / "sink")
+    sink = delta_stream_sink(table, "app1", partition_by=part)
+    sink(frame(0), 0)
+    assert not os.path.isdir(os.path.join(table, "_delta_log"))
+    sink(frame(6), 1)
+    sink(frame(0), 2)
+    snap = delta_snapshot(spark, table)
+    assert (snap.version, snap.txns) == (0, {"app1": 1})
+    assert leftovers() == []
+
+    land = str(tmp_path / "land")
+    spark.range(40).repartition(4).write.parquet(land)
+    q = (
+        spark.readStream.schema("id bigint").option("maxFilesPerTrigger", "1")
+        .parquet(land)
+        .select("id", (F.col("id") % 2).alias("b"))
+        .observe("rows", F.count(F.lit(1)).alias("n"))
+        .writeStream.foreachBatch(delta_stream_sink(table, "app2", partition_by=part))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    observed = sum(
+        int(p.observedMetrics["rows"]["n"])
+        for p in q.recentProgress if "rows" in (p.observedMetrics or {})
+    )
+    assert observed == 40
+    assert read_delta(spark, table).count() == 46
+    assert leftovers() == []
+
+
 def test_optimize_where_compacts_only_matching_partitions(spark, tmp_path):
     from pos_dlt_spark.sources.delta_writer import delta_optimize
     from pyspark.sql import functions as F

@@ -255,46 +255,81 @@ def test_delta_mode_cdc_target_change_feed_consumption(spark, tmp_path):
         plain.table_changes(spark, "x")
 
 
-def test_inventory_change_day_partitioned_and_pruned(spark, pipeline_result):
-    """VERDICT r09 #6: the silver change table is partitioned by
-    (store_id, day) — the physical layout carries date_day directories,
-    a day-equality read prunes to them (PartitionFilters in the scan,
-    parquet mode), and the GOLD recompute's source filter
-    (date_day >= oldest snapshot day) reaches the scan as a partition
-    filter instead of a post-scan residual."""
+def _plan_nodes(plan):
+    """Every node of an executed plan, through AQE's stage wrappers."""
+    out, todo = [], [plan]
+    while todo:
+        n = todo.pop()
+        out.append(n)
+        kind = n.getClass().getSimpleName()
+        if kind == "AdaptiveSparkPlanExec":
+            todo.append(n.executedPlan())
+        elif kind.endswith("QueryStageExec"):
+            todo.append(n.plan())
+        ch = n.children()
+        todo += [ch.apply(i) for i in range(ch.size())]
+    return out
+
+
+def test_inventory_change_day_partitioned_and_pruned(spark, pipeline_result, request):
+    """The silver change table is partitioned by day alone — date_day=
+    directories at the table root — except under the incremental gold,
+    whose joined view keys staleness on store directories
+    (store_id=/date_day=). The python gold's own plan carries the
+    oldest-snapshot-day bound as a scalar subquery in the silver scan's
+    PartitionFilters, has no global range sort, and at run time does not
+    read a planted silver day older than the oldest snapshot day."""
     import os
 
+    from pos_dlt_spark.sources.delta import delta_snapshot
+    from pos_dlt_spark.sources.delta_writer import delta_delete, write_delta
+
     pipe, _ = pipeline_result
+    mode = request.node.callspec.params["pipeline_result"]
     root = pipe.table_path("inventory_change")
-    store_dirs = [d for d in os.listdir(root) if d.startswith("store_id=")]
-    assert store_dirs, "expected store_id=... partition directories"
-    inner = os.path.join(root, store_dirs[0])
-    assert any(d.startswith("date_day=") for d in os.listdir(inner)), (
-        "expected nested date_day=... partition directories"
+    top = [d for d in os.listdir(root) if not d.startswith(("_", "."))]
+    if mode == "incremental":
+        assert top and all(d.startswith("store_id=") for d in top), top
+        inner = os.listdir(os.path.join(root, top[0]))
+        assert any(d.startswith("date_day=") for d in inner), inner
+        return
+    assert top and all(d.startswith("date_day=") for d in top), top
+    if mode == "sql":  # the reference's gold text runs verbatim
+        return
+
+    gold = pipe.tables["inventory_current"].fn(spark)
+    plan = gold._jdf.queryExecution().executedPlan().toString()
+    pf = [
+        seg.split(", PushedFilters", 1)[0]
+        for seg in plan.split("PartitionFilters: [")[1:]
+        if "date_day" in seg.split(", PushedFilters", 1)[0]
+    ]
+    assert len(pf) == 1 and "date_day" in pf[0] and "Subquery" in pf[0], plan[:3000]
+    assert "rangepartitioning" not in plan, plan[:3000]
+
+    if mode != "delta":
+        return
+    # plant one silver row on a day long before any snapshot; the gold's
+    # scan must skip its file at run time (a parquet stream table lists
+    # files through its sink log, so only Delta can be planted)
+    row = pipe.read(spark, "inventory_change").limit(1).withColumn(
+        "date_day", F.lit("2000-01-01").cast("date")
     )
-    if pipe.storage_format == "parquet":
-        df = pipe.read(spark, "inventory_change")
-        some_day = df.select("date_day").first()["date_day"]
-        plan = (
-            df.filter(F.col("date_day") == F.lit(some_day))
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-        assert "PartitionFilters" in plan and "date_day" in plan.split(
-            "PartitionFilters", 1
-        )[1].split("]", 1)[0], f"day filter did not reach PartitionFilters:\n{plan[:2000]}"
-        # the gold recompute's own change-side read: the >= min-day
-        # bound lands in PartitionFilters too
-        for name in ("latest_inventory_snapshot", "store", "inventory_change_type"):
-            pipe.read(spark, name).createOrReplaceTempView(name)
-        min_day = spark.sql(
-            "SELECT CAST(MIN(date_time) AS DATE) AS d FROM latest_inventory_snapshot"
-        ).collect()[0]["d"]
-        gold_src = df.filter(F.col("date_day") >= F.lit(min_day))
-        plan2 = gold_src._jdf.queryExecution().executedPlan().toString()
-        pf = plan2.split("PartitionFilters", 1)[1].split("]", 1)[0]
-        assert "date_day" in pf, f"gold min-day bound not pushed:\n{plan2[:2000]}"
+    v0 = delta_snapshot(spark, root).version
+    write_delta(row, root, mode="append", partition_by=["date_day"])
+    try:
+        gold = pipe.tables["inventory_current"].fn(spark)
+        gold.collect()
+        scans = [
+            n for n in _plan_nodes(gold._jdf.queryExecution().executedPlan())
+            if n.metrics().contains("staticFilesNum")
+        ]
+        assert len(scans) == 1, [n.nodeName() for n in scans]
+        m = {k: scans[0].metrics().apply(k).value() for k in ("numFiles", "staticFilesNum")}
+        assert 0 < m["numFiles"] < m["staticFilesNum"], m
+    finally:
+        delta_delete(spark, root, "date_day = DATE'2000-01-01'")
+        assert delta_snapshot(spark, root).version == v0 + 2
 
 
 def test_gold_day_pruning_preserves_oracle(spark, pipeline_result, pos_fixtures):

@@ -169,6 +169,11 @@ def main() -> None:
             runner.run_table(spark, name)
             timings[f"stage:{name}"] = time.time() - t0
 
+        from pos_dlt_spark.sources.delta import delta_snapshot
+
+        silver = delta_snapshot(spark, pipe.table_path("inventory_change"))
+        silver_dirs = {os.path.dirname(rel) for rel, _ in silver.files}
+
         # rows per stage from the pipeline's own event log (r11 surface)
         ev = pipe.event_log(spark)
         rows_by_table = {
@@ -243,6 +248,8 @@ def main() -> None:
         print(f"| gold rows | | {n_gold} |")
         print(f"\n- silver rows written: {silver_rows}; CDC counts: "
               f"{rows_by_table.get('latest_inventory_snapshot')}")
+        print(f"- silver layout: partitioned by {silver.partition_columns}, "
+              f"{len(silver.files)} files in {len(silver_dirs)} directories")
         print(f"- gold recompute, UNPRUNED change scan: {timings['gold_unpruned']:.1f} s")
         print(f"- gold recompute, day-PRUNED scan (>= {min_day}): "
               f"{timings['gold_pruned']:.1f} s (2nd: {timings['gold_pruned_2nd']:.1f} s) — "
