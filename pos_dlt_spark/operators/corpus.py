@@ -30,6 +30,15 @@ operators/dedup.py) and "training batches":
 Everything is JVM column expressions + hash-partitioned joins/aggs; the
 only driver-side values are bounded model-size artifacts (per-part totals,
 the corpus doc count).
+
+Lambdas read materialized columns: higher-order functions
+(``transform``/``filter``/``aggregate``) run interpreted, outside
+whole-stage codegen and its subexpression elimination, and evaluate their
+body once per array element. A lambda that captures ``tokens(col)``
+re-splits the document for every gram it builds (O(T^2) per row), so each
+operator projects the tokens into their own column first and the lambda
+reads that attribute; CollapseProject keeps the two projections apart
+because the token column is referenced more than once.
 """
 
 from __future__ import annotations
@@ -116,9 +125,10 @@ def repeated_ngram_ratio(
     """Within-document repetition: 1 - distinct/total word ``n``-grams
     (0 = no repetition), plus the raw counts — the Gopher-class quality
     filter that catches boilerplate/looping text. Pure per-row array
-    expression over one tokenize pass; docs shorter than ``n`` tokens have
-    a single whole-doc gram and ratio 0."""
-    toks = tokens(F.col(text_col))
+    expression over one projected tokenize pass; docs shorter than ``n``
+    tokens have a single whole-doc gram and ratio 0."""
+    toks_df = df.select(F.col(id_col), tokens(F.col(text_col)).alias("__toks"))
+    toks = F.col("__toks")
     idx = F.sequence(F.lit(0), F.greatest(F.size(toks) - n, F.lit(0)))
     grams = F.when(
         F.size(toks) >= n,
@@ -129,7 +139,7 @@ def repeated_ngram_ratio(
             ),
         ),
     ).otherwise(F.array(F.concat_ws(" ", toks)))
-    out = df.select(F.col(id_col), grams.alias("__g"))
+    out = toks_df.select(F.col(id_col), grams.alias("__g"))
     total, distinct = F.size("__g"), F.size(F.array_distinct("__g"))
     return out.select(
         id_col,
@@ -856,7 +866,7 @@ def bpe_pair_counts(
     Returns (left, right, n_pairs), ordered by count desc then pair asc
     when ``top_k`` is set.
     """
-    toks = tokens(F.col(text_col))
+    toks = F.col("__toks")
     idx = F.sequence(F.lit(0), F.size(toks) - 2)
     pairs = F.when(
         F.size(toks) >= 2,
@@ -869,7 +879,8 @@ def bpe_pair_counts(
         ),
     ).otherwise(F.array().cast("array<struct<left:string,right:string>>"))
     out = (
-        df.select(F.explode(pairs).alias("p"))
+        df.select(tokens(F.col(text_col)).alias("__toks"))
+        .select(F.explode(pairs).alias("p"))
         .groupBy(F.col("p.left").alias("left"), F.col("p.right").alias("right"))
         .agg(F.count(F.lit(1)).alias("n_pairs"))
     )

@@ -38,20 +38,8 @@ from pos_dlt_spark.pyworker import map_in_pandas
 # -- shingling --------------------------------------------------------------
 
 
-def word_shingles(text: Column, n: int = 3) -> Column:
-    """Distinct word n-gram shingles of lowercased text (array<string>).
-
-    PERFORMANCE: only pass an already-materialized token/text *attribute*
-    here. Higher-order functions run interpreted (outside whole-stage
-    codegen) and re-evaluate the lambda body per array element, so a
-    non-trivial expression for ``text`` gets recomputed O(#shingles) times
-    per row. For DataFrame-level work use :func:`shingle_table`, which
-    stages tokenization into its own projection first.
-    """
-    return _shingles_from_tokens(tokens(text), n)
-
-
 def _shingles_from_tokens(toks: Column, n: int) -> Column:
+    """Distinct word ``n``-grams of ``toks``, a materialized token column."""
     idx = F.sequence(F.lit(0), F.size(toks) - n)
     joined = F.transform(
         idx, lambda i: F.concat_ws(" ", *[F.element_at(toks, (i + j + 1).cast("int")) for j in range(n)])
@@ -350,29 +338,14 @@ def minhash_lsh_dedup_pairs(
 # -- SimHash ----------------------------------------------------------------
 
 
-def simhash(text: Column, bits: int = 16, shingle_n: int = 3) -> Column:
-    """SimHash over shingles: bit b is set when at least half the shingles
-    have bit b set in their hash (majority sign). Per-row expression —
-    only for already-cheap ``text`` inputs; use :func:`simhash_table` for
-    DataFrame work (it hashes each shingle once, not once per bit)."""
-    sh = word_shingles(text, shingle_n)
-    n = F.size(sh)
-    out = F.lit(0).cast("bigint")
-    for b in range(bits):
-        mask = 1 << b
-        cnt = F.size(F.filter(sh, lambda s: (phash(s).bitwiseAND(F.lit(mask))) != 0))
-        out = out + F.when(cnt * 2 >= n, F.lit(mask)).otherwise(F.lit(0))
-    return out
-
-
 def simhash_table(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     bits: int = 16, shingle_n: int = 3, out_col: str = "simhash",
 ) -> DataFrame:
     """SimHash as a staged DataFrame op: tokenize -> shingle -> hash each
     shingle ONCE into an int array -> 16 cheap bit-count filters over that
-    array. Same values as :func:`simhash`, O(#shingles) md5 calls per row
-    instead of O(bits * #shingles^2) interpreted re-evaluations."""
+    array: O(#shingles) md5 calls per row. Bit b is set when at least
+    half the shingles have bit b set in their hash (majority sign)."""
     sh_df = shingle_table(df, text_col, id_col, shingle_n)
     hs_df = sh_df.select(
         F.col(id_col), F.transform(F.col("sh"), lambda s: phash(s)).alias("__hs")

@@ -915,6 +915,21 @@ def _hive_values(segs: list[str]) -> dict[str, str | None]:
     return out
 
 
+_HIVE_ESCAPED = frozenset('"#%\'*/:=?[\\]^{\x7f') | frozenset(map(chr, range(1, 32)))
+
+
+def _hive_segment(col: str, value: str | None) -> str:
+    """The ``col=value`` directory segment Spark's writer names for a
+    partition value (the inverse of :func:`_hive_values`): Hive path
+    escaping (``%XX``) on both sides; None and ``''`` are the default
+    partition."""
+
+    def esc(s: str) -> str:
+        return "".join(f"%{ord(c):02X}" if c in _HIVE_ESCAPED else c for c in s)
+
+    return f"{esc(col)}={esc(value) if value else '__HIVE_DEFAULT_PARTITION__'}"
+
+
 def _parquet_files(root: str):
     """``(dir, name, segs)`` of every ``.parquet`` file below ``root``
     (names starting with ``_`` skipped), sorted per directory; ``segs``

@@ -48,6 +48,7 @@ from pos_dlt_spark.sources import delta_fixture as fx
 from pos_dlt_spark.sources.delta import (
     DeltaSnapshot,
     _abs_file,
+    _hive_segment,
     _hive_values,
     _parquet_files,
     _rel_uri,
@@ -2549,8 +2550,7 @@ def delta_optimize(
                 data = data.coalesce(group_target)
             # partition directories and partitionValues keys use PHYSICAL names
             rel_dir = "/".join(
-                f"{snap.physical_names.get(c, c)}="
-                f"{'__HIVE_DEFAULT_PARTITION__' if v is None else v}"
+                _hive_segment(snap.physical_names.get(c, c), v)
                 for c, v in zip(snap.partition_columns, k)
             )
             pvals_out = {

@@ -1,6 +1,9 @@
 """Unit tests for corpus-assembly operators: packing's distributed prefix
 sum vs a naive reference, split stability, contamination planting."""
 
+import re
+from collections import Counter
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -165,6 +168,72 @@ def test_bpe_pair_counts_tiny_corpus(spark):
     out = {(r["left"], r["right"]): r["n_pairs"] for r in C.bpe_pair_counts(df).collect()}
     # doc1: (a,b)(b,a)(a,b)(b,c); doc2: (a,b); docs 3,4: no pairs
     assert out == {("a", "b"): 3, ("b", "a"): 1, ("b", "c"): 1}
+
+
+# Edge-case corpus for the per-row token-array operators. Tokens are
+# split(trim(lower(text)), '\s+'): trim strips spaces only, Java's \s is
+# [ \t\n\x0B\f\r], and a separator at either end leaves an '' token.
+EDGE_DOCS = [
+    (0, None),
+    (1, ""),
+    (2, "One"),
+    (3, "one two"),
+    (4, "one two three"),
+    (5, "\tLeading tab\nand newline\r\nthen  two spaces "),
+    (6, "   leading spaces a b trailing tab\t"),
+    (7, "a b c a b c a b c a b"),
+    (8, "Café Straße naïve CAFÉ straße 日本語 テキスト 日本語 テキスト"),
+    (9, " ".join(f"w{i % 40}" for i in range(3000))),
+]
+
+
+def _ref_tokens(text):
+    if text is None:
+        return None
+    return re.split(r"[ \t\n\x0b\f\r]+", text.lower().strip(" "))
+
+
+@pytest.fixture(scope="module")
+def edge_docs(spark):
+    return spark.createDataFrame(EDGE_DOCS, "doc_id bigint, text string")
+
+
+@pytest.mark.parametrize("n", [2, 3])
+def test_repeated_ngram_ratio_edge_cases_match_python(edge_docs, n):
+    """NULL and '' text, docs shorter than, equal to and longer than n,
+    tabs/newlines/leading separators, repeated grams, non-ASCII and one
+    3,000-token doc — against a pure-Python gram count. A doc shorter
+    than n tokens (NULL included) is one whole-doc gram."""
+    want = {}
+    for doc_id, text in EDGE_DOCS:
+        toks = _ref_tokens(text) or []
+        if len(toks) >= n:
+            grams = [" ".join(toks[i:i + n]) for i in range(len(toks) - n + 1)]
+        else:
+            grams = [" ".join(toks)]
+        total, distinct = len(grams), len(set(grams))
+        want[doc_id] = (total, distinct, 1.0 - distinct / total)
+    got = {
+        r.doc_id: (r.n_ngrams, r.n_distinct_ngrams, r.repeated_ratio)
+        for r in C.repeated_ngram_ratio(edge_docs, n=n).collect()
+    }
+    assert got == want
+    assert want[9] == (3001 - n, 40, 1.0 - 40 / (3001 - n))
+
+
+def test_bpe_pair_counts_edge_cases_match_python(edge_docs):
+    """Adjacent-token pair counts over the edge-case corpus against a
+    pure-Python count: NULL, '' and one-token docs add no pair, an ''
+    token from a leading or trailing separator pairs like any other."""
+    want = Counter()
+    for _doc_id, text in EDGE_DOCS:
+        toks = _ref_tokens(text) or []
+        want.update(zip(toks, toks[1:]))
+    got = {(r.left, r.right): r.n_pairs for r in C.bpe_pair_counts(edge_docs).collect()}
+    assert got == dict(want)
+    top = [(r.left, r.right, r.n_pairs) for r in C.bpe_pair_counts(edge_docs, top_k=5).collect()]
+    ranked = sorted(want.items(), key=lambda kv: (-kv[1], kv[0]))
+    assert top == [(l, r, c) for (l, r), c in ranked[:5]]
 
 
 def test_bpe_pair_counts_topk_is_take_ordered(spark):

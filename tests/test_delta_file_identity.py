@@ -220,3 +220,35 @@ def test_escaped_partition_paths_survive_maintenance(spark, tmp_path):
     assert sorted((r.id, r.p) for r in read_delta(spark, flat).collect()) == [
         (i, pvals[i % 3]) for i in range(6)
     ]
+
+
+def test_optimize_rewrites_into_the_writers_partition_directories(spark, tmp_path):
+    """OPTIMIZE compacts each partition into the directory Spark's writer
+    chose for it: Hive-escaped, so ``k=v`` stays ``p=k%3Dv/`` and a ``/``
+    in a value does not nest a directory. Rows are unchanged and the
+    table checks clean."""
+    from pos_dlt_spark.sources.delta_check import delta_fsck
+    from pos_dlt_spark.sources.delta_writer import delta_optimize
+
+    pvals = ["50% (off)", "k=v", "a/b"]
+    t = str(tmp_path / "t")
+    for ids in (range(9), range(9, 18)):
+        write_delta(_rows(spark, pvals, ids, 0, "n{}".format), t, partition_by=["p"])
+
+    def dirs():
+        out: dict[str, set[str]] = {}
+        for rel, pv in delta_snapshot(spark, t).files:
+            out.setdefault(pv["p"], set()).add(os.path.dirname(_abs_file(t, rel)))
+        return out
+
+    def rows():
+        return sorted((r.id, r.p, r.v) for r in read_delta(spark, t).collect())
+
+    written, before = dirs(), rows()
+    assert sorted(written) == sorted(pvals)
+    assert all(len(d) == 1 for d in written.values())
+    delta_optimize(spark, t)
+    assert len(delta_snapshot(spark, t).files) == 3
+    assert dirs() == written
+    assert rows() == before
+    assert delta_fsck(spark, t) == []

@@ -59,7 +59,7 @@ def test_lsh_hot_bucket_cap_skips_pathological_bucket(spark):
 
 
 def test_simhash_identical_docs_equal(spark, docs):
-    sh = {r.doc_id: r.sh for r in docs.select("doc_id", D.simhash(F.col("text")).alias("sh")).collect()}
+    sh = {r.doc_id: r.simhash for r in D.simhash_table(docs).collect()}
     assert sh[0] == sh[3]
     assert 0 <= sh[0] < (1 << 16)
 
@@ -211,10 +211,18 @@ def test_vectorized_topk_bit_identical_to_expression(spark):
     assert expr_out == vec_out  # includes exact float equality
 
 
-def test_simhash_table_matches_column_form(spark, docs):
-    a = {r.doc_id: r.simhash for r in D.simhash_table(docs, bits=16).collect()}
-    b = {r.doc_id: r.sh for r in docs.select("doc_id", D.simhash(F.col("text"), bits=16).alias("sh")).collect()}
-    assert a == b
+def test_simhash_table_matches_duckdb_oracle(spark, docs):
+    """The staged SimHash equals the registry's DuckDB twin (tokens,
+    shingles and majority bits in SQL) over the same documents."""
+    import duckdb
+
+    from pos_dlt_spark.queries_ml import _simhash_oracle
+
+    con = duckdb.connect()
+    con.register("documents", docs.toPandas())
+    want = {int(k): int(v) for k, v in con.execute(_simhash_oracle(16)).fetchall()}
+    got = {r.doc_id: r.simhash for r in D.simhash_table(docs, bits=16).collect()}
+    assert got == want
 
 
 def test_ivf_topk_sane(spark):

@@ -423,3 +423,57 @@ def test_budget_select_no_single_partition_window(q):
 
     df = q("corpus_token_budget_select")
     assert count_op(df, "Exchange SinglePartition") == 0
+
+
+def _jvm_class(node) -> str:
+    return node.getClass().getSimpleName()
+
+
+def _jvm_iter(seq):
+    it = seq.iterator()
+    while it.hasNext():
+        yield it.next()
+
+
+def _jvm_tree(node):
+    stack = [node]
+    while stack:
+        x = stack.pop()
+        yield x
+        stack.extend(_jvm_iter(x.children()))
+
+
+def _lambda_tokenizations(df) -> list[str]:
+    """Every ``split`` / ``regexp_extract_all`` in a lambda body of the
+    optimized plan whose input references no lambda variable: a
+    tokenization the interpreted lambda re-runs for every array element
+    (O(n) re-splits of the same document per row)."""
+    plans, exprs = [df._jdf.queryExecution().optimizedPlan()], []
+    while plans:
+        p = plans.pop()
+        exprs.extend(_jvm_iter(p.expressions()))
+        plans.extend(_jvm_iter(p.children()))
+        plans.extend(_jvm_iter(p.subqueries()))
+    return [
+        x.sql()
+        for root in exprs
+        for lam in _jvm_tree(root)
+        if _jvm_class(lam) == "LambdaFunction"
+        for x in _jvm_tree(lam.function())
+        if _jvm_class(x) in ("StringSplit", "RegExpExtractAll")
+        and not any(_jvm_class(y) == "NamedLambdaVariable" for y in _jvm_tree(x))
+    ]
+
+
+@pytest.mark.parametrize(
+    "name",
+    [n for n in Q.REGISTRY if n.split("_")[0] in ("corpus", "dedup", "text", "ann")],
+    ids=str,
+)
+def test_lambdas_read_materialized_tokens(q, name):
+    """Higher-order functions run interpreted, outside codegen and its
+    subexpression elimination: a lambda body that captures a tokenize
+    expression re-splits the document for every element it builds.
+    Tokens must be projected into their own column first, so the lambda
+    reads a bound attribute."""
+    assert _lambda_tokenizations(q(name)) == []
